@@ -5,13 +5,22 @@ sf0.001.  ``queries()`` exposes every implemented operator from
 SURVEY.md §2 as a (spark, sf_dir) -> DataFrame callable; ``oracle_sql()``
 gives each one's ANSI-SQL twin for the DuckDB correctness gate.  Column
 names are aliased identically on both sides.
+
+Each query is declared once, in the table of the module that owns its
+family: ``workload.JOIN_QUERIES`` (join paths), ``sqlsurface.SURFACE``
+(SQL surface) and ``functions.registry.PIPELINE_OPS`` (pipeline,
+streaming, corpus and I/O operators).  The two functions here are views
+over those tables.
 """
 
 from __future__ import annotations
 
+import json
 import os
+import re
 import sys
 from collections.abc import Callable
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -20,6 +29,13 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from query_optimizer_spark import sqlsurface, workload
 from query_optimizer_spark.functions.registry import PIPELINE_OPS
 from query_optimizer_spark.session import configure_runtime
+
+# Declared first, so the correctness gate, which records the first 50
+# declared queries, covers them: the queries whose runner code changed
+# this round.  Every join path's runner moved into workload.JOIN_QUERIES.
+GATE_FIRST: tuple[str, ...] = tuple(workload.JOIN_QUERIES)
+
+_GATED_FILE = re.compile(r"CORRECTNESS_r(\d+)\.json")
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -31,788 +47,45 @@ def entry(spark: SparkSession) -> DataFrame:
     )
 
 
-def _fixture_runner(name: str, planner: str) -> Callable:
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        configure_runtime(spark)
-        oracle = (
-            workload.true_oracle(sf_dir) if name in _TRUE_ORACLE_FIXTURES else None
-        )
-        return workload.run_fixture(
-            spark, sf_dir, name, planner=planner, oracle=oracle
-        )
-
-    return run
-
-
-# planner assignment exercises every search strategy in the correctness
-# gate (all must produce identical results; SURVEY §2.3 J3-J9)
-_FIXTURE_PLANNERS = {
-    "join_chain_3": "greedy",
-    "join_star_4": "left_deep",
-    "join_cycle_7": "dp_ccp",
-    "join_cross_2": "dp_ccp",
-    "join_selfjoin_4": "branch_and_bound",
-    "join_preds_3": "bushy",  # J8 greedy-bushy heuristic
-    "join_events_8": "dp_ccp",
-    "join_galaxy_10": "dp_ccp",  # 10-vertex enumeration stress
-    "join_group_3": "greedy",
-    "join_outer_3": "dp_ccp",       # J14 left-outer typing
-    "join_outer_mixed_5": "left_deep",  # J14 at width (new r6)
-    "join_outer_removed": "greedy",  # J11 outer-join removal
-    "join_outer_full": "dp_ccp",     # J14 2-factor full outer
-    "join_selfjoin_removed": "dp_ccp",  # J12 self-join removal
-    # J12 composite: (user_id, ts) unique as a pair -- null-aware
-    # multi-column proof (new r5)
-    "join_selfjoin_removed_composite": "greedy",
-    # pipeline-shaped graph (new r9, VERDICT r8 #6): documents joined
-    # to embeddings (1:1) and the high-fan-out events stream -- the
-    # curation-probe cardinality profile, planner-controlled
-    "join_pipeline_5": "dp_ccp",
-}
-
-# removal rewrites need true distinct/row metadata to prove uniqueness;
-# the stats oracle deliberately lacks it, so these plan with TrueCount
-_TRUE_ORACLE_FIXTURES = {
-    "join_outer_removed",
-    "join_selfjoin_removed",
-    "join_selfjoin_removed_composite",
-    "join_outer_3",
-    "join_outer_full",
-    "join_outer_mixed_5",
-}
-
-
-def _surface_runner(name: str) -> Callable:
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return sqlsurface.run_surface(spark, sf_dir, name)
-
-    return run
-
-
-def _env_agent_runner(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure_runtime(spark)
-    return workload.run_fixture_via_env_agent(spark, sf_dir, "join_cycle_7")
-
-
-# =========================================================================
-# r15 gate window (VERDICT r14 #1): the driver records the FIRST 50
-# declared queries.  Positions 1-33 are EXACTLY the 33 rows r14 pinned
-# as _R15_FIRST -- the ENTIRE r10-freshness stratum (judge histogram:
-# r10=33, the oldest driver evidence on the surface); after this round
-# the freshness floor rises to r11.  One of them
-# (corpus_source_stats) was ALSO touched by this round's ADVICE guard
-# fix, so its re-gate does double duty.
-# Positions 34-36 are the ops ADDED in r15:
-#   io_snapshot_merge -- branch merge + fast-forward closing the
-#     git-for-data loop (VERDICT r14 missing #1): a tail-rank branch2
-#     forks at v2; the 3-way merge is pure manifest set arithmetic
-#     (main's chain + branch2's private rewrites), raising
-#     SnapshotMergeConflict when both refs rewrote the same ancestor,
-#     fast-forwarding (result == branch head, raise-enforced) when the
-#     target never advanced; zero data files read or written.
-#   text_bpe_encode -- per-document tokenizer ENCODE under the K
-#     trained merges (VERDICT r14 missing #2): the token-ids emission
-#     a training run consumes; zero-shuffle narrow projection, ids_hash
-#     pins the full ordered id sequence per document.
-#   stream_cdc_tail -- the 15th streaming op (VERDICT r14 #6): the
-#     snapshot manifest chain tailed as a stream -- commit-time change
-#     feed from the manifest diff alone, maxFilesPerTrigger=1 so each
-#     commit rides its OWN micro-batch (raise-enforced from progress),
-#     bounded-state aggregate.
-# Positions 37-42 are the ops r15 TOUCHED: text_bpe_train now
-# localCheckpoints the encoding every BPE_CHECKPOINT_EVERY merges so
-# plan depth is bounded in K (VERDICT r14 "what's wrong" #2), with the
-# collected merge table memoized and the cadence in evidence;
-# text_bpe_apply's oracle anchors the trainer-CTE split on the
-# newline-terminated union member (r15 ADVICE: rindex prefix-matched
-# b10+ at K >= 10); io_snapshot_branch writes its manifest only AFTER
-# the main-immutability check passes (ADVICE: a raise used to leave
-# the manifest behind, masking the violation on warm calls);
-# sim_ivf_compact repartitions cold lists to one file per cent_id
-# before the cold append (ADVICE: multi-partition frames fragmented
-# cold lists into the _FRAG_LISTS work list at scale);
-# evt_transition_matrix and text_oov_bigram_rate carry revised
-# count()-guards that are total -- strict positivity on the UNROUNDED
-# count instead of a rounded ratio that silently dropped genuine
-# sub-5e-7 rows, and a NULL-proof component bound instead of a
-# NULL-dropping arithmetic filter (both r15 ADVICE; the sweep test
-# re-proves the guarded Join/Window still survives count()-pruning).
-# Positions 43-50 rotate the join-fixture slice of the 45-row
-# r11-freshness stratum (the next-oldest evidence; join_cycle_7 is
-# also the flagship whose planner-parity question this round's
-# exclusive runtime-matrix re-run settles -- VERDICT r14 #5); the 37
-# remaining r11 rows are pinned as _R16_FIRST at positions 51-87,
-# first in line for r16.
-# =========================================================================
-_R15_WINDOW = [
-    # --- the 33 r10-evidence rows pinned by r14 (VERDICT r14 #1) ---
-    "sql_q16_supplier_cnt",
-    "sql_q20_promotion_stock",
-    "sql_recursive_spine",
-    "join_group_3",
-    "corpus_dataset_card",
-    "corpus_mix_weighted",
-    "corpus_train_pipeline",
-    "emb_gram_matrix",
-    "emb_norm_stats",
-    "emb_pca_project",
-    "emb_quantize_int8",
-    "evt_asof_join",
-    "evt_hourly_rollup",
-    "evt_sessionize",
-    "evt_user_features",
-    "io_partitioned_roundtrip",
-    "mm_audio_framing",
-    "mm_binary_stats",
-    "mm_frame_sample",
-    "mm_shard_manifest",
-    "sim_ivfpq_residual",
-    "sim_ivfpq_topk",
-    "sim_recall_report",
-    "stream_quantile_sketch",
-    "text_bigram_lm_score",
-    "text_fingerprint",
-    "text_heaps_law",
-    "text_lang_confusion",
-    "text_language_id",
-    "text_quality_score",
-    "text_token_count",
-    "text_token_diversity",
-    "text_winnow_fingerprints",
-    # --- added in r15 ---
-    "io_snapshot_merge",
-    "text_bpe_encode",
-    "stream_cdc_tail",
-    # --- touched in r15 (trainer checkpoint cadence; oracle anchor;
-    # branch manifest write ordering; cold-list repartition; two
-    # total count()-guards) ---
-    "text_bpe_train",
-    "text_bpe_apply",
-    "io_snapshot_branch",
-    "sim_ivf_compact",
-    "evt_transition_matrix",
-    "text_oov_bigram_rate",
-    # --- r11-stratum rotation: the join-fixture slice ---
-    "join_cycle_7",
-    "join_star_4",
-    "join_events_8",
-    "join_galaxy_10",
-    "join_chain_3",
-    "join_cross_2",
-    "join_preds_3",
-    "join_selfjoin_4",
-]
-
-# =========================================================================
-# r16 gate window (VERDICT r15 "Next round" #3, listed first on purpose):
-# the driver's 50-query oracle window this round covers the rewrites the
-# r15 optimization round shipped -- its rotation window was frozen before
-# the optimization session ran, so only 4 of the ~35 r15-touched ops got
-# a driver row (text_bpe_encode / io_snapshot_merge / stream_cdc_tail /
-# sim_recall_report).  Positions 1-11 are the ops the r16 OPTIMIZATION
-# round itself touches (the LEO adaptive/feedback family's overlapped
-# observe jobs; the train-pipeline shared scan; recall_report's shared
-# candidate generation; the containment/edit-distance verify stages; the
-# boilerplate/novelty gram aggregation) -- 5 of them double as r11-stale
-# rows from the pinned _R16_FIRST/_R17_FIRST list (the two text ops
-# joined the touched block late in the round -- bigram_lm_score's LM
-# attribution and repetition_stats' zero-shuffle projection -- pushing
-# join_env_wire / join_ikkbz_events back to _R17_FIRST).  Next are
-# the r15-touched ops with no driver row for their rewrite: the stored-
-# index probe paths (dedup_incremental/index_commit/multibatch +
-# sim_ivfpq_pruned), the KMV/HLL sketch rewrites, the single-pass gram
-# family, the bucketed/z-order session layouts, dedup_survivors'
-# convergence check, and the 13 stream_* ops whose state-store width now
-# scales with input (stream_cdc_tail + stream_quantile_sketch were
-# r15-gated already).  Positions 40-50 drain the oldest r11-stratum rows
-# from the list r15 pinned (_R17_FIRST keeps the 19-row remainder --
-# outer/self-join removals, park/sampled/sketch planner paths, the SQL
-# variant slice -- first in line for r17).
-# =========================================================================
-_R16_WINDOW = [
-    # --- ops the r16 optimization round touches ---
-    "join_adaptive_full",
-    "join_adaptive_outer",
-    "join_adaptive_reopt",
-    "join_feedback_warm",
-    "join_feedback_persist",
-    "corpus_train_pipeline",
-    "sim_recall_report",
-    "dedup_containment",
-    "dedup_edit_distance",
-    "corpus_boilerplate",
-    "text_novelty_curve",
-    "text_bigram_lm_score",
-    "text_repetition_stats",
-    # --- r15-touched ops with no driver row for the rewrite ---
-    "dedup_incremental",
-    "dedup_index_commit",
-    "dedup_multibatch",
-    "dedup_survivors",
-    "dedup_substring",
-    "dedup_substring_removal",
-    "text_kmv_rollup",
-    "text_kmv_overlap",
-    "text_hll_rollup",
-    "text_hll_vocab",
-    "text_countmin_freq",
-    "text_bm25_topk",
-    "io_bucketed_join",
-    "io_zorder_skipping",
-    "sim_ivfpq_pruned",
-    "stream_feedback_join",
-    "stream_incremental_dedup",
-    "stream_kmv_distinct",
-    "stream_hourly_counts",
-    "stream_asof_join",
-    "stream_hll_users",
-    "stream_window_funnel",
-    "stream_sessionize",
-    "stream_dedup",
-    "stream_enrich",
-    "stream_sliding_counts",
-    "stream_join",
-    "stream_sink_parquet",
-    # --- r11-stratum rotation (from the list r15 pinned) ---
-    "emb_kmeans",
-    "emb_pq_train",
-    "evt_incremental_rollup",
-    "evt_markov_stationary",
-    "evt_session_window_native",
-    "io_compact_small_files",
-    "io_merge_upsert",
-    "join_env_agent",
-    "join_env_learned",
-]
-
-# positions 51-71: the r11-stratum remainder r16's window could not fit
-# (outer/self-join removals, the park/sampled/sketch planner paths, the
-# SQL-variant slice), first in line for r17
-_R17_FIRST = [
-    "join_env_wire",
-    "join_ikkbz_events",
-    "join_outer_3",
-    "join_outer_full",
-    "join_outer_mixed_5",
-    "join_outer_removed",
-    "join_park_cards",
-    "join_sampled_card",
-    "join_selfjoin_removed",
-    "join_selfjoin_removed_composite",
-    "join_semi_prefilter",
-    "join_sketch_card",
-    "sql_agg_pricing",
-    "sql_exists_semijoin",
-    "sql_having",
-    "sql_notexists_antijoin",
-    "sql_q21_waiting_supplier",
-    "sql_rollup",
-    "sql_setops_nations",
-    "sql_topk_orders",
-    "sql_window_rank",
-]
-
+def _last_gated() -> dict[str, int]:
+    """Query name -> the last round whose gate record
+    (``CORRECTNESS_r<N>.json`` beside this module) holds it."""
+    out: dict[str, int] = {}
+    for path in Path(__file__).resolve().parent.iterdir():
+        m = _GATED_FILE.fullmatch(path.name)
+        if m:
+            for name in json.loads(path.read_text()):
+                out[name] = max(out.get(name, 0), int(m.group(1)))
+    return out
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """All implemented queries/operators, keyed by SURVEY §2 name.
-
-    Declaration order is deliberate: the driver's correctness gate
-    records the FIRST 50 declared queries per round (observed cap in
-    CORRECTNESS_r01-r05), so rounds rotate which block leads.  Rotation
-    history: r1-r3 gated the join fixtures + 34 SQL-surface queries; r4
-    led with the 48 pipeline/stream/corpus ops; r5 led with the 12
-    queries that had never had a driver row plus the new composite-
-    removal / wire-protocol / learned-policy paths -- so entering r6,
-    exactly 7 declared queries have never had a driver row (VERDICT r5
-    "What's missing" #1): the late-r5 pipeline additions.  Round 6
-    leads with those 7 (corpus_boilerplate, corpus_mix_weighted,
-    corpus_shuffle_shard, text_token_diversity, evt_transition_matrix,
-    emb_norm_stats, mm_shard_manifest) PLUS every operator added IN r6
-    (dedup_survivors, emb_gram_matrix, emb_kmeans, text_bpe_pair_topk,
-    evt_user_features, corpus_source_stats, text_bigram_lm_score,
-    emb_pca_project, stream_asof_join, io_partitioned_roundtrip,
-    evt_value_quantiles, text_winnow_fingerprints,
-    dedup_family_agreement, text_heaps_law, sim_recall_report,
-    evt_markov_stationary, corpus_dataset_card, join_adaptive_reopt,
-    join_adaptive_full, join_outer_mixed_5, sql_recursive_spine --
-    all declared inside the window, so r6 adds zero rotation debt),
-    then the rest of the pipeline/stream/corpus
-    ops (driver evidence from r04, now two rounds stale), filling the
-    50-row window; joins and SQL surface (fresh r5 evidence) follow.
-    After r6 every declared query had been driver-verified at least
-    once.  Rounds 7 and 8 each led with their added/touched ops and
-    rotated the then-stalest block back in (r7: join fixtures +
-    planner paths + SQL surface; r8: the 25 sql_*, r4-era stream_*,
-    io roundtrips, skew, containment).  Round 9 (VERDICT r8 #1) leads
-    with the 3 queries that have NEVER had a driver row (the late-r8
-    dedup_semdedup / evt_scd2_intervals / sim_pq_adc_topk -- the
-    latter also reshaped this round to the in-executor ADC probe),
-    the new join_pipeline_5 sensitivity fixture, and everything r9
-    TOUCHED (the 4 shared-derived-partsupp TPC-H queries incl. the
-    Q11 DECIMAL(38,0) overflow fix, io_zorder_skipping's
-    missing-stats handling, stream_feedback_join's progress-harvest
-    fix, join_feedback_persist's deterministic sidecar); then the
-    18-query r4/r5-evidence backlog (the 12 stale corpus_*,
-    evt_retention_cohorts / evt_asof_tolerance / evt_anomaly_hours /
-    evt_hourly_topk, text_repetition_stats / text_oov_bigram_rate);
-    then as much of the 44-query r6 block as fits (the dedup, sim/emb,
-    io/mm families + sql_recursive_spine -- the corpus/evt/text
-    remainder of the r6 block takes the r10 window).  Round 10
-    (VERDICT r9 #1) leads with the 3 ops ADDED in r10 (the
-    partition-pruned IVF-PQ layout, the quantile-rollup merge proof,
-    the streaming quantile sketch), then everything r10 TOUCHED
-    (dedup_edit_distance's length-prefiltered verify,
-    evt_incremental_rollup's integer-cent partials + session-scoped
-    state, io_merge_upsert / io_compact_small_files session-scoped
-    paths, mm_audio_framing's enforced frame bound, sim_ivfpq_topk's
-    factored model/rerank, join_feedback_persist's session-scoped
-    sidecar, the 4 partsupp TPC-H queries' bounded cache, and
-    join_group_3 whose AVG moved to an integer-valued column after
-    runtime_test caught last-ulp cross-planner float flakiness), then
-    the ENTIRE 33-query r6-freshness block -- after this round no
-    driver evidence predates r7.  Round 11's window led with the
-    never-verified late-r10 ops, the 4 r11 additions, and the 7
-    queries r11 touched, then drained 36 of the 47-query r7-freshness
-    block; the 11 deferred r7 SQL variants were pinned right after the
-    window and are EXACTLY round 12's lead (VERDICT r11 #1).  Round
-    12 led with those 11, its 15 additions, and the 3 ops its shared
-    probe/commit refactor touched, then rotated 21 of the 42-query
-    r8-freshness stratum, pinning the 21-row remainder.  Round 13 led
-    with those 21 pinned r8 rows, its four additions (the two-day IVF
-    ingest leg; the ExactSubstr removal action; the ANN delete
-    primitive; manifest snapshots + time travel), the 5 ops it
-    touched, then 20 of the 38-query r9-freshness stratum, pinning the
-    18-row remainder.  Round 14's window is the explicit
-    ``_R14_WINDOW`` list above: those 18 pinned r9 rows first (after
-    this round the freshness floor is r10), the seven r14 additions
-    (ANN list compaction; snapshot CDC read; snapshot expiry+vacuum;
-    IVF recluster -- the coarse-quantizer retrain after heavy
-    deletion; the iterative BPE trainer and its apply/compression
-    twin; snapshot branching), the 4 ops r14 touched (rank-derived
-    snapshot takedown + keyed evidence, the appId-keyed eagerly-built
-    KMV cache, the multibatch warm-hook raise), the 19 other ops the
-    registry-wide count()-guard sweep touched (VERDICT r13 #2 -- 9 of
-    them due r10 rotation anyway), then the SQL slice of the r10
-    stratum; the four rows displaced by the late additions (sql_q16,
-    sql_q20, sql_recursive_spine, join_group_3) and the 29 other
-    deferred r10 rows were pinned as r15's lead.  Round 15's window is
-    the explicit ``_R15_WINDOW`` list above: those 33 pinned r10 rows
-    first (after this round the freshness floor is r11), the three r15
-    additions (branch merge + fast-forward; per-doc BPE encode; the
-    streaming CDC tail), the 6 ops r15 touched (trainer checkpoint
-    cadence; BPE-apply oracle anchor; branch manifest write ordering;
-    compaction cold-list repartition; two total count()-guards), then
-    the join-fixture slice of the r11 stratum (join_cycle_7 doubling
-    as the flagship for the exclusive runtime-matrix re-run); the 37
-    remaining r11 rows were pinned for r16.  Round 16's window is the
-    explicit ``_R16_WINDOW`` list above (VERDICT r15 #3): the ops the
-    r16 optimization round touches first, then the r15-touched ops
-    whose rewrites never got a driver row (the r15 gate window was
-    frozen before its optimization session ran), then as much of the
-    pinned r11 stratum as fits; the 19-row remainder is pinned as
-    ``_R17_FIRST`` at positions 51-69.
-    ALL declared queries are
-    checked against their DuckDB oracles by scripts/local_gate.py
-    (checked-in: CORRECTNESS_LOCAL_FULL.json) and pytest every round
-    regardless of gate order.
-    """
-    out: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-    pipeline = dict(PIPELINE_OPS)
-
-    # =====================================================================
-    # block A (r10 window lead): the 3 ops ADDED in r10 --
-    #   sim_ivfpq_pruned     the partition-pruned inverted-list layout
-    #                        (VERDICT r9 #2): lists written
-    #                        partitionBy(cent_id), probed via partition
-    #                        filter, non-probed lists never read (scan
-    #                        metrics asserted in tests)
-    #   evt_quantile_rollup  the histogram sketch's rollup proof
-    #                        (VERDICT r9 #4): full-range quantiles from
-    #                        stored per-day bucket counts only; oracle
-    #                        recomputes from raw -- agreement IS the
-    #                        mergeability proof, mirroring the HLL's
-    #   stream_quantile_sketch  bounded-state streaming quantiles: one
-    #                        <=41-slot count vector per key, bucket
-    #                        index JVM-side, CDF walk batch-side
-    # =====================================================================
-    for name in (
-        "sim_ivfpq_pruned",
-        "evt_quantile_rollup",
-        "stream_quantile_sketch",
-        # the end-to-end curation funnel: exact dedup -> LSH near-dup
-        # -> decontamination -> quality gate, ONE lazy composed plan,
-        # per-stage doc/token survival (the pipeline's dry-run
-        # accounting mode; oracle recomputes every stage separately)
-        "corpus_train_pipeline",
-        # residual IVF-PQ (FAISS by_residual=true): codes are offsets
-        # from the owning list's centroid, ADC via per-(query, list)
-        # precomputed tables -- integer-exact, relational oracle
-        "sim_ivfpq_residual",
-    ):
-        out[name] = pipeline[name][0]
-
-    # =====================================================================
-    # block A': ops r10 TOUCHED -- re-gated because their code changed
-    # this round (r9 VERDICT #5 + ADVICE): the Levenshtein verify's
-    # length prefilter + integer DP gate; the incremental rollup's
-    # integer-cent partials and session-scoped state path; the MERGE /
-    # compaction session-scoped paths; the audio framing's enforced
-    # oracle bound; sim_ivfpq_topk's model/rerank factored out to be
-    # shared with the pruned sibling
-    # =====================================================================
-    for name in (
-        "dedup_edit_distance",
-        "evt_incremental_rollup",
-        "io_merge_upsert",
-        "io_compact_small_files",
-        "mm_audio_framing",
-        "sim_ivfpq_topk",
-    ):
-        out[name] = pipeline[name][0]
-
-    # join_group_3, touched r10: its AVG now runs over an integer-
-    # valued column so the average is exact under any summation order
-    # -- runtime_test caught the double-AVG version hashing differently
-    # under left_deep/ikkbz join orders (last-ulp float flakiness)
-    out["join_group_3"] = _fixture_runner("join_group_3", "greedy")
-
-    # FeedbackStore sidecar round trip: an adaptive recording pass
-    # SAVES its observations to a JSON sidecar tagged with the dataset;
-    # a FRESH store reloads them (same tag -> seeded; the wrong-tag
-    # negative path is asserted inline and pytest-covered) and the warm
-    # pass plans from the reloaded observations.  At warehouse scale
-    # this is the query-history statistics service surviving a session
-    # restart.  Feedback may change the ORDER, never the answer.
-    def _feedback_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import os as _os
-
-        from query_optimizer_spark.oracle import FeedbackStore
-        from query_optimizer_spark.sources import session_state_path
-
-        configure_runtime(spark)
-        # one deterministic sidecar per (session, sf_dir), overwritten
-        # per run -- bench reps*cohorts re-invoke this query, so a
-        # fresh mkdtemp per call would leak files (r8 ADVICE); the
-        # applicationId component keeps concurrent sessions from
-        # racing (r9 ADVICE), and the helper TTL-GCs dead sessions'
-        # sidecars (r10 review)
-        path = session_state_path(spark, sf_dir, "fbstore") + ".json"
-        if _os.path.exists(path):  # cold start: never seed from a
-            _os.remove(path)       # previous invocation's sidecar
-        rec = FeedbackStore(path=path, tag=sf_dir)
-        workload.run_fixture_adaptive_full(
-            spark, sf_dir, "join_star_4", store=rec
-        ).collect()
-        rec.save()
-        # warm claim = fresh re-execution: drop the recording pass's
-        # persisted blocks (targeted -- never a session-wide clearCache)
-        for blk in workload.PERSISTED_BLOCKS:
-            blk.unpersist(blocking=True)
-        workload.PERSISTED_BLOCKS.clear()
-        # negative path: a sidecar recorded against OTHER data must
-        # load cold (stale true counts would outrank the estimator)
-        assert FeedbackStore(path, tag=sf_dir + "#refreshed").rows == {}
-        # positive path: fresh store, same tag -> every observation back
-        warm_store = FeedbackStore(path, tag=sf_dir)
-        assert warm_store.rows == rec.rows and warm_store.rows
-        df = workload.run_fixture_warm(
-            spark, sf_dir, "join_star_4", store=warm_store
-        )
-        assert workload.ADAPTIVE_SPLIT.get("warm_seeded", 0) > 0
-        return df
-
-    out["join_feedback_persist"] = _feedback_persist
-
-    # TPC-H Q2/Q11/Q16/Q20, re-gated r10: the shared derived-partsupp
-    # cache they all read is now FIFO-bounded so stopped bench-cohort
-    # sessions can no longer pin their plans forever (r9 ADVICE)
-    for name in (
-        "sql_q2_min_cost_supplier",
-        "sql_q11_important_stock",
-        "sql_q16_supplier_cnt",
-        "sql_q20_promotion_stock",
-    ):
-        out[name] = _surface_runner(name)
-
-    # =====================================================================
-    # block B (r10 rotation, VERDICT r9 #1): the ENTIRE 33-query block
-    # whose freshest driver evidence is r6 (the corpus/evt/text/emb/
-    # io/mm remainder + sql_recursive_spine) -- after this round the
-    # freshness floor across all declared queries rises to r7 -- plus
-    # 3 of the oldest-r7 ops to fill the 50-row window.
-    # =====================================================================
-    _R10_ROTATION = [
-        "text_token_count", "text_language_id", "text_quality_score",
-        "text_fingerprint", "text_bigram_topk", "text_lang_confusion",
-        "text_token_diversity", "text_bpe_pair_topk",
-        "text_bigram_lm_score", "text_winnow_fingerprints",
-        "text_heaps_law",
-        "evt_hourly_rollup", "evt_sessionize", "evt_asof_join",
-        "evt_funnel", "evt_transition_matrix", "evt_user_features",
-        "evt_value_quantiles",
-        "corpus_boilerplate", "corpus_mix_weighted",
-        "corpus_shuffle_shard", "corpus_source_stats",
-        "corpus_dataset_card",
-        "emb_quantize_int8", "emb_norm_stats", "emb_gram_matrix",
-        "emb_pca_project",
-        "mm_binary_stats", "mm_frame_sample", "mm_shard_manifest",
-        "io_partitioned_roundtrip", "sim_recall_report",
-    ]
-    for name in _R10_ROTATION:
-        out[name] = pipeline[name][0]
-    # sql_recursive_spine (r6 block) runs through the SQL surface
-    out["sql_recursive_spine"] = _surface_runner("sql_recursive_spine")
-
-    # --- position 51: late-r10 addition, first in line for the r11
-    # window (the late-r8/late-r9 precedent -- declared past the 50-row
-    # cap because the r10 window is exactly consumed by the 6 earlier
-    # r10 ops + everything touched + the ENTIRE 33-query r6 block;
-    # covered by the full local gate + pytest this round) ---
-    # emb_pq_train: PQ codebook training, M independent per-subspace
-    # integer-exact k-means -- completes train -> encode -> search
-    out["emb_pq_train"] = pipeline["emb_pq_train"][0]
-    # evt_session_window_native: gap sessions via the BUILT-IN
-    # session_window operator (boundary semantics proved by a
-    # window-scan oracle) -- the idiomatic twin of evt_sessionize
-    out["evt_session_window_native"] = pipeline[
-        "evt_session_window_native"
-    ][0]
-    # evt_quantile_sketch, touched late-r10: its CDF walk moved to the
-    # shared _qsk_est_cols helper the rollup/stream ops also use (one
-    # definition for the mergeability proofs); re-gated locally, r11
-    # window should re-gate it under the driver too
-    out["evt_quantile_sketch"] = pipeline["evt_quantile_sketch"][0]
-
-    # --- past the 50-row window from here on (fresh r7/r8 evidence,
-    # re-verified by the full local gate + pytest every round) ---
-    for name in (
-        "mm_image_decode",
-        "sim_hamming_topk",
-        "io_bucketed_join",
-        "io_runtime_bloom_prune",
-        "text_hll_vocab",
-        "stream_asof_join",
-    ):
-        out[name] = pipeline[name][0]
-
-    # cross-query LEO feedback (r7; re-gated r8: targeted unpersist of
-    # the recording pass's blocks replaced the session-wide clearCache
-    # per r7 ADVICE): one adaptive pass over the cycle fixture RECORDS
-    # every observed cardinality into a FeedbackStore (keys:
-    # JoinGraph.key_for -- canonical across queries), then the warm
-    # pass re-plans the same fixture with the store overlaid --
-    # including the first join, which within-query feedback can never
-    # correct -- and executes statically.  Feedback may change the
-    # ORDER, never the answer; the gate proves it.
-    def _feedback_warm(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import time as _time
-
-        from query_optimizer_spark.oracle import FeedbackStore
-
-        configure_runtime(spark)
-        store = FeedbackStore()
-        t0 = _time.monotonic()
-        workload.run_fixture_adaptive_full(
-            spark, sf_dir, "join_cycle_7", store=store
-        ).collect()
-        cold_sec = _time.monotonic() - t0
-        # drop the cold pass's persisted blocks BEFORE the warm run:
-        # the warm claim is a fresh re-execution planning from the
-        # store, not a read of the recording run's live caches (which
-        # would also leak into every later bench query's timing).
-        # Unpersist EXACTLY the blocks the recording pass persisted --
-        # a session-wide clearCache() would also evict every OTHER
-        # query's cached relations mid-benchmark and perturb later
-        # queries' timings within the same shuffled rep (r7 ADVICE).
-        for blk in workload.PERSISTED_BLOCKS:
-            blk.unpersist(blocking=True)
-        workload.PERSISTED_BLOCKS.clear()
-        df = workload.run_fixture_warm(
-            spark, sf_dir, "join_cycle_7", store=store
-        )
-        # bench decomposition: total - cold_record_sec - plan_sec is
-        # the warm pass's pure execution time (zero observe barriers)
-        workload.ADAPTIVE_SPLIT["cold_record_sec"] = round(cold_sec, 4)
-        return df
-
-    out["join_feedback_warm"] = _feedback_warm
-
-    # --- r7 lead block (fresh r7 evidence) ---
-    # outer-graph mid-query re-optimization (new r7, VERDICT r6 gap #1):
-    # the full progressive LEO loop on the mixed inner/outer 5-relation
-    # graph -- the inner core re-plans around pinned materialized
-    # blocks, then the null-generating factor re-attaches on top as a
-    # LEFT join (J14 frame; reference addToTop semantics,
-    # MyLoptOptimizeJoinRule.java:1231-1239)
-    def _adaptive_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-        configure_runtime(spark)
-        return workload.run_fixture_adaptive_full(
-            spark, sf_dir, "join_outer_mixed_5"
-        )
-
-    out["join_adaptive_outer"] = _adaptive_outer
-
-    # mid-query re-optimization (r6; r7 added the phase-split
-    # instrumentation): estimate-plan -> materialize first join ->
-    # observe true rows -> re-plan remainder with the block pinned ->
-    # finish reusing the block
-    def _adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
-        configure_runtime(spark)
-        return workload.run_fixture_adaptive(spark, sf_dir, "join_events_8")
-
-    out["join_adaptive_reopt"] = _adaptive
-
-    # full progressive re-optimization (r6): observe after EVERY join --
-    # the complete LEO loop; every join after the first is placed with
-    # exact cardinalities for all materialized inputs
-    def _adaptive_full(spark: SparkSession, sf_dir: str) -> DataFrame:
-        configure_runtime(spark)
-        return workload.run_fixture_adaptive_full(
-            spark, sf_dir, "join_events_8"
-        )
-
-    out["join_adaptive_full"] = _adaptive_full
-
-    # r7 pipeline ops (fresh r7 evidence, past the window this round)
-    for name in ("evt_range_join", "text_countmin_freq",
-                 "evt_markov_stationary", "emb_kmeans"):
-        out[name] = pipeline[name][0]
-
-    # --- block B: join-planner fixtures + planner paths (driver
-    # evidence from r05, two rounds stale -- rotation brings them
-    # back into the window) ---
-    for name, planner in _FIXTURE_PLANNERS.items():
-        if name not in out:
-            out[name] = _fixture_runner(name, planner)
-    # the RL-env path (J7): greedy-by-reward agent plans, engine executes
-    out["join_env_agent"] = _env_agent_runner
-
-    # wire-protocol planning (§2.8): the full ZMTP park round trip
-    def _wire(spark: SparkSession, sf_dir: str) -> DataFrame:
-        configure_runtime(spark)
-        return workload.run_fixture_via_wire(spark, sf_dir, "join_cycle_7")
-
-    out["join_env_wire"] = _wire
-
-    # learned-policy planning (J7 closed loop): REINFORCE agent trained
-    # in-process (seeded, pure planning), its plan executed
-    def _learned(spark: SparkSession, sf_dir: str) -> DataFrame:
-        configure_runtime(spark)
-        return workload.run_fixture_via_learned_agent(
-            spark, sf_dir, "join_cycle_7"
-        )
-
-    out["join_env_learned"] = _learned
-
-    # sketch-based estimation (C11 practical rung): real single-table
-    # counts + HLL join-key NDVs, chain-formula joins -- the stats an
-    # ANALYZE pass provides at 100 TB; results must match regardless
-    def _sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
-        configure_runtime(spark)
-        return workload.run_fixture(
-            spark,
-            sf_dir,
-            "join_cycle_7",
-            planner="dp_ccp",
-            oracle=workload.sketch_oracle(sf_dir),
-        )
-
-    out["join_sketch_card"] = _sketch
-
-    # the semi-join derivation path (J10): left-semi fact prefiltering
-    def _semi(spark: SparkSession, sf_dir: str) -> DataFrame:
-        configure_runtime(spark)
-        return workload.run_fixture_semi_prefilter(spark, sf_dir, "join_cycle_7")
-
-    out["join_semi_prefilter"] = _semi
-
-    # IKKBZ (rank-based optimal left-deep) on the acyclic 8-relation
-    # graph -- same oracle SQL as join_events_8, different search
-    def _ikkbz(spark: SparkSession, sf_dir: str) -> DataFrame:
-        configure_runtime(spark)
-        return workload.run_fixture(
-            spark, sf_dir, "join_events_8", planner="ikkbz"
-        )
-
-    out["join_ikkbz_events"] = _ikkbz
-
-    # sampling-based cardinality estimation (C11 middle rung): plan with
-    # hash-sampled counts scaled 1/p -- results must match regardless
-    def _sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
-        configure_runtime(spark)
-        return workload.run_fixture(
-            spark,
-            sf_dir,
-            "join_cycle_7",
-            planner="dp_ccp",
-            oracle=workload.sampled_oracle(sf_dir, p=0.2),
-        )
-
-    out["join_sampled_card"] = _sampled
-
-    # --- block C: SQL surface ---
-    for name in sqlsurface.SURFACE:
-        if name not in out:
-            out[name] = _surface_runner(name)
-
-    # --- block D: pipeline/stream/corpus remainder (freshest driver
-    # evidence: r06 window or r04 + every-round local gate) ---
-    for name, (runner, _) in pipeline.items():
-        if name not in out:
-            out[name] = runner
-
-    # the park-API cardinality-surface session (new r11, VERDICT r10
-    # #5): setQueries/test/setCardinalities/reset/step/isDone/
-    # getJoinsCost/getOptPlan/startTestCardinalities all run against
-    # one session, its episode's plan executes engine-side
-    def _park_cards(spark: SparkSession, sf_dir: str) -> DataFrame:
-        configure_runtime(spark)
-        return workload.run_fixture_via_park_cards(
-            spark, sf_dir, "join_star_4"
-        )
-
-    out["join_park_cards"] = _park_cards
-
-    # final declaration order = the r16 gate window (see _R16_WINDOW),
-    # then the pinned r17 lead block, then everything else in build
-    # order.  A missing name here is a rotation bug -- fail loudly.
-    missing = [n for n in _R16_WINDOW + _R17_FIRST if n not in out]
-    if missing or len(_R16_WINDOW) != 50:
-        raise RuntimeError(
-            f"gate-window rotation broken: len={len(_R16_WINDOW)}"
-            f" missing={missing}"
-        )
-    head = _R16_WINDOW + _R17_FIRST
-    return {n: out[n] for n in head} | {
-        n: r for n, r in out.items() if n not in set(head)
+    """Every declared query, in gate order: ``GATE_FIRST``, then the rest
+    stalest first by ``_last_gated`` (never gated counts as round 0).
+    Ties keep declaration order: join paths, SQL surface, pipeline ops.
+    scripts/local_gate.py checks ALL of them against their oracles."""
+    out = {
+        n: lambda spark, sf_dir, n=n: workload.run_join_query(spark, sf_dir, n)
+        for n in workload.JOIN_QUERIES
     }
+    out |= {
+        n: lambda spark, sf_dir, n=n: sqlsurface.run_surface(spark, sf_dir, n)
+        for n in sqlsurface.SURFACE
+    }
+    out |= {n: runner for n, (runner, _) in PIPELINE_OPS.items()}
+    last = _last_gated()
+    rest = sorted(
+        (n for n in out if n not in GATE_FIRST), key=lambda n: last.get(n, 0)
+    )
+    return {n: out[n] for n in (*GATE_FIRST, *rest)}
 
 
 def oracle_sql() -> dict[str, str]:
+    """Query name -> the DuckDB SQL whose answer the query must match."""
     out = {
-        name: workload.fixture_oracle_sql(name) for name in _FIXTURE_PLANNERS
+        n: workload.fixture_oracle_sql(fixture)
+        for n, (fixture, _) in workload.JOIN_QUERIES.items()
     }
-    out["join_env_agent"] = workload.fixture_oracle_sql("join_cycle_7")
-    out["join_adaptive_reopt"] = workload.fixture_oracle_sql("join_events_8")
-    out["join_adaptive_full"] = workload.fixture_oracle_sql("join_events_8")
-    out["join_adaptive_outer"] = workload.fixture_oracle_sql(
-        "join_outer_mixed_5"
-    )
-    out["join_feedback_warm"] = workload.fixture_oracle_sql("join_cycle_7")
-    out["join_feedback_persist"] = workload.fixture_oracle_sql("join_star_4")
-    out["join_env_wire"] = workload.fixture_oracle_sql("join_cycle_7")
-    out["join_env_learned"] = workload.fixture_oracle_sql("join_cycle_7")
-    out["join_semi_prefilter"] = workload.fixture_oracle_sql("join_cycle_7")
-    out["join_ikkbz_events"] = workload.fixture_oracle_sql("join_events_8")
-    out["join_sampled_card"] = workload.fixture_oracle_sql("join_cycle_7")
-    out["join_sketch_card"] = workload.fixture_oracle_sql("join_cycle_7")
-    out["join_park_cards"] = workload.fixture_oracle_sql("join_star_4")
-    # the SQL surface is shared ANSI text (or a DuckDB-dialect twin where
-    # the engines' syntax diverges)
-    for name in sqlsurface.SURFACE:
-        out[name] = sqlsurface.oracle_sql_of(name)
-    for name, (_, oracle) in PIPELINE_OPS.items():
-        if oracle is not None:
-            out[name] = oracle
+    out |= {n: sqlsurface.oracle_sql_of(n) for n in sqlsurface.SURFACE}
+    out |= {n: sql for n, (_, sql) in PIPELINE_OPS.items()}
     return out

@@ -236,6 +236,7 @@ def main() -> None:
 
     import __spark_entry__ as entrymod
     from query_optimizer_spark import workload
+    from query_optimizer_spark.functions.registry import warm_all
 
     reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
     cohorts = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_COHORTS", "1")))
@@ -260,108 +261,9 @@ def main() -> None:
                 spark.stop()
             t_warm = time.monotonic()
             spark = _fresh_session(cpus)
-            # warm the JVM/codegen path once with the cheapest query
-            all_qs["join_cross_2"](spark, sf_dir).collect()
-            # ...and the shared shingle->minhash->band codegen stages:
-            # their first-use compilation otherwise lands on whichever
-            # minhash-family query the rep's shuffled order visits
-            # first (measured: 9.3-11.0 s cold vs 2.4-3.5 s warmed
-            # setup for dedup_survivors -- the r8 cohort-2 spike),
-            # making cohorts incomparable.  Every cohort gets the SAME
-            # fixed warmup, so shuffle order can't skew phase splits.
-            from query_optimizer_spark.functions.dedup import (
-                incremental_minhash_pairs,
-                index_commit_stats,
-                minhash_lsh_pairs,
-                multibatch_ingest_pairs,
-            )
-
-            minhash_lsh_pairs(spark, sf_dir).count()
-            # build the session's stored band index once (r11): the
-            # incremental-dedup op's ONE-TIME linear index cost lands
-            # here (visible in warmup_sec), so its reps measure the
-            # recurring batch-probe phase -- the claim under test; a
-            # single-rep cohort would otherwise charge the build to
-            # every recorded value
-            incremental_minhash_pairs(spark, sf_dir).count()
-            # warm the commit too (r11 ADVICE): the first
-            # index_commit_stats call pays the memo-miss probe + a real
-            # dynamic-partition write while every later call takes the
-            # skip path -- without this, one recorded rep per cohort
-            # measures a different phase than the others.  Same for the
-            # multibatch loop's index build + batch1 commit.
-            index_commit_stats(spark, sf_dir).count()
-            multibatch_ingest_pairs(spark, sf_dir).count()
-            # same discipline for the ANN ingest loop (r12): the first
-            # ivf_append_topk call pays the base build + the real
-            # dynamic-partition append; warming it here means every
-            # recorded rep measures the recurring probe-the-grown-index
-            # phase
-            from query_optimizer_spark.functions.similarity import (
-                ivf_append_topk,
-                ivf_compact_topk,
-                ivf_delete_topk,
-                ivf_multibatch_topk,
-                ivf_recluster_topk,
-            )
-
-            ivf_append_topk(spark, sf_dir).count()
-            # and its two-day twin + the delete primitive (r13): base
-            # build + appends/deletion are the one-time cost; reps
-            # measure the grown/shrunk-index probe
-            ivf_multibatch_topk(spark, sf_dir).count()
-            ivf_delete_topk(spark, sf_dir).count()
-            # ...and the maintenance quarter (r14): ingest emulation +
-            # compaction / aged-store build + recluster are the
-            # one-time cost; reps measure the maintained-store probes
-            ivf_compact_topk(spark, sf_dir).count()
-            ivf_recluster_topk(spark, sf_dir).count()
-            # manifest snapshots (r13; expiry/CDC r14): the commits,
-            # the vacuum, and the manifest diffs are the one-time
-            # cost; reps measure the manifest-pruned reads
-            from query_optimizer_spark.sources import (
-                snapshot_branch,
-                snapshot_changes,
-                snapshot_expiry,
-                snapshot_merge,
-                snapshot_time_travel,
-            )
-
-            snapshot_time_travel(spark, sf_dir).count()
-            snapshot_changes(spark, sf_dir).count()
-            snapshot_expiry(spark, sf_dir).count()
-            snapshot_branch(spark, sf_dir).count()
-            # ...and the merge (r15): branch2's one-time rewrite + the
-            # manifest arithmetic land here; reps measure the four
-            # manifest-pruned ref reads
-            snapshot_merge(spark, sf_dir).count()
-            # the CDC feed materialization (r15): one-time change-file
-            # derivation; reps measure the per-commit streaming replay
-            from query_optimizer_spark.streaming.ops import (
-                cdc_tail_stream,
-            )
-
-            cdc_tail_stream(spark, sf_dir).count()
-            # shared KMV shingle scan + exact proof leg (r14, VERDICT
-            # r13 "what's wrong" #1): building it here charges the
-            # one-time cost to warmup_sec, so text_kmv_overlap /
-            # text_kmv_rollup timings no longer depend on which runs
-            # first in the rep's shuffled order
-            from query_optimizer_spark.functions.text import _kmv_shared
-
-            _kmv_shared(spark, sf_dir)
-            # ...and the BPE trainer's memoized word-frequency frame
-            # (r14): the one corpus-sized stage of text_bpe_train --
-            # reps then measure the vocab-sized merge loop; r15 also
-            # fills the collected-merge memo so text_bpe_encode's reps
-            # measure the per-doc projection, not the trainer loop
-            from query_optimizer_spark.functions.text import (
-                _bpe_merges,
-                _bpe_words,
-            )
-
-            _bpe_words(spark, sf_dir)
-            _bpe_merges(spark, sf_dir)
+            # every cohort gets the SAME fixed warmup, so shuffle order
+            # can't skew phase splits and cohorts stay comparable
+            warm_all(spark, sf_dir)
             warmup_secs.append(round(time.monotonic() - t_warm, 4))
             for _ in range(cohort_reps):
                 order = headline[:]
@@ -424,17 +326,10 @@ def main() -> None:
                     # oracle construction as the runner), so a total-
                     # time regression is attributable to plan time vs
                     # Spark execution (VERDICT r4 #3)
-                    if name in entrymod._FIXTURE_PLANNERS:
-                        planner = entrymod._FIXTURE_PLANNERS[name]
+                    fixture, runner = workload.JOIN_QUERIES.get(name, (None, None))
+                    if isinstance(runner, workload.Planned):
                         t0 = time.monotonic()
-                        oracle = (
-                            workload.true_oracle(sf_dir)
-                            if name in entrymod._TRUE_ORACLE_FIXTURES
-                            else None
-                        )
-                        workload.plan_fixture(
-                            sf_dir, name, planner=planner, oracle=oracle
-                        )
+                        runner.plan(sf_dir, fixture)
                         plan_raw.setdefault(name, []).append(
                             round(time.monotonic() - t0, 4)
                         )

@@ -1,4 +1,6 @@
-"""Registry of pipeline operators: name -> (runner, oracle SQL | None).
+"""Registry of pipeline operators: name -> (runner, oracle SQL),
+plus ``warm_all``, the one session warmup bench.py and
+scripts/time_query.py share.
 
 Runner signature matches the driver contract: (spark, sf_dir) -> DataFrame.
 """
@@ -672,3 +674,30 @@ PIPELINE_OPS: dict[str, tuple] = {
         text.bpe_encode_docs_oracle(),
     ),
 }
+
+
+def warm_all(spark, sf_dir: str) -> None:
+    """Pay the one-time costs of the warm-path families once per session,
+    so every timed rep measures the recurring phase and no rep's time
+    depends on which query a shuffled order visits first: JVM/codegen
+    (the cheapest join), the shared shingle->minhash->band stages, the
+    stored band index build + commit + two-day loop, the ANN store
+    builds/appends/deletes/compaction/recluster, the snapshot commits,
+    vacuum and branch merge, the CDC feed, the KMV shingle scan and the
+    BPE trainer's word table and merge memo."""
+    from ..workload import run_join_query
+
+    run_join_query(spark, sf_dir, "join_cross_2").collect()
+    for fn in (
+        dedup.minhash_lsh_pairs, dedup.incremental_minhash_pairs,
+        dedup.index_commit_stats, dedup.multibatch_ingest_pairs,
+        similarity.ivf_append_topk, similarity.ivf_multibatch_topk,
+        similarity.ivf_delete_topk, similarity.ivf_compact_topk,
+        similarity.ivf_recluster_topk,
+        sources.snapshot_time_travel, sources.snapshot_changes,
+        sources.snapshot_expiry, sources.snapshot_branch, sources.snapshot_merge,
+        streaming.cdc_tail_stream,
+    ):
+        fn(spark, sf_dir).count()
+    for fn in (text._kmv_shared, text._bpe_words, text._bpe_merges):
+        fn(spark, sf_dir)

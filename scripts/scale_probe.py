@@ -982,9 +982,7 @@ def main() -> None:
         # run: the warm claim is a fresh re-execution planning from the
         # store, not a read of the recording run's live caches
         # (targeted unpersist, matching the bench path -- r7 ADVICE)
-        for _blk in _wl.PERSISTED_BLOCKS:
-            _blk.unpersist(blocking=True)
-        _wl.PERSISTED_BLOCKS.clear()
+        _wl.drop_persisted_blocks()
         probe("join_feedback_warm", "replica", k,
               lambda sf=f"{WORK}/replica_x{k}", s=fb_store:
                   _wl.run_fixture_warm(

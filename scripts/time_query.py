@@ -1,8 +1,8 @@
 #!/usr/bin/env python
-"""Time individual declared queries in isolation (guide §1): fresh
-default-profile session, warmup identical to bench.py's fixed warmup for
-the warm-path families, then N reps of fn(spark, sf_dir).count() with
-per-rep wall clock.  For measurement only -- never part of the bench.
+"""Time individual declared queries in isolation: fresh default-profile
+session, the same ``registry.warm_all`` warmup bench.py runs, then N reps
+of fn(spark, sf_dir).count() with per-rep wall clock.  For measurement
+only -- never part of the bench.
 
 Usage: [SPARK_GRAFT_SF_DIR=...] python scripts/time_query.py [-n REPS]
        [--no-warm] query [query ...]
@@ -10,6 +10,7 @@ Usage: [SPARK_GRAFT_SF_DIR=...] python scripts/time_query.py [-n REPS]
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 import time
@@ -18,89 +19,29 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> int:
-    args = sys.argv[1:]
-    reps = 3
-    warm = True
-    names = []
-    i = 0
-    while i < len(args):
-        if args[i] == "-n":
-            reps = int(args[i + 1])
-            i += 2
-        elif args[i] == "--no-warm":
-            warm = False
-            i += 1
-        else:
-            names.append(args[i])
-            i += 1
+    ap = argparse.ArgumentParser(description="time declared queries")
+    ap.add_argument("-n", dest="reps", type=int, default=3)
+    ap.add_argument("--no-warm", dest="warm", action="store_false")
+    ap.add_argument("names", nargs="*")
+    args = ap.parse_intermixed_args()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "32g")
 
     import __spark_entry__ as entry
+    from query_optimizer_spark.functions.registry import warm_all
     from query_optimizer_spark.session import get_session
 
     spark = get_session("time-query", profile="default", cpus=cpus)
     qs = entry.queries()
-    if warm:
+    if args.warm:
         t0 = time.monotonic()
-        qs["join_cross_2"](spark, sf_dir).collect()
-        import bench  # reuse bench's exact warmup for the warm families
-
-        from query_optimizer_spark.functions.dedup import (
-            incremental_minhash_pairs,
-            index_commit_stats,
-            minhash_lsh_pairs,
-            multibatch_ingest_pairs,
-        )
-
-        minhash_lsh_pairs(spark, sf_dir).count()
-        incremental_minhash_pairs(spark, sf_dir).count()
-        index_commit_stats(spark, sf_dir).count()
-        multibatch_ingest_pairs(spark, sf_dir).count()
-        from query_optimizer_spark.functions.similarity import (
-            ivf_append_topk,
-            ivf_compact_topk,
-            ivf_delete_topk,
-            ivf_multibatch_topk,
-            ivf_recluster_topk,
-        )
-
-        ivf_append_topk(spark, sf_dir).count()
-        ivf_multibatch_topk(spark, sf_dir).count()
-        ivf_delete_topk(spark, sf_dir).count()
-        ivf_compact_topk(spark, sf_dir).count()
-        ivf_recluster_topk(spark, sf_dir).count()
-        from query_optimizer_spark.sources import (
-            snapshot_branch,
-            snapshot_changes,
-            snapshot_expiry,
-            snapshot_merge,
-            snapshot_time_travel,
-        )
-
-        snapshot_time_travel(spark, sf_dir).count()
-        snapshot_changes(spark, sf_dir).count()
-        snapshot_expiry(spark, sf_dir).count()
-        snapshot_branch(spark, sf_dir).count()
-        snapshot_merge(spark, sf_dir).count()
-        from query_optimizer_spark.streaming.ops import cdc_tail_stream
-
-        cdc_tail_stream(spark, sf_dir).count()
-        from query_optimizer_spark.functions.text import (
-            _bpe_merges,
-            _bpe_words,
-            _kmv_shared,
-        )
-
-        _kmv_shared(spark, sf_dir)
-        _bpe_words(spark, sf_dir)
-        _bpe_merges(spark, sf_dir)
+        warm_all(spark, sf_dir)
         print(f"warmup {time.monotonic() - t0:.1f}s", flush=True)
 
-    for name in names:
+    for name in args.names:
         times = []
-        for r in range(reps):
+        for r in range(args.reps):
             spark.sparkContext.setJobDescription(f"{name} rep{r}")
             t0 = time.monotonic()
             n = qs[name](spark, sf_dir).count()
