@@ -28,7 +28,7 @@ def bits(s: int):
 
 
 def popcount(s: int) -> int:
-    return bin(s).count("1")
+    return s.bit_count()
 
 
 @dataclass(frozen=True)
@@ -153,6 +153,13 @@ class JoinGraph:
         return comps
 
     # --- cardinality-oracle keys -----------------------------------------
+    @cached_property
+    def _keys(self) -> dict[int, str]:
+        """mask -> ``key_for(mask)``.  Safe because nothing mutates a graph
+        after construction: rewrites build a new one, and
+        ``dataclasses.replace`` starts it with an empty memo."""
+        return {}
+
     def key_for(self, s: int) -> str:
         """Canonical oracle key for a factor set, collision-free even when
         one oracle is shared across queries: each leaf is
@@ -161,7 +168,16 @@ class JoinGraph:
         predicates internal to the set.  Replaces the reference's fragile
         sorted-table-name + filter-literal keys (MyMetadataQuery.java:
         107-146, MyUtils.java:120-192) -- which the reference had to scope
-        per-query precisely because they collide across queries."""
+        per-query precisely because they collide across queries.
+
+        Built once per graph and mask: planners and the env look the same
+        sets up over and over."""
+        key = self._keys.get(s)
+        if key is None:
+            key = self._keys[s] = self._build_key(s)
+        return key
+
+    def _build_key(self, s: int) -> str:
         parts = []
         for i in sorted(bits(s)):
             a = self.aliases[i]

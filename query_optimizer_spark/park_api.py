@@ -64,6 +64,9 @@ class ParkSession:
         self._order: list[str] = []
         self._idx = -1
         self._env: JoinOrderEnv | None = None
+        # sql -> its graph, parsed at the first reset that plays it and
+        # dropped by setQueries; later episodes reuse the graph's keys
+        self._graphs: dict[str, JoinGraph] = {}
         self._records: dict[str, QueryRecord] = {}
         self._est_costs: dict[str, float] = {}
         self._opt_costs: dict[str, float] = {}
@@ -77,6 +80,7 @@ class ParkSession:
             else dict(queries_json)
         )
         self._queries[mode] = qs
+        self._graphs.clear()
         if mode == self._mode:
             self._order = list(qs)
             self._idx = -1
@@ -121,7 +125,9 @@ class ParkSession:
         self._idx = (self._idx + 1) % len(self._order)
         name = self._order[self._idx]
         sql = self._queries[self._mode][name]
-        graph = JoinGraph.from_query(parse(sql))
+        graph = self._graphs.get(sql)
+        if graph is None:
+            graph = self._graphs[sql] = JoinGraph.from_query(parse(sql))
         self._cur_name, self._cur_sql, self._cur_graph = name, sql, graph
         self._env = JoinOrderEnv(
             graph, self.oracle, self.cm, catalog=self.catalog, seed=self.seed

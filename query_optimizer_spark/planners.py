@@ -43,6 +43,7 @@ from .joingraph import (
     popcount,
     validate_tree,
 )
+from .oracle import CardinalityMissError
 
 
 @dataclass
@@ -154,7 +155,7 @@ def _join_key_distinct(graph: JoinGraph, oracle, tree_factors: int, f: int) -> f
         return float("inf")
     try:
         return oracle.distinct_count(graph, alias, tuple(sorted(cols)))
-    except Exception:
+    except CardinalityMissError:
         return float("inf")
 
 
