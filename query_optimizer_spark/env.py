@@ -18,6 +18,23 @@ into this in-process class with identical observable semantics
 - reward  = -cost of the join just made (C10, RLJoinOrderRule.java:125-132).
 - done    = no edges remain; a disconnected remainder is finished with
   cross-join actions (chooseNextEdge fallback :152-159).
+
+The reference updates its graph in place on each collapse (updateGraph)
+rather than re-deriving it; likewise the env builds each vertex's and
+each edge's state record once, the first time it is live, and keeps it:
+``state()`` only assembles the live records into lists, at most once
+between two collapses.  Leaf and base-edge records depend only on what
+the env was built with (graph, oracle, factor mask, catalog), so
+``reset`` keeps them; it drops the records of join vertices and of the
+edges that touch one, whose ids the next episode reuses.  Two
+consequences:
+
+- a state is a read-only snapshot: its records are shared with later
+  states, so a caller must not mutate it; a state returned at step k is
+  never changed by step k+1 or by ``reset``;
+- the oracle's answer for a factor set must not change during the env's
+  life.  Every env in the repo is built per planner call or per wire
+  query set, and ``ParkSession.setCardinalities`` drops its envs.
 """
 
 from __future__ import annotations
@@ -58,7 +75,7 @@ class JoinOrderEnv:
         self.oracle = oracle
         self.cm = cost_model
         self.catalog = catalog
-        self.rng = random.Random(seed)
+        self.seed = seed
         # optional factor mask: restrict the episode to a subset of the
         # graph (planners use this to order each INNER component, the
         # reference's RLJoinOrderRule scope; outer typing stays
@@ -71,10 +88,16 @@ class JoinOrderEnv:
             if catalog is not None and graph.query is not None
             else set()
         )
+        # vid -> vertex record and (vid_a, vid_b) -> edge record, built
+        # the first time the vertex or edge is live
+        self._vertex_recs: dict[int, dict] = {}
+        self._edge_recs: dict[tuple[int, int], dict] = {}
         self.reset()
 
     # --- protocol --------------------------------------------------------
     def reset(self) -> dict:
+        # a fresh random finish per episode, as a freshly built env plays
+        self.rng = random.Random(self.seed)
         self.vertices: list[_Vertex] = [
             _Vertex(
                 i,
@@ -82,13 +105,20 @@ class JoinOrderEnv:
             )
             for i, a in enumerate(self.graph.aliases)
         ]
-        # live edges as (vid_a, vid_b); preds resolve via factor sets
+        # live edges as (vid_a, vid_b), vid_a < vid_b; preds resolve via
+        # factor sets
         self.live_edges: list[tuple[int, int]] = []
         for e in self.graph.edges:
             if e.factors & ~self.factors_mask:
                 continue  # edge leaves the masked subgraph
             a, b = tuple(bits(e.factors))
             self.live_edges.append((a, b))
+        # this episode reuses the join vertex ids (>= n) for other joins:
+        # drop their records and those of the edges that touch one
+        n = self.graph.n
+        self._vertex_recs = {v: r for v, r in self._vertex_recs.items() if v < n}
+        self._edge_recs = {e: r for e, r in self._edge_recs.items() if e[1] < n}
+        self._state = None
         self.cost_so_far = 0.0
         self.last_reward = 0.0
         self.done = self._check_done()
@@ -105,11 +135,18 @@ class JoinOrderEnv:
         if self.done:
             raise RuntimeError("episode is done; call reset()")
         if self.live_edges:
-            va, vb = self.live_edges[action]
+            pairs = self.live_edges
         else:
             # cross-join: lowest-index live vertex with the (action+1)-th
             live = self._live_ids()
-            va, vb = live[0], live[action + 1]
+            pairs = [(live[0], vb) for vb in live[1:]]
+        # a negative index would silently pick from the end of the list
+        if not 0 <= action < len(pairs):
+            raise ValueError(
+                f"action {action} out of range: valid actions are "
+                f"0..{len(pairs) - 1}"
+            )
+        va, vb = pairs[action]
         new_vid = self._collapse(va, vb)
         self.done = self._check_done()
         info = {
@@ -128,41 +165,18 @@ class JoinOrderEnv:
 
     # --- state encoding (§2.9) -------------------------------------------
     def state(self) -> dict:
-        verts = []
-        for v in self.vertices:
-            if v.node is None:
-                continue
-            d = {
-                "id": v.vid,
-                "estimated_cardinality": self.oracle.card(
-                    self.graph, v.node.factors
-                ),
-                "factors": sorted(bits(v.node.factors)),
-                "visibleAttributes": sorted(
-                    self._vertex_attrs(v.node) & self._visible
-                )
-                if self._visible
-                else [],
+        """The current state, a read-only snapshot (see module doc)."""
+        if self._state is None:
+            self._state = {
+                "vertices": [
+                    self._vertex_record(v)
+                    for v in self.vertices
+                    if v.node is not None
+                ],
+                "edges": [self._edge_record(e) for e in self.live_edges],
+                "done": self.done,
             }
-            if v.left is not None:
-                d["leftFactor"] = v.left
-                d["rightFactor"] = v.right
-            verts.append(d)
-        edges = []
-        for va, vb in self.live_edges:
-            preds = self._preds_between(va, vb)
-            edges.append(
-                {
-                    "factors": [va, vb],
-                    "joinAttributes": sorted(
-                        str(p.col) for p in preds
-                    )
-                    + sorted(
-                        str(p.operand) for p in preds
-                    ),
-                }
-            )
-        return {"vertices": verts, "edges": edges, "done": self.done}
+        return self._state
 
     def live_ids(self) -> list[int]:
         """Vertex ids still live (un-merged) this episode -- public so
@@ -196,6 +210,38 @@ class JoinOrderEnv:
     def _check_done(self) -> bool:
         return len(self._live_ids()) == 1
 
+    def _vertex_record(self, v: _Vertex) -> dict:
+        rec = self._vertex_recs.get(v.vid)
+        if rec is None:
+            rec = {
+                "id": v.vid,
+                "estimated_cardinality": self.oracle.card(
+                    self.graph, v.node.factors
+                ),
+                "factors": sorted(bits(v.node.factors)),
+                "visibleAttributes": sorted(
+                    self._vertex_attrs(v.node) & self._visible
+                )
+                if self._visible
+                else [],
+            }
+            if v.left is not None:
+                rec["leftFactor"] = v.left
+                rec["rightFactor"] = v.right
+            self._vertex_recs[v.vid] = rec
+        return rec
+
+    def _edge_record(self, edge: tuple[int, int]) -> dict:
+        rec = self._edge_recs.get(edge)
+        if rec is None:
+            preds = self._preds_between(*edge)
+            rec = self._edge_recs[edge] = {
+                "factors": list(edge),
+                "joinAttributes": sorted(str(p.col) for p in preds)
+                + sorted(str(p.operand) for p in preds),
+            }
+        return rec
+
     def _preds_between(self, va: int, vb: int):
         na, nb = self.vertices[va].node, self.vertices[vb].node
         preds = []
@@ -221,6 +267,7 @@ class JoinOrderEnv:
         new = _Vertex(len(self.vertices), join, left=va, right=vb)
         self.vertices.append(new)
         a.node = b.node = None
+        self._state = None
         # re-point surviving edges; drop those now internal; merge dups
         # (QueryGraph.updateGraph :343-418 + mergeEdge :281-294)
         remapped: dict[tuple[int, int], None] = {}

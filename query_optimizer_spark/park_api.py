@@ -64,9 +64,10 @@ class ParkSession:
         self._order: list[str] = []
         self._idx = -1
         self._env: JoinOrderEnv | None = None
-        # sql -> its graph, parsed at the first reset that plays it and
-        # dropped by setQueries; later episodes reuse the graph's keys
-        self._graphs: dict[str, JoinGraph] = {}
+        # sql -> its env, built at the first reset that plays it and
+        # dropped by setQueries and setCardinalities; later episodes
+        # reuse the env's graph and state records
+        self._envs: dict[str, JoinOrderEnv] = {}
         self._records: dict[str, QueryRecord] = {}
         self._est_costs: dict[str, float] = {}
         self._opt_costs: dict[str, float] = {}
@@ -80,7 +81,7 @@ class ParkSession:
             else dict(queries_json)
         )
         self._queries[mode] = qs
-        self._graphs.clear()
+        self._envs.clear()
         if mode == self._mode:
             self._order = list(qs)
             self._idx = -1
@@ -92,6 +93,7 @@ class ParkSession:
             else dict(cards_json)
         )
         self.oracle = CardinalityOracle(cards)
+        self._envs.clear()  # they hold the old oracle
 
     def train(self) -> None:
         self._mode = "train"
@@ -125,13 +127,19 @@ class ParkSession:
         self._idx = (self._idx + 1) % len(self._order)
         name = self._order[self._idx]
         sql = self._queries[self._mode][name]
-        graph = self._graphs.get(sql)
-        if graph is None:
-            graph = self._graphs[sql] = JoinGraph.from_query(parse(sql))
-        self._cur_name, self._cur_sql, self._cur_graph = name, sql, graph
-        self._env = JoinOrderEnv(
-            graph, self.oracle, self.cm, catalog=self.catalog, seed=self.seed
-        )
+        env = self._envs.get(sql)
+        if env is None:  # a new env starts reset
+            env = self._envs[sql] = JoinOrderEnv(
+                JoinGraph.from_query(parse(sql)),
+                self.oracle,
+                self.cm,
+                catalog=self.catalog,
+                seed=self.seed,
+            )
+        else:
+            env.reset()
+        self._cur_name, self._cur_sql, self._cur_graph = name, sql, env.graph
+        self._env = env
         self._records.setdefault(name, QueryRecord(name=name, sql=sql))
         return self._env.state()
 
