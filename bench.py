@@ -237,6 +237,7 @@ def main() -> None:
     import __spark_entry__ as entrymod
     from query_optimizer_spark import workload
     from query_optimizer_spark.functions.registry import warm_all
+    from query_optimizer_spark.state import evidence
 
     reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
     cohorts = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_COHORTS", "1")))
@@ -278,12 +279,12 @@ def main() -> None:
                     dt = time.monotonic() - t0
                     assert n >= 0
                     raw[name].append(round(dt, 4))
-                    # adaptive queries populate workload.ADAPTIVE_SPLIT
-                    # (plan/observe/replan rounds) -- copy it so a
+                    # adaptive queries record an "adaptive_split" state
+                    # record (plan/observe/replan rounds) -- copy it so a
                     # total-time spike is decomposable; assembly_sec is
                     # the remainder (final count() outside the split)
                     if name.startswith(("join_adaptive", "join_feedback")):
-                        split = dict(workload.ADAPTIVE_SPLIT)
+                        split = evidence(spark, sf_dir, "adaptive_split")
                         split["assembly_sec"] = round(
                             dt
                             - split.get("plan_sec", 0)
@@ -297,22 +298,14 @@ def main() -> None:
                         split["total_sec"] = round(dt, 4)
                         adaptive_split.setdefault(name, []).append(split)
                     elif name == "stream_feedback_join":
-                        from query_optimizer_spark.streaming.ops import (
-                            FEEDBACK_JOIN_SPLIT,
-                        )
-
-                        split = dict(FEEDBACK_JOIN_SPLIT)
+                        split = evidence(spark, sf_dir, "feedback_join_split")
                         split["warm_exec_sec"] = round(
                             dt - split.get("record_sec", 0), 4
                         )
                         split["total_sec"] = round(dt, 4)
                         adaptive_split.setdefault(name, []).append(split)
                     elif name == "dedup_survivors":
-                        from query_optimizer_spark.functions.clustering import (
-                            CLUSTER_SPLIT,
-                        )
-
-                        split = dict(CLUSTER_SPLIT)
+                        split = evidence(spark, sf_dir, "cluster_split")
                         split["select_sec"] = round(
                             dt
                             - split.get("setup_sec", 0)

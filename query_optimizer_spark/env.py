@@ -128,7 +128,7 @@ class JoinOrderEnv:
         if self.live_edges:
             return list(range(len(self.live_edges)))
         # disconnected remainder -> cross-join actions over live pairs
-        live = self._live_ids()
+        live = self.live_ids()
         return list(range(len(live) - 1)) if len(live) > 1 else []
 
     def step(self, action: int) -> tuple[dict, float, bool, dict]:
@@ -138,7 +138,7 @@ class JoinOrderEnv:
             pairs = self.live_edges
         else:
             # cross-join: lowest-index live vertex with the (action+1)-th
-            live = self._live_ids()
+            live = self.live_ids()
             pairs = [(live[0], vb) for vb in live[1:]]
         # a negative index would silently pick from the end of the list
         if not 0 <= action < len(pairs):
@@ -185,8 +185,6 @@ class JoinOrderEnv:
         return [v.vid for v in self.vertices if v.node is not None]
 
     # --- internals ---------------------------------------------------------
-    _live_ids = live_ids  # backwards-compatible alias
-
     def _root_node(self) -> PlanNode:
         (root,) = [v.node for v in self.vertices if v.node is not None]
         return root
@@ -208,7 +206,7 @@ class JoinOrderEnv:
         return root
 
     def _check_done(self) -> bool:
-        return len(self._live_ids()) == 1
+        return len(self.live_ids()) == 1
 
     def _vertex_record(self, v: _Vertex) -> dict:
         rec = self._vertex_recs.get(v.vid)

@@ -50,6 +50,7 @@ from .constants import (
     sql_hash32,
     sql_tokens,
 )
+from ..state import scope
 from .text import TOKS
 
 HASH32_SPARK = (
@@ -404,29 +405,12 @@ def edit_distance_oracle() -> str:
 
 # --- incremental dedup against a STORED band index ---------------------------
 
-# probe evidence keyed by (applicationId, sf_dir) -- same discipline as
-# similarity._IVFPQ_PRUNED_EVIDENCE (concurrent sessions never clobber)
-_INC_EVIDENCE: dict[tuple[str, str], dict[str, float]] = {}
-
-
-def incremental_evidence(spark: SparkSession, sf_dir: str) -> dict:
-    """Build/probe evidence of this session's last
-    ``incremental_minhash_pairs`` call (empty dict if it has not run)."""
-    key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"))
-    return dict(_INC_EVIDENCE.get(key, {}))
-
-
-_INC_COMMIT_EVIDENCE: dict[tuple[str, str], dict] = {}
-
-# per-(session, corpus) memo of the deterministic accept/reject split
-# (raw-data-derived model state; lets repeat commits skip the probe)
-_INC_COMMIT_MEMO: dict[tuple[str, str], dict] = {}
-
-
-def index_commit_evidence(spark: SparkSession, sf_dir: str) -> dict:
-    """Evidence of this session's last ``index_commit_stats`` call."""
-    key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"))
-    return dict(_INC_COMMIT_EVIDENCE.get(key, {}))
+# Session state (``state.scope``) this section writes per sf_dir: the
+# build/probe evidence of the last ``incremental_minhash_pairs`` call
+# ("dedup_incremental") and of the last ``index_commit_stats`` call
+# ("dedup_index_commit"), and the memo of the deterministic
+# accept/reject split ("dedup_index_commit_memo": raw-data-derived
+# model state that lets repeat commits skip the probe).
 
 
 def _band_rows(sig: DataFrame, keep_sig: bool) -> DataFrame:
@@ -510,6 +494,7 @@ def _ensure_inc_index(
 
 def _probe_band_index(
     spark: SparkSession,
+    sf_dir: str,
     idx_path: str,
     batch_sig: DataFrame,
     index_keep,
@@ -556,7 +541,7 @@ def _probe_band_index(
     from ..sources import read_partitioned_store
 
     idx = (
-        read_partitioned_store(spark, idx_path)
+        read_partitioned_store(spark, sf_dir, idx_path)
         .filter(F.col("shard").isin(probed))
         .filter(index_keep)
     )
@@ -660,15 +645,9 @@ def incremental_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # match itself -- the probe's answer must be commit-invariant (the
     # oracle's cand CTE has the same a.doc_id >= bound)
     pairs, stats = _probe_band_index(
-        spark, idx_path, batch_sig, F.col("doc_id") >= INC_BATCH_N
+        spark, sf_dir, idx_path, batch_sig, F.col("doc_id") >= INC_BATCH_N
     )
-    # FIFO bound: one (tiny) dict per session would otherwise accumulate
-    # across bench cohorts forever
-    while len(_INC_EVIDENCE) >= 8:
-        _INC_EVIDENCE.pop(next(iter(_INC_EVIDENCE)))
-    _INC_EVIDENCE[
-        (spark.sparkContext.applicationId, sf_dir.rstrip("/"))
-    ] = dict(
+    scope(spark, sf_dir)["dedup_incremental"] = dict(
         **stats,
         build_sec=build_sec,
         build_cached=float(build_cached),
@@ -724,6 +703,7 @@ def incremental_minhash_oracle() -> str:
 
 def _commit_band_index(
     spark: SparkSession,
+    sf_dir: str,
     idx_path: str,
     accepted_rows: DataFrame,
     n_accepted: int,
@@ -750,7 +730,7 @@ def _commit_band_index(
         )
     from ..sources import read_partitioned_store
 
-    existing = read_partitioned_store(spark, idx_path).filter(
+    existing = read_partitioned_store(spark, sf_dir, idx_path).filter(
         F.col("shard").isin(touched)
     )
     plan = physical_plan(existing)
@@ -851,8 +831,8 @@ def index_commit_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # It depends only on the raw data (the probe is deterministic and
     # commit-invariant), so it is memoized per (session, corpus) --
     # repeat commits skip the whole probe recomputation.
-    key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"))
-    memo = _INC_COMMIT_MEMO.get(key)
+    sc = scope(spark, sf_dir)
+    memo = sc.get("dedup_index_commit_memo")
     if memo is None:
         pairs = incremental_minhash_pairs(spark, sf_dir)
         memo = {
@@ -863,9 +843,7 @@ def index_commit_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             # sig-bearing batch docs minus the rejected set (one job)
             "n_batch_sig": batch_sig.count(),
         }
-        while len(_INC_COMMIT_MEMO) >= 8:
-            _INC_COMMIT_MEMO.pop(next(iter(_INC_COMMIT_MEMO)))
-        _INC_COMMIT_MEMO[key] = memo
+        sc["dedup_index_commit_memo"] = memo
     rejected = memo["rejected"]
     n_accepted = memo["n_batch_sig"] - len(rejected)
     accepted_sig = (
@@ -885,6 +863,7 @@ def index_commit_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     touched, skipped, commit_sec = _commit_band_index(
         spark,
+        sf_dir,
         idx_path,
         accepted_rows,
         n_accepted,
@@ -892,11 +871,7 @@ def index_commit_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         touched=memo["touched"],
     )
 
-    while len(_INC_COMMIT_EVIDENCE) >= 8:
-        _INC_COMMIT_EVIDENCE.pop(next(iter(_INC_COMMIT_EVIDENCE)))
-    _INC_COMMIT_EVIDENCE[
-        (spark.sparkContext.applicationId, sf_dir.rstrip("/"))
-    ] = dict(
+    sc["dedup_index_commit"] = dict(
         n_touched=len(touched),
         n_accepted=n_accepted,
         n_rejected=len(rejected),
@@ -917,7 +892,7 @@ def index_commit_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sources import read_partitioned_store
 
-    final = read_partitioned_store(spark, idx_path).filter(
+    final = read_partitioned_store(spark, sf_dir, idx_path).filter(
         F.col("shard").isin(touched)
     )
     plan = physical_plan(final)
@@ -1014,17 +989,11 @@ def index_commit_oracle() -> str:
 
 # --- multi-batch incremental ingest ------------------------------------------
 
-_MB_EVIDENCE: dict[tuple[str, str], dict] = {}
-
-# per-(session, corpus) memo of batch1's deterministic accept/reject
-# split (raw-data-derived model state, <= MB_BATCH1_N ids)
-_MB_MEMO: dict[tuple[str, str], dict] = {}
-
-
-def multibatch_evidence(spark: SparkSession, sf_dir: str) -> dict:
-    """Evidence of this session's last ``multibatch_ingest_pairs``."""
-    key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"))
-    return dict(_MB_EVIDENCE.get(key, {}))
+# Session state (``state.scope``) this section writes per sf_dir: the
+# evidence of the last ``multibatch_ingest_pairs`` call
+# ("dedup_multibatch") and the memo of batch1's deterministic
+# accept/reject split ("dedup_multibatch_memo": raw-data-derived model
+# state, <= MB_BATCH1_N ids).
 
 
 def multibatch_ingest_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1068,11 +1037,11 @@ def multibatch_ingest_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # --- day 1: probe + accept + commit ---
     b1_sig = _signatures_of(docs.filter(F.col("doc_id") < MB_BATCH1_N))
-    key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"))
-    memo = _MB_MEMO.get(key)
+    sc = scope(spark, sf_dir)
+    memo = sc.get("dedup_multibatch_memo")
     if memo is None:
         pairs1, _ = _probe_band_index(
-            spark, idx_path, b1_sig, F.col("doc_id") >= MB_CORPUS_MIN
+            spark, sf_dir, idx_path, b1_sig, F.col("doc_id") >= MB_CORPUS_MIN
         )
         memo = {
             "rejected": sorted(
@@ -1080,9 +1049,7 @@ def multibatch_ingest_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             "n_b1_sig": b1_sig.count(),
         }
-        while len(_MB_MEMO) >= 8:
-            _MB_MEMO.pop(next(iter(_MB_MEMO)))
-        _MB_MEMO[key] = memo
+        sc["dedup_multibatch_memo"] = memo
     rejected = memo["rejected"]
     n_accepted = memo["n_b1_sig"] - len(rejected)
     accepted_sig = (
@@ -1101,6 +1068,7 @@ def multibatch_ingest_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     touched, skipped, commit_sec = _commit_band_index(
         spark,
+        sf_dir,
         idx_path,
         accepted_rows,
         n_accepted,
@@ -1117,15 +1085,14 @@ def multibatch_ingest_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pairs2, stats2 = _probe_band_index(
         spark,
+        sf_dir,
         idx_path,
         b2_sig,
         (F.col("doc_id") < MB_BATCH1_N)
         | (F.col("doc_id") >= MB_CORPUS_MIN),
     )
 
-    while len(_MB_EVIDENCE) >= 8:
-        _MB_EVIDENCE.pop(next(iter(_MB_EVIDENCE)))
-    _MB_EVIDENCE[key] = dict(
+    sc["dedup_multibatch"] = dict(
         **stats2,
         build_sec=build_sec,
         build_cached=float(build_cached),

@@ -38,6 +38,7 @@ from .constants import (
     LSH_PLANES,
     RANGE_TAU,
 )
+from ..state import scope
 from .dedup import DOT_SPARK, QUANT_SPARK
 
 
@@ -1653,10 +1654,9 @@ def ivfpq_topk_oracle(
     """
 
 
-# evidence of pruned probes, keyed by (applicationId, sf_dir) so
-# concurrent sessions in one process never clobber each other's entry
-# (r10 ADVICE; read through ivfpq_pruned_evidence).  The op
-# inline-raises if the partition filter missed the scan; the pytest
+# evidence of pruned probes is the sf_dir's ``state`` record
+# "ivfpq_pruned", so concurrent sessions in one process never clobber
+# each other's entry.  The op inline-raises if the partition filter missed the scan; the pytest
 # additionally asserts the executed scan's numFiles/numPartitions
 # METRICS equal the probed subset, i.e. non-probed lists were never read
 def _ivfpq_encode_fn(bc_enc):
@@ -1730,16 +1730,6 @@ def _ivfpq_adc_fn(bc):
     return _adc
 
 
-_IVFPQ_PRUNED_EVIDENCE: dict[tuple[str, str], dict[str, float]] = {}
-
-
-def ivfpq_pruned_evidence(spark: SparkSession, sf_dir: str) -> dict:
-    """Build/probe evidence of this session's last ``ivfpq_pruned_topk``
-    call over ``sf_dir`` (empty dict if it has not run)."""
-    key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"))
-    return dict(_IVFPQ_PRUNED_EVIDENCE.get(key, {}))
-
-
 def ivfpq_pruned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ over a PARTITION-PRUNED physical list layout -- the
     100 TB form ``ivfpq_topk``'s docstring promises, demonstrated
@@ -1766,8 +1756,8 @@ def ivfpq_pruned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cost scales with nprobe/nlist, not corpus size.  The build runs
     ONCE per (session, corpus) and is reused from the session-scoped
     path on later calls (``build_cached`` in the evidence; r10
-    ADVICE).  The op records list/file counts per (applicationId,
-    sf_dir) -- read via ``ivfpq_pruned_evidence`` -- and raises if the
+    ADVICE).  The op records list/file counts as the sf_dir's ``state``
+    record "ivfpq_pruned" and raises if the
     probe predicate missed the scan; the pytest asserts the executed
     scan's numFiles/numPartitions metrics equal the probed subset."""
     from pathlib import Path
@@ -1812,14 +1802,7 @@ def ivfpq_pruned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
          for c in np.nonzero(probe_mask[qi])[0]}
     )
     list_dirs = sorted(Path(idx_path).glob("cent_id=*"))
-    # FIFO bound: dead sessions' entries are unreachable by key and the
-    # registry would otherwise grow one (tiny) dict per bench cohort
-    # forever -- same discipline as sqlsurface's derived-view cache
-    while len(_IVFPQ_PRUNED_EVIDENCE) >= 8:
-        _IVFPQ_PRUNED_EVIDENCE.pop(next(iter(_IVFPQ_PRUNED_EVIDENCE)))
-    _IVFPQ_PRUNED_EVIDENCE[
-        (spark.sparkContext.applicationId, sf_dir.rstrip("/"))
-    ] = dict(
+    scope(spark, sf_dir)["ivfpq_pruned"] = dict(
         n_lists=len(list_dirs),
         n_probed=len(probed),
         files_total=len(list(Path(idx_path).glob("cent_id=*/*.parquet"))),
@@ -1838,7 +1821,7 @@ def ivfpq_pruned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sources import read_partitioned_store
 
-    lists = read_partitioned_store(spark, idx_path).filter(
+    lists = read_partitioned_store(spark, sf_dir, idx_path).filter(
         F.col("cent_id").isin([int(c) for c in probed])
     )
     # the probe predicate must reach the scan as a PARTITION filter
@@ -2370,17 +2353,10 @@ def range_search_oracle() -> str:
 
 # --- incremental ANN ingest (IVF list append) ---------------------------------
 
-_IVF_APPEND_EVIDENCE: dict[tuple[str, str], dict[str, float]] = {}
 
-
-def ivf_append_evidence(spark: SparkSession, sf_dir: str) -> dict:
-    """Evidence dict of the last ivf_append_topk run in this session for
-    the given sf_dir (files probed/total, touched lists, phase times)."""
-    key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"))
-    return dict(_IVF_APPEND_EVIDENCE.get(key, {}))
-
-
-def _ivf_append_batch(spark, idx_path: str, emb, batch_cond, _encode) -> int:
+def _ivf_append_batch(
+    spark, sf_dir: str, idx_path: str, emb, batch_cond, _encode
+) -> int:
     """One frozen-model batch append onto an on-disk IVF list store --
     THE append phase, shared by the single-append op and the multi-day
     loop (the dedup family's _probe_band_index/_commit_band_index
@@ -2409,7 +2385,7 @@ def _ivf_append_batch(spark, idx_path: str, emb, batch_cond, _encode) -> int:
     )
     from ..sources import read_partitioned_store
 
-    existing = read_partitioned_store(spark, idx_path).filter(
+    existing = read_partitioned_store(spark, sf_dir, idx_path).filter(
         F.col("cent_id").isin(touched) & ~batch_cond
     )
     plan = physical_plan(existing)
@@ -2523,7 +2499,7 @@ def ivf_append_topk(
         # cannot duplicate the batch on re-run, r12 ADVICE)
         t1 = _time.monotonic()
         n_touched = _ivf_append_batch(
-            spark, idx_path, emb, batch_cond, _encode
+            spark, sf_dir, idx_path, emb, batch_cond, _encode
         )
         appended_marker.touch()
         append_sec = round(_time.monotonic() - t1, 4)
@@ -2532,11 +2508,7 @@ def ivf_append_topk(
         {int(c) for qi in range(len(qids))
          for c in np.nonzero(probe_mask[qi])[0]}
     )
-    while len(_IVF_APPEND_EVIDENCE) >= 8:
-        _IVF_APPEND_EVIDENCE.pop(next(iter(_IVF_APPEND_EVIDENCE)))
-    _IVF_APPEND_EVIDENCE[
-        (spark.sparkContext.applicationId, sf_dir.rstrip("/"))
-    ] = dict(
+    scope(spark, sf_dir)["ivf_append"] = dict(
         n_lists=len(list(Path(idx_path).glob("cent_id=*"))),
         n_probed=len(probed),
         n_touched=n_touched,
@@ -2552,7 +2524,7 @@ def ivf_append_topk(
 
     from ..sources import read_partitioned_store
 
-    lists = read_partitioned_store(spark, idx_path).filter(
+    lists = read_partitioned_store(spark, sf_dir, idx_path).filter(
         F.col("cent_id").isin([int(c) for c in probed])
     )
     plan = physical_plan(lists)
@@ -2578,17 +2550,6 @@ def ivf_append_topk_oracle() -> str:
     append op SHARES the relational oracle -- the agreement IS the
     ingest-correctness proof."""
     return ivfpq_topk_oracle()
-
-
-_IVF_MB_EVIDENCE: dict[tuple[str, str], dict[str, float]] = {}
-
-
-def ivf_multibatch_evidence(spark: SparkSession, sf_dir: str) -> dict:
-    """Evidence dict of the last ivf_multibatch_topk run in this
-    session for the given sf_dir (per-day touched-list counts, phase
-    times, cache state)."""
-    key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"))
-    return dict(_IVF_MB_EVIDENCE.get(key, {}))
 
 
 def ivf_multibatch_topk(
@@ -2679,7 +2640,7 @@ def ivf_multibatch_topk(
         if not m1.exists():
             t1 = _time.monotonic()
             n_touched_b1 = _ivf_append_batch(
-                spark, idx_path, emb, b1_cond, _encode
+                spark, sf_dir, idx_path, emb, b1_cond, _encode
             )
             m1.touch()
             day1_sec = round(_time.monotonic() - t1, 4)
@@ -2691,7 +2652,7 @@ def ivf_multibatch_topk(
             )
         t2 = _time.monotonic()
         n_touched_b2 = _ivf_append_batch(
-            spark, idx_path, emb, b2_cond, _encode
+            spark, sf_dir, idx_path, emb, b2_cond, _encode
         )
         m2.touch()
         day2_sec = round(_time.monotonic() - t2, 4)
@@ -2700,11 +2661,7 @@ def ivf_multibatch_topk(
         {int(c) for qi in range(len(qids))
          for c in np.nonzero(probe_mask[qi])[0]}
     )
-    while len(_IVF_MB_EVIDENCE) >= 8:
-        _IVF_MB_EVIDENCE.pop(next(iter(_IVF_MB_EVIDENCE)))
-    _IVF_MB_EVIDENCE[
-        (spark.sparkContext.applicationId, sf_dir.rstrip("/"))
-    ] = dict(
+    scope(spark, sf_dir)["ivf_multibatch"] = dict(
         n_lists=len(list(Path(idx_path).glob("cent_id=*"))),
         n_probed=len(probed),
         n_touched_b1=n_touched_b1,
@@ -2717,7 +2674,7 @@ def ivf_multibatch_topk(
 
     from ..sources import read_partitioned_store
 
-    lists = read_partitioned_store(spark, idx_path).filter(
+    lists = read_partitioned_store(spark, sf_dir, idx_path).filter(
         F.col("cent_id").isin([int(c) for c in probed])
     )
     plan = physical_plan(lists)
@@ -2742,16 +2699,6 @@ def ivf_multibatch_topk_oracle() -> str:
     the single-shot IVFADC oracle -- day 2's agreement proves day 1's
     rows survived the co-touched-list rewrites."""
     return ivfpq_topk_oracle()
-
-
-_IVF_DEL_EVIDENCE: dict[tuple[str, str], dict[str, float]] = {}
-
-
-def ivf_delete_evidence(spark: SparkSession, sf_dir: str) -> dict:
-    """Evidence dict of the last ivf_delete_topk run in this session
-    for the given sf_dir (touched/emptied list counts, phase times)."""
-    key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"))
-    return dict(_IVF_DEL_EVIDENCE.get(key, {}))
 
 
 def ivf_delete_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2832,7 +2779,7 @@ def ivf_delete_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_touched = len(touched)
         from ..sources import read_partitioned_store
 
-        survivors = read_partitioned_store(spark, idx_path).filter(
+        survivors = read_partitioned_store(spark, sf_dir, idx_path).filter(
             F.col("cent_id").isin(touched) & ~del_cond
         )
         plan = physical_plan(survivors)
@@ -2873,11 +2820,7 @@ def ivf_delete_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         {int(c) for qi in range(len(qids))
          for c in np.nonzero(probe_mask[qi])[0]}
     )
-    while len(_IVF_DEL_EVIDENCE) >= 8:
-        _IVF_DEL_EVIDENCE.pop(next(iter(_IVF_DEL_EVIDENCE)))
-    _IVF_DEL_EVIDENCE[
-        (spark.sparkContext.applicationId, sf_dir.rstrip("/"))
-    ] = dict(
+    scope(spark, sf_dir)["ivf_delete"] = dict(
         n_lists=len(list(Path(idx_path).glob("cent_id=*"))),
         n_probed=len(probed),
         n_touched=n_touched,
@@ -2894,7 +2837,7 @@ def ivf_delete_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     from ..sources import read_partitioned_store
 
-    lists = read_partitioned_store(spark, idx_path).filter(
+    lists = read_partitioned_store(spark, sf_dir, idx_path).filter(
         F.col("cent_id").isin(existing_probed)
     )
     plan = physical_plan(lists)
@@ -2928,16 +2871,6 @@ def ivf_delete_topk_oracle() -> str:
 # file-level appends (mode=append adds files, never rewrites -- the
 # cheap daily-ingest path, and the reason stores fragment)
 IVF_COMPACT_BATCHES = 4
-
-_IVF_CMP_EVIDENCE: dict[tuple[str, str], dict[str, float]] = {}
-
-
-def ivf_compact_evidence(spark: SparkSession, sf_dir: str) -> dict:
-    """Evidence dict of the last ivf_compact_topk run in this session
-    for the given sf_dir (file counts before/after, fragmented-list
-    count, phase times)."""
-    key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"))
-    return dict(_IVF_CMP_EVIDENCE.get(key, {}))
 
 
 def ivf_compact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3052,7 +2985,7 @@ def ivf_compact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         t1 = _time.monotonic()
         from ..sources import read_partitioned_store
 
-        rows = read_partitioned_store(spark, idx_path).filter(
+        rows = read_partitioned_store(spark, sf_dir, idx_path).filter(
             F.col("cent_id").isin(work["frag"])
         )
         plan = physical_plan(rows)
@@ -3089,11 +3022,7 @@ def ivf_compact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         {int(c) for qi in range(len(qids))
          for c in np.nonzero(probe_mask[qi])[0]}
     )
-    while len(_IVF_CMP_EVIDENCE) >= 8:
-        _IVF_CMP_EVIDENCE.pop(next(iter(_IVF_CMP_EVIDENCE)))
-    _IVF_CMP_EVIDENCE[
-        (spark.sparkContext.applicationId, sf_dir.rstrip("/"))
-    ] = dict(
+    scope(spark, sf_dir)["ivf_compact"] = dict(
         n_lists=len(list(Path(idx_path).glob("cent_id=*"))),
         n_probed=len(probed),
         n_fragmented=len(work["frag"]),
@@ -3106,7 +3035,7 @@ def ivf_compact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sources import read_partitioned_store
 
-    lists = read_partitioned_store(spark, idx_path).filter(
+    lists = read_partitioned_store(spark, sf_dir, idx_path).filter(
         F.col("cent_id").isin([int(c) for c in probed])
     )
     plan = physical_plan(lists)
@@ -3134,15 +3063,6 @@ def ivf_compact_topk_oracle() -> str:
 
 
 # --- IVF recluster (coarse-quantizer retrain after heavy deletion) --------------
-
-_IVF_RC_EVIDENCE: dict[tuple[str, str], dict[str, float]] = {}
-
-
-def ivf_recluster_evidence(spark: SparkSession, sf_dir: str) -> dict:
-    """Evidence dict of the last ivf_recluster_topk run in this session
-    for the given sf_dir (list-size skew before/after, phase times)."""
-    key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"))
-    return dict(_IVF_RC_EVIDENCE.get(key, {}))
 
 
 def ivf_recluster_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3280,11 +3200,7 @@ def ivf_recluster_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         {int(c) for qi in range(len(qids))
          for c in np.nonzero(probe_mask[qi])[0]}
     )
-    while len(_IVF_RC_EVIDENCE) >= 8:
-        _IVF_RC_EVIDENCE.pop(next(iter(_IVF_RC_EVIDENCE)))
-    _IVF_RC_EVIDENCE[
-        (spark.sparkContext.applicationId, sf_dir.rstrip("/"))
-    ] = dict(
+    scope(spark, sf_dir)["ivf_recluster"] = dict(
         n_lists=len(list(Path(new_path).glob("cent_id=*"))),
         n_probed=len(probed),
         skew_before=skew_before,

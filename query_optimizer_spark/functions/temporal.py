@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..session import events_df
+from ..state import scope
 
 SESSION_GAP_MS = 30 * 60 * 1000  # 30 min
 
@@ -1000,12 +1001,12 @@ def scd2_intervals_oracle() -> str:
 
 # --- incremental materialized-rollup maintenance -------------------------------
 
-# phase split of the most recent incremental_rollup run: state_build =
-# the one-time full-history aggregation + parquet write (the "nightly
-# full" the incremental pattern replaces).  The REFRESH cost -- one
-# day's delta + the merge -- is the op's total minus this, measured by
-# the caller at action time (the merge is lazy until then).
-ROLLUP_SPLIT: dict[str, float] = {}
+# phase split of the most recent incremental_rollup run, the sf_dir's
+# ``state`` record "rollup_split": state_build = the one-time
+# full-history aggregation + parquet write (the "nightly full" the
+# incremental pattern replaces).  The REFRESH cost -- one day's delta +
+# the merge -- is the op's total minus this, measured by the caller at
+# action time (the merge is lazy until then).
 
 
 def incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1031,10 +1032,10 @@ def incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-pass bit-exactly; division back to currency happens once,
     in the final projection.  The driver gate proves merged-
     incremental == single-pass-full (the DuckDB oracle is the full
-    recompute -- a different algorithm shape).  The state path carries
-    the session's applicationId (r9 ADVICE: a path keyed only by
+    recompute -- a different algorithm shape).  The state path is
+    session-scoped (``session_state_path``): a path keyed only by
     sf_dir races under two concurrent sessions -- one overwrites the
-    state the other's lazy merge is about to read).
+    state the other's lazy merge is about to read.
     """
     import time as _time
 
@@ -1063,8 +1064,9 @@ def incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial(ev.filter(F.col("day") < newest)).write.mode(
         "overwrite"
     ).parquet(str(stored))
-    ROLLUP_SPLIT.clear()
-    ROLLUP_SPLIT["state_build_sec"] = round(_time.monotonic() - t0, 4)
+    scope(spark, sf_dir)["rollup_split"] = {
+        "state_build_sec": round(_time.monotonic() - t0, 4)
+    }
     delta = partial(ev.filter(F.col("day") >= newest))
     merged = (
         spark.read.parquet(str(stored))

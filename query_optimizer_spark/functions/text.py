@@ -15,6 +15,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from ..state import scope
 from .constants import (
     BPE_RE,
     FP_HEX_CHARS,
@@ -690,32 +691,22 @@ _BPE_SEP = chr(31)
 # vocabulary-sized ``enc`` frame every N merges bounds the lineage at
 # N replaces regardless of K (the ``duplicate_clusters`` checkpoint
 # discipline); the cadence and checkpoint count are recorded in
-# ``BPE_TRAIN_EVIDENCE`` so bench attribution stays honest.
+# the "bpe_train" state record so bench attribution stays honest.
 BPE_CHECKPOINT_EVERY = 2
 
-# session-keyed trainer evidence + collected merge table (model state:
-# K (left, right) string pairs), shared by train / apply / encode so
-# the loop runs once per (session, sf_dir)
-BPE_TRAIN_EVIDENCE: dict = {}
-_BPE_MERGE_MEMO: dict = {}
-
-# session-keyed memo of the word-frequency frame (the one corpus-sized
-# stage), FIFO-bounded with unpersist-on-evict -- the _KMV_SHARED
-# discipline: without it every merge iteration's argmax action (and
-# every gate-hash re-execution) re-runs the corpus scan
-_BPE_WORDS: dict = {}
+# Session state (``state.scope``) the BPE trainer keeps per sf_dir:
+# the trainer evidence ("bpe_train"), the collected merge table
+# ("bpe_merges": model state, K (left, right) string pairs) shared by
+# train / apply / encode so the loop runs once per (session, sf_dir),
+# and the cached word-frequency frame ("bpe_words", the one corpus-sized
+# stage): without it every merge iteration's argmax action (and every
+# gate-hash re-execution) re-runs the corpus scan.
 
 
 def _bpe_words(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"))
-    df = _BPE_WORDS.get(key)
+    sc = scope(spark, sf_dir)
+    df = sc.get("bpe_words")
     if df is None:
-        while len(_BPE_WORDS) >= 4:
-            old = _BPE_WORDS.pop(next(iter(_BPE_WORDS)))
-            try:
-                old.unpersist(blocking=False)
-            except Exception:
-                pass
         df = (
             _docs(spark, sf_dir)
             .select(
@@ -732,7 +723,7 @@ def _bpe_words(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cache()
         )
         df.count()
-        _BPE_WORDS[key] = df
+        sc["bpe_words"] = df
     return df
 
 
@@ -839,9 +830,9 @@ def _bpe_run(spark: SparkSession, sf_dir: str):
         if (i + 1) % BPE_CHECKPOINT_EVERY == 0 and i + 1 < BPE_TRAIN_MERGES:
             enc = enc.localCheckpoint(eager=True)
             n_ckpt += 1
-    key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"))
-    _BPE_MERGE_MEMO[key] = collected
-    BPE_TRAIN_EVIDENCE[key] = {
+    sc = scope(spark, sf_dir)
+    sc["bpe_merges"] = collected
+    sc["bpe_train"] = {
         "k": BPE_TRAIN_MERGES,
         "merges_per_checkpoint": BPE_CHECKPOINT_EVERY,
         "n_checkpoints": n_ckpt,
@@ -853,10 +844,10 @@ def _bpe_merges(spark: SparkSession, sf_dir: str) -> list:
     """The K trained (left, right) merge pairs -- collected model
     state, memoized per (session, sf_dir) so train / apply / encode
     share one trainer run."""
-    key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"))
-    if key not in _BPE_MERGE_MEMO:
+    sc = scope(spark, sf_dir)
+    if "bpe_merges" not in sc:
         _bpe_run(spark, sf_dir)
-    return _BPE_MERGE_MEMO[key]
+    return sc["bpe_merges"]
 
 
 def bpe_apply_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1946,23 +1937,8 @@ _KMV_SHINGLES = (
 # "what's wrong" #2: each op used to build its own cached shingle frame
 # AND recompute the corpus-sized exact-intersection join -- the two
 # heaviest gate rows, paying the linear ground-truth leg twice for one
-# identical answer).  Keyed (applicationId, sf_dir) like the IVF
-# evidence dicts and session_state_path (r13 ADVICE: id(spark) was
-# safe only because the cached frames pinned the session against GC);
-# FIFO-bounded so bench's fresh-session cohorts can't grow it forever,
-# and eviction unpersists (the old per-invocation .cache() never did).
-_KMV_SHARED: dict = {}
-_KMV_SHARED_EVIDENCE: dict = {}
-
-
-def kmv_shared_evidence(spark, sf_dir: str) -> dict:
-    """Evidence for the session's shared KMV build: ``build_sec`` (the
-    one-time shingle-scan + exact-leg materialization cost, charged to
-    NEITHER kmv op -- r13 VERDICT "what's wrong" #1: per-query bench
-    attribution used to drift with declaration order because whichever
-    op ran first paid the lazy cache fill) and ``build_cached``."""
-    key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"))
-    return dict(_KMV_SHARED_EVIDENCE.get(key, {}))
+# identical answer).  Held in the sf_dir's ``state.scope`` as
+# "kmv_shared", so dropping the scope unpersists the frames.
 
 
 def _kmv_shared(spark, sf_dir: str) -> dict:
@@ -1979,23 +1955,12 @@ def _kmv_shared(spark, sf_dir: str) -> dict:
       self-join intersection), computed ONCE -- both ops' sketches are
       judged against this same tiny (source_a, source_b) frame
 
-    The frames are materialized EAGERLY here (count per frame) and the
-    wall time recorded in ``_KMV_SHARED_EVIDENCE``, so bench's warmup
-    can pay the build outside any timed rep and per-query timings stay
-    order-independent."""
-    import time as _time
-
-    key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"))
-    ent = _KMV_SHARED.get(key)
+    The frames are materialized EAGERLY here (count per frame), so
+    bench's warmup can pay the build outside any timed rep and per-query
+    timings stay order-independent."""
+    sc = scope(spark, sf_dir)
+    ent = sc.get("kmv_shared")
     if ent is None:
-        while len(_KMV_SHARED) >= 4:
-            old = _KMV_SHARED.pop(next(iter(_KMV_SHARED)))
-            for df in old.values():
-                try:
-                    df.unpersist(blocking=False)
-                except Exception:
-                    pass
-        t0 = _time.monotonic()
         sub_toks = (
             _docs(spark, sf_dir)
             .select("source", "lang", F.expr(TOKS).alias("toks"))
@@ -2012,16 +1977,7 @@ def _kmv_shared(spark, sf_dir: str) -> dict:
         # to the shared state instead of whichever op executes first
         for df in (sub_toks, toks, exact):
             df.count()
-        while len(_KMV_SHARED_EVIDENCE) >= 8:
-            _KMV_SHARED_EVIDENCE.pop(next(iter(_KMV_SHARED_EVIDENCE)))
-        _KMV_SHARED_EVIDENCE[key] = dict(
-            build_sec=round(_time.monotonic() - t0, 4), build_cached=0.0
-        )
-        _KMV_SHARED[key] = dict(sub_toks=sub_toks, toks=toks, exact=exact)
-        ent = _KMV_SHARED[key]
-    else:
-        if key in _KMV_SHARED_EVIDENCE:
-            _KMV_SHARED_EVIDENCE[key]["build_cached"] = 1.0
+        ent = sc["kmv_shared"] = dict(sub_toks=sub_toks, toks=toks, exact=exact)
     return ent
 
 

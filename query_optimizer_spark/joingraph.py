@@ -272,10 +272,6 @@ def make_join(graph: JoinGraph, left: PlanNode, right: PlanNode) -> Join:
     return Join(left, right, tuple(preds), how=how)
 
 
-def leaves_of(graph: JoinGraph) -> list[Leaf]:
-    return [Leaf(i, a) for i, a in enumerate(graph.aliases)]
-
-
 def iter_joins(node: PlanNode):
     """Yield every Join node bottom-up."""
     if isinstance(node, Join):

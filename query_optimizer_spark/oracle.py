@@ -632,7 +632,7 @@ class OverlayOracle(CardinalityOracle):
             out.append(
                 (o, min(max(f, 1.0 / self._ADJ_CLAMP), self._ADJ_CLAMP))
             )
-        while len(cache) >= 8:
+        if len(cache) >= 8:  # one insert per miss keeps it at 8
             cache.pop(next(iter(cache)))
         cache[key] = (graph, out)
         return out

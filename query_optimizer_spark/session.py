@@ -22,6 +22,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from . import sources
+
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 
@@ -37,7 +39,7 @@ def _base_builder(app: str, cpus: str | int | None = None):
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
-        .config("spark.sql.warehouse.dir", "/root/repo/.warehouse/spark")
+        .config("spark.sql.warehouse.dir", f"{sources.DEFAULT_WAREHOUSE}/spark")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
     )
 

@@ -18,7 +18,10 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
-DEFAULT_WAREHOUSE = "/root/repo/.warehouse"
+from .state import scope
+
+# the on-disk state root: ``.warehouse`` next to the package
+DEFAULT_WAREHOUSE = str(Path(__file__).resolve().parents[1] / ".warehouse")
 
 # dead-session state older than this is garbage-collected by
 # session_state_path; every session-scoped op writes AND reads its
@@ -72,8 +75,9 @@ def session_state_path(spark: SparkSession, sf_dir: str, prefix: str) -> str:
     return str(own)
 
 
-# Session-scoped memo of resolved partitioned-store reads, keyed by
-# (applicationId, path) and guarded by a root-listing fingerprint.
+# Session-scoped memo of resolved partitioned-store reads, kept per path
+# in the sf_dir's ``state.scope`` and guarded by a root-listing
+# fingerprint.
 # ``spark.read.parquet`` on a store with hundreds of partition
 # directories pays driver-side file listing + partition discovery on
 # EVERY call (measured: 1.5 s per read over the 1024-shard band index
@@ -84,7 +88,6 @@ def session_state_path(spark: SparkSession, sf_dir: str, prefix: str) -> str:
 # files), and any visible change to the store (a commit's dynamic
 # partition overwrite, an external restore) alters a child directory's
 # mtime, misses the fingerprint, and forces a fresh listing.
-_PART_READ_MEMO: dict = {}
 
 
 def _store_fingerprint(path: str) -> tuple:
@@ -102,18 +105,19 @@ def _store_fingerprint(path: str) -> tuple:
         return ("<missing>",)
 
 
-def read_partitioned_store(spark: SparkSession, path: str) -> DataFrame:
+def read_partitioned_store(
+    spark: SparkSession, sf_dir: str, path: str
+) -> DataFrame:
     """``spark.read.parquet(path)`` with the resolved relation memoized
-    per (session, path) until the store's on-disk layout changes."""
-    key = (spark.sparkContext.applicationId, path)
+    per (session, sf_dir, path) until the store's on-disk layout
+    changes."""
+    memo = scope(spark, sf_dir).setdefault("part_reads", {})
     fp = _store_fingerprint(path)
-    ent = _PART_READ_MEMO.get(key)
+    ent = memo.get(path)
     if ent is not None and ent[0] == fp:
         return ent[1]
     df = spark.read.parquet(path)
-    while len(_PART_READ_MEMO) >= 64:
-        _PART_READ_MEMO.pop(next(iter(_PART_READ_MEMO)))
-    _PART_READ_MEMO[key] = (fp, df)
+    memo[path] = (fp, df)
     return df
 
 
@@ -340,9 +344,6 @@ ZORDER_FILES = 32
 # the probe box selects keys <= max/ZORDER_SEL per dimension, so the
 # query touches ~1/ZORDER_SEL^2 of the data at ANY scale factor
 ZORDER_SEL = 25
-# observability: the last zorder_skipping run's file counts (tests and
-# SCALING probes read this; the OUTPUT never depends on layout)
-ZORDER_LAST: dict[str, int] = {}
 
 
 def _zorder_expr(c1: str, c2: str, bits: int = ZORDER_BITS) -> str:
@@ -446,7 +447,11 @@ def zorder_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     # single-file output or uniform key range legitimately keeps all
     # files, and the query must still answer correctly (r8 ADVICE
     # downgraded the former assert)
-    ZORDER_LAST.update(n_files=len(files), n_kept=len(keep))
+    # observability for tests and SCALING probes (the OUTPUT never
+    # depends on layout)
+    scope(spark, sf_dir)["zorder"] = dict(
+        n_files=len(files), n_kept=len(keep)
+    )
 
     return (
         spark.read.parquet(*keep)
@@ -681,7 +686,6 @@ def partitioned_roundtrip_oracle() -> str:
 # the MERGE cutoff: orders strictly before the split date form the
 # stored dimension snapshot; the rest arrive as the CDC batch
 MERGE_CUTOFF = "1997-01-01"
-MERGE_LAST: dict[str, int] = {}
 
 
 def merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -757,10 +761,6 @@ def merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(src_wins, F.col("s.last_price")).otherwise(F.col("t.last_price")).alias("last_price"),
     )
     merged.write.mode("overwrite").parquet(str(v2))
-    MERGE_LAST.update(
-        v1_rows=spark.read.parquet(str(v1)).count(),
-        v2_rows=spark.read.parquet(str(v2)).count(),
-    )
     out = spark.read.parquet(str(v2))
     return out.select(
         "custkey", "n_orders", "last_ms", "last_okey",
@@ -797,7 +797,6 @@ def merge_upsert_oracle() -> str:
 # compactor re-bins them toward COMPACT_TARGET_BYTES per output file
 COMPACT_SMALL_N = 64
 COMPACT_TARGET_BYTES = 4 << 20
-COMPACT_LAST: dict[str, int] = {}
 
 
 def compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -851,7 +850,9 @@ def compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     assert len(out_files) < len(files), (
         f"compaction produced {len(out_files)} files from {len(files)}"
     )
-    COMPACT_LAST.update(n_in=len(files), n_out=len(out_files))
+    scope(spark, sf_dir)["compact"] = dict(
+        n_in=len(files), n_out=len(out_files)
+    )
     # count()-elimination guard (r15 bare-scan sweep): a parquet
     # count() is answered from footer metadata alone; reading the
     # compacted rows back is the timed claim, so force column decode
@@ -995,27 +996,6 @@ SNAPSHOT_BR_HI_RANK = 192
 SNAPSHOT_MG_LO_RANK = 192  # descending rank of the window's low edge
 SNAPSHOT_MG_HI_RANK = 128  # descending rank of the window's high edge
 
-# per-(applicationId, sf_dir#store) file-count evidence, recorded on
-# EVERY _snapshot_commits call -- cached ones reload the manifests
-# (r13 ADVICE: the old module-global dict was build-path-only and not
-# session-keyed, so a warm rerun or a second sf_dir in one process
-# left scale_probe reading stale or foreign counts)
-_SNAP_EVIDENCE: dict[tuple[str, str], dict[str, int]] = {}
-
-
-def snapshot_evidence(
-    spark: SparkSession, sf_dir: str, store: str = "doc_snapshots"
-) -> dict:
-    """File-count evidence of the session's snapshot store for
-    ``sf_dir`` (n_files_v1/v2/v3, n_affected; expiry adds
-    n_orphans_deleted/n_retained)."""
-    key = (
-        spark.sparkContext.applicationId,
-        f"{sf_dir.rstrip('/')}#{store}",
-    )
-    return dict(_SNAP_EVIDENCE.get(key, {}))
-
-
 def _uri_to_path(uri: str) -> str:
     """Normalize an ``input_file_name()`` URI to a local filesystem
     path.  input_file_name returns percent-encoded ``file://`` URIs, so
@@ -1126,8 +1106,9 @@ def _snapshot_commits(
     commit 3 = copy-on-write delete of the rank-derived takedown range
     -- only files holding a doomed row are rewritten, located via a
     normalized ``input_file_name()`` probe that must resolve inside the
-    v2 file set (raise otherwise).  Evidence is recorded on EVERY call,
-    keyed (applicationId, sf_dir#store)."""
+    v2 file set (raise otherwise).  File-count evidence (n_files_v1/v2/v3,
+    n_affected) is recorded on EVERY call -- cached ones reload the
+    manifests -- as the sf_dir's ``state`` record named ``store``."""
     import json as _json
 
     from pyspark.sql import functions as F
@@ -1209,13 +1190,7 @@ def _snapshot_commits(
     }
     if 2 in manifests and 3 in manifests:
         ev["n_affected"] = len(set(manifests[2]) - set(manifests[3]))
-    key = (
-        spark.sparkContext.applicationId,
-        f"{sf_dir.rstrip('/')}#{store}",
-    )
-    while len(_SNAP_EVIDENCE) >= 8:
-        _SNAP_EVIDENCE.pop(next(iter(_SNAP_EVIDENCE)))
-    _SNAP_EVIDENCE[key] = ev
+    scope(spark, sf_dir)[store] = ev
     return base, manifests
 
 
@@ -1454,13 +1429,12 @@ def snapshot_expiry(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vacuum deleted files a retained manifest still"
             f" references: {missing[:3]}"
         )
-    key = (
-        spark.sparkContext.applicationId,
-        f"{sf_dir.rstrip('/')}#{store}",
-    )
-    _SNAP_EVIDENCE.setdefault(key, {}).update(
-        n_orphans_deleted=n_orphans, n_retained=len(retained)
-    )
+    sc = scope(spark, sf_dir)
+    sc[store] = {
+        **sc.get(store, {}),
+        "n_orphans_deleted": n_orphans,
+        "n_retained": len(retained),
+    }
     return _snapshot_stats(
         spark.read.parquet(*sorted(retained)), 3
     )
@@ -1752,18 +1726,16 @@ def snapshot_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     bfiles = _json.loads(bmanifest.read_text())
     merged = _json.loads(mmanifest.read_text())
     # evidence is (re)recorded on EVERY call -- _snapshot_commits
-    # resets the session's evidence dict each invocation, so a
-    # cold-path-only update vanished on warm reruns (r15 review)
-    key = (
-        spark.sparkContext.applicationId,
-        f"{sf_dir.rstrip('/')}#doc_snapshots",
-    )
-    _SNAP_EVIDENCE.setdefault(key, {}).update(
-        n_merge_conflicts=0,
-        n_branch2_private=len(set(bfiles) - set(v2)),
-        n_merged_files=len(merged),
-        merge_ff_ok=1,
-    )
+    # replaces the store's record each invocation, so a cold-path-only
+    # update vanished on warm reruns (r15 review)
+    sc = scope(spark, sf_dir)
+    sc["doc_snapshots"] = {
+        **sc.get("doc_snapshots", {}),
+        "n_merge_conflicts": 0,
+        "n_branch2_private": len(set(bfiles) - set(v2)),
+        "n_merged_files": len(merged),
+        "merge_ff_ok": 1,
+    }
 
     def _ref_stats(files: list[str], ref: str) -> DataFrame:
         return (

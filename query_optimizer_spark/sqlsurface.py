@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from . import TABLES
 from .session import configure_runtime, read_table
+from .state import scope
 
 # The derived-partsupp bridge shared by the TPC-H Q2/Q11/Q16/Q20
 # adaptations: distinct (l_partkey, l_suppkey) pairs with min unit
@@ -67,12 +68,6 @@ DERIVED_VIEWS_OF = {
     "sql_q21_waiting_supplier": ("flagged_lineitems",),
 }
 
-# (id(spark), sf_dir, view) -> cached derived DataFrame; each entry
-# holds its DataFrame (and through it the session) strongly, so a dead
-# session's recycled id() can never alias a live key
-_DERIVED_CACHE: dict[tuple[int, str, str], DataFrame] = {}
-
-
 def _partsupp_pair(body: str) -> tuple[str, str]:
     """(spark_sql, duck_sql) for a query over the derived partsupp:
     DuckDB gets the full inline CTE; Spark reads the shared cached
@@ -85,39 +80,12 @@ def _partsupp_pair(body: str) -> tuple[str, str]:
 
 
 def _ensure_derived(spark: SparkSession, sf_dir: str, view: str) -> None:
-    """Materialize a derived relation once per (session, sf_dir) and
-    expose it as a temp view.  Scoped like workload.PERSISTED_BLOCKS:
-    lives for the session, evicted when the same session switches
-    sf_dir (the gate and tests reuse one session across scale
-    factors)."""
-    key = (id(spark), sf_dir.rstrip("/"), view)
-    df = _DERIVED_CACHE.get(key)
-    if df is None:
-        for stale in [
-            k
-            for k in _DERIVED_CACHE
-            if k[0] == id(spark) and k[1] != key[1]
-        ]:
-            try:
-                _DERIVED_CACHE.pop(stale).unpersist(blocking=True)
-            except Exception:
-                _DERIVED_CACHE.pop(stale, None)
-        # FIFO bound (r9 ADVICE): entries for STOPPED sessions are
-        # unreachable by the same-session eviction above and each one
-        # pins its dead session's plans through the persisted
-        # DataFrame -- bench's fresh-session-per-cohort pattern would
-        # otherwise grow this module global forever.  8 mirrors
-        # oracle.py's snapshot cache bound (two views per session fit
-        # four sessions).
-        while len(_DERIVED_CACHE) >= 8:
-            oldest = next(iter(_DERIVED_CACHE))
-            try:
-                _DERIVED_CACHE.pop(oldest).unpersist(blocking=False)
-            except Exception:
-                _DERIVED_CACHE.pop(oldest, None)
-        df = spark.sql(_DERIVED_SQL[view]).persist()
-        _DERIVED_CACHE[key] = df
-    df.createOrReplaceTempView(view)
+    """Materialize a derived relation once per (session, sf_dir), held in
+    the sf_dir's ``state.scope``, and expose it as a temp view."""
+    views = scope(spark, sf_dir).setdefault("derived_views", {})
+    if view not in views:
+        views[view] = spark.sql(_DERIVED_SQL[view]).persist()
+    views[view].createOrReplaceTempView(view)
 
 
 # name -> SQL valid for BOTH Spark and DuckDB, or a (spark_sql, duck_sql)
@@ -544,7 +512,7 @@ SURFACE: dict[str, str | tuple[str, str]] = {
     # r12 shared-view audit (VERDICT r11 #7): the c_orders derived frame
     # is read ONCE by ONE query -- unlike partsupp (shared by
     # Q2/Q11/Q16/Q20) and flagged_lineitems (Q21 scanned it 3x inline),
-    # so _DERIVED_CACHE treatment would only pin executor memory for
+    # so a cached derived view would only pin executor memory for
     # zero scan savings; the other customer-LEFT-JOIN-orders queries
     # (sql_left_join_agg, sql_left_antijoin, sql_q22) filter orders on
     # different predicates and cannot share this frame.  No cache.

@@ -21,6 +21,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..functions.temporal import SESSION_GAP_MS
 from ..session import configure_runtime, normalize_ts
+from ..state import scope
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source readStream over the events parquet with a proper
@@ -42,12 +43,6 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         .load(sf_dir)
     )
     return normalize_ts(sdf)
-
-
-# last executed streaming query's plan + progress, captured for the
-# plan audit (scripts/plan_audit.py reads this after running each
-# stream_* op; the memory/parquet sink table itself carries no plan)
-LAST_STREAM_AUDIT: dict = {}
 
 
 def _src_bytes(*paths) -> int:
@@ -134,8 +129,11 @@ def _stream_width(spark, input_bytes):
         spark.conf.set(key, prev)
 
 
-def _capture_audit(q, output_mode: str) -> None:
-    import contextlib
+def _capture_audit(q, spark, sf_dir: str, output_mode: str) -> None:
+    """Record the last executed streaming query's plan and progress as the
+    sf_dir's ``state`` record "stream_audit", for the plan audit
+    (scripts/plan_audit.py reads it after running each stream_* op; the
+    memory/parquet sink table itself carries no plan)."""
     import io
 
     buf = io.StringIO()
@@ -144,14 +142,11 @@ def _capture_audit(q, output_mode: str) -> None:
             q.explain(extended=False)
     except Exception:  # a zero-batch run has no lastExecution
         pass
-    LAST_STREAM_AUDIT.clear()
-    LAST_STREAM_AUDIT.update(
-        {
-            "output_mode": output_mode,
-            "plan": buf.getvalue(),
-            "progress": q.lastProgress,
-        }
-    )
+    scope(spark, sf_dir)["stream_audit"] = {
+        "output_mode": output_mode,
+        "plan": buf.getvalue(),
+        "progress": q.lastProgress,
+    }
 
 
 def _record_stream_feedback(q, store, op: str) -> None:
@@ -204,7 +199,8 @@ def _record_stream_feedback(q, store, op: str) -> None:
 
 
 def _run_to_memory(
-    sdf, output_mode: str, store=None, op: str = "", input_bytes=None
+    sdf, sf_dir: str, output_mode: str, store=None, op: str = "",
+    input_bytes=None,
 ) -> DataFrame:
     spark = sdf.sparkSession
     name = f"stream_{uuid.uuid4().hex[:12]}"
@@ -217,7 +213,7 @@ def _run_to_memory(
             .start()
         )
         q.awaitTermination()
-    _capture_audit(q, output_mode)
+    _capture_audit(q, spark, sf_dir, output_mode)
     if store is not None:
         _record_stream_feedback(q, store, op)
     return spark.table(name)
@@ -243,7 +239,7 @@ def hourly_counts_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_value",
         )
     )
-    return _run_to_memory(agg, "complete", input_bytes=_src_bytes(f"{sf_dir}/events.parquet"))
+    return _run_to_memory(agg, sf_dir, "complete", input_bytes=_src_bytes(f"{sf_dir}/events.parquet"))
 
 
 def hourly_counts_stream_oracle() -> str:
@@ -274,7 +270,7 @@ def sliding_counts_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_value",
         )
     )
-    return _run_to_memory(agg, "complete", input_bytes=_src_bytes(f"{sf_dir}/events.parquet"))
+    return _run_to_memory(agg, sf_dir, "complete", input_bytes=_src_bytes(f"{sf_dir}/events.parquet"))
 
 
 def sliding_counts_stream_oracle() -> str:
@@ -310,7 +306,7 @@ def enrich_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum("value"), 3).alias("total_value"),
         )
     )
-    return _run_to_memory(agg, "complete", input_bytes=_src_bytes(f"{sf_dir}/events.parquet"))
+    return _run_to_memory(agg, sf_dir, "complete", input_bytes=_src_bytes(f"{sf_dir}/events.parquet"))
 
 
 def enrich_stream_oracle() -> str:
@@ -338,7 +334,7 @@ def dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicatesWithinWatermark(["event_id"])
         .select("event_id", "user_id", "event_type", "value")
     )
-    return _run_to_memory(deduped, "append", input_bytes=_src_bytes(f"{sf_dir}/events.parquet"))
+    return _run_to_memory(deduped, sf_dir, "append", input_bytes=_src_bytes(f"{sf_dir}/events.parquet"))
 
 
 def dedup_stream_oracle() -> str:
@@ -438,7 +434,7 @@ def sessionize_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    return _run_to_memory(sessions, "append", input_bytes=_src_bytes(f"{sf_dir}/events.parquet"))
+    return _run_to_memory(sessions, sf_dir, "append", input_bytes=_src_bytes(f"{sf_dir}/events.parquet"))
 
 
 def sessionize_stream_oracle() -> str:
@@ -534,16 +530,9 @@ def join_stream(
         ),
     )
     return _run_to_memory(
-        joined, "append", store=store, op="stream_join", input_bytes=_src_bytes(f"{sf_dir}/events.parquet")
+        joined, sf_dir, "append", store=store, op="stream_join", input_bytes=_src_bytes(f"{sf_dir}/events.parquet")
     )
 
-
-# phase split of the most recent feedback_broadcast_join run (bench.py
-# copies it into the side artifact): record_sec is the embedded cold
-# stream-stream recording pass -- the expensive slice a real workload
-# pays once -- and the remainder is the warm stream-static execution;
-# 'broadcast' is the strategy the observed rows chose
-FEEDBACK_JOIN_SPLIT: dict = {}
 
 # assumed bytes/row for the feedback broadcast decision: the 3-column
 # (long, long, timestamp) UnsafeRow is 32 B, and a BroadcastHashedRelation
@@ -575,8 +564,14 @@ def feedback_broadcast_join(
     Feedback may change the STRATEGY, never the answer: the output is
     exactly join_stream's (purchase_id, click_id, user_id, lag_us) and
     hash-matches the same DuckDB oracle -- the driver gate proves it.
-    The chosen strategy is observable in LAST_STREAM_AUDIT (the warm
-    plan shows BroadcastHashJoin when the observed count fits)."""
+    The chosen strategy is observable in the "stream_audit" state record
+    (the warm plan shows BroadcastHashJoin when the observed count
+    fits).  The phase split of the run is the "feedback_join_split"
+    record (bench.py copies it into the side artifact): record_sec is
+    the embedded cold stream-stream recording pass -- the expensive
+    slice a real workload pays once -- and the remainder is the warm
+    stream-static execution; 'broadcast' is the strategy the observed
+    rows chose."""
     from ..oracle import FeedbackStore
     from ..session import events_df
 
@@ -585,11 +580,10 @@ def feedback_broadcast_join(
     if store is None:
         store = FeedbackStore()
     t0 = _time.monotonic()
-    FEEDBACK_JOIN_SPLIT.clear()
     if store.stream_observation("stream_join", "state_rows_total") is None:
         # recording pass: the cold run a real workload needed anyway
         join_stream(spark, sf_dir, store=store)
-    FEEDBACK_JOIN_SPLIT["record_sec"] = round(_time.monotonic() - t0, 4)
+    record_sec = round(_time.monotonic() - t0, 4)
     # the click-side observe() count is the dimension cardinality; the
     # retained state rows are the fallback for a store recorded by an
     # observer-less run (still an observed lower bound, never a guess)
@@ -604,10 +598,13 @@ def feedback_broadcast_join(
         F.col("ts").alias("click_ts"),
     )
     threshold = _broadcast_threshold_bytes(spark)
-    FEEDBACK_JOIN_SPLIT["broadcast"] = bool(
+    broadcast = bool(
         observed is not None and observed * _DIM_ROW_BYTES <= threshold
     )
-    if FEEDBACK_JOIN_SPLIT["broadcast"]:
+    scope(spark, sf_dir)["feedback_join_split"] = dict(
+        record_sec=record_sec, broadcast=broadcast
+    )
+    if broadcast:
         clicks = F.broadcast(clicks)
     else:
         # feedback says the dimension does NOT fit: pin the shuffle
@@ -638,7 +635,7 @@ def feedback_broadcast_join(
             "lag_us"
         ),
     )
-    return _run_to_memory(joined, "append", input_bytes=_src_bytes(f"{sf_dir}/events.parquet"))
+    return _run_to_memory(joined, sf_dir, "append", input_bytes=_src_bytes(f"{sf_dir}/events.parquet"))
 
 
 def _broadcast_threshold_bytes(spark: SparkSession) -> int:
@@ -723,7 +720,7 @@ def sink_parquet_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    _capture_audit(q, "append")
+    _capture_audit(q, spark, sf_dir, "append")
     # materialize the read-back into the block cache, then remove the
     # sink + checkpoint dirs so completed runs leave nothing on disk
     # (the returned DataFrame must stay collectable after cleanup)
@@ -959,7 +956,7 @@ def asof_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    return _run_to_memory(out, "append", input_bytes=input_bytes)
+    return _run_to_memory(out, sf_dir, "append", input_bytes=input_bytes)
 
 
 def asof_stream_oracle() -> str:
@@ -1070,7 +1067,7 @@ def hll_users_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    tbl = _run_to_memory(regs, "append", input_bytes=_src_bytes(f"{sf_dir}/events.parquet"))
+    tbl = _run_to_memory(regs, sf_dir, "append", input_bytes=_src_bytes(f"{sf_dir}/events.parquet"))
     # batch finish on the sink table (a few hundred rows): collapse
     # multi-batch re-emissions, then estimate.  The sink holds only
     # NON-ZERO registers, so no zero-fill grid is needed: each of the
@@ -1228,7 +1225,7 @@ def quantile_sketch_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    tbl = _run_to_memory(counts, "append", input_bytes=_src_bytes(f"{sf_dir}/events.parquet"))
+    tbl = _run_to_memory(counts, sf_dir, "append", input_bytes=_src_bytes(f"{sf_dir}/events.parquet"))
     # batch finish on the sink table: collapse multi-batch re-emissions
     # (counts are monotone -> max = final), then the CDF walk
     hist = tbl.groupBy("event_type", "b").agg(F.max("cnt").alias("cnt"))
@@ -1325,7 +1322,7 @@ def incremental_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources import read_partitioned_store
 
     idx = (
-        read_partitioned_store(spark, idx_path)
+        read_partitioned_store(spark, sf_dir, idx_path)
         # corpus-side rows only: commit-invariant, like the batch probe
         .filter(F.col("doc_id") >= INC_BATCH_N)
         .select(
@@ -1350,7 +1347,7 @@ def incremental_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.max("est").alias("est_jaccard"))
         .filter(F.col("est_jaccard") >= MINHASH_THRESHOLD)
     )
-    return _run_to_memory(scored, "complete", input_bytes=_src_bytes(f"{sf_dir}/documents.parquet"))
+    return _run_to_memory(scored, sf_dir, "complete", input_bytes=_src_bytes(f"{sf_dir}/documents.parquet"))
 
 
 def incremental_dedup_stream_oracle() -> str:
@@ -1457,7 +1454,7 @@ def kmv_distinct_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    tbl = _run_to_memory(sketch, "append", input_bytes=_src_bytes(f"{sf_dir}/documents.parquet"))
+    tbl = _run_to_memory(sketch, sf_dir, "append", input_bytes=_src_bytes(f"{sf_dir}/documents.parquet"))
     # batch finish on the sink table: collapse multi-batch emissions to
     # the K smallest per source (== the final state, see _kmv_fn), then
     # the theta estimator.  (K-1) * 2^32 is exact in a double; when a
@@ -1659,7 +1656,7 @@ def window_funnel_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    tbl = _run_to_memory(levels, "append", input_bytes=input_bytes)
+    tbl = _run_to_memory(levels, sf_dir, "append", input_bytes=input_bytes)
     final = tbl.groupBy("user_id").agg(F.max("level").alias("level"))
     return final.groupBy("level").agg(
         F.count("*").cast("int").alias("n_users")
@@ -1769,7 +1766,7 @@ def cdc_tail_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    _capture_audit(q, "complete")
+    _capture_audit(q, spark, sf_dir, "complete")
     # the per-commit contract: every transition file rode its OWN
     # micro-batch (maxFilesPerTrigger=1 honored under availableNow)
     data_batches = 0

@@ -26,20 +26,19 @@ from .oracle import (
 from .planners import PLANNERS
 from .session import configure_runtime
 from .sqlparse import parse
+from .state import scope
 
-# Phase split of the most recent adaptive run (plan / observe / replan /
-# assembly seconds), overwritten per call.  bench.py copies it into the
-# side artifact so a total-time spike on join_adaptive_* is decomposable
-# (VERDICT r6 "What's wrong" #2).
-ADAPTIVE_SPLIT: dict[str, float] = {}
-
-# DataFrames the most recent adaptive run persist()ed, overwritten per
-# call.  A caller that wants a genuinely-cold follow-up run (e.g.
-# join_feedback_warm's fresh re-execution claim) drops EXACTLY these via
-# drop_persisted_blocks() -- a session-wide catalog.clearCache() would
-# also evict every other query's cached relations and perturb their
-# timings inside the same bench rep.
-PERSISTED_BLOCKS: list = []
+# Session state (``state.scope``) this module writes per sf_dir:
+# "adaptive_split" is the phase split of the most recent adaptive run
+# (plan / observe / replan seconds), replaced per call; bench.py copies
+# it into the side artifact so a total-time spike on join_adaptive_* is
+# decomposable.  "persisted_blocks" lists the DataFrames the most recent
+# adaptive run persist()ed, replaced per call.  A caller that wants a
+# genuinely-cold follow-up run (e.g. join_feedback_warm's fresh
+# re-execution claim) drops EXACTLY these via drop_persisted_blocks() --
+# a session-wide catalog.clearCache() would also evict every other
+# query's cached relations and perturb their timings inside the same
+# bench rep.
 
 FIXTURES: dict[str, str] = {
     # chain: l-o-c (build plan step 1; entry() flagship at sf0.001)
@@ -635,8 +634,7 @@ def run_fixture_adaptive(
     first = _first_leaf_join(res.tree)
     pre = Renderer(spark, sf_dir, graph, est)
     block = pre.render(first).persist()
-    PERSISTED_BLOCKS.clear()
-    PERSISTED_BLOCKS.append(block)
+    scope(spark, sf_dir)["persisted_blocks"] = [block]
     observed = block.count()  # runtime feedback; also warms the cache
     overlay = OverlayOracle(est, seed)
     overlay.observed[first.factors] = float(observed)
@@ -654,8 +652,7 @@ def run_fixture_adaptive(
         graph, overlay, get_cost_model(cost_model), first
     )
     t3 = _time.monotonic()
-    ADAPTIVE_SPLIT.clear()
-    ADAPTIVE_SPLIT.update(
+    scope(spark, sf_dir)["adaptive_split"] = dict(
         plan_sec=round(t1 - t0, 4),
         observe_sec=round(t2 - t1, 4),
         replan_sec=round(t3 - t2, 4),
@@ -786,7 +783,7 @@ def run_fixture_adaptive_full(
         res = PLANNERS["dp_ccp"](graph, overlay, cm)
     plan_sec = _time.monotonic() - t0
     mat: dict[int, object] = {}  # factor mask -> persisted DataFrame
-    PERSISTED_BLOCKS.clear()
+    persisted = scope(spark, sf_dir)["persisted_blocks"] = []
     tree = res.tree
     full = (1 << len(graph.aliases)) - 1
     renderer = _MaterializedRenderer(spark, sf_dir, graph, overlay)
@@ -858,7 +855,7 @@ def run_fixture_adaptive_full(
                 if first_exc is not None:
                     raise first_exc
             block, n, obs = spec.pop(key)
-            PERSISTED_BLOCKS.append(block)
+            persisted.append(block)
             fresh = {nxt.factors: n}
             # free leaf feedback from the freshly-executed scans (cached
             # child blocks re-read from memory and surface no scan here)
@@ -891,8 +888,7 @@ def run_fixture_adaptive_full(
                 block.unpersist(blocking=False)
             except Exception:
                 pass
-    ADAPTIVE_SPLIT.clear()
-    ADAPTIVE_SPLIT.update(
+    scope(spark, sf_dir)["adaptive_split"] = dict(
         plan_sec=round(plan_sec, 4),
         observe_sec=round(observe_sec, 4),
         # summed per-thread metrics-walk time (overlapped wall-clock):
@@ -944,8 +940,7 @@ def run_fixture_warm(
         res = PLANNERS["dp_ccp"](graph, overlay, get_cost_model(cost_model))
     # warm pass has NO observation barriers and no re-planning -- the
     # split records that contrast against the adaptive rows
-    ADAPTIVE_SPLIT.clear()
-    ADAPTIVE_SPLIT.update(
+    scope(spark, sf_dir)["adaptive_split"] = dict(
         plan_sec=round(_time.monotonic() - t0, 4),
         observe_sec=0.0,
         replan_sec=0.0,
@@ -968,12 +963,12 @@ def _subtree_of(node, factors: int):
     raise KeyError(factors)
 
 
-def drop_persisted_blocks() -> None:
-    """Unpersist exactly the blocks the last adaptive run persisted, so a
-    follow-up run is a fresh re-execution, not a read of live caches."""
-    for blk in PERSISTED_BLOCKS:
+def drop_persisted_blocks(spark, sf_dir: str) -> None:
+    """Unpersist exactly the blocks the last adaptive run on ``sf_dir``
+    persisted, so a follow-up run is a fresh re-execution, not a read of
+    live caches."""
+    for blk in scope(spark, sf_dir).pop("persisted_blocks", []):
         blk.unpersist(blocking=True)
-    PERSISTED_BLOCKS.clear()
 
 
 def run_feedback_warm(spark, sf_dir: str, name: str = "join_cycle_7"):
@@ -982,17 +977,20 @@ def run_feedback_warm(spark, sf_dir: str, name: str = "join_cycle_7"):
     the warm pass re-plans the same fixture from the store -- including
     the first join, which within-query feedback can never correct -- and
     executes statically.  Feedback may change the ORDER, never the
-    answer.  ``ADAPTIVE_SPLIT["cold_record_sec"]`` is the recording pass,
-    so bench's assembly remainder is the warm pass alone."""
+    answer.  The ``"adaptive_split"`` record's ``cold_record_sec`` is the
+    recording pass, so bench's assembly remainder is the warm pass alone."""
     from .oracle import FeedbackStore
 
     store = FeedbackStore()
     t0 = time.monotonic()
     run_fixture_adaptive_full(spark, sf_dir, name, store=store).collect()
     cold_sec = time.monotonic() - t0
-    drop_persisted_blocks()
+    drop_persisted_blocks(spark, sf_dir)
     df = run_fixture_warm(spark, sf_dir, name, store=store)
-    ADAPTIVE_SPLIT["cold_record_sec"] = round(cold_sec, 4)
+    sc = scope(spark, sf_dir)
+    sc["adaptive_split"] = {
+        **sc["adaptive_split"], "cold_record_sec": round(cold_sec, 4)
+    }
     return df
 
 
@@ -1015,12 +1013,12 @@ def run_feedback_persist(spark, sf_dir: str, name: str = "join_star_4"):
     rec = FeedbackStore(path=path, tag=sf_dir)
     run_fixture_adaptive_full(spark, sf_dir, name, store=rec).collect()
     rec.save()
-    drop_persisted_blocks()
+    drop_persisted_blocks(spark, sf_dir)
     assert FeedbackStore(path, tag=sf_dir + "#refreshed").rows == {}
     warm_store = FeedbackStore(path, tag=sf_dir)
     assert warm_store.rows == rec.rows and warm_store.rows
     df = run_fixture_warm(spark, sf_dir, name, store=warm_store)
-    assert ADAPTIVE_SPLIT.get("warm_seeded", 0) > 0
+    assert scope(spark, sf_dir)["adaptive_split"]["warm_seeded"] > 0
     return df
 
 

@@ -8,7 +8,8 @@ Usage: python scripts/capture_plans.py <suffix> <query> [query ...]
         default sf0.01 -- plan SHAPE is scale-invariant, data size is not)
 
 Streaming queries have no batch explain; for stream_* names the captured
-text is the streaming runtime plan from LAST_STREAM_AUDIT after one run.
+text is the streaming runtime plan from the "stream_audit" state record
+after one run.
 """
 
 from __future__ import annotations
@@ -44,12 +45,13 @@ def main() -> int:
         if name.startswith("stream_"):
             # the runner already executed the stream; the runtime plan
             # was captured by _run_to_memory
-            from query_optimizer_spark.streaming.ops import LAST_STREAM_AUDIT
+            from query_optimizer_spark.state import evidence
 
+            audit = evidence(spark, sf_dir, "stream_audit")
             plan = (
-                f"[streaming runtime plan via LAST_STREAM_AUDIT;"
-                f" output_mode={LAST_STREAM_AUDIT.get('output_mode')}]\n"
-                + str(LAST_STREAM_AUDIT.get("plan", ""))
+                f"[streaming runtime plan via the stream_audit record;"
+                f" output_mode={audit.get('output_mode')}]\n"
+                + str(audit.get("plan", ""))
             )
         else:
             plan = df._sc._jvm.PythonSQLUtils.explainString(

@@ -95,8 +95,7 @@ def main() -> None:
     import __spark_entry__ as entry
     from query_optimizer_spark.executor import physical_plan
     from query_optimizer_spark.session import get_session
-
-    from query_optimizer_spark.streaming import ops as stream_ops
+    from query_optimizer_spark.state import evidence
 
     spark = get_session("plan-audit", profile="default")
     rows = []
@@ -108,9 +107,9 @@ def main() -> None:
             # captured micro-batch plan + final progress
             try:
                 fn(spark, args.sf_dir)
-                stream_rows.append(
-                    (name, _stream_audit(stream_ops.LAST_STREAM_AUDIT))
-                )
+                stream_rows.append((name, _stream_audit(
+                    evidence(spark, args.sf_dir, "stream_audit")
+                )))
             except Exception as exc:  # pragma: no cover
                 stream_rows.append((name, f"ERROR: {exc}"))
             continue

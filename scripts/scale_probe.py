@@ -43,8 +43,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 
+from query_optimizer_spark.sources import DEFAULT_WAREHOUSE
+from query_optimizer_spark.state import evidence
+
 BASE = "/root/testdata/sf0.1"
-WORK = "/root/repo/.warehouse/scaleprobe"
+WORK = f"{DEFAULT_WAREHOUSE}/scaleprobe"
 ID_STRIDE = 10_000_000
 # hotuser mode: the hot user's views replicate x (k * HOT_BASE) so the
 # skewed key carries real volume (the base user has only ~10 views)
@@ -300,7 +303,7 @@ def main() -> None:
         # gains k exact twins and out_rows grows ~k.
         def _inc_post(sf_of):
             def post():
-                info = dedup.incremental_evidence(spark, sf_of)
+                info = evidence(spark, sf_of, "dedup_incremental")
                 build = info.pop("build_sec", 0.0)
                 return {"build_sec": round(build, 2), **info}
 
@@ -322,7 +325,7 @@ def main() -> None:
         # the commit is real on the first call per scale point.
         def _commit_post(sf_of):
             def post():
-                ev = dedup.index_commit_evidence(spark, sf_of)
+                ev = evidence(spark, sf_of, "dedup_index_commit")
                 return {
                     "commit_sec": ev.get("commit_sec"),
                     "n_touched": ev.get("n_touched"),
@@ -388,7 +391,7 @@ def main() -> None:
         # deletion request does not grow because the table did, so
         # n_affected should stay ~flat.
         def _snap_post(sf=f"{WORK}/disjoint_x{k}"):
-            return {k2: qsources.snapshot_evidence(spark, sf).get(k2)
+            return {k2: evidence(spark, sf, "doc_snapshots").get(k2)
                     for k2 in ("n_files_v1", "n_files_v2", "n_affected",
                                "n_files_v3")}
 
@@ -408,8 +411,7 @@ def main() -> None:
         # + |orphans| unlinks (both file-count-bounded, ~flat); the
         # timed read is the retained version's manifest-pruned scan
         def _exp_post(sf=f"{WORK}/disjoint_x{k}"):
-            ev = qsources.snapshot_evidence(
-                spark, sf, store="doc_snapshots_exp")
+            ev = evidence(spark, sf, "doc_snapshots_exp")
             return {"n_orphans_deleted": ev.get("n_orphans_deleted"),
                     "n_retained": ev.get("n_retained")}
 
@@ -518,7 +520,7 @@ def main() -> None:
         # files_probed/files_total evidence rides along per scale
         def _pruned_post(sf_of):
             def post():
-                info = similarity.ivfpq_pruned_evidence(spark, sf_of)
+                info = evidence(spark, sf_of, "ivfpq_pruned")
                 build = info.pop("build_sec", 0.0)
                 return {"build_sec": round(build, 2), **info}
 
@@ -537,7 +539,7 @@ def main() -> None:
         # files_probed tracks the probe-list subset, never the corpus
         def _append_post(sf_of):
             def post():
-                ev = similarity.ivf_append_evidence(spark, sf_of)
+                ev = evidence(spark, sf_of, "ivf_append")
                 return {
                     "build_sec": round(ev.get("build_sec", 0.0), 2),
                     "append_sec": ev.get("append_sec"),
@@ -556,7 +558,7 @@ def main() -> None:
         # ~flat while the corpus (and the one-time base build) grows
         def _mb_post(sf_of):
             def post():
-                ev = similarity.ivf_multibatch_evidence(spark, sf_of)
+                ev = evidence(spark, sf_of, "ivf_multibatch")
                 return {
                     "build_sec": round(ev.get("build_sec", 0.0), 2),
                     "day1_sec": ev.get("day1_sec"),
@@ -576,7 +578,7 @@ def main() -> None:
         # full build grow linearly
         def _del_post(sf_of):
             def post():
-                ev = similarity.ivf_delete_evidence(spark, sf_of)
+                ev = evidence(spark, sf_of, "ivf_delete")
                 return {
                     "build_sec": round(ev.get("build_sec", 0.0), 2),
                     "delete_sec": ev.get("delete_sec"),
@@ -596,7 +598,7 @@ def main() -> None:
         # rows) grow at most linearly; cold lists are never read
         def _cmp_post(sf_of):
             def post():
-                ev = similarity.ivf_compact_evidence(spark, sf_of)
+                ev = evidence(spark, sf_of, "ivf_compact")
                 return {
                     "build_sec": round(ev.get("build_sec", 0.0), 2),
                     "compact_sec": ev.get("compact_sec"),
@@ -616,7 +618,7 @@ def main() -> None:
         # in-op) and the new-model probe staying list-bounded
         def _rc_post(sf_of):
             def post():
-                ev = similarity.ivf_recluster_evidence(spark, sf_of)
+                ev = evidence(spark, sf_of, "ivf_recluster")
                 return {
                     "build_sec": round(ev.get("build_sec", 0.0), 2),
                     "recluster_sec": ev.get("recluster_sec"),
@@ -719,12 +721,9 @@ def main() -> None:
         # bounded-state claim, measured; disjoint mode grows users
         # linearly, so state_rows tracks n.  state_rows comes from the
         # query's own stateOperators progress metric.
-        def _state_rows():
-            from query_optimizer_spark.streaming.ops import (
-                LAST_STREAM_AUDIT,
-            )
-
-            ops_m = (LAST_STREAM_AUDIT.get("progress") or {}).get(
+        def _state_rows(sf):
+            audit = evidence(spark, sf, "stream_audit")
+            ops_m = (audit.get("progress") or {}).get(
                 "stateOperators"
             ) or [{}]
             return {"state_rows": ops_m[0].get("numRowsTotal", -1)}
@@ -734,11 +733,13 @@ def main() -> None:
         probe("stream_asof_join", "replica", k,
               lambda sf=f"{WORK}/replica_x{k}":
                   streaming_mod.asof_stream(spark, sf),
-              n_events0 * k, post=_state_rows)
+              n_events0 * k,
+              post=lambda sf=f"{WORK}/replica_x{k}": _state_rows(sf))
         probe("stream_asof_join", "disjoint", k,
               lambda sf=f"{WORK}/disjoint_x{k}":
                   streaming_mod.asof_stream(spark, sf),
-              n_events0 * k, post=_state_rows)
+              n_events0 * k,
+              post=lambda sf=f"{WORK}/disjoint_x{k}": _state_rows(sf))
         # --- streaming quantile sketch (r10; VERDICT r10 #3): state is
         # one <=41-slot count vector per event_type FOREVER, so
         # state_rows must stay flat (= #types) as events grow; runtime
@@ -771,7 +772,7 @@ def main() -> None:
         # unions while files_total grows.
         def _mb_post(sf_of):
             def post():
-                ev = dedup.multibatch_evidence(spark, sf_of)
+                ev = evidence(spark, sf_of, "dedup_multibatch")
                 return {
                     # day-1 one-time cost (linear build + flat commit),
                     # folded into build_sec so probe_sec isolates the
@@ -844,9 +845,9 @@ def main() -> None:
         # compact state table, so it must stay a small fraction of the
         # full rebuild at every scale -- the nightly-pipeline claim,
         # measured under both growth models
-        def _rollup_post():
+        def _rollup_post(sf):
             return {
-                "state_build_sec": temporal.ROLLUP_SPLIT.get(
+                "state_build_sec": evidence(spark, sf, "rollup_split").get(
                     "state_build_sec"
                 ),
             }
@@ -854,11 +855,13 @@ def main() -> None:
         probe("evt_incremental_rollup", "replica", k,
               lambda sf=f"{WORK}/replica_x{k}":
                   temporal.incremental_rollup(spark, sf),
-              n_events0 * k, post=_rollup_post)
+              n_events0 * k,
+              post=lambda sf=f"{WORK}/replica_x{k}": _rollup_post(sf))
         probe("evt_incremental_rollup", "disjoint", k,
               lambda sf=f"{WORK}/disjoint_x{k}":
                   temporal.incremental_rollup(spark, sf),
-              n_events0 * k, post=_rollup_post)
+              n_events0 * k,
+              post=lambda sf=f"{WORK}/disjoint_x{k}": _rollup_post(sf))
         # --- quantile rollup (r10; VERDICT r10 #3): the stored state is
         # one <=41-bucket histogram per (type, day), so sketch_rows must
         # stay FLAT as events grow -- the 'any date range from stored
@@ -928,11 +931,8 @@ def main() -> None:
         # crosses threshold/80B and the decision flips to shuffle --
         # strategy from measurement, not estimate, with the flip
         # visible in the broadcast column
-        def _bridge_post(store):
-            from query_optimizer_spark.streaming.ops import (
-                LAST_STREAM_AUDIT,
-            )
-
+        def _bridge_post(store, sf):
+            audit = evidence(spark, sf, "stream_audit")
             return {
                 "observed_dim_rows": int(
                     store.stream_observation("stream_join", "click_side.n")
@@ -944,7 +944,7 @@ def main() -> None:
                     ) or -1
                 ),
                 "broadcast": "BroadcastHashJoin"
-                in (LAST_STREAM_AUDIT.get("plan") or ""),
+                in (audit.get("plan") or ""),
             }
 
         from query_optimizer_spark.oracle import FeedbackStore as _FS
@@ -954,7 +954,8 @@ def main() -> None:
               lambda sf=f"{WORK}/replica_x{k}", s=bridge_store:
                   streaming_mod.feedback_broadcast_join(spark, sf, store=s),
               n_events0 * k,
-              post=lambda s=bridge_store: _bridge_post(s))
+              post=lambda s=bridge_store, sf=f"{WORK}/replica_x{k}":
+                  _bridge_post(s, sf))
         # --- cold adaptive vs warm re-execution (r7 FeedbackStore):
         # the progressive loop's n-1 count() barriers are paid by the
         # COLD (recording) run; the warm run plans from the store and
@@ -967,10 +968,11 @@ def main() -> None:
 
         fb_store = FeedbackStore()
 
-        def _cold_split():
+        def _cold_split(sf=f"{WORK}/replica_x{k}"):
+            split = evidence(spark, sf, "adaptive_split")
             return {
-                "observe_sec": _wl.ADAPTIVE_SPLIT.get("observe_sec"),
-                "rounds": _wl.ADAPTIVE_SPLIT.get("rounds"),
+                "observe_sec": split.get("observe_sec"),
+                "rounds": split.get("rounds"),
             }
 
         probe("join_adaptive_cold", "replica", k,
@@ -982,7 +984,7 @@ def main() -> None:
         # run: the warm claim is a fresh re-execution planning from the
         # store, not a read of the recording run's live caches
         # (targeted unpersist, matching the bench path -- r7 ADVICE)
-        _wl.drop_persisted_blocks()
+        _wl.drop_persisted_blocks(spark, f"{WORK}/replica_x{k}")
         probe("join_feedback_warm", "replica", k,
               lambda sf=f"{WORK}/replica_x{k}", s=fb_store:
                   _wl.run_fixture_warm(

@@ -32,6 +32,7 @@ def main() -> None:
 
     from query_optimizer_spark.functions import dedup
     from query_optimizer_spark.session import get_session
+    from query_optimizer_spark.state import evidence
     from query_optimizer_spark.streaming import ops as st
 
     spark = get_session("stream-width-probe", profile="default", cpus="32")
@@ -58,7 +59,7 @@ def main() -> None:
         t0 = time.monotonic()
         n_ic = dedup.index_commit_stats(spark, sf).count()
         t_ic = time.monotonic() - t0
-        ev_commit = dedup.index_commit_evidence(spark, sf)
+        ev_commit = evidence(spark, sf, "dedup_index_commit")
         rec = dict(
             k=k,
             events_mb=round(ev_bytes / 2**20, 1),

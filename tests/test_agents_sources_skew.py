@@ -12,11 +12,13 @@ from query_optimizer_spark.oracle import TrueCountOracle
 from query_optimizer_spark.planners import plan_dp_ccp
 from query_optimizer_spark.skew import salted_join
 from query_optimizer_spark.sources import (
+    DEFAULT_WAREHOUSE,
     bucketed_join_demo,
     read_any,
     write_partitioned,
 )
 from query_optimizer_spark.sqlparse import parse
+from query_optimizer_spark.state import evidence
 
 from .conftest import SF_DIR
 from .fixtures import ALL
@@ -51,7 +53,7 @@ def test_random_agent_episode_deterministic(oracle):
 
 
 def test_multiformat_roundtrip(spark, tmp_path_factory):
-    base = "/root/repo/.warehouse/roundtrip"
+    base = f"{DEFAULT_WAREHOUSE}/roundtrip"
     df = spark.read.parquet(f"{SF_DIR}/nation.parquet")
     for fmt in ("json", "csv", "parquet"):
         path = f"{base}/{fmt}"
@@ -103,7 +105,7 @@ def test_session_state_path_refreshes_own_liveness(spark):
 
 
 def test_partitioned_sink_prunes(spark):
-    path = "/root/repo/.warehouse/orders_by_status"
+    path = f"{DEFAULT_WAREHOUSE}/orders_by_status"
     orders = spark.read.parquet(f"{SF_DIR}/orders.parquet")
     write_partitioned(orders, path, ["o_orderstatus"])
     back = spark.read.parquet(path).filter(F.col("o_orderstatus") == "F")
@@ -249,7 +251,7 @@ def test_snapshot_time_travel_immutability_and_cow(spark):
     )
     assert got == duck_hash(duck, sources.snapshot_time_travel_oracle())
 
-    info = sources.snapshot_evidence(spark, SF_DIR)
+    info = evidence(spark, SF_DIR, "doc_snapshots")
     assert 0 < info["n_affected"] < info["n_files_v2"], info
     m = {
         v: set(json.loads((base / f"manifest_v{v}.json").read_text()))
@@ -557,7 +559,7 @@ def test_snapshot_expiry_vacuums_only_orphans(spark):
     )
     assert got == duck_hash(duck, sources.snapshot_expiry_oracle())
 
-    ev = sources.snapshot_evidence(spark, SF_DIR, store="doc_snapshots_exp")
+    ev = evidence(spark, SF_DIR, "doc_snapshots_exp")
     assert ev["n_orphans_deleted"] == len(orphans) > 0, ev
     for f in orphans:
         assert not Path(f).exists(), f
@@ -578,6 +580,6 @@ def test_snapshot_expiry_vacuums_only_orphans(spark):
 
     before = snap()
     assert result_hash(sources.snapshot_expiry(spark, SF_DIR)) == got
-    ev2 = sources.snapshot_evidence(spark, SF_DIR, store="doc_snapshots_exp")
+    ev2 = evidence(spark, SF_DIR, "doc_snapshots_exp")
     assert ev2["n_orphans_deleted"] == 0, ev2
     assert snap() == before

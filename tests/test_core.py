@@ -377,7 +377,7 @@ def test_env_greedy_agent_matches_greedy_costs(true_oracle):
             va, vb = (
                 env.live_edges[a]
                 if env.live_edges
-                else (env._live_ids()[0], env._live_ids()[a + 1])
+                else (env.live_ids()[0], env.live_ids()[a + 1])
             )
             na, nb = env.vertices[va].node, env.vertices[vb].node
             j = make_join(g, na, nb)

@@ -6,6 +6,8 @@ import pytest
 from query_optimizer_spark.functions import multimodal
 from query_optimizer_spark.functions.registry import PIPELINE_OPS
 from query_optimizer_spark.harness import result_hash
+from query_optimizer_spark.sources import DEFAULT_WAREHOUSE
+from query_optimizer_spark.state import evidence, scope
 
 from .conftest import SF_DIR
 from .test_spark_exec import duck_hash
@@ -153,7 +155,7 @@ def test_decode_image_real_path_on_bmp_payloads(spark):
 def test_materialize_curated_roundtrip(spark, duck):
     from query_optimizer_spark.functions import corpus
 
-    out = "/root/repo/.warehouse/curated_corpus"
+    out = f"{DEFAULT_WAREHOUSE}/curated_corpus"
     back = corpus.materialize_curated(spark, SF_DIR, out)
     n_kept = duck.execute(
         f"SELECT count(*) FROM ({corpus.curate_oracle()}) WHERE keep"
@@ -436,7 +438,7 @@ def test_shard_manifest_detects_content_change(spark):
     src0 = docs.filter("doc_id = 0").select("source").first().source
     import tempfile
 
-    with tempfile.TemporaryDirectory(dir="/root/repo/.warehouse") as td:
+    with tempfile.TemporaryDirectory(dir=DEFAULT_WAREHOUSE) as td:
         mutated.write.mode("overwrite").parquet(f"{td}/documents.parquet")
         m2 = {r.source: r.checksum
               for r in PIPELINE_OPS["mm_shard_manifest"][0](spark, td).collect()}
@@ -602,10 +604,10 @@ def test_bpe_trainer_lineage_bounded(spark):
     model state so other tests see the default trainer."""
     from query_optimizer_spark.functions import text as T
 
-    key = (spark.sparkContext.applicationId, SF_DIR.rstrip("/"))
+    sc = scope(spark, SF_DIR)
     old_k = T.BPE_TRAIN_MERGES
-    saved_memo = T._BPE_MERGE_MEMO.pop(key, None)
-    saved_ev = T.BPE_TRAIN_EVIDENCE.pop(key, None)
+    saved_memo = sc.pop("bpe_merges", None)
+    saved_ev = sc.pop("bpe_train", None)
     try:
         T.BPE_TRAIN_MERGES = 6
         _, enc = T._bpe_run(spark, SF_DIR)
@@ -613,22 +615,22 @@ def test_bpe_trainer_lineage_bounded(spark):
         n_replace = plan.count("replace(")
         # checkpoints at merges 2 and 4; merges 5 and 6 stack on top
         assert n_replace <= T.BPE_CHECKPOINT_EVERY, plan
-        ev = T.BPE_TRAIN_EVIDENCE[key]
+        ev = evidence(spark, SF_DIR, "bpe_train")
         assert ev["k"] == 6
         assert ev["merges_per_checkpoint"] == T.BPE_CHECKPOINT_EVERY
         assert ev["n_checkpoints"] == 2
         # the K=6 merge table extends the K=4 one (the loop is a
         # prefix-stable greedy): first 4 merges agree with the default
-        six = T._BPE_MERGE_MEMO[key]
+        six = sc["bpe_merges"]
         assert len(six) == 6
     finally:
         T.BPE_TRAIN_MERGES = old_k
-        T._BPE_MERGE_MEMO.pop(key, None)
-        T.BPE_TRAIN_EVIDENCE.pop(key, None)
+        sc.pop("bpe_merges", None)
+        sc.pop("bpe_train", None)
         if saved_memo is not None:
-            T._BPE_MERGE_MEMO[key] = saved_memo
+            sc["bpe_merges"] = saved_memo
         if saved_ev is not None:
-            T.BPE_TRAIN_EVIDENCE[key] = saved_ev
+            sc["bpe_train"] = saved_ev
     # the default-K model state must be rebuildable and prefix-agree
     four = T._bpe_merges(spark, SF_DIR)
     assert four == six[: len(four)]
@@ -988,14 +990,10 @@ def test_zorder_skipping_prunes_most_files(spark, duck):
     majority of the clustered files for the ~1/SEL^2 box (that IS the
     operator's reason to exist), and the surviving rows must equal a
     full-scan filter -- no row lost to an over-eager prune."""
-    from query_optimizer_spark import sources
-
     df = PIPELINE_OPS["io_zorder_skipping"][0](spark, SF_DIR)
     got = result_hash(df)
-    n_files, n_kept = (
-        sources.ZORDER_LAST["n_files"],
-        sources.ZORDER_LAST["n_kept"],
-    )
+    zorder = evidence(spark, SF_DIR, "zorder")
+    n_files, n_kept = zorder["n_files"], zorder["n_kept"]
     assert n_kept < n_files / 2, (n_kept, n_files)
     expected = duck_hash(duck, PIPELINE_OPS["io_zorder_skipping"][1])
     assert got == expected
@@ -1169,10 +1167,11 @@ def test_merge_upsert_copy_on_write(spark, duck):
     # same way the op does instead of recomputing a tag by hand
     base = sources.session_state_path(spark, SF_DIR, "cust_snapshot")
     v1 = spark.read.parquet(f"{base}_v1")
+    v2 = spark.read.parquet(f"{base}_v2")
     # v1 is the pre-cutoff summary: every customer with an early order,
     # none of the post-cutoff counts
-    assert v1.count() == sources.MERGE_LAST["v1_rows"] > 0
-    assert sources.MERGE_LAST["v2_rows"] >= sources.MERGE_LAST["v1_rows"]
+    assert v1.count() > 0
+    assert v2.count() >= v1.count()
     n_pre = duck.execute(
         "SELECT count(DISTINCT o_custkey) FROM orders "
         f"WHERE o_orderdate < TIMESTAMP '{sources.MERGE_CUTOFF}'"
@@ -1190,7 +1189,8 @@ def test_compact_small_files_reduces_file_count(spark, duck):
     got = result_hash(df)
     expected = duck_hash(duck, PIPELINE_OPS["io_compact_small_files"][1])
     assert got == expected
-    n_in, n_out = sources.COMPACT_LAST["n_in"], sources.COMPACT_LAST["n_out"]
+    compact = evidence(spark, SF_DIR, "compact")
+    n_in, n_out = compact["n_in"], compact["n_out"]
     assert n_in == sources.COMPACT_SMALL_N
     assert n_out <= n_in / 4, (n_in, n_out)
 

@@ -6,6 +6,7 @@ from pyspark.sql import functions as F
 
 from query_optimizer_spark.executor import physical_plan
 from query_optimizer_spark.functions import dedup, text
+from query_optimizer_spark.state import evidence, scope
 from query_optimizer_spark.workload import run_fixture, run_fixture_via_env_agent
 
 from .conftest import SF_DIR
@@ -255,13 +256,13 @@ def test_incremental_dedup_reads_only_batch_shards(spark, duck):
     assert result_hash(df) == duck_hash(
         duck, dedup.incremental_minhash_oracle()
     )
-    info = dedup.incremental_evidence(spark, SF_DIR)
+    info = evidence(spark, SF_DIR, "dedup_incremental")
     assert 0 < info["n_probed"] < info["n_shards"], info
 
     # a repeat call reuses the session's stored index (no re-encode)
     # and answers identically
     df2 = dedup.incremental_minhash_pairs(spark, SF_DIR)
-    info2 = dedup.incremental_evidence(spark, SF_DIR)
+    info2 = evidence(spark, SF_DIR, "dedup_incremental")
     assert info2["build_cached"] == 1.0, info2
     assert result_hash(df2) == result_hash(df)
 
@@ -316,7 +317,7 @@ def test_index_commit_rewrites_only_touched_shards(spark, duck):
     before = snapshot()
     df = dedup.index_commit_stats(spark, SF_DIR)
     assert result_hash(df) == duck_hash(duck, dedup.index_commit_oracle())
-    ev = dedup.index_commit_evidence(spark, SF_DIR)
+    ev = evidence(spark, SF_DIR, "dedup_index_commit")
     assert ev["commit_skipped"] == 0.0 and ev["n_touched"] > 0, ev
     assert ev["n_accepted"] + ev["n_rejected"] > 0, ev
 
@@ -342,7 +343,7 @@ def test_index_commit_rewrites_only_touched_shards(spark, duck):
 
     # repeat call: same answer, rewrite skipped
     df2 = dedup.index_commit_stats(spark, SF_DIR)
-    ev2 = dedup.index_commit_evidence(spark, SF_DIR)
+    ev2 = evidence(spark, SF_DIR, "dedup_index_commit")
     assert ev2["commit_skipped"] == 1.0, ev2
     assert result_hash(df2) == result_hash(df)
     assert snapshot() == after
@@ -365,7 +366,7 @@ def test_index_commit_heals_half_written_commit(spark, duck):
 
     idx_path = Path(session_state_path(spark, SF_DIR, "inc_band_index"))
     shutil.rmtree(idx_path, ignore_errors=True)
-    dedup._INC_COMMIT_MEMO.clear()
+    scope(spark, SF_DIR).pop("dedup_index_commit_memo", None)
     dedup._ensure_inc_index(spark, SF_DIR)
 
     # pre-commit copy of the whole index (cheap at test scale)
@@ -376,7 +377,7 @@ def test_index_commit_heals_half_written_commit(spark, duck):
     oracle_hash = duck_hash(duck, dedup.index_commit_oracle())
     df = dedup.index_commit_stats(spark, SF_DIR)
     assert result_hash(df) == oracle_hash
-    ev = dedup.index_commit_evidence(spark, SF_DIR)
+    ev = evidence(spark, SF_DIR, "dedup_index_commit")
     assert ev["commit_skipped"] == 0.0 and ev["n_touched"] > 1, ev
 
     # crash simulation: one touched shard reverts to pre-commit content
@@ -387,7 +388,7 @@ def test_index_commit_heals_half_written_commit(spark, duck):
     shutil.rmtree(pre)
 
     df2 = dedup.index_commit_stats(spark, SF_DIR)
-    ev2 = dedup.index_commit_evidence(spark, SF_DIR)
+    ev2 = evidence(spark, SF_DIR, "dedup_index_commit")
     assert ev2["commit_skipped"] == 0.0, (
         "half-written commit was skipped, not healed",
         ev2,
@@ -409,7 +410,7 @@ def test_multibatch_second_batch_sees_first_commit(spark, duck):
     rows = df.collect()
     assert result_hash(df) == duck_hash(duck, dedup.multibatch_oracle())
 
-    ev = dedup.multibatch_evidence(spark, SF_DIR)
+    ev = evidence(spark, SF_DIR, "dedup_multibatch")
     assert ev["n_rejected_b1"] > 0 and ev["n_accepted_b1"] > 0, ev
     assert 0 < ev["n_probed"] < ev["n_shards"], ev
 
@@ -418,16 +419,12 @@ def test_multibatch_second_batch_sees_first_commit(spark, duck):
     vs_batch1 = {r.doc_a for r in rows if r.doc_a < MB_BATCH1_N}
     assert vs_batch1, rows
     # (c) rejected batch1 docs were never committed: no pair cites them
-    rejected = set(
-        dedup._MB_MEMO[
-            (spark.sparkContext.applicationId, SF_DIR.rstrip("/"))
-        ]["rejected"]
-    )
+    rejected = set(scope(spark, SF_DIR)["dedup_multibatch_memo"]["rejected"])
     assert rejected and not (vs_batch1 & rejected), (vs_batch1, rejected)
 
     # (d) repeat call: identical answer, commit skipped, build cached
     df2 = dedup.multibatch_ingest_pairs(spark, SF_DIR)
-    ev2 = dedup.multibatch_evidence(spark, SF_DIR)
+    ev2 = evidence(spark, SF_DIR, "dedup_multibatch")
     assert ev2["commit_skipped"] == 1.0 and ev2["build_cached"] == 1.0, ev2
     assert result_hash(df2) == result_hash(df)
 
@@ -448,14 +445,14 @@ def test_ivfpq_pruned_layout_reads_only_probed_lists(spark, duck):
 
     df = sim.ivfpq_pruned_topk(spark, SF_DIR)
     assert result_hash(df) == duck_hash(duck, sim.ivfpq_pruned_topk_oracle())
-    info = sim.ivfpq_pruned_evidence(spark, SF_DIR)
+    info = evidence(spark, SF_DIR, "ivfpq_pruned")
     assert 0 < info["n_probed"] < info["n_lists"], info
 
     # build caching (r10 ADVICE): a repeat call in the same session
     # reuses the completed session-scoped index instead of re-encoding
     # (the first call of the session paid the build; this one must not)
     df2 = sim.ivfpq_pruned_topk(spark, SF_DIR)
-    info2 = sim.ivfpq_pruned_evidence(spark, SF_DIR)
+    info2 = evidence(spark, SF_DIR, "ivfpq_pruned")
     assert info2["build_cached"] == 1.0, info2
     assert result_hash(df2) == result_hash(df)
 
@@ -509,7 +506,7 @@ def test_ivf_append_rewrites_only_touched_lists(spark, duck):
     assert got == duck_hash(duck, similarity.ivf_append_topk_oracle())
     # the grown index == single-shot IVFADC over everything
     assert got == result_hash(similarity.ivfpq_topk(spark, SF_DIR))
-    ev = similarity.ivf_append_evidence(spark, SF_DIR)
+    ev = evidence(spark, SF_DIR, "ivf_append")
     assert ev["n_touched"] > 0 and ev["build_cached"] == 0.0, ev
     assert 0 < ev["files_probed"] <= ev["files_total"], ev
 
@@ -530,7 +527,7 @@ def test_ivf_append_rewrites_only_touched_lists(spark, duck):
 
     # repeat call: cached index reused, same answer, no rewrite
     df2 = similarity.ivf_append_topk(spark, SF_DIR)
-    ev2 = similarity.ivf_append_evidence(spark, SF_DIR)
+    ev2 = evidence(spark, SF_DIR, "ivf_append")
     assert ev2["build_cached"] == 1.0, ev2
     assert result_hash(df2) == got
     assert snapshot() == after
@@ -567,7 +564,7 @@ def test_ivf_multibatch_day2_and_crash_heal(spark, duck):
     got = result_hash(df)
     assert got == duck_hash(duck, similarity.ivf_multibatch_topk_oracle())
     assert got == result_hash(similarity.ivfpq_topk(spark, SF_DIR))
-    ev = similarity.ivf_multibatch_evidence(spark, SF_DIR)
+    ev = evidence(spark, SF_DIR, "ivf_multibatch")
     assert ev["n_touched_b2"] > 0 and ev["build_cached"] == 0.0, ev
 
     after_day2 = snapshot()
@@ -590,15 +587,14 @@ def test_ivf_multibatch_day2_and_crash_heal(spark, duck):
     (idx_path / "_APPENDED_B2").unlink()
     df3 = similarity.ivf_multibatch_topk(spark, SF_DIR)
     assert result_hash(df3) == got
-    ev3 = similarity.ivf_multibatch_evidence(spark, SF_DIR)
+    ev3 = evidence(spark, SF_DIR, "ivf_multibatch")
     assert ev3["build_cached"] == 0.0 and ev3["n_touched_b2"] > 0, ev3
 
     # warm repeat: both markers present, nothing rewritten
     before_warm = snapshot()
     df4 = similarity.ivf_multibatch_topk(spark, SF_DIR)
     assert result_hash(df4) == got
-    assert similarity.ivf_multibatch_evidence(
-        spark, SF_DIR)["build_cached"] == 1.0
+    assert evidence(spark, SF_DIR, "ivf_multibatch")["build_cached"] == 1.0
     assert snapshot() == before_warm
 
 
@@ -627,7 +623,7 @@ def test_ivf_delete_rewrites_only_touched_lists(spark, duck):
     df = similarity.ivf_delete_topk(spark, SF_DIR)
     got = result_hash(df)
     assert got == duck_hash(duck, similarity.ivf_delete_topk_oracle())
-    ev = similarity.ivf_delete_evidence(spark, SF_DIR)
+    ev = evidence(spark, SF_DIR, "ivf_delete")
     assert ev["n_touched"] > 0 and ev["build_cached"] == 0.0, ev
 
     # no deleted id anywhere in the store
@@ -653,7 +649,7 @@ def test_ivf_delete_rewrites_only_touched_lists(spark, duck):
     (idx_path / "_DELETED").unlink()
     df2 = similarity.ivf_delete_topk(spark, SF_DIR)
     assert result_hash(df2) == got
-    ev2 = similarity.ivf_delete_evidence(spark, SF_DIR)
+    ev2 = evidence(spark, SF_DIR, "ivf_delete")
     assert ev2["build_cached"] == 0.0 and ev2["n_touched"] == ev[
         "n_touched"
     ], (ev, ev2)
@@ -661,8 +657,7 @@ def test_ivf_delete_rewrites_only_touched_lists(spark, duck):
     # warm repeat: marker present, nothing rewritten
     before_warm = snapshot()
     assert result_hash(similarity.ivf_delete_topk(spark, SF_DIR)) == got
-    assert similarity.ivf_delete_evidence(
-        spark, SF_DIR)["build_cached"] == 1.0
+    assert evidence(spark, SF_DIR, "ivf_delete")["build_cached"] == 1.0
     assert snapshot() == before_warm
 
 
@@ -686,7 +681,7 @@ def test_ivf_compact_rewrites_only_fragmented_lists(spark, duck):
     df = similarity.ivf_compact_topk(spark, SF_DIR)
     got = result_hash(df)
     assert got == duck_hash(duck, similarity.ivf_compact_topk_oracle())
-    ev = similarity.ivf_compact_evidence(spark, SF_DIR)
+    ev = evidence(spark, SF_DIR, "ivf_compact")
     assert ev["build_cached"] == 0.0, ev
     assert 0 < ev["n_fragmented"] < ev["n_lists"], ev
     assert ev["files_after"] < ev["files_before"], ev
@@ -726,8 +721,7 @@ def test_ivf_compact_rewrites_only_fragmented_lists(spark, duck):
 
     before_warm = full_snap()
     assert result_hash(similarity.ivf_compact_topk(spark, SF_DIR)) == got
-    assert similarity.ivf_compact_evidence(
-        spark, SF_DIR)["build_cached"] == 1.0
+    assert evidence(spark, SF_DIR, "ivf_compact")["build_cached"] == 1.0
     assert full_snap() == before_warm
 
 
@@ -758,7 +752,7 @@ def test_ivf_recluster_new_model_over_survivors(spark, duck):
     df = similarity.ivf_recluster_topk(spark, SF_DIR)
     got = result_hash(df)
     assert got == duck_hash(duck, similarity.ivf_recluster_topk_oracle())
-    ev = similarity.ivf_recluster_evidence(spark, SF_DIR)
+    ev = evidence(spark, SF_DIR, "ivf_recluster")
     assert ev["build_cached"] == 0.0, ev
     assert ev["skew_before"] > 0 and ev["skew_after"] > 0, ev
 
@@ -791,8 +785,7 @@ def test_ivf_recluster_new_model_over_survivors(spark, duck):
 
     old_before, new_before = snap(old_path), snap(new_path)
     assert result_hash(similarity.ivf_recluster_topk(spark, SF_DIR)) == got
-    assert similarity.ivf_recluster_evidence(
-        spark, SF_DIR)["build_cached"] == 1.0
+    assert evidence(spark, SF_DIR, "ivf_recluster")["build_cached"] == 1.0
     assert snap(old_path) == old_before and snap(new_path) == new_before
 
 

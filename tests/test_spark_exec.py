@@ -296,13 +296,13 @@ def test_adaptive_concurrent_observe_matches_sequential(spark):
     from query_optimizer_spark.costmodels import get_cost_model
     from query_optimizer_spark.oracle import FeedbackStore, OverlayOracle
     from query_optimizer_spark.planners import plan_with_materialized
+    from query_optimizer_spark.state import evidence
     from query_optimizer_spark.workload import (
-        ADAPTIVE_SPLIT,
-        PERSISTED_BLOCKS,
         _MaterializedRenderer,
         _next_unit_join,
         _scan_observations,
         _subtree_of,
+        drop_persisted_blocks,
         plan_fixture,
         run_fixture_adaptive_full,
     )
@@ -349,9 +349,7 @@ def test_adaptive_concurrent_observe_matches_sequential(spark):
         rows_seq, rounds_seq = sequential(name, s_seq)
         df = run_fixture_adaptive_full(spark, SF_DIR, name, store=s_conc)
         rows_conc = sorted(map(tuple, df.collect()))
-        for b in PERSISTED_BLOCKS:
-            b.unpersist(blocking=True)
-        PERSISTED_BLOCKS.clear()
+        drop_persisted_blocks(spark, SF_DIR)
         assert rows_conc == rows_seq, name
         assert s_conc.rows == s_seq.rows, name
-        assert ADAPTIVE_SPLIT["rounds"] == rounds_seq, name
+        assert evidence(spark, SF_DIR, "adaptive_split")["rounds"] == rounds_seq, name

@@ -5,6 +5,7 @@ import pytest
 from query_optimizer_spark import streaming
 from query_optimizer_spark.functions import temporal
 from query_optimizer_spark.harness import result_hash
+from query_optimizer_spark.state import evidence
 
 from .conftest import SF_DIR
 from .test_spark_exec import duck_hash
@@ -52,10 +53,7 @@ def test_stream_hll_state_is_one_row_per_key(spark, duck):
     row per event_type (bounded by the key domain), never one row per
     user.  Checked from the query's own stateOperators progress
     metric, against the exact distinct counts it is summarizing."""
-    from query_optimizer_spark.streaming.ops import (
-        LAST_STREAM_AUDIT,
-        hll_users_stream,
-    )
+    from query_optimizer_spark.streaming.ops import hll_users_stream
 
     out = hll_users_stream(spark, SF_DIR).collect()
     n_types, n_users = duck.execute(
@@ -63,7 +61,8 @@ def test_stream_hll_state_is_one_row_per_key(spark, duck):
         " FROM events"
     ).fetchone()
     assert len(out) == n_types
-    ops_m = (LAST_STREAM_AUDIT.get("progress") or {}).get(
+    audit = evidence(spark, SF_DIR, "stream_audit")
+    ops_m = (audit.get("progress") or {}).get(
         "stateOperators"
     ) or [{}]
     state_rows = ops_m[0].get("numRowsTotal", -1)
@@ -86,10 +85,7 @@ def test_stream_feedback_bridge_broadcast_decision(spark):
     side iff the OBSERVED count fits the threshold -- and either
     strategy returns exactly the stream-stream join's rows."""
     from query_optimizer_spark.oracle import FeedbackStore
-    from query_optimizer_spark.streaming.ops import (
-        LAST_STREAM_AUDIT,
-        feedback_broadcast_join,
-    )
+    from query_optimizer_spark.streaming.ops import feedback_broadcast_join
 
     expected = result_hash(streaming.join_stream(spark, SF_DIR))
 
@@ -109,7 +105,7 @@ def test_stream_feedback_bridge_broadcast_decision(spark):
     )
     assert clicks == n_clicks
     # sf0.001 clicks are tiny -> observed count says broadcast
-    assert "BroadcastHashJoin" in LAST_STREAM_AUDIT["plan"]
+    assert "BroadcastHashJoin" in evidence(spark, SF_DIR, "stream_audit")["plan"]
     assert result_hash(warm) == expected
 
     # negative path: a store claiming a huge dimension forces the
@@ -117,7 +113,9 @@ def test_stream_feedback_bridge_broadcast_decision(spark):
     big = FeedbackStore()
     big.record_stream("stream_join", "state_rows_total", 1e9)
     cold = feedback_broadcast_join(spark, SF_DIR, store=big)
-    assert "BroadcastHashJoin" not in LAST_STREAM_AUDIT["plan"]
+    assert "BroadcastHashJoin" not in evidence(
+        spark, SF_DIR, "stream_audit"
+    )["plan"]
     assert result_hash(cold) == expected
 
 
@@ -464,8 +462,6 @@ def test_stream_cdc_tail_per_commit_batches(spark, duck):
     progress), (c) streaming state is bounded by the (version, change)
     group count, and (d) a warm rerun reuses the feed (the _FEED_DONE
     marker survives) and agrees."""
-    from query_optimizer_spark.streaming.ops import LAST_STREAM_AUDIT
-
     df = streaming.cdc_tail_stream(spark, SF_DIR)
     got = result_hash(df)
     assert got == duck_hash(duck, streaming.cdc_tail_stream_oracle())
@@ -474,7 +470,7 @@ def test_stream_cdc_tail_per_commit_batches(spark, duck):
         (2, "insert"),
         (3, "delete"),
     }
-    prog = LAST_STREAM_AUDIT.get("progress") or {}
+    prog = evidence(spark, SF_DIR, "stream_audit").get("progress") or {}
     state = prog.get("stateOperators") or []
     if state:  # complete-mode agg state: one row per group
         assert state[0].get("numRowsTotal", 0) <= len(rows)
