@@ -15,6 +15,8 @@ baselines a learned policy is measured against:
 
 from __future__ import annotations
 
+import json
+import math
 import random
 
 from .env import JoinOrderEnv
@@ -109,8 +111,6 @@ def action_features(state: dict, n_actions: int) -> list[list[float]]:
     ordering reaches 1.04x optimal where random sits at 1.12x, so the
     signal is observable; the skew interaction lets the policy express
     it without hurting the regular classes)."""
-    import math
-
     verts = {v["id"]: v for v in state["vertices"]}
     deg: dict[int, int] = {v: 0 for v in verts}
     for e in state["edges"]:
@@ -162,12 +162,31 @@ def action_features(state: dict, n_actions: int) -> list[list[float]]:
     return feats
 
 
+def _state_key(state: dict) -> tuple:
+    """What ``action_features`` reads of a state, named by factor sets:
+    the live vertices' sets in id order and each live edge's two sets in
+    action order.  A vertex's cardinality and an edge's join attributes
+    are functions of its sets for as long as the env's oracle answers
+    the same (env.py), so equal keys of one env give equal features."""
+    sets = {v["id"]: tuple(v["factors"]) for v in state["vertices"]}
+    edges = [e["factors"] for e in state["edges"]]
+    return (
+        tuple([sets[v] for v in sorted(sets)]),
+        tuple([(sets[a], sets[b]) for a, b in edges]),
+    )
+
+
 class ReinforceAgent:
     """Linear softmax policy + episodic REINFORCE with a per-fixture
     running baseline (costs span orders of magnitude across queries, so
     a shared normalization would encode query identity, not action
     quality).  Deterministic under a fixed seed.  Training harness:
-    scripts/train_agent.py (writes AGENT_TRAINING.md)."""
+    scripts/train_agent.py (writes AGENT_TRAINING.md).
+
+    ``theta`` is fixed within a batch, so sampling scores each state of
+    an env once per batch: ``act_sample`` keeps (features, probabilities,
+    their mean feature vector) per (env, ``_state_key``) until ``update``
+    changes ``theta``.  Assign ``theta`` only between batches."""
 
     def __init__(self, lr: float = 0.2, seed: int = 0, temp: float = 1.0):
         self.theta = [0.0] * N_FEATS
@@ -175,10 +194,9 @@ class ReinforceAgent:
         self.temp = temp
         self.rng = random.Random(seed)
         self.base: dict[str, tuple[float, float, int]] = {}
+        self._scored: dict[tuple, tuple] = {}
 
     def _advantage(self, name: str, ret: float) -> float:
-        import math
-
         mean, var, n = self.base.get(name, (ret, 1.0, 0))
         sd = math.sqrt(var) if n > 1 else 1.0
         # ret = -sum(log10(1+step_cost)): HIGHER is better, so the
@@ -197,8 +215,6 @@ class ReinforceAgent:
         return max(-3.0, min(3.0, adv))
 
     def _scores(self, env, state):
-        import math
-
         feats = action_features(state, len(env.actions()))
         scores = [
             sum(t * f for t, f in zip(self.theta, fv)) / self.temp
@@ -210,14 +226,26 @@ class ReinforceAgent:
         return feats, [e / z for e in exps]
 
     def act_sample(self, env, state):
-        feats, probs = self._scores(env, state)
+        """(action, scored): a sampled action and the state's
+        (features, probabilities, mean feature vector)."""
+        key = (env, _state_key(state))
+        scored = self._scored.get(key)
+        if scored is None:
+            feats, probs = self._scores(env, state)
+            # sum_b pi(b) f(b), the baseline term of update's gradient
+            mean_f = [
+                sum(p * fv[i] for p, fv in zip(probs, feats))
+                for i in range(N_FEATS)
+            ]
+            scored = self._scored[key] = (feats, probs, mean_f)
+        probs = scored[1]
         r = self.rng.random()
         acc = 0.0
         for a, p in enumerate(probs):
             acc += p
             if r <= acc:
-                return a, feats, probs
-        return len(probs) - 1, feats, probs
+                return a, scored
+        return len(probs) - 1, scored
 
     def act(self, env: JoinOrderEnv) -> int:
         """Greedy argmax -- the deployment policy (run_episode compat)."""
@@ -225,15 +253,13 @@ class ReinforceAgent:
         return max(range(len(probs)), key=lambda a: probs[a])
 
     def play_episode(self, env: JoinOrderEnv):
-        import math
-
         state = env.reset()
-        steps = []  # (feats, probs, action)
+        steps = []  # (scored, action)
         rewards = []
         while not env.done:
-            a, feats, probs = self.act_sample(env, state)
+            a, scored = self.act_sample(env, state)
             state, reward, _, _ = env.step(a)
-            steps.append((feats, probs, a))
+            steps.append((scored, a))
             # log-compress the step cost: returns add like log-costs
             rewards.append(-math.log10(1.0 - reward))  # reward = -cost
         return steps, rewards, env.cost_so_far
@@ -241,18 +267,15 @@ class ReinforceAgent:
     def update(self, batch):
         """batch: list of (fixture_name, steps, rewards) episodes.
         Episode-level REINFORCE against the per-fixture baseline."""
+        theta = self.theta
         for name, steps, rewards in batch:
-            adv = self._advantage(name, sum(rewards))
-            for feats, probs, a in steps:
+            step_size = self.lr * self._advantage(name, sum(rewards))
+            for (feats, _, mean_f), a in steps:
                 # grad log pi(a) = f(a) - sum_b pi(b) f(b)
-                mean_f = [
-                    sum(p * fv[i] for p, fv in zip(probs, feats))
-                    for i in range(N_FEATS)
-                ]
+                f_a = feats[a]
                 for i in range(N_FEATS):
-                    self.theta[i] += (
-                        self.lr * adv * (feats[a][i] - mean_f[i])
-                    )
+                    theta[i] += step_size * (f_a[i] - mean_f[i])
+        self._scored.clear()  # scored under the old theta
 
 
 def train_reinforce(
@@ -280,8 +303,6 @@ def load_policy(path: str) -> ReinforceAgent:
     """Deployment path: an agent with FROZEN weights trained offline
     (scripts/train_agent.py --save-policy).  No training at plan time;
     act() is pure argmax over the protocol-observable features."""
-    import json
-
     with open(path) as fh:
         doc = json.load(fh)
     theta = doc["theta"]

@@ -24,10 +24,18 @@ architectural simplification).
 All planners handle disconnected graphs by planning each connected
 component and cross-joining the component results in ascending
 first-factor order (J15 fallback, RLJoinOrderRule.java:152-159).
+
+One planner call memoizes its cardinalities: every planner sees the
+oracle it was passed through ``_CallCards``, which asks the oracle for a
+factor set's ``card`` once per call and forwards every other method.  So
+an oracle's answer for a mask must not change during one call; it may
+change between calls (``OverlayOracle.observed`` grows between the LEO
+loop's re-plans), since the memo dies with the call.
 """
 
 from __future__ import annotations
 
+import functools
 import random
 import threading
 from dataclasses import dataclass
@@ -59,6 +67,44 @@ class PlanResult:
 
     def order_str(self) -> str:
         return self.tree.order_str()
+
+
+class _CallCards:
+    """The oracle as one planner call sees it: ``card`` of the call's
+    graph answered once per factor set, every other attribute the
+    oracle's own."""
+
+    __slots__ = ("_oracle", "_graph", "_cards")
+
+    def __init__(self, oracle, graph: JoinGraph):
+        self._oracle = oracle
+        self._graph = graph
+        self._cards: dict[int, float] = {}
+
+    def card(self, graph: JoinGraph, s: int) -> float:
+        if graph is not self._graph:
+            return self._oracle.card(graph, s)
+        c = self._cards.get(s)
+        if c is None:
+            c = self._cards[s] = self._oracle.card(graph, s)
+        return c
+
+    def __getattr__(self, name):
+        return getattr(self._oracle, name)
+
+
+def _per_call_cards(planner):
+    """Run ``planner(graph, oracle, cm, ...)`` against a cardinality memo
+    that lives for this one call (a planner calling another planner
+    shares its caller's)."""
+
+    @functools.wraps(planner)
+    def call(graph, oracle, cm, *args, **kw):
+        if not isinstance(oracle, _CallCards):
+            oracle = _CallCards(oracle, graph)
+        return planner(graph, oracle, cm, *args, **kw)
+
+    return call
 
 
 def _leaf(graph: JoinGraph, i: int) -> Leaf:
@@ -107,6 +153,7 @@ def _plan_components(graph, oracle, cm, plan_component) -> tuple[PlanNode, float
 # ---------------------------------------------------------------------------
 
 
+@_per_call_cards
 def plan_random(graph: JoinGraph, oracle, cm: CostModel, seed: int = 0) -> PlanResult:
     rng = random.Random(seed)
 
@@ -159,6 +206,7 @@ def _join_key_distinct(graph: JoinGraph, oracle, tree_factors: int, f: int) -> f
         return float("inf")
 
 
+@_per_call_cards
 def plan_greedy(graph: JoinGraph, oracle, cm: CostModel) -> PlanResult:
     """For each candidate first factor, greedily add the next factor that
     minimizes the cumulative cost so far, trying both 'add to top' and a
@@ -199,8 +247,8 @@ def plan_greedy(graph: JoinGraph, oracle, cm: CostModel) -> PlanResult:
                         cand_best = (c_top, tiebreak, top)
                     # move 2: push down into the right subtree when the
                     # new factor joins it (pushDownFactor analog)
-                    if isinstance(tree, Join) and graph.edges_between(
-                        leaf.factors, tree.right.factors
+                    if isinstance(tree, Join) and (
+                        graph.neighbors(leaf.factors) & tree.right.factors
                     ):
                         pushed = make_join(
                             graph,
@@ -301,6 +349,7 @@ def _enumerate_cmp(graph: JoinGraph, comp: int, s1: int):
         yield from _enumerate_csg_rec(graph, s2, x | bv, comp)
 
 
+@_per_call_cards
 def plan_dp_ccp(graph: JoinGraph, oracle, cm: CostModel) -> PlanResult:
     """Exhaustive bushy DP over csg-cmp pairs; tries both operand orders for
     every pair (ExhaustiveDPJoinOrderRule.onMatch :86-211 does the same).
@@ -341,6 +390,7 @@ def plan_dp_ccp(graph: JoinGraph, oracle, cm: CostModel) -> PlanResult:
 # ---------------------------------------------------------------------------
 
 
+@_per_call_cards
 def plan_left_deep(graph: JoinGraph, oracle, cm: CostModel) -> PlanResult:
     """Selinger-style left-deep DP (LeftDeepJoinOrderRule.onMatch :68-204):
     extend each memoized subset with one connected factor on the right."""
@@ -384,6 +434,7 @@ def plan_left_deep(graph: JoinGraph, oracle, cm: CostModel) -> PlanResult:
 # ---------------------------------------------------------------------------
 
 
+@_per_call_cards
 def plan_bushy(graph: JoinGraph, oracle, cm: CostModel) -> PlanResult:
     """J8: greedy-bushy heuristic after Calcite's
     MultiJoinOptimizeBushyRule, which the reference registers as a
@@ -402,7 +453,7 @@ def plan_bushy(graph: JoinGraph, oracle, cm: CostModel) -> PlanResult:
             best: tuple[float, int, int, PlanNode] | None = None
             for ai, a in enumerate(roots):
                 for b in roots[ai + 1:]:
-                    if not graph.edges_between(a, b):
+                    if not graph.neighbors(a) & b:
                         continue
                     tree = make_join(graph, forest[a], forest[b])
                     c = cm.node_cost(graph, tree, oracle)
@@ -476,6 +527,7 @@ def _merge_chains(chains: list[list[_Mod]]) -> list[_Mod]:
     return [m for _, _, _, m in indexed]
 
 
+@_per_call_cards
 def plan_ikkbz(graph: JoinGraph, oracle, cm: CostModel) -> PlanResult:
     """IKKBZ (Ibaraki-Kameda 1984, Krishnamurthy-Boral-Zaniolo 1986):
     rank-based optimal left-deep ordering for tree-shaped query graphs
@@ -509,7 +561,7 @@ def plan_ikkbz(graph: JoinGraph, oracle, cm: CostModel) -> PlanResult:
         sel: dict[tuple[int, int], float] = {}
         for ai, a in enumerate(factors):
             for b in factors[ai + 1 :]:
-                if graph.edges_between(1 << a, 1 << b):
+                if graph.neighbors(1 << a) & (1 << b):
                     c2 = oracle.card(graph, (1 << a) | (1 << b))
                     f = c2 / (n[a] * n[b])
                     sel[(a, b)] = sel[(b, a)] = f
@@ -576,51 +628,75 @@ def plan_ikkbz(graph: JoinGraph, oracle, cm: CostModel) -> PlanResult:
 BNB_EDGE_GUARD = 12  # ExhaustiveJoinOrderRule.java:107-109
 
 
+@_per_call_cards
 def plan_branch_and_bound(
     graph: JoinGraph, oracle, cm: CostModel, edge_guard: int = BNB_EDGE_GUARD
 ) -> PlanResult | None:
     """Recursive enumeration of edge sequences with ``costSoFar >= best``
     pruning (ExhaustiveJoinOrderRule.recursiveAddNodes :120-157).  Returns
     None when the graph has >= ``edge_guard`` edges, like the reference's
-    hard skip."""
+    hard skip.
+
+    The search runs over factor masks: a forest is the tuple of its
+    roots' masks, two roots are joinable when an edge links them, and a
+    join's node cost is priced once per (left mask, right mask) -- every
+    cost model reads only the two sides' and the output's cardinalities
+    and, for ``mm``'s index-NLJ rule, whether the right side is one base
+    table, i.e. one bit.  The tree is built once, along the winning
+    sequence."""
     if len(graph.edges) >= edge_guard:
         return None
 
     def component(comp: int) -> PlanNode:
-        leaves = {1 << i: _leaf(graph, i) for i in bits(comp)}
         leaf_cost = sum(
-            cm.node_cost(graph, leaf, oracle) for leaf in leaves.values()
+            cm.node_cost(graph, _leaf(graph, i), oracle) for i in bits(comp)
         )
+        # one tree and one neighbor mask per factor set the search
+        # reaches: the tree only prices a join, the mask tests joinability
+        trees: dict[int, PlanNode] = {
+            1 << i: _leaf(graph, i) for i in bits(comp)
+        }
+        nbrs = {m: graph.neighbors(m) for m in trees}
+        node_cost: dict[tuple[int, int], float] = {}
         best_cost = float("inf")
-        best_tree: PlanNode | None = None
+        best_path: tuple[tuple[int, int], ...] = ()
+        path: list[tuple[int, int]] = []
 
-        def recurse(forest: dict[int, PlanNode], cost_so_far: float):
-            nonlocal best_cost, best_tree
-            if cost_so_far >= best_cost:
-                return  # prune
+        def recurse(forest: tuple[int, ...], cost_so_far: float):
+            nonlocal best_cost, best_path
             if len(forest) == 1:
-                (tree,) = forest.values()
-                best_cost, best_tree = cost_so_far, tree
+                best_cost, best_path = cost_so_far, tuple(path)
                 return
-            roots = list(forest)
             joinable = [
                 (a, b)
-                for ai, a in enumerate(roots)
-                for b in roots[ai + 1:]
-                if graph.edges_between(a, b)
+                for ai, a in enumerate(forest)
+                for b in forest[ai + 1:]
+                if nbrs[a] & b
             ]
             if not joinable:  # disconnected remainder inside comp: cross
-                a, b = roots[0], roots[1]
-                joinable = [(a, b)]
+                joinable = [(forest[0], forest[1])]
             for a, b in joinable:
-                tree = make_join(graph, forest[a], forest[b])
-                nf = {k: v for k, v in forest.items() if k not in (a, b)}
-                nf[tree.factors] = tree
-                recurse(nf, cost_so_far + cm.node_cost(graph, tree, oracle))
+                c = node_cost.get((a, b))
+                if c is None:
+                    tree = make_join(graph, trees[a], trees[b])
+                    trees.setdefault(a | b, tree)
+                    nbrs.setdefault(a | b, graph.neighbors(a | b))
+                    c = node_cost[a, b] = cm.node_cost(graph, tree, oracle)
+                if cost_so_far + c >= best_cost:
+                    continue  # prune
+                path.append((a, b))
+                recurse(
+                    tuple(k for k in forest if k != a and k != b) + (a | b,),
+                    cost_so_far + c,
+                )
+                path.pop()
 
-        recurse(dict(leaves), leaf_cost)
-        assert best_tree is not None
-        return best_tree
+        recurse(tuple(trees), leaf_cost)
+        built = {1 << i: _leaf(graph, i) for i in bits(comp)}
+        for a, b in best_path:
+            built[a | b] = make_join(graph, built.pop(a), built.pop(b))
+        (tree,) = built.values()
+        return tree
 
     tree, cost = _plan_components(graph, oracle, cm, component)
     return PlanResult(tree, cost, "branch_and_bound")
@@ -631,6 +707,7 @@ def plan_branch_and_bound(
 # ---------------------------------------------------------------------------
 
 
+@_per_call_cards
 def plan_reinforce(
     graph: JoinGraph,
     oracle,
@@ -686,6 +763,7 @@ def _policy_path() -> str:
     )
 
 
+@_per_call_cards
 def plan_reinforce_pretrained(
     graph: JoinGraph, oracle, cm: CostModel
 ) -> PlanResult:
@@ -731,6 +809,7 @@ def plan(name: str, graph: JoinGraph, oracle, cm: CostModel, **kw):
     return PLANNERS[name](graph, oracle, cm, **kw)
 
 
+@_per_call_cards
 def plan_with_materialized(
     graph: JoinGraph,
     oracle,
@@ -820,7 +899,7 @@ def plan_with_materialized(
             if s < o and s in best and o in best:
                 c1, t1 = best[s]
                 c2, t2 = best[o]
-                if graph.edges_between(t1.factors, t2.factors):
+                if graph.neighbors(t1.factors) & t2.factors:
                     for left, right in ((t1, t2), (t2, t1)):
                         tree = make_join(graph, left, right)
                         cost = c1 + c2 + cm.node_cost(graph, tree, oracle)
@@ -836,7 +915,7 @@ def plan_with_materialized(
     adj = [0] * n
     for i in range(n):
         for j in range(i + 1, n):
-            if graph.edges_between(units[i].factors, units[j].factors):
+            if graph.neighbors(units[i].factors) & units[j].factors:
                 adj[i] |= 1 << j
                 adj[j] |= 1 << i
     remaining = (1 << n) - 1

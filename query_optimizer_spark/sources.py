@@ -736,12 +736,13 @@ def merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = session_state_path(spark, sf_dir, "cust_snapshot")
     v1 = Path(f"{base}_v1")
     v2 = Path(f"{base}_v2")
-    summarize(orders.filter(F.col("o_orderdate") < cut)).write.mode(
-        "overwrite"
-    ).parquet(str(v1))
+    snapshot = summarize(orders.filter(F.col("o_orderdate") < cut))
+    snapshot.write.mode("overwrite").parquet(str(v1))
     batch = summarize(orders.filter(F.col("o_orderdate") >= cut))
 
-    t = spark.read.parquet(str(v1)).alias("t")
+    # both versions are read back with the schema of the frame just
+    # written: inferring it would start a Spark job per read
+    t = spark.read.schema(snapshot.schema).parquet(str(v1)).alias("t")
     s = batch.alias("s")
     src_wins = (F.col("t.custkey").isNull()) | (
         F.col("s.custkey").isNotNull()
@@ -761,7 +762,7 @@ def merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(src_wins, F.col("s.last_price")).otherwise(F.col("t.last_price")).alias("last_price"),
     )
     merged.write.mode("overwrite").parquet(str(v2))
-    out = spark.read.parquet(str(v2))
+    out = spark.read.schema(merged.schema).parquet(str(v2))
     return out.select(
         "custkey", "n_orders", "last_ms", "last_okey",
         F.round("last_price", 3).alias("last_price"),
