@@ -21,15 +21,11 @@ class Catalog:
     database-global attribute-offset map."""
 
     def __init__(self, spark, sf_dir: str, tables=TABLES, register: bool = True):
-        from .session import configure_runtime
-
-        configure_runtime(spark)  # events.parquet needs nanosAsLong
         self.spark = spark
         self.sf_dir = str(sf_dir)
         self.tables = [
             t for t in tables if Path(self.sf_dir, f"{t}.parquet").exists()
         ]
-        self._dfs: dict[str, object] = {}
         # global one-hot offsets (DbInfo.init :19-40)
         self.offsets: dict[str, int] = {}
         self.columns: dict[str, list[str]] = {}
@@ -43,17 +39,12 @@ class Catalog:
         if register:
             self.register_views()
 
-    def path(self, table: str) -> str:
-        return f"{self.sf_dir}/{table}.parquet"
-
     def df(self, table: str):
-        if table not in self._dfs:
-            from .session import normalize_ts
+        """``session.read_table``: resolved once per session, with the
+        runtime configs (``nanosAsLong``) applied."""
+        from .session import read_table
 
-            self._dfs[table] = normalize_ts(
-                self.spark.read.parquet(self.path(table))
-            )
-        return self._dfs[table]
+        return read_table(self.spark, self.sf_dir, table)
 
     def register_views(self) -> None:
         for t in self.tables:

@@ -29,6 +29,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, functions as F
 
 from .joingraph import Join, JoinGraph, Leaf, PlanNode, bits
+from .oracle import CardinalityMissError
 from .sqlparse import ColumnRef, Literal, ParsedQuery, Predicate
 
 DEFAULT_BROADCAST_ROWS = 1_000_000  # rows, not bytes: planner-side estimate
@@ -140,7 +141,7 @@ class Renderer:
             return df
         try:
             my_card = self.oracle.card(self.graph, leaf.factors)
-        except Exception:
+        except CardinalityMissError:
             return df
         for e in self.graph.edges:
             if not (e.factors & leaf.factors):
@@ -158,7 +159,7 @@ class Renderer:
                 continue  # only worthwhile against filtered dims
             try:
                 other_card = self.oracle.card(self.graph, other_bit)
-            except Exception:
+            except CardinalityMissError:
                 continue
             if other_card >= min(my_card, self.broadcast_threshold):
                 continue
@@ -183,7 +184,7 @@ class Renderer:
             return df
         try:
             card = self.oracle.card(self.graph, node.factors)
-        except Exception:
+        except CardinalityMissError:
             return df
         if card <= self.broadcast_threshold:
             return F.broadcast(df)
@@ -231,7 +232,7 @@ class Renderer:
             try:
                 left_card = self.oracle.card(self.graph, node.left.factors)
                 right_card = self.oracle.card(self.graph, node.right.factors)
-            except Exception:
+            except CardinalityMissError:
                 return left, self._maybe_broadcast(node.right, right)
             index_nlj_wins = (
                 cm.use_index_nlj

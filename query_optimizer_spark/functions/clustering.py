@@ -15,6 +15,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..sources import read_parquet
 from ..state import scope
 from .dedup import minhash_lsh_oracle, minhash_lsh_pairs
 
@@ -157,7 +158,7 @@ def cluster_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     One broadcast-able join of the cluster table against documents, one
     hash aggregation onto cluster_id."""
     clusters = duplicate_clusters(spark, sf_dir)
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = read_parquet(spark, sf_dir, f"{sf_dir}/documents.parquet").select(
         "doc_id", "n_chars"
     )
     joined = clusters.join(docs, "doc_id")

@@ -13,6 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from ..sources import read_parquet
 from .constants import (
     BLOOM_K,
     BLOOM_M_BITS,
@@ -53,7 +54,7 @@ _PHONE_RE = "[+]?[0-9]{1,3}[- ][0-9]{3}[- ][0-9]{4}"
 
 
 def _docs(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
+    return read_parquet(spark, sf_dir, f"{sf_dir}/documents.parquet")
 
 
 # --- cleaning -----------------------------------------------------------------

@@ -50,6 +50,7 @@ from .constants import (
     sql_hash32,
     sql_tokens,
 )
+from ..sources import read_parquet
 from ..state import scope
 from .text import TOKS
 
@@ -59,7 +60,7 @@ HASH32_SPARK = (
 
 
 def _docs(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
+    return read_parquet(spark, sf_dir, f"{sf_dir}/documents.parquet")
 
 
 # --- exact dedup -------------------------------------------------------------
@@ -538,10 +539,8 @@ def _probe_band_index(
         ),
     )
 
-    from ..sources import read_partitioned_store
-
     idx = (
-        read_partitioned_store(spark, sf_dir, idx_path)
+        read_parquet(spark, sf_dir, idx_path)
         .filter(F.col("shard").isin(probed))
         .filter(index_keep)
     )
@@ -728,9 +727,8 @@ def _commit_band_index(
             r.shard
             for r in accepted_rows.select("shard").distinct().collect()
         )
-    from ..sources import read_partitioned_store
 
-    existing = read_partitioned_store(spark, sf_dir, idx_path).filter(
+    existing = read_parquet(spark, sf_dir, idx_path).filter(
         F.col("shard").isin(touched)
     )
     plan = physical_plan(existing)
@@ -890,9 +888,7 @@ def index_commit_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The prune must reach the scan like every other index read here.
     from ..executor import physical_plan
 
-    from ..sources import read_partitioned_store
-
-    final = read_partitioned_store(spark, sf_dir, idx_path).filter(
+    final = read_parquet(spark, sf_dir, idx_path).filter(
         F.col("shard").isin(touched)
     )
     plan = physical_plan(final)
@@ -1429,7 +1425,7 @@ def embedding_cosine_pairs(
     import pandas as pd
 
     emb = (
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+        read_parquet(spark, sf_dir, f"{sf_dir}/embeddings.parquet")
         .select("vec_id", F.expr(QUANT_SPARK).alias("q"))
     )
     n = _parquet_rows(f"{sf_dir}/embeddings.parquet")
@@ -1504,7 +1500,7 @@ def embedding_cosine_pairs_blocked(
     from pyspark.sql import types as T
 
     emb = (
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+        read_parquet(spark, sf_dir, f"{sf_dir}/embeddings.parquet")
         .select("vec_id", F.expr(QUANT_SPARK).alias("q"))
     )
     n = n_rows if n_rows is not None else _parquet_rows(
@@ -1766,7 +1762,7 @@ def semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .constants import IVF_N_CENTROIDS
 
     emb = (
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+        read_parquet(spark, sf_dir, f"{sf_dir}/embeddings.parquet")
         .select("vec_id", F.expr(QUANT_SPARK).alias("q"))
         .withColumn("n2", F.expr(DOT_SPARK.format(a="q", b="q")))
     )
@@ -1917,7 +1913,7 @@ def substring_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     span granularity K).
     """
     docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_parquet(spark, sf_dir, f"{sf_dir}/documents.parquet")
         .select("doc_id", F.expr(TOKS).alias("toks"))
         .filter(F.size("toks") >= SUBSTR_NGRAM)
     )
@@ -2003,7 +1999,7 @@ def substring_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     arrived; the hash column here stands in for the rewrite payload."""
     k = SUBSTR_NGRAM
     docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_parquet(spark, sf_dir, f"{sf_dir}/documents.parquet")
         .select("doc_id", F.expr(TOKS).alias("toks"))
     )
     grams = docs.filter(F.size("toks") >= k).select(

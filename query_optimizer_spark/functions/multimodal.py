@@ -32,6 +32,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
+from ..sources import read_parquet
+
 CHECKSUM_MOD = 997
 
 BINARY_STATS_SCHEMA = T.StructType(
@@ -58,7 +60,7 @@ IMAGE_FEATURES_SCHEMA = T.StructType(
 def with_binary_payload(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents with an opaque binary column (UTF-8 bytes of the text) and
     typed modality metadata -- the storage shape for multimodal corpora."""
-    return spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    return read_parquet(spark, sf_dir, f"{sf_dir}/documents.parquet").select(
         "doc_id",
         F.encode("text", "UTF-8").alias("payload"),
         F.lit("text/plain").alias("mime"),
@@ -303,7 +305,7 @@ def image_decode_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: encode and decode are one Arrow-batched mapInPandas
     each, partition-parallel, nothing to the driver -- the template a
     real (library-backed) image pipeline drops its codec into."""
-    base = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    base = read_parquet(spark, sf_dir, f"{sf_dir}/documents.parquet").select(
         "doc_id", F.length("text").alias("text_len")
     )
 
@@ -510,7 +512,7 @@ def shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         with_binary_payload(spark, sf_dir)
         .join(
-            spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+            read_parquet(spark, sf_dir, f"{sf_dir}/documents.parquet").select(
                 "doc_id", "source"
             ),
             "doc_id",

@@ -38,13 +38,14 @@ from .constants import (
     LSH_PLANES,
     RANGE_TAU,
 )
+from ..sources import read_parquet
 from ..state import scope
 from .dedup import DOT_SPARK, QUANT_SPARK
 
 
 def _quantized(spark, sf_dir) -> DataFrame:
     return (
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+        read_parquet(spark, sf_dir, f"{sf_dir}/embeddings.parquet")
         .select("vec_id", F.expr(QUANT_SPARK).alias("q"))
         .withColumn("n2", F.expr(DOT_SPARK.format(a="q", b="q")))
     )
@@ -359,7 +360,7 @@ def quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .constants import QUANT_LEVELS
 
     return (
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+        read_parquet(spark, sf_dir, f"{sf_dir}/embeddings.parquet")
         .select(
             "vec_id",
             F.expr(
@@ -576,7 +577,7 @@ def norm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the per-label mean sums DECIMAL-cast norms so group aggregation
     order cannot change the result.  Shape: pure projection then one
     hash aggregation onto (label) -- no window, no join."""
-    per_vec = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+    per_vec = read_parquet(spark, sf_dir, f"{sf_dir}/embeddings.parquet").select(
         "label",
         F.expr(
             "cast(round(sqrt(aggregate(embedding, 0.0D,"
@@ -649,7 +650,7 @@ def _gram_partials_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+    emb = read_parquet(spark, sf_dir, f"{sf_dir}/embeddings.parquet").select(
         F.expr(
             f"transform(embedding, x -> cast(round(cast(x as double)"
             f" * {EMB_QUANT}, 0) as bigint))"
@@ -701,7 +702,7 @@ def gram_matrix_oracle() -> str:
 def _quantized_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """vec_id + EMB_QUANT-quantized integer embedding (shared scan shape
     for gram_matrix / kmeans: pruned 2-column read, pure projection)."""
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+    return read_parquet(spark, sf_dir, f"{sf_dir}/embeddings.parquet").select(
         "vec_id",
         F.expr(
             f"transform(embedding, x -> cast(round(cast(x as double)"
@@ -971,7 +972,7 @@ def pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     v = pca_direction(spark, sf_dir)
     vec_lit = ", ".join(f"{x}L" for x in v)
-    proj = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+    proj = read_parquet(spark, sf_dir, f"{sf_dir}/embeddings.parquet").select(
         "label",
         F.expr(
             f"aggregate(zip_with("
@@ -1819,9 +1820,7 @@ def ivfpq_pruned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         build_cached=float(build_cached),
     )
 
-    from ..sources import read_partitioned_store
-
-    lists = read_partitioned_store(spark, sf_dir, idx_path).filter(
+    lists = read_parquet(spark, sf_dir, idx_path).filter(
         F.col("cent_id").isin([int(c) for c in probed])
     )
     # the probe predicate must reach the scan as a PARTITION filter
@@ -2383,9 +2382,8 @@ def _ivf_append_batch(
         int(r.cent_id)
         for r in batch_rows.select("cent_id").distinct().collect()
     )
-    from ..sources import read_partitioned_store
 
-    existing = read_partitioned_store(spark, sf_dir, idx_path).filter(
+    existing = read_parquet(spark, sf_dir, idx_path).filter(
         F.col("cent_id").isin(touched) & ~batch_cond
     )
     plan = physical_plan(existing)
@@ -2522,9 +2520,7 @@ def ivf_append_topk(
         build_cached=float(cached),
     )
 
-    from ..sources import read_partitioned_store
-
-    lists = read_partitioned_store(spark, sf_dir, idx_path).filter(
+    lists = read_parquet(spark, sf_dir, idx_path).filter(
         F.col("cent_id").isin([int(c) for c in probed])
     )
     plan = physical_plan(lists)
@@ -2672,9 +2668,7 @@ def ivf_multibatch_topk(
         build_cached=float(cached),
     )
 
-    from ..sources import read_partitioned_store
-
-    lists = read_partitioned_store(spark, sf_dir, idx_path).filter(
+    lists = read_parquet(spark, sf_dir, idx_path).filter(
         F.col("cent_id").isin([int(c) for c in probed])
     )
     plan = physical_plan(lists)
@@ -2777,9 +2771,8 @@ def ivf_delete_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             for r in doomed.select("cent_id").distinct().collect()
         )
         n_touched = len(touched)
-        from ..sources import read_partitioned_store
 
-        survivors = read_partitioned_store(spark, sf_dir, idx_path).filter(
+        survivors = read_parquet(spark, sf_dir, idx_path).filter(
             F.col("cent_id").isin(touched) & ~del_cond
         )
         plan = physical_plan(survivors)
@@ -2835,9 +2828,8 @@ def ivf_delete_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         for c in probed
         if (Path(idx_path) / f"cent_id={c}").exists()
     ]
-    from ..sources import read_partitioned_store
 
-    lists = read_partitioned_store(spark, sf_dir, idx_path).filter(
+    lists = read_parquet(spark, sf_dir, idx_path).filter(
         F.col("cent_id").isin(existing_probed)
     )
     plan = physical_plan(lists)
@@ -2983,9 +2975,8 @@ def ivf_compact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         work = _json.loads(sidecar.read_text())
         t1 = _time.monotonic()
-        from ..sources import read_partitioned_store
 
-        rows = read_partitioned_store(spark, sf_dir, idx_path).filter(
+        rows = read_parquet(spark, sf_dir, idx_path).filter(
             F.col("cent_id").isin(work["frag"])
         )
         plan = physical_plan(rows)
@@ -3033,9 +3024,7 @@ def ivf_compact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         build_cached=float(cached),
     )
 
-    from ..sources import read_partitioned_store
-
-    lists = read_partitioned_store(spark, sf_dir, idx_path).filter(
+    lists = read_parquet(spark, sf_dir, idx_path).filter(
         F.col("cent_id").isin([int(c) for c in probed])
     )
     plan = physical_plan(lists)

@@ -15,6 +15,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from ..sources import read_parquet
 from ..state import scope
 from .constants import (
     BPE_RE,
@@ -39,7 +40,7 @@ TOKS = (
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
+    return read_parquet(spark, sf_dir, f"{sf_dir}/documents.parquet")
 
 
 # --- token counting ---------------------------------------------------------

@@ -642,8 +642,11 @@ def plan_branch_and_bound(
     join's node cost is priced once per (left mask, right mask) -- every
     cost model reads only the two sides' and the output's cardinalities
     and, for ``mm``'s index-NLJ rule, whether the right side is one base
-    table, i.e. one bit.  The tree is built once, along the winning
-    sequence."""
+    table, i.e. one bit.  So the completions of a forest cost the same
+    whichever path reached it, and a forest reached again at no lower
+    cost is not searched again.  The key is the exact root order: join
+    orientation and the cross-join fallback follow it.  The tree is
+    built once, along the winning sequence."""
     if len(graph.edges) >= edge_guard:
         return None
 
@@ -658,6 +661,8 @@ def plan_branch_and_bound(
         }
         nbrs = {m: graph.neighbors(m) for m in trees}
         node_cost: dict[tuple[int, int], float] = {}
+        # the lowest cost each forest (its exact root order) was reached at
+        seen: dict[tuple[int, ...], float] = {}
         best_cost = float("inf")
         best_path: tuple[tuple[int, int], ...] = ()
         path: list[tuple[int, int]] = []
@@ -667,6 +672,9 @@ def plan_branch_and_bound(
             if len(forest) == 1:
                 best_cost, best_path = cost_so_far, tuple(path)
                 return
+            if seen.get(forest, float("inf")) <= cost_so_far:
+                return  # every completion was already tried at no more cost
+            seen[forest] = cost_so_far
             joinable = [
                 (a, b)
                 for ai, a in enumerate(forest)

@@ -102,9 +102,14 @@ def normalize_ts(df: DataFrame) -> DataFrame:
 
 
 def read_table(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    """Read one testdata table with engine type normalization applied."""
+    """Read one testdata table with engine type normalization applied.
+    The relation is resolved once per session (``sources.read_parquet``);
+    the runtime configs are still applied, because execution reads
+    ``nanosAsLong`` too."""
     configure_runtime(spark)
-    return normalize_ts(spark.read.parquet(f"{sf_dir}/{table}.parquet"))
+    return normalize_ts(
+        sources.read_parquet(spark, sf_dir, f"{sf_dir}/{table}.parquet")
+    )
 
 
 def events_df(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -16,6 +16,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from .sources import read_parquet
+
 SALT_COL = "__salt__"
 
 
@@ -61,7 +63,7 @@ def skew_demo(big_or_spark, sf_dir: str | None = None) -> DataFrame:
     configure_runtime(spark)
     big = events_df(spark, sf_dir).select("user_id", "value")
     small = (
-        spark.read.parquet(f"{sf_dir}/customer.parquet")
+        read_parquet(spark, sf_dir, f"{sf_dir}/customer.parquet")
         .select(F.col("c_custkey").alias("user_id"), "c_mktsegment")
     )
     joined = salted_join(big, small, on="user_id")
@@ -115,7 +117,7 @@ def hotkey_hybrid_join(spark, sf_dir: str | None = None) -> DataFrame:
     configure_runtime(spark_)
     probe = events_df(spark_, sf_dir).select("user_id", "value")
     dim = (
-        spark_.read.parquet(f"{sf_dir}/customer.parquet")
+        read_parquet(spark_, sf_dir, f"{sf_dir}/customer.parquet")
         .select(F.col("c_custkey").alias("user_id"), "c_nationkey")
     )
 

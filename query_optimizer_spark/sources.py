@@ -75,28 +75,31 @@ def session_state_path(spark: SparkSession, sf_dir: str, prefix: str) -> str:
     return str(own)
 
 
-# Session-scoped memo of resolved partitioned-store reads, kept per path
-# in the sf_dir's ``state.scope`` and guarded by a root-listing
-# fingerprint.
-# ``spark.read.parquet`` on a store with hundreds of partition
-# directories pays driver-side file listing + partition discovery on
-# EVERY call (measured: 1.5 s per read over the 1024-shard band index
-# at sf0.1, twice per index_commit_stats call) -- the same cost class
-# spark.sql.hive.filesourcePartitionFileCacheSize exists for
-# (optimization guide §6 'file listing').  The memo caches the
-# RESOLVED DataFrame (metadata only -- every action still scans the
-# files), and any visible change to the store (a commit's dynamic
-# partition overwrite, an external restore) alters a child directory's
-# mtime, misses the fingerprint, and forces a fresh listing.
+# The one read path for a parquet file or store whose content is stable
+# within a session: base tables (``{sf_dir}/<table>.parquet``) and the
+# partitioned stores the curation operators commit to.  Resolving a path
+# costs a schema-inference job (55-110 ms per table) and, on a store
+# with hundreds of partition directories, a driver-side listing (1.5 s
+# per read over the 1024-shard band index at sf0.1).  ``read_parquet``
+# memoizes the RESOLVED DataFrame per path in the sf_dir's
+# ``state.scope`` -- metadata only, every action still scans the files
+# -- and guards it with a stat fingerprint, so a rewritten file or a
+# store's commit (dynamic partition overwrite, snapshot swap, external
+# restore) misses and resolves afresh.
 
 
 def _store_fingerprint(path: str) -> tuple:
-    """(name, mtime_ns) of every immediate child of the store root --
-    any file added/removed inside a partition directory bumps that
-    directory's mtime, so one shallow scandir detects every rewrite."""
+    """``(st_size, st_mtime_ns)`` of a file; ``(name, mtime_ns)`` of
+    every immediate child of a store root -- any file added/removed
+    inside a partition directory bumps that directory's mtime, so one
+    shallow scandir detects every rewrite."""
     import os
+    import stat
 
     try:
+        st = os.stat(path)
+        if not stat.S_ISDIR(st.st_mode):
+            return (st.st_size, st.st_mtime_ns)
         with os.scandir(path) as it:
             return tuple(
                 sorted((e.name, e.stat().st_mtime_ns) for e in it)
@@ -105,13 +108,10 @@ def _store_fingerprint(path: str) -> tuple:
         return ("<missing>",)
 
 
-def read_partitioned_store(
-    spark: SparkSession, sf_dir: str, path: str
-) -> DataFrame:
+def read_parquet(spark: SparkSession, sf_dir: str, path: str) -> DataFrame:
     """``spark.read.parquet(path)`` with the resolved relation memoized
-    per (session, sf_dir, path) until the store's on-disk layout
-    changes."""
-    memo = scope(spark, sf_dir).setdefault("part_reads", {})
+    per (session, sf_dir, path) until the path's fingerprint changes."""
+    memo = scope(spark, sf_dir).setdefault("parquet_reads", {})
     fp = _store_fingerprint(path)
     ent = memo.get(path)
     if ent is not None and ent[0] == fp:
@@ -192,10 +192,10 @@ def bucketed_join_demo(
     import time
 
     Path(DEFAULT_WAREHOUSE).mkdir(exist_ok=True)
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
+    li = read_parquet(spark, sf_dir, f"{sf_dir}/lineitem.parquet").select(
         "l_orderkey", "l_quantity", "l_extendedprice"
     )
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+    orders = read_parquet(spark, sf_dir, f"{sf_dir}/orders.parquet").select(
         "o_orderkey", "o_totalprice"
     )
     tag = hashlib.md5(
@@ -385,7 +385,7 @@ def zorder_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import functions as F
 
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
+    li = read_parquet(spark, sf_dir, f"{sf_dir}/lineitem.parquet").select(
         "l_orderkey", "l_linenumber", "l_partkey", "l_suppkey", "l_quantity"
     )
     hi = li.agg(
@@ -509,10 +509,10 @@ def runtime_bloom_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
             saved[k] = None
         spark.conf.set(k, v)
     try:
-        orders = spark.read.parquet(f"{sf_dir}/orders.parquet").filter(
+        orders = read_parquet(spark, sf_dir, f"{sf_dir}/orders.parquet").filter(
             "o_custkey % 97 = 0"
         )
-        li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+        li = read_parquet(spark, sf_dir, f"{sf_dir}/lineitem.parquet")
         j = (
             li.join(orders, li.l_orderkey == orders.o_orderkey)
             .groupBy("o_orderstatus")
@@ -576,7 +576,7 @@ def jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sf_dirs with the same leaf name can't collide on the output dir
     tag = hashlib.md5(sf_dir.rstrip("/").encode()).hexdigest()[:12]
     out = f"{DEFAULT_WAREHOUSE}/documents_jsonl_{tag}"
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = read_parquet(spark, sf_dir, f"{sf_dir}/documents.parquet").select(
         "doc_id", "text"
     )
     docs.write.mode("overwrite").json(out)
@@ -612,7 +612,7 @@ def csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     tag = hashlib.md5(sf_dir.rstrip("/").encode()).hexdigest()[:12]
     out = f"{DEFAULT_WAREHOUSE}/orders_csv_{tag}"
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+    orders = read_parquet(spark, sf_dir, f"{sf_dir}/orders.parquet").select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
     )
     orders.write.mode("overwrite").option("header", "true").csv(out)
@@ -657,7 +657,7 @@ def partitioned_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     tag = hashlib.md5(sf_dir.rstrip("/").encode()).hexdigest()[:12]
     out = f"{DEFAULT_WAREHOUSE}/documents_bylang_{tag}"
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = read_parquet(spark, sf_dir, f"{sf_dir}/documents.parquet").select(
         "doc_id", "lang", "source", "n_chars"
     )
     write_partitioned(docs, out, ["lang"])
@@ -821,7 +821,7 @@ def compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").filter(
+    li = read_parquet(spark, sf_dir, f"{sf_dir}/lineitem.parquet").filter(
         F.col("l_linenumber") <= 2
     ).select(
         "l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice"
@@ -911,7 +911,7 @@ def schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = session_state_path(spark, sf_dir, "orders_evolved")
     done = Path(out) / "_DONE"
     if not done.exists():
-        orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+        orders = read_parquet(spark, sf_dir, f"{sf_dir}/orders.parquet")
         gen1 = orders.filter(
             F.col("o_orderdate") < EVOLVE_CUTOFF
         ).select("o_orderkey", "o_custkey", "o_totalprice")
@@ -1115,7 +1115,7 @@ def _snapshot_commits(
     from pyspark.sql import functions as F
 
     base = Path(session_state_path(spark, sf_dir, store))
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_parquet(spark, sf_dir, f"{sf_dir}/documents.parquet")
 
     def _manifest(v: int) -> Path:
         return base / f"manifest_v{v}.json"
@@ -1484,7 +1484,7 @@ def snapshot_branch(spark: SparkSession, sf_dir: str) -> DataFrame:
     base, manifests = _snapshot_commits(spark, sf_dir)
     bmanifest = base / "manifest_branch1.json"
     if not bmanifest.exists():
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+        docs = read_parquet(spark, sf_dir, f"{sf_dir}/documents.parquet")
         ids = docs.select("doc_id").distinct()
         blo = _rank_bound(ids, SNAPSHOT_BR_LO_RANK)
         bhi = _rank_bound(ids, SNAPSHOT_BR_HI_RANK)
@@ -1683,7 +1683,7 @@ def snapshot_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     mmanifest = base / "manifest_v4_merge.json"
     v2, v3 = manifests[2], manifests[3]
     if not mmanifest.exists():
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+        docs = read_parquet(spark, sf_dir, f"{sf_dir}/documents.parquet")
         split = docs.agg(
             F.expr("cast(floor(max(doc_id) / 2.0) as bigint)")
         ).collect()[0][0]

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from . import TABLES
-from .session import configure_runtime, read_table
+from .session import read_table
 from .state import scope
 
 # The derived-partsupp bridge shared by the TPC-H Q2/Q11/Q16/Q20
@@ -796,7 +796,10 @@ SURFACE: dict[str, str | tuple[str, str]] = {
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:
-    configure_runtime(spark)
+    """(Re)register every table's temp view.  Views are session-global
+    names that another sf_dir or a ``Catalog`` may have replaced, so each
+    call registers them again; the relations come resolved from the
+    session's ``read_parquet`` memo."""
     for t in TABLES:
         read_table(spark, sf_dir, t).createOrReplaceTempView(t)
 

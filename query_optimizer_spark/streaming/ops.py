@@ -21,6 +21,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..functions.temporal import SESSION_GAP_MS
 from ..session import configure_runtime, normalize_ts
+from ..sources import read_parquet
 from ..state import scope
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -33,7 +34,7 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     restores plain TimestampType either way.
     """
     configure_runtime(spark)
-    stored_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    stored_schema = read_parquet(spark, sf_dir, f"{sf_dir}/events.parquet").schema
     # file source requires a directory; glob-filter to the events file
     sdf = (
         spark.readStream.schema(stored_schema)
@@ -295,7 +296,7 @@ def enrich_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     running per-(segment, event_type) aggregate in complete mode."""
     sdf = stream_events(spark, sf_dir)
     dim = (
-        spark.read.parquet(f"{sf_dir}/customer.parquet")
+        read_parquet(spark, sf_dir, f"{sf_dir}/customer.parquet")
         .select(F.col("c_custkey").alias("user_id"), "c_mktsegment")
     )
     agg = (
@@ -1304,7 +1305,7 @@ def incremental_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     configure_runtime(spark)
     idx_path, _, _ = _ensure_inc_index(spark, sf_dir)
 
-    stored_schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
+    stored_schema = read_parquet(spark, sf_dir, f"{sf_dir}/documents.parquet").schema
     docs = (
         spark.readStream.schema(stored_schema)
         .format("parquet")
@@ -1319,10 +1320,9 @@ def incremental_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         "key",
         *[F.col(f"m{i}").alias(f"b{i}") for i in range(MINHASH_K)],
     )
-    from ..sources import read_partitioned_store
 
     idx = (
-        read_partitioned_store(spark, sf_dir, idx_path)
+        read_parquet(spark, sf_dir, idx_path)
         # corpus-side rows only: commit-invariant, like the batch probe
         .filter(F.col("doc_id") >= INC_BATCH_N)
         .select(
@@ -1432,7 +1432,7 @@ def kmv_distinct_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.text import _kmv_topk
 
     configure_runtime(spark)
-    stored_schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
+    stored_schema = read_parquet(spark, sf_dir, f"{sf_dir}/documents.parquet").schema
     docs = (
         spark.readStream.schema(stored_schema)
         .format("parquet")

@@ -14,7 +14,7 @@ from query_optimizer_spark import planners, rewrites, workload
 from query_optimizer_spark.agents import ReinforceAgent, train_reinforce
 from query_optimizer_spark.costmodels import get_cost_model
 from query_optimizer_spark.env import JoinOrderEnv
-from query_optimizer_spark.joingraph import make_join
+from query_optimizer_spark.joingraph import make_join, validate_tree
 from query_optimizer_spark.oracle import OverlayOracle, SparkStatsOracle
 from query_optimizer_spark.planners import PLANNERS
 from query_optimizer_spark.sqlparse import parse
@@ -29,11 +29,15 @@ BASE_ROWS = {
     "part": 2000, "orders": 15000, "lineitem": 60000, "events": 10000,
     "documents": 500, "embeddings": 500,
 }
-# branch-and-bound enumerates edge sequences: on the synthetic chains,
-# stars and cycles of 9 relations and more one call takes seconds to
-# minutes, with or without reuse.  Those graphs are compared on every
-# other planner.
+# the pinned branch-and-bound digest covers the synthetic shapes of up to
+# 8 relations.  The reference recursion enumerates edge sequences without
+# memory: it takes 1-5 s per call on the shapes of 9 relations, so those
+# are compared against it too, and seconds to minutes from 10 on.  The
+# planner itself remembers each forest it has searched and plans the
+# shapes of 10-12 relations in under a second each; those are checked
+# against ``dp_ccp``.
 BNB_MAX_SYNTH_RELATIONS = 8
+BNB_REFERENCE_MAX_RELATIONS = 9
 # sha256 per planner of every (graph, cost model, order, repr(cost)) of
 # ``_graphs()``, as the planners gave them when every call recomputed its
 # cardinalities and branch-and-bound built a tree in every branch
@@ -63,8 +67,8 @@ def _graphs():
             yield f"synth_{kind}_{n}", graph, oracle
 
 
-def _bnb_in_scope(name, graph) -> bool:
-    return not name.startswith("synth_") or graph.n <= BNB_MAX_SYNTH_RELATIONS
+def _bnb_in_scope(name, graph, max_relations=BNB_MAX_SYNTH_RELATIONS) -> bool:
+    return not name.startswith("synth_") or graph.n <= max_relations
 
 
 @pytest.fixture(scope="module")
@@ -174,7 +178,7 @@ def test_branch_and_bound_matches_reference(graphs):
     reference's cost, bit for bit, and declines the same graphs."""
     compared = 0
     for name, graph, oracle in graphs:
-        if not _bnb_in_scope(name, graph):
+        if not _bnb_in_scope(name, graph, BNB_REFERENCE_MAX_RELATIONS):
             continue
         for cm_name in COST_MODELS:
             cm = get_cost_model(cm_name)
@@ -187,7 +191,29 @@ def test_branch_and_bound_matches_reference(graphs):
             got = (res.order_str(), repr(res.cost))
             assert got == (tree.order_str(), repr(cost)), (name, cm_name)
             compared += 1
-    assert compared >= 80
+    assert compared >= 80 + 9
+
+
+def test_branch_and_bound_plans_large_sparse_graphs(graphs):
+    """Every synthetic shape of 10-12 relations under the 12-edge guard
+    gets a valid plan that costs no less than ``dp_ccp``'s optimum."""
+    planned = 0
+    for name, graph, oracle in graphs:
+        if not name.startswith("synth_") or graph.n < 10:
+            continue
+        if len(graph.edges) >= planners.BNB_EDGE_GUARD:
+            continue
+        for cm_name in COST_MODELS:
+            cm = get_cost_model(cm_name)
+            res = PLANNERS["branch_and_bound"](graph, oracle, cm)
+            assert res is not None, (name, cm_name)
+            validate_tree(graph, res.tree)
+            assert res.cost >= PLANNERS["dp_ccp"](graph, oracle, cm).cost, (
+                name,
+                cm_name,
+            )
+            planned += 1
+    assert planned == 3 * 8
 
 
 def test_trained_theta_matches_reference(graphs):
