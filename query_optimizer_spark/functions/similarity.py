@@ -17,6 +17,9 @@ bit-for-bit.  sqrt/division on exact integers is IEEE-deterministic.
 
 from __future__ import annotations
 
+import time
+from pathlib import Path
+
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from .constants import (
@@ -38,7 +41,12 @@ from .constants import (
     LSH_PLANES,
     RANGE_TAU,
 )
-from ..sources import read_parquet
+from ..sources import (
+    overwrite_partitions,
+    read_parquet,
+    read_partitions,
+    session_state_path,
+)
 from ..state import scope
 from .dedup import DOT_SPARK, QUANT_SPARK
 
@@ -1655,17 +1663,14 @@ def ivfpq_topk_oracle(
     """
 
 
-# evidence of pruned probes is the sf_dir's ``state`` record
-# "ivfpq_pruned", so concurrent sessions in one process never clobber
-# each other's entry.  The op inline-raises if the partition filter missed the scan; the pytest
-# additionally asserts the executed scan's numFiles/numPartitions
-# METRICS equal the probed subset, i.e. non-probed lists were never read
-def _ivfpq_encode_fn(bc_enc):
-    """mapInPandas closure factory: coarse-assign + PQ-encode a
-    (vec_id, q) batch under the broadcast (codebook, centroids, |c|^2)
-    model -- shared by the pruned-layout build and the append op."""
+def _ivfpq_encode_fn(spark, cb, cents, cn2):
+    """mapInPandas closure: coarse-assign + PQ-encode a (vec_id, q)
+    batch under the broadcast (codebook, centroids, |c|^2) model --
+    shared by every IVF list-store build and append."""
     import numpy as np
     import pandas as pd
+
+    bc_enc = spark.sparkContext.broadcast((cb, cents, cn2))
 
     def _encode(batches):
         b_cb, b_cents, b_cn2 = bc_enc.value
@@ -1693,7 +1698,7 @@ def _ivfpq_encode_fn(bc_enc):
 def _ivfpq_adc_fn(bc):
     """mapInPandas closure factory: per-partition ADC scan over stored
     (vec_id, cent_id, codes) lists under the broadcast (query ids, LUT,
-    probe mask) -- shared by the pruned-layout probe and the append op."""
+    probe mask) -- the scan of ``_ivf_probe``."""
     import numpy as np
     import pandas as pd
 
@@ -1731,10 +1736,81 @@ def _ivfpq_adc_fn(bc):
     return _adc
 
 
+# --- IVF list stores -----------------------------------------------------------
+#
+# The IVF-PQ lifecycle ops (pruned probe, append, multi-day append,
+# delete, compact, recluster) keep their (vec_id, cent_id, codes) rows in
+# a session-scoped store written ``partitionBy(cent_id)``: one directory
+# per inverted list.  Each op builds the store once (``_ivf_build``),
+# changes only the lists it touches (``read_partitions`` of those lists,
+# then ``overwrite_partitions``), and answers through ``_ivf_probe``.
+# Each op records its list counts as the sf_dir's ``state`` record of the
+# op's name; the pytests additionally assert on the executed scan's
+# numFiles/numPartitions metrics and on byte-identical untouched lists.
+
+_IVF_ENC_SCHEMA = "vec_id long, cent_id int, codes array<int>"
+
+
+def _ivf_build(rows: DataFrame, encode, idx_path: str) -> tuple[float, bool]:
+    """Encode ``rows`` (vec_id, q) under the frozen model and write them
+    ``partitionBy(cent_id)`` to ``idx_path``.  The encode and write are
+    deterministic in (sf_dir, model), so a completed store -- parquet's
+    ``_SUCCESS`` marker under the session-scoped path -- is reused as it
+    is and repeat calls stop paying the build.  ``session_state_path``
+    refreshes the path's mtime per call, so a live session's store is
+    never TTL-collected.  Returns (build_sec, build_cached)."""
+    cached = (Path(idx_path) / "_SUCCESS").exists()
+    t0 = time.monotonic()
+    if not cached:
+        (
+            rows.select("vec_id", "q")
+            .mapInPandas(encode, _IVF_ENC_SCHEMA)
+            .write.mode("overwrite")
+            .partitionBy("cent_id")
+            .parquet(idx_path)
+        )
+    return round(time.monotonic() - t0, 4), cached
+
+
+def _ivf_probe(
+    spark, sf_dir: str, idx_path: str, emb, qids, lut, probe_mask
+) -> tuple[DataFrame, dict]:
+    """Answer the query set from an IVF list store.  The union of every
+    query's probe lists, restricted to the lists on disk (a list that
+    was never filled or was emptied by a delete holds no rows), is read
+    through ``read_partitions``, so non-probed lists are never read: no
+    IO, no decode.  The ADC scan still masks each query to its own
+    probe lists (query A must not see a list only query B probed), and
+    the shared exact re-rank finishes.
+
+    Returns (top-k frame, list stats): ``n_lists`` lists on disk,
+    ``n_probed`` probed lists, ``files_total`` files in the store and
+    ``files_probed`` files the probe reads."""
+    import numpy as np
+
+    root = Path(idx_path)
+    probed = [int(c) for c in np.nonzero(probe_mask.any(axis=0))[0]]
+    on_disk = [c for c in probed if (root / f"cent_id={c}").exists()]
+    stats = dict(
+        n_lists=len(list(root.glob("cent_id=*"))),
+        n_probed=len(probed),
+        files_total=len(list(root.glob("cent_id=*/*.parquet"))),
+        files_probed=sum(
+            len(list(root.glob(f"cent_id={c}/*.parquet"))) for c in on_disk
+        ),
+    )
+    lists = read_partitions(spark, sf_dir, idx_path, "cent_id", on_disk)
+    bc = spark.sparkContext.broadcast((qids, lut, probe_mask))
+    adc = lists.mapInPandas(
+        _ivfpq_adc_fn(bc), "query_id long, neighbor_id long, adc_dist long"
+    )
+    return _ivfpq_rerank(emb, adc), stats
+
+
 def ivfpq_pruned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ over a PARTITION-PRUNED physical list layout -- the
-    100 TB form ``ivfpq_topk``'s docstring promises, demonstrated
-    (r9 VERDICT #2).  Same math, different physics:
+    100 TB form ``ivfpq_topk``'s docstring promises, demonstrated with
+    scan-level evidence.  Same math, different physics:
 
     1. BUILD (once per corpus): one Arrow ``mapInPandas`` pass assigns
        every vector to its exact-integer-L2 nearest centroid and
@@ -1747,8 +1823,7 @@ def ivfpq_pruned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
        into a PartitionFilter, so NON-PROBED LISTS ARE NEVER READ:
        no IO, no decode, no mask -- where ``ivfpq_topk`` scans the
        full corpus and discards non-probed rows in the executor.
-       The per-query mask still applies inside the survivors (query A
-       must not see a list only query B probed).
+       The per-query mask still applies inside the survivors.
     3. ADC + exact re-rank: identical to ``ivfpq_topk`` (shared
        ``_ivfpq_rerank``), so both variants -- and the relational
        DuckDB oracle -- must agree bit-exactly.
@@ -1756,61 +1831,20 @@ def ivfpq_pruned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: probe IO is files(probed lists), not files(corpus) --
     cost scales with nprobe/nlist, not corpus size.  The build runs
     ONCE per (session, corpus) and is reused from the session-scoped
-    path on later calls (``build_cached`` in the evidence; r10
-    ADVICE).  The op records list/file counts as the sf_dir's ``state``
-    record "ivfpq_pruned" and raises if the
-    probe predicate missed the scan; the pytest asserts the executed
-    scan's numFiles/numPartitions metrics equal the probed subset."""
-    from pathlib import Path
-
-    import numpy as np
-    import pandas as pd
-
-    from ..executor import physical_plan
-
+    path on later calls (``build_cached`` in the evidence).  The op
+    records list/file counts as the sf_dir's ``state`` record
+    "ivfpq_pruned"."""
     emb = _quantized(spark, sf_dir)
     qids, _, lut, cb, cents, cn2, probe_mask = _ivfpq_model(emb)
-
-    # ---- build: encode once, one directory per inverted list
-    bc_enc = spark.sparkContext.broadcast((cb, cents, cn2))
-    _encode = _ivfpq_encode_fn(bc_enc)
-
-    import time as _time
-
-    from ..sources import session_state_path
-
     idx_path = session_state_path(spark, sf_dir, "ivfpq_lists")
-    # build once per (session, corpus): the encode + partitioned write
-    # is deterministic in (sf_dir, model), so a completed index --
-    # parquet's _SUCCESS marker under the session-scoped path -- is
-    # simply reused and bench reps stop paying the build per rep
-    # (r10 ADVICE).  session_state_path refreshes the path's mtime per
-    # call, so a live session's cached index can never be TTL-GC'd.
-    build_cached = (Path(idx_path) / "_SUCCESS").exists()
-    t0 = _time.monotonic()
-    if not build_cached:
-        (
-            emb.select("vec_id", "q")
-            .mapInPandas(_encode, "vec_id long, cent_id int, codes array<int>")
-            .write.mode("overwrite")
-            .partitionBy("cent_id")
-            .parquet(idx_path)
-        )
-    build_sec = round(_time.monotonic() - t0, 4)
-
-    probed = sorted(
-        {int(c) for qi in range(len(qids))
-         for c in np.nonzero(probe_mask[qi])[0]}
+    build_sec, build_cached = _ivf_build(
+        emb, _ivfpq_encode_fn(spark, cb, cents, cn2), idx_path
     )
-    list_dirs = sorted(Path(idx_path).glob("cent_id=*"))
+    topk, stats = _ivf_probe(
+        spark, sf_dir, idx_path, emb, qids, lut, probe_mask
+    )
     scope(spark, sf_dir)["ivfpq_pruned"] = dict(
-        n_lists=len(list_dirs),
-        n_probed=len(probed),
-        files_total=len(list(Path(idx_path).glob("cent_id=*/*.parquet"))),
-        files_probed=sum(
-            len(list(Path(idx_path).glob(f"cent_id={c}/*.parquet")))
-            for c in probed
-        ),
+        **stats,
         # build (encode + partitioned write) is the one-time linear
         # index cost; the scale probe subtracts it so the PROBE phase's
         # growth -- nprobe/nlist of the corpus -- is measured alone.
@@ -1819,29 +1853,7 @@ def ivfpq_pruned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         build_sec=build_sec,
         build_cached=float(build_cached),
     )
-
-    lists = read_parquet(spark, sf_dir, idx_path).filter(
-        F.col("cent_id").isin([int(c) for c in probed])
-    )
-    # the probe predicate must reach the scan as a PARTITION filter
-    # (metadata-only pruning), never a post-scan data filter
-    plan = physical_plan(lists)
-    seg = plan.split("PartitionFilters", 1)
-    if len(seg) != 2 or "cent_id" not in seg[1][:200]:
-        # a raise, not an assert: the op's core guarantee must survive
-        # python -O (r10 review)
-        raise RuntimeError(
-            "IVF-PQ probe predicate did not reach the scan as a"
-            f" PartitionFilter; plan:\n{plan}"
-        )
-
-    bc = spark.sparkContext.broadcast((qids, lut, probe_mask))
-    _adc = _ivfpq_adc_fn(bc)
-
-    adc = lists.mapInPandas(
-        _adc, "query_id long, neighbor_id long, adc_dist long"
-    )
-    return _ivfpq_rerank(emb, adc)
+    return topk
 
 
 def ivfpq_pruned_topk_oracle() -> str:
@@ -2356,58 +2368,35 @@ def range_search_oracle() -> str:
 def _ivf_append_batch(
     spark, sf_dir: str, idx_path: str, emb, batch_cond, _encode
 ) -> int:
-    """One frozen-model batch append onto an on-disk IVF list store --
-    THE append phase, shared by the single-append op and the multi-day
-    loop (the dedup family's _probe_band_index/_commit_band_index
-    discipline): encode the batch under the frozen model, materialize
-    it (localCheckpoint -- nothing may re-read ``idx_path`` mid-
-    overwrite), read back ONLY the touched lists partition-pruned
-    (raise if the predicate misses the scan) and WITHOUT any batch
-    rows a crashed earlier attempt already landed (idempotent rewrite,
-    r12 ADVICE), then dynamic-partition-overwrite exactly those lists.
-    Returns the touched-list count; the caller owns marker files and
-    timing."""
-    from pathlib import Path
-
-    from ..executor import physical_plan
-
-    enc_schema = "vec_id long, cent_id int, codes array<int>"
+    """One frozen-model batch append onto an IVF list store -- THE append
+    phase, shared by the single-append op and the multi-day loop (the
+    dedup family's _probe_band_index/_commit_band_index discipline):
+    encode the batch under the frozen model, materialize it
+    (localCheckpoint -- nothing may re-read ``idx_path`` mid-overwrite),
+    read back ONLY the touched lists, partition-pruned and WITHOUT any
+    batch rows a crashed earlier attempt already landed (an idempotent
+    rewrite), then overwrite exactly those lists.  Returns the
+    touched-list count; the caller owns marker files and timing."""
     batch_rows = (
         emb.filter(batch_cond)
         .select("vec_id", "q")
-        .mapInPandas(_encode, enc_schema)
+        .mapInPandas(_encode, _IVF_ENC_SCHEMA)
         .localCheckpoint()
     )
     touched = sorted(
         int(r.cent_id)
         for r in batch_rows.select("cent_id").distinct().collect()
     )
-
-    existing = read_parquet(spark, sf_dir, idx_path).filter(
-        F.col("cent_id").isin(touched) & ~batch_cond
+    existing = (
+        read_partitions(spark, sf_dir, idx_path, "cent_id", touched)
+        .filter(~batch_cond)
+        .localCheckpoint()
     )
-    plan = physical_plan(existing)
-    seg = plan.split("PartitionFilters", 1)
-    if len(seg) != 2 or "cent_id" not in seg[1][:200]:
-        raise RuntimeError(
-            "ivf-append read-back did not prune to the touched"
-            f" lists; plan:\n{plan}"
-        )
-    existing = existing.localCheckpoint()
-    mode_key = "spark.sql.sources.partitionOverwriteMode"
-    prev = spark.conf.get(mode_key, "static")
-    spark.conf.set(mode_key, "dynamic")
-    try:
-        (
-            existing.unionByName(batch_rows)
-            .repartition("cent_id")
-            .write.mode("overwrite")
-            .partitionBy("cent_id")
-            .parquet(idx_path)
-        )
-    finally:
-        spark.conf.set(mode_key, prev)
-    assert Path(idx_path).exists()
+    overwrite_partitions(
+        existing.unionByName(batch_rows).repartition("cent_id"),
+        idx_path,
+        "cent_id",
+    )
     return len(touched)
 
 
@@ -2427,15 +2416,14 @@ def ivf_append_topk(
        ``partitionBy(cent_id)``, one directory per inverted list.
     2. APPEND: the batch alone is encoded under the FROZEN model (the
        production regime -- FAISS's ``add`` after ``train``), its
-       touched lists are read back partition-pruned (raise if the
-       predicate misses the scan) and localCheckpoint-ed, and a dynamic
-       partition overwrite rewrites ONLY those lists -- untouched list
-       directories stay byte-identical (pytest snapshots them, same as
-       the dedup commit).  Append cost scales with the batch's lists,
-       never the corpus.
-    3. PROBE: queries probe the GROWN index through the same
-       PartitionFilter-enforced scan as ``sim_ivfpq_pruned``, then the
-       shared exact re-rank.
+       touched lists are read back partition-pruned and
+       localCheckpoint-ed, and a dynamic partition overwrite rewrites
+       ONLY those lists -- untouched list directories stay
+       byte-identical (pytest snapshots them, same as the dedup
+       commit).  Append cost scales with the batch's lists, never the
+       corpus.
+    3. PROBE: queries probe the GROWN index through ``_ivf_probe``, the
+       same pruned scan and exact re-rank as ``sim_ivfpq_pruned``.
 
     Because the model is frozen AND the base+batch rows union to the
     full corpus, the grown index must answer EXACTLY like single-shot
@@ -2448,24 +2436,12 @@ def ivf_append_topk(
     |batch lists| directories; probe IO is files(probed lists).  The
     only collects are model state and the touched-list id set
     (<= IVF_N_CENTROIDS ints)."""
-    import time as _time
-    from pathlib import Path
-
-    import numpy as np
-
-    from ..executor import physical_plan
-    from ..sources import session_state_path
-
     emb = _quantized(spark, sf_dir)
     qids, _, lut, cb, cents, cn2, probe_mask = _ivfpq_model(emb)
     batch_cond = (F.col("vec_id") >= IVF_APPEND_LO) & (
         F.col("vec_id") < IVF_APPEND_LO + IVF_APPEND_N
     )
-
-    bc_enc = spark.sparkContext.broadcast((cb, cents, cn2))
-    _encode = _ivfpq_encode_fn(bc_enc)
-
-    enc_schema = "vec_id long, cent_id int, codes array<int>"
+    _encode = _ivfpq_encode_fn(spark, cb, cents, cn2)
     idx_path = session_state_path(spark, sf_dir, "ivf_append_lists")
     appended_marker = Path(idx_path) / "_APPENDED"
     cached = appended_marker.exists()
@@ -2474,70 +2450,30 @@ def ivf_append_topk(
     if not cached:
         # base: the corpus WITHOUT the batch (separately callable so
         # the byte-identity pytest can snapshot between the phases)
-        t0 = _time.monotonic()
-        if not (Path(idx_path) / "_SUCCESS").exists():
-            (
-                emb.filter(~batch_cond)
-                .select("vec_id", "q")
-                .mapInPandas(_encode, enc_schema)
-                .write.mode("overwrite")
-                .partitionBy("cent_id")
-                .parquet(idx_path)
-            )
-        build_sec = round(_time.monotonic() - t0, 4)
+        build_sec, _ = _ivf_build(emb.filter(~batch_cond), _encode, idx_path)
         if base_only:
             # test hook: stop after the base phase (per-list summary)
-            return (
-                spark.read.parquet(idx_path)
-                .groupBy("cent_id")
-                .count()
-            )
-        # append: the shared frozen-model batch append (idempotent
-        # rewrite -- a crash between the overwrite and the marker
-        # cannot duplicate the batch on re-run, r12 ADVICE)
-        t1 = _time.monotonic()
+            return spark.read.parquet(idx_path).groupBy("cent_id").count()
+        # append: a crash between the overwrite and the marker cannot
+        # duplicate the batch on re-run (the read-back drops its rows)
+        t1 = time.monotonic()
         n_touched = _ivf_append_batch(
             spark, sf_dir, idx_path, emb, batch_cond, _encode
         )
         appended_marker.touch()
-        append_sec = round(_time.monotonic() - t1, 4)
+        append_sec = round(time.monotonic() - t1, 4)
 
-    probed = sorted(
-        {int(c) for qi in range(len(qids))
-         for c in np.nonzero(probe_mask[qi])[0]}
+    topk, stats = _ivf_probe(
+        spark, sf_dir, idx_path, emb, qids, lut, probe_mask
     )
     scope(spark, sf_dir)["ivf_append"] = dict(
-        n_lists=len(list(Path(idx_path).glob("cent_id=*"))),
-        n_probed=len(probed),
+        **stats,
         n_touched=n_touched,
-        files_total=len(list(Path(idx_path).glob("cent_id=*/*.parquet"))),
-        files_probed=sum(
-            len(list(Path(idx_path).glob(f"cent_id={c}/*.parquet")))
-            for c in probed
-        ),
         build_sec=build_sec,
         append_sec=append_sec,
         build_cached=float(cached),
     )
-
-    lists = read_parquet(spark, sf_dir, idx_path).filter(
-        F.col("cent_id").isin([int(c) for c in probed])
-    )
-    plan = physical_plan(lists)
-    seg = plan.split("PartitionFilters", 1)
-    if len(seg) != 2 or "cent_id" not in seg[1][:200]:
-        raise RuntimeError(
-            "ivf-append probe predicate did not reach the scan as a"
-            f" PartitionFilter; plan:\n{plan}"
-        )
-
-    bc = spark.sparkContext.broadcast((qids, lut, probe_mask))
-    _adc = _ivfpq_adc_fn(bc)
-
-    adc = lists.mapInPandas(
-        _adc, "query_id long, neighbor_id long, adc_dist long"
-    )
-    return _ivfpq_rerank(emb, adc)
+    return topk
 
 
 def ivf_append_topk_oracle() -> str:
@@ -2552,11 +2488,10 @@ def ivf_multibatch_topk(
     spark: SparkSession, sf_dir: str, stop_after: int = 0
 ) -> DataFrame:
     """TWO-DAY incremental ANN ingest -- the IVF twin of
-    ``dedup_multibatch`` (r12 VERDICT "what's missing" #3), closing the
-    loop ``sim_ivf_append`` opened: vectors arrive daily FOREVER, so
-    one append proving itself is not enough -- day 2 must append onto
-    the GROWN index, and its probe must rank day 1's vectors as
-    corpus.
+    ``dedup_multibatch``, closing the loop ``sim_ivf_append`` opened:
+    vectors arrive daily FOREVER, so one append proving itself is not
+    enough -- day 2 must append onto the GROWN index, and its probe
+    must rank day 1's vectors as corpus.
 
     1. BASE BUILD (one-time): the corpus minus BOTH batches
        (vec_ids [IVF_APPEND_LO, LO+2N) -- still above every model row,
@@ -2569,8 +2504,7 @@ def ivf_multibatch_topk(
        index day 1 grew -- its touched-list read-back now contains
        batch1 rows, which must survive the rewrite as corpus (the
        day-2 probe below proves they did).
-    4. PROBE: the twice-grown index answers through the shared
-       PartitionFilter-enforced scan + ADC + exact re-rank.
+    4. PROBE: the twice-grown index answers through ``_ivf_probe``.
 
     The model is frozen and base ∪ batch1 ∪ batch2 == everything, so
     the result must be bit-identical to single-shot IVFADC over the
@@ -2586,14 +2520,6 @@ def ivf_multibatch_topk(
     -- never the corpus (the single-append SCALING exponent 0.08
     applies per day); the only collects are model state and the two
     touched-list id sets (<= IVF_N_CENTROIDS ints each)."""
-    import time as _time
-    from pathlib import Path
-
-    import numpy as np
-
-    from ..executor import physical_plan
-    from ..sources import session_state_path
-
     emb = _quantized(spark, sf_dir)
     qids, _, lut, cb, cents, cn2, probe_mask = _ivfpq_model(emb)
     b1_cond = (F.col("vec_id") >= IVF_APPEND_LO) & (
@@ -2602,17 +2528,15 @@ def ivf_multibatch_topk(
     b2_cond = (F.col("vec_id") >= IVF_APPEND_LO + IVF_APPEND_N) & (
         F.col("vec_id") < IVF_APPEND_LO + 2 * IVF_APPEND_N
     )
-
-    bc_enc = spark.sparkContext.broadcast((cb, cents, cn2))
-    _encode = _ivfpq_encode_fn(bc_enc)
+    _encode = _ivfpq_encode_fn(spark, cb, cents, cn2)
     idx_path = session_state_path(spark, sf_dir, "ivf_mb_lists")
     m1 = Path(idx_path) / "_APPENDED_B1"
     m2 = Path(idx_path) / "_APPENDED_B2"
     cached = m2.exists()
     if stop_after == 1 and cached:
         # the hook means "stop BETWEEN the days"; on a warm index day 2
-        # already landed, so silently returning the full probe result
-        # (the pre-r14 behavior) would hand the caller the wrong frame
+        # already landed, so returning the full probe result would hand
+        # the caller the wrong frame
         raise RuntimeError(
             "stop_after=1 on an already-appended index: the between-"
             "days summary no longer exists; rmtree the index first"
@@ -2620,46 +2544,33 @@ def ivf_multibatch_topk(
     build_sec = day1_sec = day2_sec = 0.0
     n_touched_b1 = n_touched_b2 = -1
     if not cached:
-        t0 = _time.monotonic()
-        if not (Path(idx_path) / "_SUCCESS").exists():
-            (
-                emb.filter(~b1_cond & ~b2_cond)
-                .select("vec_id", "q")
-                .mapInPandas(
-                    _encode, "vec_id long, cent_id int, codes array<int>"
-                )
-                .write.mode("overwrite")
-                .partitionBy("cent_id")
-                .parquet(idx_path)
-            )
-        build_sec = round(_time.monotonic() - t0, 4)
+        build_sec, _ = _ivf_build(
+            emb.filter(~b1_cond & ~b2_cond), _encode, idx_path
+        )
         if not m1.exists():
-            t1 = _time.monotonic()
+            t1 = time.monotonic()
             n_touched_b1 = _ivf_append_batch(
                 spark, sf_dir, idx_path, emb, b1_cond, _encode
             )
             m1.touch()
-            day1_sec = round(_time.monotonic() - t1, 4)
+            day1_sec = round(time.monotonic() - t1, 4)
         if stop_after == 1:
             # test hook: stop between the days (per-list summary) so
             # the byte-identity snapshot can bracket day 2 alone
-            return (
-                spark.read.parquet(idx_path).groupBy("cent_id").count()
-            )
-        t2 = _time.monotonic()
+            return spark.read.parquet(idx_path).groupBy("cent_id").count()
+        t2 = time.monotonic()
         n_touched_b2 = _ivf_append_batch(
             spark, sf_dir, idx_path, emb, b2_cond, _encode
         )
         m2.touch()
-        day2_sec = round(_time.monotonic() - t2, 4)
+        day2_sec = round(time.monotonic() - t2, 4)
 
-    probed = sorted(
-        {int(c) for qi in range(len(qids))
-         for c in np.nonzero(probe_mask[qi])[0]}
+    topk, stats = _ivf_probe(
+        spark, sf_dir, idx_path, emb, qids, lut, probe_mask
     )
     scope(spark, sf_dir)["ivf_multibatch"] = dict(
-        n_lists=len(list(Path(idx_path).glob("cent_id=*"))),
-        n_probed=len(probed),
+        n_lists=stats["n_lists"],
+        n_probed=stats["n_probed"],
         n_touched_b1=n_touched_b1,
         n_touched_b2=n_touched_b2,
         build_sec=build_sec,
@@ -2667,24 +2578,7 @@ def ivf_multibatch_topk(
         day2_sec=day2_sec,
         build_cached=float(cached),
     )
-
-    lists = read_parquet(spark, sf_dir, idx_path).filter(
-        F.col("cent_id").isin([int(c) for c in probed])
-    )
-    plan = physical_plan(lists)
-    seg = plan.split("PartitionFilters", 1)
-    if len(seg) != 2 or "cent_id" not in seg[1][:200]:
-        raise RuntimeError(
-            "ivf-multibatch probe predicate did not reach the scan as"
-            f" a PartitionFilter; plan:\n{plan}"
-        )
-
-    bc = spark.sparkContext.broadcast((qids, lut, probe_mask))
-    _adc = _ivfpq_adc_fn(bc)
-    adc = lists.mapInPandas(
-        _adc, "query_id long, neighbor_id long, adc_dist long"
-    )
-    return _ivfpq_rerank(emb, adc)
+    return topk
 
 
 def ivf_multibatch_topk_oracle() -> str:
@@ -2709,15 +2603,14 @@ def ivf_delete_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
        re-encode just those vectors under the frozen model (assignment
        is deterministic), so finding them costs |deletion set|, never
        an index scan.
-    3. DELETE: touched lists are read back partition-pruned
-       (raise-enforced) with the doomed vec_ids filtered OUT, and a
-       dynamic partition overwrite rewrites only those lists.  A list
-       whose every row is doomed never appears in the written frame --
-       dynamic overwrite would silently LEAVE ITS OLD FILES -- so
-       emptied lists' directories are removed explicitly (their ids
-       are a subset of the already-collected touched set).
-    4. PROBE: the shrunk index answers through the shared
-       PartitionFilter-enforced scan + ADC + exact re-rank, and must
+    3. DELETE: touched lists are read back partition-pruned with the
+       doomed vec_ids filtered OUT, and a dynamic partition overwrite
+       rewrites only those lists.  A list whose every row is doomed
+       never appears in the written frame -- dynamic overwrite would
+       silently LEAVE ITS OLD FILES -- so emptied lists' directories
+       are removed explicitly (their ids are a subset of the
+       already-collected touched set).
+    4. PROBE: the shrunk index answers through ``_ivf_probe``, and must
        be bit-identical to single-shot IVFADC built WITHOUT the
        deleted vectors (``ivfpq_topk_oracle(exclude_lo, exclude_n)``)
        -- deletion changed bytes, never the semantics of what remains.
@@ -2727,125 +2620,64 @@ def ivf_delete_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape: delete cost is |deletion set's lists| directories; the only
     collects are model state, the touched-list ids, and the
     per-touched-list survivor counts (<= IVF_N_CENTROIDS rows)."""
-    import time as _time
-    from pathlib import Path
-
-    import numpy as np
-
-    from ..executor import physical_plan
-    from ..sources import session_state_path
+    import shutil
 
     emb = _quantized(spark, sf_dir)
     qids, _, lut, cb, cents, cn2, probe_mask = _ivfpq_model(emb)
     del_cond = (F.col("vec_id") >= IVF_APPEND_LO) & (
         F.col("vec_id") < IVF_APPEND_LO + IVF_APPEND_N
     )
-
-    bc_enc = spark.sparkContext.broadcast((cb, cents, cn2))
-    _encode = _ivfpq_encode_fn(bc_enc)
-    enc_schema = "vec_id long, cent_id int, codes array<int>"
+    _encode = _ivfpq_encode_fn(spark, cb, cents, cn2)
     idx_path = session_state_path(spark, sf_dir, "ivf_del_lists")
     deleted_marker = Path(idx_path) / "_DELETED"
     cached = deleted_marker.exists()
     build_sec = delete_sec = 0.0
     n_touched = n_emptied = -1
     if not cached:
-        t0 = _time.monotonic()
-        if not (Path(idx_path) / "_SUCCESS").exists():
-            (
-                emb.select("vec_id", "q")
-                .mapInPandas(_encode, enc_schema)
-                .write.mode("overwrite")
-                .partitionBy("cent_id")
-                .parquet(idx_path)
-            )
-        build_sec = round(_time.monotonic() - t0, 4)
-        t1 = _time.monotonic()
+        build_sec, _ = _ivf_build(emb, _encode, idx_path)
+        t1 = time.monotonic()
         doomed = (
             emb.filter(del_cond)
             .select("vec_id", "q")
-            .mapInPandas(_encode, enc_schema)
+            .mapInPandas(_encode, _IVF_ENC_SCHEMA)
         )
         touched = sorted(
             int(r.cent_id)
             for r in doomed.select("cent_id").distinct().collect()
         )
         n_touched = len(touched)
-
-        survivors = read_parquet(spark, sf_dir, idx_path).filter(
-            F.col("cent_id").isin(touched) & ~del_cond
+        survivors = (
+            read_partitions(spark, sf_dir, idx_path, "cent_id", touched)
+            .filter(~del_cond)
+            .localCheckpoint()
         )
-        plan = physical_plan(survivors)
-        seg = plan.split("PartitionFilters", 1)
-        if len(seg) != 2 or "cent_id" not in seg[1][:200]:
-            raise RuntimeError(
-                "ivf-delete read-back did not prune to the touched"
-                f" lists; plan:\n{plan}"
-            )
-        survivors = survivors.localCheckpoint()
         surviving_lists = {
             int(r.cent_id)
             for r in survivors.select("cent_id").distinct().collect()
         }
-        mode_key = "spark.sql.sources.partitionOverwriteMode"
-        prev = spark.conf.get(mode_key, "static")
-        spark.conf.set(mode_key, "dynamic")
-        try:
-            (
-                survivors.repartition("cent_id")
-                .write.mode("overwrite")
-                .partitionBy("cent_id")
-                .parquet(idx_path)
-            )
-        finally:
-            spark.conf.set(mode_key, prev)
+        overwrite_partitions(
+            survivors.repartition("cent_id"), idx_path, "cent_id"
+        )
         emptied = [c for c in touched if c not in surviving_lists]
         n_emptied = len(emptied)
         for c in emptied:
-            import shutil
-
-            shutil.rmtree(Path(idx_path) / f"cent_id={c}",
-                          ignore_errors=True)
+            shutil.rmtree(Path(idx_path) / f"cent_id={c}", ignore_errors=True)
         deleted_marker.touch()
-        delete_sec = round(_time.monotonic() - t1, 4)
+        delete_sec = round(time.monotonic() - t1, 4)
 
-    probed = sorted(
-        {int(c) for qi in range(len(qids))
-         for c in np.nonzero(probe_mask[qi])[0]}
+    topk, stats = _ivf_probe(
+        spark, sf_dir, idx_path, emb, qids, lut, probe_mask
     )
     scope(spark, sf_dir)["ivf_delete"] = dict(
-        n_lists=len(list(Path(idx_path).glob("cent_id=*"))),
-        n_probed=len(probed),
+        n_lists=stats["n_lists"],
+        n_probed=stats["n_probed"],
         n_touched=n_touched,
         n_emptied=n_emptied,
         build_sec=build_sec,
         delete_sec=delete_sec,
         build_cached=float(cached),
     )
-
-    existing_probed = [
-        int(c)
-        for c in probed
-        if (Path(idx_path) / f"cent_id={c}").exists()
-    ]
-
-    lists = read_parquet(spark, sf_dir, idx_path).filter(
-        F.col("cent_id").isin(existing_probed)
-    )
-    plan = physical_plan(lists)
-    seg = plan.split("PartitionFilters", 1)
-    if len(seg) != 2 or "cent_id" not in seg[1][:200]:
-        raise RuntimeError(
-            "ivf-delete probe predicate did not reach the scan as a"
-            f" PartitionFilter; plan:\n{plan}"
-        )
-
-    bc = spark.sparkContext.broadcast((qids, lut, probe_mask))
-    _adc = _ivfpq_adc_fn(bc)
-    adc = lists.mapInPandas(
-        _adc, "query_id long, neighbor_id long, adc_dist long"
-    )
-    return _ivfpq_rerank(emb, adc)
+    return topk
 
 
 def ivf_delete_topk_oracle() -> str:
@@ -2867,10 +2699,10 @@ IVF_COMPACT_BATCHES = 4
 
 def ivf_compact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF list COMPACTION -- the maintenance quarter of the ANN store
-    lifecycle (build / add / delete exist; r13 VERDICT "what's missing"
-    #1: nothing merged the small files ingest accumulates inside
-    ``cent_id=*`` directories, so a daily append regime fragments probe
-    IO forever).  FAISS-parity reference point: real stores compact.
+    lifecycle (build / add / delete exist, but nothing merged the small
+    files ingest accumulates inside ``cent_id=*`` directories, so a
+    daily append regime fragments probe IO forever).  FAISS-parity
+    reference point: real stores compact.
 
     1. INGEST EMULATION (one-time): the full corpus is encoded under
        the frozen model and written as FILE-LEVEL APPENDS
@@ -2884,17 +2716,15 @@ def ivf_compact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
        sidecar (written after the ``_BUILT`` marker) so a crash
        anywhere below re-runs against the same work list.
     2. COMPACT: ONLY the sidecar's fragmented lists are read back
-       partition-pruned (raise if the predicate misses the scan),
-       localCheckpoint-ed, and dynamic-partition-overwritten --
-       ``repartition(cent_id)`` bins each list into exactly one file.
-       Cold lists never appear in the written frame: their directories
-       stay byte-identical (pytest snapshots them).  The rewrite is
-       naturally idempotent -- a crash between the overwrite and the
-       ``_COMPACTED`` marker re-runs into the same rows and the same
-       single-file layout.
-    3. PROBE: the compacted store answers through the shared
-       PartitionFilter-enforced scan + ADC + exact re-rank, and must be
-       bit-identical to single-shot IVFADC over the full corpus
+       partition-pruned, localCheckpoint-ed, and
+       dynamic-partition-overwritten -- ``repartition(cent_id)`` bins
+       each list into exactly one file.  Cold lists never appear in
+       the written frame: their directories stay byte-identical
+       (pytest snapshots them).  The rewrite is naturally idempotent --
+       a crash between the overwrite and the ``_COMPACTED`` marker
+       re-runs into the same rows and the same single-file layout.
+    3. PROBE: the compacted store answers through ``_ivf_probe``, and
+       must be bit-identical to single-shot IVFADC over the full corpus
        (shares ``ivfpq_topk_oracle()``) -- compaction changes BYTES,
        never answers.
 
@@ -2905,20 +2735,10 @@ def ivf_compact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     lists."""
     import json as _json
     import shutil
-    import time as _time
-    from pathlib import Path
-
-    import numpy as np
-
-    from ..executor import physical_plan
-    from ..sources import session_state_path
 
     emb = _quantized(spark, sf_dir)
     qids, _, lut, cb, cents, cn2, probe_mask = _ivfpq_model(emb)
-    bc_enc = spark.sparkContext.broadcast((cb, cents, cn2))
-    _encode = _ivfpq_encode_fn(bc_enc)
-    enc_schema = "vec_id long, cent_id int, codes array<int>"
-
+    _encode = _ivfpq_encode_fn(spark, cb, cents, cn2)
     idx_path = session_state_path(spark, sf_dir, "ivf_cmp_lists")
     built_marker = Path(idx_path) / "_BUILT"
     sidecar = Path(idx_path) / "_FRAG_LISTS.json"
@@ -2929,10 +2749,10 @@ def ivf_compact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         if not built_marker.exists():
             # appends are not idempotent: a partial build must restart
             shutil.rmtree(idx_path, ignore_errors=True)
-            t0 = _time.monotonic()
+            t0 = time.monotonic()
             encoded = (
                 emb.select("vec_id", "q")
-                .mapInPandas(_encode, enc_schema)
+                .mapInPandas(_encode, _IVF_ENC_SCHEMA)
                 .localCheckpoint()
             )
             cold = F.col("cent_id") % 4 == 0
@@ -2941,7 +2761,7 @@ def ivf_compact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             # partition encoded frame (e.g. scale_probe's disjoint_x
             # replicas) would fragment cold lists too and silently
             # promote them into the _FRAG_LISTS work list, undermining
-            # the "cold lists never read/rewritten" claim (r15 ADVICE)
+            # the "cold lists never read/rewritten" claim
             encoded.filter(cold).repartition("cent_id").write.mode(
                 "append"
             ).partitionBy("cent_id").parquet(idx_path)
@@ -2954,7 +2774,7 @@ def ivf_compact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                     .partitionBy("cent_id")
                     .parquet(idx_path)
                 )
-            build_sec = round(_time.monotonic() - t0, 4)
+            build_sec = round(time.monotonic() - t0, 4)
             built_marker.touch()
         if not sidecar.exists():
             frag = sorted(
@@ -2974,73 +2794,34 @@ def ivf_compact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 _json.dumps(dict(frag=frag, files_before=files_before))
             )
         work = _json.loads(sidecar.read_text())
-        t1 = _time.monotonic()
-
-        rows = read_parquet(spark, sf_dir, idx_path).filter(
-            F.col("cent_id").isin(work["frag"])
-        )
-        plan = physical_plan(rows)
-        seg = plan.split("PartitionFilters", 1)
-        if len(seg) != 2 or "cent_id" not in seg[1][:200]:
-            raise RuntimeError(
-                "compaction read-back did not prune to the fragmented"
-                f" lists; plan:\n{plan}"
-            )
-        rows = rows.localCheckpoint()
-        mode_key = "spark.sql.sources.partitionOverwriteMode"
-        prev = spark.conf.get(mode_key, "static")
-        spark.conf.set(mode_key, "dynamic")
-        try:
-            (
-                rows.repartition("cent_id")
-                .write.mode("overwrite")
-                .partitionBy("cent_id")
-                .parquet(idx_path)
-            )
-        finally:
-            spark.conf.set(mode_key, prev)
+        t1 = time.monotonic()
+        rows = read_partitions(
+            spark, sf_dir, idx_path, "cent_id", work["frag"]
+        ).localCheckpoint()
+        overwrite_partitions(rows.repartition("cent_id"), idx_path, "cent_id")
         compacted_marker.touch()
-        compact_sec = round(_time.monotonic() - t1, 4)
+        compact_sec = round(time.monotonic() - t1, 4)
 
     work = _json.loads(sidecar.read_text())
-    files_after = len(list(Path(idx_path).glob("cent_id=*/*.parquet")))
-    if files_after >= work["files_before"]:
+    topk, stats = _ivf_probe(
+        spark, sf_dir, idx_path, emb, qids, lut, probe_mask
+    )
+    if stats["files_total"] >= work["files_before"]:
         raise RuntimeError(
             f"compaction did not shrink the store: {work['files_before']}"
-            f" -> {files_after} files"
+            f" -> {stats['files_total']} files"
         )
-    probed = sorted(
-        {int(c) for qi in range(len(qids))
-         for c in np.nonzero(probe_mask[qi])[0]}
-    )
     scope(spark, sf_dir)["ivf_compact"] = dict(
-        n_lists=len(list(Path(idx_path).glob("cent_id=*"))),
-        n_probed=len(probed),
+        n_lists=stats["n_lists"],
+        n_probed=stats["n_probed"],
         n_fragmented=len(work["frag"]),
         files_before=work["files_before"],
-        files_after=files_after,
+        files_after=stats["files_total"],
         build_sec=build_sec,
         compact_sec=compact_sec,
         build_cached=float(cached),
     )
-
-    lists = read_parquet(spark, sf_dir, idx_path).filter(
-        F.col("cent_id").isin([int(c) for c in probed])
-    )
-    plan = physical_plan(lists)
-    seg = plan.split("PartitionFilters", 1)
-    if len(seg) != 2 or "cent_id" not in seg[1][:200]:
-        raise RuntimeError(
-            "ivf-compact probe predicate did not reach the scan as a"
-            f" PartitionFilter; plan:\n{plan}"
-        )
-
-    bc = spark.sparkContext.broadcast((qids, lut, probe_mask))
-    _adc = _ivfpq_adc_fn(bc)
-    adc = lists.mapInPandas(
-        _adc, "query_id long, neighbor_id long, adc_dist long"
-    )
-    return _ivfpq_rerank(emb, adc)
+    return topk
 
 
 def ivf_compact_topk_oracle() -> str:
@@ -3056,14 +2837,13 @@ def ivf_compact_topk_oracle() -> str:
 
 def ivf_recluster_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF RECLUSTERING -- the last maintenance gap in the ANN store
-    lifecycle (build / add / delete / compact exist; r13 VERDICT
-    "what's missing" #1 also named "re-clusters after heavy deletion"):
-    after enough takedowns the old coarse quantizer no longer fits the
-    surviving distribution -- lists the deleted vectors dominated sit
-    near-empty while others stay hot, so probe IO is spent on a
-    partition of the DELETED corpus, not the live one.  Real stores
-    periodically retrain the quantizer and rebuild assignments; this op
-    is that pass.
+    lifecycle (build / add / delete / compact exist; none re-clusters
+    after heavy deletion): after enough takedowns the old coarse
+    quantizer no longer fits the surviving distribution -- lists the
+    deleted vectors dominated sit near-empty while others stay hot, so
+    probe IO is spent on a partition of the DELETED corpus, not the
+    live one.  Real stores periodically retrain the quantizer and
+    rebuild assignments; this op is that pass.
 
     1. AGED STORE (one-time): the survivors (corpus minus the deleted
        slice [IVF_APPEND_LO, LO+N)) encoded under the OLD model
@@ -3080,9 +2860,8 @@ def ivf_recluster_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
        assignment) and written to a NEW store.  The old store is left
        intact (the swap is the caller's atomic pointer flip -- here the
        two directories).
-    3. PROBE: the reclustered store answers through the shared
-       PartitionFilter-enforced scan + ADC + exact re-rank under the
-       NEW model's probe lists, and must be bit-identical to
+    3. PROBE: the reclustered store answers through ``_ivf_probe``
+       under the NEW model's probe lists, and must be bit-identical to
        single-shot IVFADC built with that model over the survivors:
        ``ivfpq_topk_oracle(exclude_lo, exclude_n, cent_lo)``.
 
@@ -3095,13 +2874,7 @@ def ivf_recluster_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast-join vector fetch, one encode pass, one partitioned
     write; collects are model state and the two 32-row list-size
     frames."""
-    import time as _time
-    from pathlib import Path
-
-    import numpy as np
-
     from ..executor import physical_plan
-    from ..sources import session_state_path
 
     emb = _quantized(spark, sf_dir)
     # OLD model for the aged store; NEW model for the recluster + probe
@@ -3112,14 +2885,6 @@ def ivf_recluster_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     del_cond = (F.col("vec_id") >= IVF_APPEND_LO) & (
         F.col("vec_id") < IVF_APPEND_LO + IVF_APPEND_N
     )
-    enc_schema = "vec_id long, cent_id int, codes array<int>"
-    _enc_old = _ivfpq_encode_fn(
-        spark.sparkContext.broadcast((cb_old, cents_old, cn2_old))
-    )
-    _enc_new = _ivfpq_encode_fn(
-        spark.sparkContext.broadcast((cb_new, cents_new, cn2_new))
-    )
-
     old_path = session_state_path(spark, sf_dir, "ivf_rc_old")
     new_path = session_state_path(spark, sf_dir, "ivf_rc_new")
     marker = Path(new_path) / "_RECLUSTERED"
@@ -3127,19 +2892,12 @@ def ivf_recluster_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     build_sec = recluster_sec = 0.0
     skew_before = skew_after = -1.0
     if not cached:
-        t0 = _time.monotonic()
-        if not (Path(old_path) / "_SUCCESS").exists():
-            (
-                emb.filter(~del_cond)
-                .select("vec_id", "q")
-                .mapInPandas(_enc_old, enc_schema)
-                .write.mode("overwrite")
-                .partitionBy("cent_id")
-                .parquet(old_path)
-            )
-        build_sec = round(_time.monotonic() - t0, 4)
-
-        t1 = _time.monotonic()
+        build_sec, _ = _ivf_build(
+            emb.filter(~del_cond),
+            _ivfpq_encode_fn(spark, cb_old, cents_old, cn2_old),
+            old_path,
+        )
+        t1 = time.monotonic()
         # membership: ids ONLY from the aged store (codes must not be
         # read -- raise if column pruning failed)
         members = spark.read.parquet(old_path).select("vec_id")
@@ -3150,77 +2908,42 @@ def ivf_recluster_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "recluster membership read did not prune to vec_id"
                 f" alone; plan:\n{plan}"
             )
-        # original vectors fetched by id (broadcast the 32-row-bounded
-        # side is wrong here -- members IS the corpus; the join is a
-        # plain equi-join Spark plans by size)
-        survivors = emb.join(members, "vec_id").select("vec_id", "q")
-        (
-            survivors.mapInPandas(_enc_new, enc_schema)
-            .write.mode("overwrite")
-            .partitionBy("cent_id")
-            .parquet(new_path)
+        # original vectors fetched by id (members IS the corpus, so no
+        # broadcast hint: the equi-join is planned by size)
+        _ivf_build(
+            emb.join(members, "vec_id"),
+            _ivfpq_encode_fn(spark, cb_new, cents_new, cn2_new),
+            new_path,
         )
-        sizes_old = {
-            int(r.cent_id): r.n
-            for r in spark.read.parquet(old_path)
-            .groupBy("cent_id")
-            .agg(F.count("*").alias("n"))
-            .collect()
-        }
-        sizes_new = {
-            int(r.cent_id): r.n
-            for r in spark.read.parquet(new_path)
-            .groupBy("cent_id")
-            .agg(F.count("*").alias("n"))
-            .collect()
-        }
 
-        def _skew(sizes: dict) -> float:
-            vals = list(sizes.values()) + [0] * (
-                IVF_N_CENTROIDS - len(sizes)
-            )
-            return round(max(vals) / (sum(vals) / len(vals)), 4)
+        def _skew(path: str) -> float:
+            sizes = [
+                r.n
+                for r in spark.read.parquet(path)
+                .groupBy("cent_id")
+                .agg(F.count("*").alias("n"))
+                .collect()
+            ]
+            sizes += [0] * (IVF_N_CENTROIDS - len(sizes))
+            return round(max(sizes) / (sum(sizes) / len(sizes)), 4)
 
-        skew_before, skew_after = _skew(sizes_old), _skew(sizes_new)
+        skew_before, skew_after = _skew(old_path), _skew(new_path)
         marker.touch()
-        recluster_sec = round(_time.monotonic() - t1, 4)
+        recluster_sec = round(time.monotonic() - t1, 4)
 
-    probed = sorted(
-        {int(c) for qi in range(len(qids))
-         for c in np.nonzero(probe_mask[qi])[0]}
+    topk, stats = _ivf_probe(
+        spark, sf_dir, new_path, emb, qids, lut, probe_mask
     )
     scope(spark, sf_dir)["ivf_recluster"] = dict(
-        n_lists=len(list(Path(new_path).glob("cent_id=*"))),
-        n_probed=len(probed),
+        n_lists=stats["n_lists"],
+        n_probed=stats["n_probed"],
         skew_before=skew_before,
         skew_after=skew_after,
         build_sec=build_sec,
         recluster_sec=recluster_sec,
         build_cached=float(cached),
     )
-
-    existing_probed = [
-        int(c)
-        for c in probed
-        if (Path(new_path) / f"cent_id={c}").exists()
-    ]
-    lists = spark.read.parquet(new_path).filter(
-        F.col("cent_id").isin(existing_probed)
-    )
-    plan = physical_plan(lists)
-    seg = plan.split("PartitionFilters", 1)
-    if len(seg) != 2 or "cent_id" not in seg[1][:200]:
-        raise RuntimeError(
-            "ivf-recluster probe predicate did not reach the scan as a"
-            f" PartitionFilter; plan:\n{plan}"
-        )
-
-    bc = spark.sparkContext.broadcast((qids, lut, probe_mask))
-    _adc = _ivfpq_adc_fn(bc)
-    adc = lists.mapInPandas(
-        _adc, "query_id long, neighbor_id long, adc_dist long"
-    )
-    return _ivfpq_rerank(emb, adc)
+    return topk
 
 
 def ivf_recluster_topk_oracle() -> str:

@@ -133,17 +133,23 @@ def _attach_outer(graph: JoinGraph, tree: PlanNode | None) -> PlanNode:
     return tree
 
 
-def _plan_components(graph, oracle, cm, plan_component) -> tuple[PlanNode, float]:
-    """Plan each connected component of the INNER core, cross-join
-    components in ascending first-factor order (J15), then attach
-    null-generating factors as top LEFT joins (J14)."""
-    inner = graph.all_factors & ~graph.null_generating
-    comps = graph.components_of(inner)
-    trees = [plan_component(c) for c in comps]
+def _assemble(graph: JoinGraph, trees: list[PlanNode]) -> PlanNode:
+    """One plan from the trees of the inner core's connected components,
+    given in ascending first-factor order: cross-join them in that order
+    (J15), then attach the null-generating factors as top LEFT joins
+    (J14)."""
     tree = trees[0] if trees else None
     for t in trees[1:]:
         tree = make_join(graph, tree, t)
-    tree = _attach_outer(graph, tree)
+    return _attach_outer(graph, tree)
+
+
+def _plan_components(graph, oracle, cm, plan_component) -> tuple[PlanNode, float]:
+    """Plan each connected component of the INNER core and assemble the
+    component trees into one plan (``_assemble``)."""
+    inner = graph.all_factors & ~graph.null_generating
+    comps = graph.components_of(inner)
+    tree = _assemble(graph, [plan_component(c) for c in comps])
     validate_tree(graph, tree)
     return tree, _cum(graph, tree, oracle, cm)
 
@@ -266,12 +272,7 @@ def plan_greedy(graph: JoinGraph, oracle, cm: CostModel) -> PlanResult:
         per_comp_best.append(best[2])
         per_comp_alts.append(alts)
 
-    # cross-join components (J15) around each component's best tree,
-    # then attach null-generating factors on top (J14)
-    tree = per_comp_best[0] if per_comp_best else None
-    for t in per_comp_best[1:]:
-        tree = make_join(graph, tree, t)
-    tree = _attach_outer(graph, tree)
+    tree = _assemble(graph, per_comp_best)
     validate_tree(graph, tree)
     cost = _cum(graph, tree, oracle, cm)
 
@@ -280,11 +281,9 @@ def plan_greedy(graph: JoinGraph, oracle, cm: CostModel) -> PlanResult:
     alternatives = []
     for ci, alts in enumerate(per_comp_alts):
         for start, _c, t in alts:
-            full = None
-            for cj in range(len(comps)):
-                part = t if cj == ci else per_comp_best[cj]
-                full = part if full is None else make_join(graph, full, part)
-            full = _attach_outer(graph, full)
+            full = _assemble(
+                graph, per_comp_best[:ci] + [t] + per_comp_best[ci + 1:]
+            )
             alternatives.append(
                 {
                     "start": graph.aliases[start],

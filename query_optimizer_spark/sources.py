@@ -14,6 +14,8 @@ All writes stay inside the repo tree (``.warehouse/`` by default).
 
 from __future__ import annotations
 
+import contextlib
+from collections.abc import Iterable
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -119,6 +121,69 @@ def read_parquet(spark: SparkSession, sf_dir: str, path: str) -> DataFrame:
     df = spark.read.parquet(path)
     memo[path] = (fp, df)
     return df
+
+
+# A partition-keyed store (the IVF inverted lists, the dedup band index)
+# is read and rewritten one partition set at a time.  ``read_partitions``
+# is its one pruned read: the ``column IN (values)`` predicate must reach
+# the scan as a PartitionFilter (metadata-only pruning, never a post-scan
+# data filter), and it raises rather than asserts so the guarantee
+# survives ``python -O``.  ``overwrite_partitions`` is its one write: a
+# dynamic partition overwrite chosen per write through the writer option,
+# so no caller flips the session-global ``partitionOverwriteMode`` conf.
+
+
+def read_partitions(
+    spark: SparkSession, sf_dir: str, path: str, column: str,
+    values: Iterable[int],
+) -> DataFrame:
+    """The rows of a partitioned store in the ``column`` partitions listed
+    in ``values``; raises RuntimeError unless the filter prunes at the
+    scan."""
+    from .executor import physical_plan
+
+    df = read_parquet(spark, sf_dir, path)
+    df = df.filter(df[column].isin([int(v) for v in values]))
+    plan = physical_plan(df)
+    seg = plan.split("PartitionFilters", 1)
+    if len(seg) != 2 or column not in seg[1][:200]:
+        raise RuntimeError(
+            f"the {column} filter on {path} did not reach the scan as a"
+            f" PartitionFilter; plan:\n{plan}"
+        )
+    return df
+
+
+def overwrite_partitions(df: DataFrame, path: str, column: str) -> None:
+    """Replace exactly the ``column`` partitions of the store at ``path``
+    that occur in ``df``; every other partition directory is left as it
+    is.  ``df``'s lineage must not read ``path`` (Spark refuses a
+    self-overwrite), so a caller merging with existing rows checkpoints
+    them first."""
+    (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(column)
+        .parquet(path)
+    )
+
+
+@contextlib.contextmanager
+def scoped_conf(spark: SparkSession, confs: dict[str, str]):
+    """Set session confs for the body of a ``with``; afterwards each key
+    goes back to its prior explicitly set value, or is unset if it had
+    none."""
+    saved = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def read_any(spark: SparkSession, path: str, fmt: str, schema=None) -> DataFrame:
@@ -501,14 +566,7 @@ def runtime_bloom_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         "applicationSideScanSizeThreshold": "0",
         "spark.sql.autoBroadcastJoinThreshold": "-1",
     }
-    saved = {}
-    for k, v in confs.items():
-        try:
-            saved[k] = spark.conf.get(k)
-        except Exception:
-            saved[k] = None
-        spark.conf.set(k, v)
-    try:
+    with scoped_conf(spark, confs):
         orders = read_parquet(spark, sf_dir, f"{sf_dir}/orders.parquet").filter(
             "o_custkey % 97 = 0"
         )
@@ -525,12 +583,6 @@ def runtime_bloom_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         assert "bloom_filter_agg" in plan, "runtime filter not built"
         assert "might_contain" in plan, "runtime filter not applied"
         rows = j.collect()
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
     return spark.createDataFrame(rows, schema=j.schema)
 
 

@@ -21,7 +21,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..functions.temporal import SESSION_GAP_MS
 from ..session import configure_runtime, normalize_ts
-from ..sources import read_parquet
+from ..sources import read_parquet, scoped_conf
 from ..state import scope
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -117,17 +117,14 @@ def _stream_buckets(spark, input_bytes: int) -> int:
 def _stream_width(spark, input_bytes):
     """Pin spark.sql.shuffle.partitions to the scale-adaptive width for
     the duration of one streaming query start (the query captures the
-    value at planning time), restoring the session default after."""
+    value at planning time), restoring the session's prior setting
+    after."""
     if input_bytes is None:
         yield
         return
-    key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, str(_stream_shuffle_partitions(spark, input_bytes)))
-    try:
+    width = str(_stream_shuffle_partitions(spark, input_bytes))
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": width}):
         yield
-    finally:
-        spark.conf.set(key, prev)
 
 
 def _capture_audit(q, spark, sf_dir: str, output_mode: str) -> None:

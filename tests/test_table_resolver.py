@@ -2,7 +2,12 @@
 through ``sources.read_parquet``, which resolves the path once per
 (session, sf_dir) and resolves it again when the file or store changes
 on disk.  A repeat read starts no Spark job; an action still scans the
-files."""
+files.
+
+A partition-keyed store is read through ``sources.read_partitions`` (a
+pruned read that raises unless the filter reaches the scan) and
+rewritten through ``sources.overwrite_partitions`` (a dynamic partition
+overwrite chosen per write, never by the session conf)."""
 
 import itertools
 import os
@@ -22,7 +27,12 @@ from query_optimizer_spark.joingraph import JoinGraph
 from query_optimizer_spark.oracle import TrueCountOracle
 from query_optimizer_spark.planners import PLANNERS
 from query_optimizer_spark.session import read_table
-from query_optimizer_spark.sources import read_parquet
+from query_optimizer_spark.sources import (
+    overwrite_partitions,
+    read_parquet,
+    read_partitions,
+    scoped_conf,
+)
 from query_optimizer_spark.sqlparse import parse
 
 from .conftest import SF_DIR
@@ -32,6 +42,9 @@ from .test_spark_exec import duck_hash
 PACKAGE = pathlib.Path(__file__).resolve().parents[1] / "query_optimizer_spark"
 # a raw read of a table under the data directory, which skips the memo
 BYPASS = re.compile(r"\.read\.parquet\(f\"\{(self\.)?sf_dir\}/")
+# a store's pruned-read check or write-mode choice outside sources.py
+STORE_BYPASS = ('split("PartitionFilters"', "partitionOverwriteMode")
+OVERWRITE_MODE = "spark.sql.sources.partitionOverwriteMode"
 _GROUPS = itertools.count()
 
 
@@ -84,6 +97,21 @@ def test_no_read_bypasses_the_resolver():
         for p in sorted(PACKAGE.rglob("*.py"))
         for i, line in enumerate(p.read_text().splitlines(), 1)
         if BYPASS.search(line)
+    ]
+    assert offenders == []
+
+
+def test_store_reads_and_writes_go_through_sources():
+    """Only ``sources.py`` checks a store read for its PartitionFilter or
+    names the partition overwrite mode: every other module reads a store
+    through ``read_partitions`` and rewrites it through
+    ``overwrite_partitions``."""
+    offenders = [
+        f"{p.relative_to(PACKAGE.parent)}:{i}"
+        for p in sorted(PACKAGE.rglob("*.py"))
+        if p != PACKAGE / "sources.py"
+        for i, line in enumerate(p.read_text().splitlines(), 1)
+        if any(s in line for s in STORE_BYPASS)
     ]
     assert offenders == []
 
@@ -196,3 +224,67 @@ def test_self_join_of_memoized_table_matches_duckdb(spark, duck):
         ).fetchall()
     )
     assert got == want
+
+
+def _store(spark, path, rows) -> None:
+    spark.createDataFrame(rows, "k long, p int").write.mode(
+        "overwrite"
+    ).partitionBy("p").parquet(path)
+
+
+def _partition_files(store: pathlib.Path, p: int) -> dict:
+    """path -> (size, mtime_ns, bytes) of every file in partition ``p``."""
+    return {
+        str(f): (f.stat().st_size, f.stat().st_mtime_ns, f.read_bytes())
+        for f in sorted((store / f"p={p}").iterdir())
+    }
+
+
+def test_read_partitions_prunes_or_raises(spark, tmp_path):
+    sf_dir, store = str(tmp_path), str(tmp_path / "store")
+    _store(spark, store, [(k, k % 3) for k in range(9)])
+    got = read_partitions(spark, sf_dir, store, "p", [0, 2])
+    assert _rows(got.select("k", "p")) == [
+        (0, 0), (2, 2), (3, 0), (5, 2), (6, 0), (8, 2),
+    ]
+    # ``k`` is a data column: the filter is applied after the scan, so
+    # the read must refuse rather than silently read every partition
+    with pytest.raises(RuntimeError, match="PartitionFilter"):
+        read_partitions(spark, sf_dir, store, "k", [1])
+
+
+def test_overwrite_partitions_rewrites_only_its_partitions(spark, tmp_path):
+    """A frame holding partitions 1 and 3 replaces partition 1, adds
+    partition 3 and leaves partitions 0 and 2 byte-identical, with the
+    session's overwrite mode at STATIC, which the write must not read
+    and must not change."""
+    sf_dir, root = str(tmp_path), tmp_path / "store"
+    _store(spark, str(root), [(k, k % 3) for k in range(9)])
+    kept = {p: _partition_files(root, p) for p in (0, 2)}
+    with scoped_conf(spark, {OVERWRITE_MODE: "STATIC"}):
+        overwrite_partitions(
+            spark.createDataFrame([(10, 1), (11, 3)], "k long, p int"),
+            str(root),
+            "p",
+        )
+        assert spark.conf.get(OVERWRITE_MODE) == "STATIC"
+    assert {p: _partition_files(root, p) for p in (0, 2)} == kept
+    assert _rows(read_parquet(spark, sf_dir, str(root)).select("k", "p")) == [
+        (0, 0), (2, 2), (3, 0), (5, 2), (6, 0), (8, 2), (10, 1), (11, 3),
+    ]
+
+
+def test_scoped_conf_restores_prior_values(spark):
+    """Inside the block each key holds the new value; afterwards a key
+    set before holds its old value again and a key that was never set
+    is unset again, also when the block raises."""
+    unset = "spark.sql.optimizer.runtime.bloomFilter.expectedNumItems"
+    prior = spark.conf.get(OVERWRITE_MODE, None)
+    assert spark.conf.get(unset, None) is None
+    with pytest.raises(ZeroDivisionError):
+        with scoped_conf(spark, {OVERWRITE_MODE: "DYNAMIC", unset: "7"}):
+            assert spark.conf.get(OVERWRITE_MODE) == "DYNAMIC"
+            assert spark.conf.get(unset) == "7"
+            1 / 0
+    assert spark.conf.get(OVERWRITE_MODE, None) == prior
+    assert spark.conf.get(unset, None) is None
