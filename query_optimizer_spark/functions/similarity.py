@@ -73,32 +73,28 @@ _SQL_QUANT = f"""
 """
 
 
-def brute_force_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact cosine top-k neighbors for the first N vec_ids."""
-    emb = _quantized(spark, sf_dir)
-    queries = emb.filter(F.col("vec_id") < ANN_N_QUERIES).select(
+_COS = "round({dot} / (sqrt(cast({n2a} as double)) * sqrt(cast({n2b} as double))), 6)"
+
+
+def _query_set(rows: DataFrame, *cols: str) -> DataFrame:
+    """The query set: the first ANN_N_QUERIES vec_ids of ``rows`` as
+    (query_id, qq, qn2, q<col>...).  Every carried column takes a ``q``
+    prefix so the broadcast side can sit beside the corpus side's own
+    columns in one join."""
+    return rows.filter(F.col("vec_id") < ANN_N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
-        F.col("q").alias("qq"),
-        F.col("n2").alias("qn2"),
+        *(F.col(c).alias(f"q{c}") for c in ("q", "n2", *cols)),
     )
-    dot = DOT_SPARK.format(a="qq", b="q")
-    scored = (
-        emb.join(F.broadcast(queries), F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.expr(
-                f"round({dot} / (sqrt(cast(qn2 as double)) * sqrt(cast(n2 as double))), 6)"
-            ).alias("cosine"),
+
+
+def brute_force_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact cosine top-k neighbors for the first N vec_ids: every other
+    vector is a candidate of every query."""
+    emb = _quantized(spark, sf_dir)
+    return _rescore_topk(
+        emb.join(
+            F.broadcast(_query_set(emb)), F.col("vec_id") != F.col("query_id")
         )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= ANN_TOP_K)
-        .select("query_id", "neighbor_id", "rank", "cosine")
     )
 
 
@@ -164,16 +160,9 @@ def _lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .drop("sig")
     )
-    queries = bands.filter(F.col("vec_id") < ANN_N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("q").alias("qq"),
-        F.col("n2").alias("qn2"),
-        F.col("key").alias("qkey"),
-        F.col("band").alias("qband"),
-    )
     return (
         bands.join(
-            F.broadcast(queries),
+            F.broadcast(_query_set(bands, "key", "band")),
             (F.col("band") == F.col("qband"))
             & (F.col("key") == F.col("qkey"))
             & (F.col("vec_id") != F.col("query_id")),
@@ -183,17 +172,22 @@ def _lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _rescore_topk(cand: DataFrame, extra_keys: list[str] = []) -> DataFrame:
-    """Exact cosine re-rank of a candidate frame to the per-query top-k
-    (optionally per (extra_keys..., query) -- ``recall_report`` ranks
-    both methods' candidates in ONE window pass this way)."""
-    dot = DOT_SPARK.format(a="qq", b="q")
+def _rescore_topk(
+    cand: DataFrame, extra_keys: tuple[str, ...] = (), carry: tuple[str, ...] = ()
+) -> DataFrame:
+    """Exact cosine re-rank of a candidate frame (query_id, qq, qn2,
+    vec_id, q, n2) to the per-query top-k under (cosine desc,
+    neighbor_id).  ``extra_keys`` widen the ranking partition
+    (``recall_report`` ranks both methods' candidates in one window pass
+    this way); ``carry`` columns ride along to the output between rank
+    and cosine (a pre-rank distance)."""
     scored = cand.select(
         *extra_keys,
         "query_id",
         F.col("vec_id").alias("neighbor_id"),
+        *carry,
         F.expr(
-            f"round({dot} / (sqrt(cast(qn2 as double)) * sqrt(cast(n2 as double))), 6)"
+            _COS.format(dot=DOT_SPARK.format(a="qq", b="q"), n2a="qn2", n2b="n2")
         ).alias("cosine"),
     )
     w = Window.partitionBy(*extra_keys, "query_id").orderBy(
@@ -202,8 +196,67 @@ def _rescore_topk(cand: DataFrame, extra_keys: list[str] = []) -> DataFrame:
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("int"))
         .filter(F.col("rank") <= ANN_TOP_K)
-        .select(*extra_keys, "query_id", "neighbor_id", "rank", "cosine")
+        .select(*extra_keys, "query_id", "neighbor_id", "rank", *carry, "cosine")
     )
+
+
+def _prerank_rerank(
+    emb: DataFrame, pre: DataFrame, col: str, n_cand: int
+) -> DataFrame:
+    """The tail of every approximate-distance ANN op: keep each query's
+    ``n_cand`` best rows of ``pre`` (query_id, neighbor_id, ``col``)
+    under the total order (``col``, neighbor_id), fetch just those
+    neighbors' vectors by id, and re-rank them exactly by cosine against
+    the broadcast query set, carrying ``col`` to the output."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col(col).asc(), F.col("neighbor_id")
+    )
+    cand = (
+        pre.withColumn("prank", F.row_number().over(w))
+        .filter(F.col("prank") <= n_cand)
+        .drop("prank")
+    )
+    return _rescore_topk(
+        cand.join(
+            emb.select("vec_id", "q", "n2"), cand.neighbor_id == F.col("vec_id")
+        ).join(F.broadcast(_query_set(emb)), "query_id"),
+        carry=(col,),
+    )
+
+
+def _sql_prerank_rerank(col: str, src: str, prank: str, n_cand: int) -> str:
+    """DuckDB twin of ``_prerank_rerank``: the ``cand`` -> ``scored`` ->
+    final-ranking CTE text over the pre-rank CTE ``src``; the oracle's
+    closing text."""
+    return f"""cand AS (
+            SELECT query_id, neighbor_id, {col} FROM (
+                SELECT query_id, neighbor_id, {col},
+                       ROW_NUMBER() OVER (PARTITION BY query_id
+                                          ORDER BY {col}, neighbor_id)
+                           AS {prank}
+                FROM {src}
+            ) WHERE {prank} <= {n_cand}
+        ),
+        scored AS (
+            SELECT c.query_id, c.neighbor_id, c.{col},
+                   round(list_sum([qa.q[i] * qb.q[i]
+                                   for i in generate_series(1, len(qa.q))])
+                         / (sqrt(qa.n2::DOUBLE) * sqrt(qb.n2::DOUBLE)), 6)
+                       AS cosine
+            FROM cand c
+            JOIN qn qa ON qa.vec_id = c.query_id
+            JOIN qn qb ON qb.vec_id = c.neighbor_id
+        )
+        SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank,
+               {col}, cosine
+        FROM (
+            SELECT query_id, neighbor_id, {col}, cosine,
+                   ROW_NUMBER() OVER (PARTITION BY query_id
+                                      ORDER BY cosine DESC, neighbor_id)
+                       AS rank
+            FROM scored
+        ) WHERE rank <= {ANN_TOP_K}
+    """
 
 
 def lsh_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -249,8 +302,6 @@ def lsh_ann_topk_oracle() -> str:
 
 
 # --- IVF ANN -----------------------------------------------------------------
-
-_COS = "round({dot} / (sqrt(cast({n2a} as double)) * sqrt(cast({n2b} as double))), 6)"
 
 
 def ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -472,17 +523,13 @@ def hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _quantized(spark, sf_dir).withColumn(
         "w0", F.expr(_ham_word_spark(0))
     ).withColumn("w1", F.expr(_ham_word_spark(1)))
-    queries = emb.filter(F.col("vec_id") < ANN_N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("q").alias("qq"),
-        F.col("n2").alias("qn2"),
-        F.col("w0").alias("qw0"),
-        F.col("w1").alias("qw1"),
-    )
     # stage 1: Hamming pre-rank on the packed words only
     pre = (
         emb.select("vec_id", "w0", "w1")
-        .join(F.broadcast(queries), F.col("vec_id") != F.col("query_id"))
+        .join(
+            F.broadcast(_query_set(emb, "w0", "w1")),
+            F.col("vec_id") != F.col("query_id"),
+        )
         .select(
             "query_id",
             F.col("vec_id").alias("neighbor_id"),
@@ -491,39 +538,8 @@ def hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("hamming"),
         )
     )
-    wpre = Window.partitionBy("query_id").orderBy(
-        F.col("hamming").asc(), F.col("neighbor_id")
-    )
-    cand = (
-        pre.withColumn("hrank", F.row_number().over(wpre))
-        .filter(F.col("hrank") <= HAM_CANDIDATES)
-        .drop("hrank")
-    )
     # stage 2: exact cosine re-rank of the survivors only
-    dot = DOT_SPARK.format(a="qq", b="q")
-    scored = (
-        cand.join(emb.select("vec_id", "q", "n2"),
-                  cand.neighbor_id == F.col("vec_id"))
-        .join(F.broadcast(queries.select("query_id", "qq", "qn2")),
-              "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            "hamming",
-            F.expr(
-                f"round({dot} / (sqrt(cast(qn2 as double))"
-                " * sqrt(cast(n2 as double))), 6)"
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= ANN_TOP_K)
-        .select("query_id", "neighbor_id", "rank", "hamming", "cosine")
-    )
+    return _prerank_rerank(emb, pre, "hamming", HAM_CANDIDATES)
 
 
 def hamming_topk_oracle() -> str:
@@ -542,35 +558,7 @@ def hamming_topk_oracle() -> str:
             FROM sig a, sig b
             WHERE a.vec_id < {ANN_N_QUERIES} AND b.vec_id <> a.vec_id
         ),
-        cand AS (
-            SELECT query_id, neighbor_id, hamming FROM (
-                SELECT query_id, neighbor_id, hamming,
-                       ROW_NUMBER() OVER (PARTITION BY query_id
-                                          ORDER BY hamming, neighbor_id)
-                           AS hrank
-                FROM pre
-            ) WHERE hrank <= {HAM_CANDIDATES}
-        ),
-        scored AS (
-            SELECT c.query_id, c.neighbor_id, c.hamming,
-                   round(list_sum([qa.q[i] * qb.q[i]
-                                   for i in generate_series(1, len(qa.q))])
-                         / (sqrt(qa.n2::DOUBLE) * sqrt(qb.n2::DOUBLE)), 6)
-                       AS cosine
-            FROM cand c
-            JOIN qn qa ON qa.vec_id = c.query_id
-            JOIN qn qb ON qb.vec_id = c.neighbor_id
-        )
-        SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank,
-               hamming, cosine
-        FROM (
-            SELECT query_id, neighbor_id, hamming, cosine,
-                   ROW_NUMBER() OVER (PARTITION BY query_id
-                                      ORDER BY cosine DESC, neighbor_id)
-                       AS rank
-            FROM scored
-        ) WHERE rank <= {ANN_TOP_K}
-    """
+        {_sql_prerank_rerank("hamming", "pre", "hrank", HAM_CANDIDATES)}"""
 
 
 def norm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1152,42 +1140,104 @@ PQ_DSUB = 8   # dims per subspace
 PQ_K = 16
 PQ_CANDIDATES = 8 * ANN_TOP_K
 
+# One ranking pipeline serves every PQ op (pq_adc, ivfpq, the residual
+# variant and the six IVF list stores): driver-side model state
+# (``_pq_model`` / ``_ivfpq_model``), one Arrow ``mapInPandas`` pass that
+# scores each batch and keeps a per-partition candidate set
+# (``_adc_scan``), then the shared pre-rank -> exact re-rank tail
+# (``_prerank_rerank``).  All of it is exact int64 arithmetic on the
+# EMB_QUANT lattice, and every numpy tie rule matches the oracle's
+# row_number order, so Spark and DuckDB agree bit for bit.
 
-def pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Product-quantization ANN with asymmetric distance computation
-    (Jegou, Douze, Schmid 2011): every vector is encoded as PQ_M
-    4-bit-sized codes (8 codes here -- the 256-byte float vector
-    becomes ~8 bytes), each query builds a PQ_M x PQ_K lookup table of
-    exact subspace distances ONCE, and the approximate distance to any
-    vector is just PQ_M table lookups + adds.  The top PQ_CANDIDATES
-    by ADC distance get an exact cosine re-rank.
+_ADC_SCHEMA = "query_id long, neighbor_id long, adc_dist long"
 
-    Scale shape (the paper's, r8 VERDICT #2): the codebook
-    (PQ_M x PQ_K subvectors) and the per-query LUT (queries x PQ_M x
-    PQ_K int64 subspace distances -- model state, never data) are
-    built driver-side from PQ_K + ANN_N_QUERIES collected rows and
-    BROADCAST; one Arrow ``mapInPandas`` pass over the vectors then
-    encodes (vectorized argmin, ties -> smallest code id exactly like
-    the struct-min) and accumulates ADC distances as PQ_M in-register
-    lookups per vector, keeping only each partition's top
-    PQ_CANDIDATES per query under the total order (adc_dist,
-    neighbor_id).  Only partitions x queries x PQ_CANDIDATES rows ever
-    reach the final top-k shuffle -- the former relational probe
-    materialized one row per (query, vector, subspace) through a
-    shuffle (SCALING replica exp 0.52); this pass is
-    data-volume-linear with a tiny constant.  All integer arithmetic
-    on the EMB_QUANT lattice, so Spark and the DuckDB oracle
-    (row_number argmin over the fully relational formulation -- a
-    different algorithm AND a different shape) agree exactly.  At
-    100 TB the scan reads the 8-byte code column, not the vectors;
-    only queries x PQ_CANDIDATES rows ever touch the float path."""
+
+def _batch_vectors(pdf):
+    """(vec_ids, int64 vectors) of a (vec_id, q) Arrow batch."""
+    import numpy as np
+
+    return (
+        pdf["vec_id"].to_numpy(np.int64),
+        np.array(pdf["q"].tolist(), dtype=np.int64),
+    )
+
+
+def _coarse_assign(vecs, cents, cn2):
+    """Each row's nearest centroid by exact integer |v - c|^2, ties to
+    the smallest cent_id.  |v|^2 is constant per row, so argmin(|c|^2 -
+    2 v.c) ranks like |v - c|^2, and np.argmin returns the first
+    minimum -- the oracle's row_number over (distance, cent_id)."""
+    return (cn2[None] - 2 * (vecs @ cents.T)).argmin(-1)
+
+
+def _pq_encode(vecs, cb):
+    """PQ codes (n, PQ_M) of integer rows (n, PQ_M * PQ_DSUB) under the
+    codebook ``cb`` (PQ_M, PQ_K, PQ_DSUB): per subspace the nearest
+    codeword, ties to the smallest code id, by the same argmin(|c|^2 -
+    2 v.c) decomposition as ``_coarse_assign``.  The einsum form avoids
+    the (n, M, K, D) broadcast-difference temporary (21x faster at 16k
+    vectors)."""
+    import numpy as np
+
+    dots = np.einsum(
+        "bmd,mkd->bmk", vecs.reshape(len(vecs), PQ_M, PQ_DSUB), cb
+    )
+    return ((cb * cb).sum(-1)[None] - 2 * dots).argmin(-1)
+
+
+def _adc(lut, codes):
+    """ADC distances (nq, n) from the per-query table ``lut`` (nq, PQ_M,
+    PQ_K): PQ_M lookups and adds per (query, row), no distance math."""
+    import numpy as np
+
+    return lut[:, np.arange(PQ_M), codes].sum(-1)
+
+
+def _adc_scan(batches, qids, score):
+    """The per-partition ADC candidate scan of every PQ op.
+    ``score(batch)`` gives the batch's (vids, adc, keep): its vec_ids,
+    its (nq, n) ADC matrix and which (query, row) pairs may rank
+    (``True`` for all).  A row never ranks against itself.  Each query
+    keeps its top PQ_CANDIDATES under the total order (adc_dist,
+    neighbor_id); pruning per partition is safe because a row below a
+    partition's cutoff is below the global cutoff too, so only
+    partitions x queries x PQ_CANDIDATES rows reach the shuffle."""
     import numpy as np
     import pandas as pd
 
-    emb = _quantized(spark, sf_dir)
+    acc_n = [np.empty(0, np.int64) for _ in qids]
+    acc_d = [np.empty(0, np.int64) for _ in qids]
+    for batch in batches:
+        if not len(batch):
+            continue
+        vids, adc, keep = score(batch)
+        keep = keep & (vids[None, :] != qids[:, None])
+        for qi in range(len(qids)):
+            nn = np.concatenate([acc_n[qi], vids[keep[qi]]])
+            dd = np.concatenate([acc_d[qi], adc[qi][keep[qi]]])
+            if len(nn) > PQ_CANDIDATES:
+                order = np.lexsort((nn, dd))[:PQ_CANDIDATES]
+                nn, dd = nn[order], dd[order]
+            acc_n[qi], acc_d[qi] = nn, dd
+    out = pd.DataFrame(
+        {
+            "query_id": np.repeat(qids, [len(a) for a in acc_n]),
+            "neighbor_id": np.concatenate(acc_n),
+            "adc_dist": np.concatenate(acc_d),
+        }
+    )
+    if len(out):
+        yield out
 
-    # driver-side model state: PQ_K codebook rows + ANN_N_QUERIES query
-    # rows (k x d ints), exactly what an ANALYZE/train step would ship
+
+def _pq_model(emb: DataFrame):
+    """Collect the PQ model: the codebook (PQ_M, PQ_K, PQ_DSUB) from the
+    PQ_K smallest vec_ids, the query set (ids, vectors) and each query's
+    ADC table LUT[q, s, k], the exact int64 squared distance of query
+    subvector s to codeword k.  PQ_K + ANN_N_QUERIES collected rows: a
+    few KB of model state, never data."""
+    import numpy as np
+
     cb_rows = sorted(
         emb.filter(F.col("vec_id") < PQ_K).select("vec_id", "q").collect()
     )
@@ -1196,7 +1246,6 @@ def pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", "q")
         .collect()
     )
-    # (PQ_M, PQ_K, PQ_DSUB): subspace s of codeword k
     cb = (
         np.array([r.q for r in cb_rows], dtype=np.int64)
         .reshape(PQ_K, PQ_M, PQ_DSUB)
@@ -1204,117 +1253,28 @@ def pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .copy()
     )
     qids = np.array([r.vec_id for r in q_rows], dtype=np.int64)
-    qsub = np.array([r.q for r in q_rows], dtype=np.int64).reshape(
-        len(qids), PQ_M, PQ_DSUB
-    )
-    # LUT[q, s, k] = exact int64 squared distance query-subvector ->
-    # codeword: the table the ADC probe looks up instead of computing
+    qvecs = np.array([r.q for r in q_rows], dtype=np.int64)
+    qsub = qvecs.reshape(len(qids), PQ_M, PQ_DSUB)
     lut = ((qsub[:, :, None, :] - cb[None]) ** 2).sum(-1)
-    bc = spark.sparkContext.broadcast((qids, lut, cb))
-
-    def _probe(batches):
-        b_qids, b_lut, b_cb = bc.value
-        nq = len(b_qids)
-        s_idx = np.arange(PQ_M)[None, :]
-        # |c|^2 per (subspace, codeword): with the argmin decomposition
-        # |v-c|^2 = |v|^2 - 2 v.c + |c|^2, the per-row constant |v|^2
-        # drops out, so argmin(|c|^2 - 2 v.c) == argmin(|v-c|^2) with
-        # IDENTICAL ties -- and the einsum form avoids the (batch, M,
-        # K, D) broadcast-difference temporary (measured 21x faster at
-        # 16k vectors)
-        cb_norm = (b_cb * b_cb).sum(-1)  # (PQ_M, PQ_K)
-        acc_n = [np.empty(0, np.int64) for _ in range(nq)]
-        acc_d = [np.empty(0, np.int64) for _ in range(nq)]
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            vids = pdf["vec_id"].to_numpy(np.int64)
-            sub = np.array(pdf["q"].tolist(), dtype=np.int64).reshape(
-                len(vids), PQ_M, PQ_DSUB
-            )
-            # encode: argmin over PQ_K per subspace; np.argmin returns
-            # the FIRST minimum -> smallest code_id, matching the
-            # oracle's (dist, code_id) row_number tie-break.  Exact
-            # int64 arithmetic throughout.
-            dots = np.einsum("bmd,mkd->bmk", sub, b_cb)
-            codes = (cb_norm[None] - 2 * dots).argmin(-1)
-            # ADC: PQ_M lookups + adds per (query, vector), in-register
-            adc = b_lut[:, s_idx, codes].sum(-1)  # (nq, batch)
-            for qi in range(nq):
-                keep = vids != b_qids[qi]
-                nn = np.concatenate([acc_n[qi], vids[keep]])
-                dd = np.concatenate([acc_d[qi], adc[qi][keep]])
-                if len(nn) > PQ_CANDIDATES:
-                    # partial top-k under the TOTAL order (adc_dist,
-                    # neighbor_id): safe to prune per partition because
-                    # a row below the partition cutoff is below the
-                    # global cutoff too
-                    order = np.lexsort((nn, dd))[:PQ_CANDIDATES]
-                    nn, dd = nn[order], dd[order]
-                acc_n[qi], acc_d[qi] = nn, dd
-        out = pd.DataFrame(
-            {
-                "query_id": np.repeat(b_qids, [len(a) for a in acc_n]),
-                "neighbor_id": np.concatenate(acc_n),
-                "adc_dist": np.concatenate(acc_d),
-            }
-        )
-        if len(out):
-            yield out
-
-    adc = emb.select("vec_id", "q").mapInPandas(
-        _probe, "query_id long, neighbor_id long, adc_dist long"
-    )
-    wpre = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist").asc(), F.col("neighbor_id")
-    )
-    cand = (
-        adc.withColumn("arank", F.row_number().over(wpre))
-        .filter(F.col("arank") <= PQ_CANDIDATES)
-        .drop("arank")
-    )
-    dot = DOT_SPARK.format(a="qq", b="q")
-    queries = emb.filter(F.col("vec_id") < ANN_N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("q").alias("qq"),
-        F.col("n2").alias("qn2"),
-    )
-    scored = (
-        cand.join(emb.select("vec_id", "q", "n2"),
-                  cand.neighbor_id == F.col("vec_id"))
-        .join(F.broadcast(queries), "query_id")
-        .select(
-            "query_id", "neighbor_id", "adc_dist",
-            F.expr(
-                f"round({dot} / (sqrt(cast(qn2 as double))"
-                " * sqrt(cast(n2 as double))), 6)"
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= ANN_TOP_K)
-        .select("query_id", "neighbor_id", "rank", "adc_dist", "cosine")
-    )
+    return qids, qvecs, lut, cb
 
 
-def pq_adc_topk_oracle() -> str:
-    subdist = (
-        f"list_sum([(a.vsub[i] - cb.csub[i]) * (a.vsub[i] - cb.csub[i])"
-        f" for i in generate_series(1, {PQ_DSUB})])"
-    )
-    return f"""
-        WITH {_SQL_QUANT},
-        subs AS (SELECT unnest(range({PQ_M})) AS s),
+_SQL_PQ_CODEBOOK = f"""subs AS (SELECT unnest(range({PQ_M})) AS s),
         codebook AS (
             SELECT subs.s, c.vec_id AS code_id,
                    list_slice(c.q, subs.s * {PQ_DSUB} + 1,
                               subs.s * {PQ_DSUB} + {PQ_DSUB}) AS csub
             FROM qn c, subs WHERE c.vec_id < {PQ_K}
-        ),
+        )"""
+
+_SQL_SUBDIST = (
+    "list_sum([(a.vsub[i] - cb.csub[i]) * (a.vsub[i] - cb.csub[i])"
+    f" for i in generate_series(1, {PQ_DSUB})])"
+)
+
+# codebook -> per-subspace encode -> query LUT, shared by the
+# non-residual oracles
+_SQL_PQ_LUT = f"""{_SQL_PQ_CODEBOOK},
         vsubs AS (
             SELECT v.vec_id, subs.s,
                    list_slice(v.q, subs.s * {PQ_DSUB} + 1,
@@ -1326,16 +1286,78 @@ def pq_adc_topk_oracle() -> str:
                 SELECT a.vec_id, a.s, cb.code_id,
                        ROW_NUMBER() OVER (
                            PARTITION BY a.vec_id, a.s
-                           ORDER BY {subdist}, cb.code_id) AS rn
+                           ORDER BY {_SQL_SUBDIST}, cb.code_id) AS rn
                 FROM vsubs a JOIN codebook cb ON cb.s = a.s
             ) WHERE rn = 1
         ),
         lut AS (
             SELECT a.vec_id AS query_id, a.s, cb.code_id,
-                   {subdist} AS qdist
+                   {_SQL_SUBDIST} AS qdist
             FROM vsubs a JOIN codebook cb ON cb.s = a.s
             WHERE a.vec_id < {ANN_N_QUERIES}
+        )"""
+
+_SQL_L2 = (
+    "list_sum([(a.q[i] - c.q[i]) * (a.q[i] - c.q[i])"
+    " for i in generate_series(1, len(a.q))])"
+)
+
+# coarse ranking over a ``cents`` CTE: assignment and probe lists
+_SQL_IVF_PROBES = f"""cdist AS (
+            SELECT a.vec_id, c.cent_id,
+                   ROW_NUMBER() OVER (PARTITION BY a.vec_id
+                                      ORDER BY {_SQL_L2}, c.cent_id) AS crank
+            FROM qn a JOIN cents c ON true
         ),
+        assign AS (SELECT vec_id, cent_id FROM cdist WHERE crank = 1),
+        probes AS (
+            SELECT vec_id AS query_id, cent_id FROM cdist
+            WHERE vec_id < {ANN_N_QUERIES} AND crank <= {IVF_NPROBE}
+        )"""
+
+_SQL_ADC_RERANK = _sql_prerank_rerank("adc_dist", "adc", "arank", PQ_CANDIDATES)
+
+
+def pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Product-quantization ANN with asymmetric distance computation
+    (Jegou, Douze, Schmid 2011): every vector is encoded as PQ_M
+    4-bit-sized codes (8 codes here -- the 256-byte float vector
+    becomes ~8 bytes), each query builds a PQ_M x PQ_K lookup table of
+    exact subspace distances ONCE, and the approximate distance to any
+    vector is just PQ_M table lookups + adds.  The top PQ_CANDIDATES
+    by ADC distance get an exact cosine re-rank.
+
+    Scale shape (the paper's): the codebook and the per-query LUT are
+    model state built driver-side and BROADCAST; one Arrow
+    ``mapInPandas`` pass over the vectors encodes and scores them and
+    keeps each partition's top PQ_CANDIDATES per query, so the pass is
+    data-volume-linear with a tiny constant (the former relational probe
+    shuffled one row per (query, vector, subspace)).  The DuckDB oracle
+    is the fully relational formulation -- a different algorithm AND a
+    different shape -- and agrees exactly.  At 100 TB the scan reads
+    the 8-byte code column, not the vectors; only queries x
+    PQ_CANDIDATES rows ever touch the float path."""
+    emb = _quantized(spark, sf_dir)
+    qids, _, lut, cb = _pq_model(emb)
+    bc = spark.sparkContext.broadcast((qids, lut, cb))
+
+    def _probe(batches):
+        b_qids, b_lut, b_cb = bc.value
+
+        def score(pdf):
+            vids, vecs = _batch_vectors(pdf)
+            return vids, _adc(b_lut, _pq_encode(vecs, b_cb)), True
+
+        return _adc_scan(batches, b_qids, score)
+
+    adc = emb.select("vec_id", "q").mapInPandas(_probe, _ADC_SCHEMA)
+    return _prerank_rerank(emb, adc, "adc_dist", PQ_CANDIDATES)
+
+
+def pq_adc_topk_oracle() -> str:
+    return f"""
+        WITH {_SQL_QUANT},
+        {_SQL_PQ_LUT},
         adc AS (
             SELECT l.query_id, e.vec_id AS neighbor_id,
                    CAST(sum(l.qdist) AS BIGINT) AS adc_dist
@@ -1343,46 +1365,16 @@ def pq_adc_topk_oracle() -> str:
             WHERE e.vec_id <> l.query_id
             GROUP BY l.query_id, e.vec_id
         ),
-        cand AS (
-            SELECT query_id, neighbor_id, adc_dist FROM (
-                SELECT query_id, neighbor_id, adc_dist,
-                       ROW_NUMBER() OVER (PARTITION BY query_id
-                                          ORDER BY adc_dist, neighbor_id)
-                           AS arank
-                FROM adc
-            ) WHERE arank <= {PQ_CANDIDATES}
-        ),
-        scored AS (
-            SELECT c.query_id, c.neighbor_id, c.adc_dist,
-                   round(list_sum([qa.q[i] * qb.q[i]
-                                   for i in generate_series(1, len(qa.q))])
-                         / (sqrt(qa.n2::DOUBLE) * sqrt(qb.n2::DOUBLE)), 6)
-                       AS cosine
-            FROM cand c
-            JOIN qn qa ON qa.vec_id = c.query_id
-            JOIN qn qb ON qb.vec_id = c.neighbor_id
-        )
-        SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank,
-               adc_dist, cosine
-        FROM (
-            SELECT query_id, neighbor_id, adc_dist, cosine,
-                   ROW_NUMBER() OVER (PARTITION BY query_id
-                                      ORDER BY cosine DESC, neighbor_id)
-                       AS rank
-            FROM scored
-        ) WHERE rank <= {ANN_TOP_K}
-    """
+        {_SQL_ADC_RERANK}"""
 
 
 def _ivfpq_model(emb: DataFrame, cent_lo: int = 0):
-    """Collect the IVF-PQ model state: 32 centroids, the 16-row PQ
-    codebook, the query set, each query's ADC LUT and probe mask.  All
-    of it is a few KB of driver-held integers (k x d MODEL state,
-    never data -- the established collect() discipline).  Probe lists
-    are the IVF_NPROBE nearest centroids per query by exact integer
-    |q-c|^2 (the |q|^2 constant drops for ranking), ties -> smallest
-    cent_id: lexsort, like the oracle's row_number over (d2,
-    cent_id).
+    """The IVF-PQ model state: ``_pq_model``'s query set, LUT and
+    codebook, plus IVF_N_CENTROIDS centroids (cents, |c|^2) and each
+    query's probe mask: its IVF_NPROBE nearest centroids by exact
+    integer |q-c|^2 (the |q|^2 constant drops for ranking), ties to the
+    smallest cent_id -- a stable sort, like the oracle's row_number over
+    (d2, cent_id).
 
     ``cent_lo`` picks the centroid id range [cent_lo, cent_lo +
     IVF_N_CENTROIDS) -- the data-defined analog of RETRAINING the
@@ -1391,6 +1383,7 @@ def _ivfpq_model(emb: DataFrame, cent_lo: int = 0):
     the old assignment)."""
     import numpy as np
 
+    qids, qvecs, lut, cb = _pq_model(emb)
     cent_rows = sorted(
         emb.filter(
             (F.col("vec_id") >= cent_lo)
@@ -1399,33 +1392,13 @@ def _ivfpq_model(emb: DataFrame, cent_lo: int = 0):
         .select("vec_id", "q")
         .collect()
     )
-    cb_rows = sorted(
-        emb.filter(F.col("vec_id") < PQ_K).select("vec_id", "q").collect()
-    )
-    q_rows = sorted(
-        emb.filter(F.col("vec_id") < ANN_N_QUERIES)
-        .select("vec_id", "q")
-        .collect()
-    )
     cents = np.array([r.q for r in cent_rows], dtype=np.int64)
     cn2 = (cents * cents).sum(-1)
-    cb = (
-        np.array([r.q for r in cb_rows], dtype=np.int64)
-        .reshape(PQ_K, PQ_M, PQ_DSUB)
-        .transpose(1, 0, 2)
-        .copy()
-    )
-    qids = np.array([r.vec_id for r in q_rows], dtype=np.int64)
-    qvecs = np.array([r.q for r in q_rows], dtype=np.int64)
-    qsub = qvecs.reshape(len(qids), PQ_M, PQ_DSUB)
-    lut = ((qsub[:, :, None, :] - cb[None]) ** 2).sum(-1)
-    qdist = cn2[None, :] - 2 * (qvecs @ cents.T)
+    nearest = np.argsort(
+        cn2[None, :] - 2 * (qvecs @ cents.T), axis=1, kind="stable"
+    )[:, :IVF_NPROBE]
     probe_mask = np.zeros((len(qids), IVF_N_CENTROIDS), dtype=bool)
-    for qi in range(len(qids)):
-        order = np.lexsort(
-            (np.arange(IVF_N_CENTROIDS), qdist[qi])
-        )[:IVF_NPROBE]
-        probe_mask[qi, order] = True
+    np.put_along_axis(probe_mask, nearest, True, axis=1)
     return qids, qvecs, lut, cb, cents, cn2, probe_mask
 
 
@@ -1450,17 +1423,11 @@ def ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: ALL model state -- 32 centroids, the PQ codebook, the
     query set, and each query's probe list -- is a broadcast of a few
     KB.  One Arrow ``mapInPandas`` pass assigns, encodes, masks by
-    probe-list membership, and keeps a per-partition top
-    ``PQ_CANDIDATES`` per query under the total order (adc_dist,
-    neighbor_id); at 100 TB the lists are written
-    partitioned-by-cent_id so non-probed lists are never read at all
-    (partition pruning does the mask's job) -- ``ivfpq_pruned_topk``
-    DEMONSTRATES that layout with scan-level evidence (r9 VERDICT #2).
-    Only partitions x queries x PQ_CANDIDATES rows reach the one
-    shuffle."""
-    import numpy as np
-    import pandas as pd
-
+    probe-list membership and keeps the per-partition candidates; at
+    100 TB the lists are written partitioned-by-cent_id so non-probed
+    lists are never read at all (partition pruning does the mask's
+    job) -- ``ivfpq_pruned_topk`` shows that layout with scan-level
+    evidence."""
     emb = _quantized(spark, sf_dir)
     qids, _, lut, cb, cents, cn2, probe_mask = _ivfpq_model(emb)
     bc = spark.sparkContext.broadcast(
@@ -1469,86 +1436,16 @@ def ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def _probe(batches):
         b_qids, b_lut, b_cb, b_cents, b_cn2, b_mask = bc.value
-        nq = len(b_qids)
-        s_idx = np.arange(PQ_M)[None, :]
-        cb_norm = (b_cb * b_cb).sum(-1)
-        acc_n = [np.empty(0, np.int64) for _ in range(nq)]
-        acc_d = [np.empty(0, np.int64) for _ in range(nq)]
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            vids = pdf["vec_id"].to_numpy(np.int64)
-            vecs = np.array(pdf["q"].tolist(), dtype=np.int64)
-            # coarse assignment: argmin |v-c|^2 == argmin(|c|^2 - 2v.c);
-            # np.argmin first-min -> smallest cent_id on ties
-            assign = (b_cn2[None] - 2 * (vecs @ b_cents.T)).argmin(-1)
-            sub = vecs.reshape(len(vids), PQ_M, PQ_DSUB)
-            dots = np.einsum("bmd,mkd->bmk", sub, b_cb)
-            codes = (cb_norm[None] - 2 * dots).argmin(-1)
-            adc = b_lut[:, s_idx, codes].sum(-1)  # (nq, batch)
-            for qi in range(nq):
-                keep = (vids != b_qids[qi]) & b_mask[qi][assign]
-                nn = np.concatenate([acc_n[qi], vids[keep]])
-                dd = np.concatenate([acc_d[qi], adc[qi][keep]])
-                if len(nn) > PQ_CANDIDATES:
-                    order = np.lexsort((nn, dd))[:PQ_CANDIDATES]
-                    nn, dd = nn[order], dd[order]
-                acc_n[qi], acc_d[qi] = nn, dd
-        out = pd.DataFrame(
-            {
-                "query_id": np.repeat(b_qids, [len(a) for a in acc_n]),
-                "neighbor_id": np.concatenate(acc_n),
-                "adc_dist": np.concatenate(acc_d),
-            }
-        )
-        if len(out):
-            yield out
 
-    adc = emb.select("vec_id", "q").mapInPandas(
-        _probe, "query_id long, neighbor_id long, adc_dist long"
-    )
-    return _ivfpq_rerank(emb, adc)
+        def score(pdf):
+            vids, vecs = _batch_vectors(pdf)
+            assign = _coarse_assign(vecs, b_cents, b_cn2)
+            return vids, _adc(b_lut, _pq_encode(vecs, b_cb)), b_mask[:, assign]
 
+        return _adc_scan(batches, b_qids, score)
 
-def _ivfpq_rerank(emb: DataFrame, adc: DataFrame) -> DataFrame:
-    """Shared IVF-PQ tail: global top-PQ_CANDIDATES per query under the
-    total order (adc_dist, neighbor_id), then the exact cosine re-rank
-    of just those survivors (neighbor vectors fetched by id, query
-    vectors broadcast)."""
-    wpre = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist").asc(), F.col("neighbor_id")
-    )
-    cand = (
-        adc.withColumn("arank", F.row_number().over(wpre))
-        .filter(F.col("arank") <= PQ_CANDIDATES)
-        .drop("arank")
-    )
-    dot = DOT_SPARK.format(a="qq", b="q")
-    queries = emb.filter(F.col("vec_id") < ANN_N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("q").alias("qq"),
-        F.col("n2").alias("qn2"),
-    )
-    scored = (
-        cand.join(emb.select("vec_id", "q", "n2"),
-                  cand.neighbor_id == F.col("vec_id"))
-        .join(F.broadcast(queries), "query_id")
-        .select(
-            "query_id", "neighbor_id", "adc_dist",
-            F.expr(
-                f"round({dot} / (sqrt(cast(qn2 as double))"
-                " * sqrt(cast(n2 as double))), 6)"
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= ANN_TOP_K)
-        .select("query_id", "neighbor_id", "rank", "adc_dist", "cosine")
-    )
+    adc = emb.select("vec_id", "q").mapInPandas(_probe, _ADC_SCHEMA)
+    return _prerank_rerank(emb, adc, "adc_dist", PQ_CANDIDATES)
 
 
 def ivfpq_topk_oracle(
@@ -1567,14 +1464,6 @@ def ivfpq_topk_oracle(
         if exclude_lo is not None
         else ""
     )
-    l2 = (
-        "list_sum([(a.q[i] - c.q[i]) * (a.q[i] - c.q[i])"
-        " for i in generate_series(1, len(a.q))])"
-    )
-    subdist = (
-        f"list_sum([(a.vsub[i] - cb.csub[i]) * (a.vsub[i] - cb.csub[i])"
-        f" for i in generate_series(1, {PQ_DSUB})])"
-    )
     return f"""
         WITH {_SQL_QUANT},
         cents AS (
@@ -1582,45 +1471,8 @@ def ivfpq_topk_oracle(
             WHERE vec_id >= {cent_lo}
               AND vec_id < {cent_lo + IVF_N_CENTROIDS}
         ),
-        cdist AS (
-            SELECT a.vec_id, c.cent_id,
-                   ROW_NUMBER() OVER (PARTITION BY a.vec_id
-                                      ORDER BY {l2}, c.cent_id) AS crank
-            FROM qn a JOIN cents c ON true
-        ),
-        assign AS (SELECT vec_id, cent_id FROM cdist WHERE crank = 1),
-        probes AS (
-            SELECT vec_id AS query_id, cent_id FROM cdist
-            WHERE vec_id < {ANN_N_QUERIES} AND crank <= {IVF_NPROBE}
-        ),
-        subs AS (SELECT unnest(range({PQ_M})) AS s),
-        codebook AS (
-            SELECT subs.s, c.vec_id AS code_id,
-                   list_slice(c.q, subs.s * {PQ_DSUB} + 1,
-                              subs.s * {PQ_DSUB} + {PQ_DSUB}) AS csub
-            FROM qn c, subs WHERE c.vec_id < {PQ_K}
-        ),
-        vsubs AS (
-            SELECT v.vec_id, subs.s,
-                   list_slice(v.q, subs.s * {PQ_DSUB} + 1,
-                              subs.s * {PQ_DSUB} + {PQ_DSUB}) AS vsub
-            FROM qn v, subs
-        ),
-        enc AS (
-            SELECT vec_id, s, code_id FROM (
-                SELECT a.vec_id, a.s, cb.code_id,
-                       ROW_NUMBER() OVER (
-                           PARTITION BY a.vec_id, a.s
-                           ORDER BY {subdist}, cb.code_id) AS rn
-                FROM vsubs a JOIN codebook cb ON cb.s = a.s
-            ) WHERE rn = 1
-        ),
-        lut AS (
-            SELECT a.vec_id AS query_id, a.s, cb.code_id,
-                   {subdist} AS qdist
-            FROM vsubs a JOIN codebook cb ON cb.s = a.s
-            WHERE a.vec_id < {ANN_N_QUERIES}
-        ),
+        {_SQL_IVF_PROBES},
+        {_SQL_PQ_LUT},
         adc AS (
             SELECT l.query_id, e.vec_id AS neighbor_id,
                    CAST(sum(l.qdist) AS BIGINT) AS adc_dist
@@ -1632,58 +1484,25 @@ def ivfpq_topk_oracle(
             WHERE e.vec_id <> l.query_id{excl}
             GROUP BY l.query_id, e.vec_id
         ),
-        cand AS (
-            SELECT query_id, neighbor_id, adc_dist FROM (
-                SELECT query_id, neighbor_id, adc_dist,
-                       ROW_NUMBER() OVER (PARTITION BY query_id
-                                          ORDER BY adc_dist, neighbor_id)
-                           AS arank
-                FROM adc
-            ) WHERE arank <= {PQ_CANDIDATES}
-        ),
-        scored AS (
-            SELECT c.query_id, c.neighbor_id, c.adc_dist,
-                   round(list_sum([qa.q[i] * qb.q[i]
-                                   for i in generate_series(1, len(qa.q))])
-                         / (sqrt(qa.n2::DOUBLE) * sqrt(qb.n2::DOUBLE)), 6)
-                       AS cosine
-            FROM cand c
-            JOIN qn qa ON qa.vec_id = c.query_id
-            JOIN qn qb ON qb.vec_id = c.neighbor_id
-        )
-        SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank,
-               adc_dist, cosine
-        FROM (
-            SELECT query_id, neighbor_id, adc_dist, cosine,
-                   ROW_NUMBER() OVER (PARTITION BY query_id
-                                      ORDER BY cosine DESC, neighbor_id)
-                       AS rank
-            FROM scored
-        ) WHERE rank <= {ANN_TOP_K}
-    """
+        {_SQL_ADC_RERANK}"""
 
 
 def _ivfpq_encode_fn(spark, cb, cents, cn2):
     """mapInPandas closure: coarse-assign + PQ-encode a (vec_id, q)
     batch under the broadcast (codebook, centroids, |c|^2) model --
     shared by every IVF list-store build and append."""
-    import numpy as np
     import pandas as pd
 
     bc_enc = spark.sparkContext.broadcast((cb, cents, cn2))
 
     def _encode(batches):
         b_cb, b_cents, b_cn2 = bc_enc.value
-        cb_norm = (b_cb * b_cb).sum(-1)
         for pdf in batches:
             if not len(pdf):
                 continue
-            vids = pdf["vec_id"].to_numpy(np.int64)
-            vecs = np.array(pdf["q"].tolist(), dtype=np.int64)
-            assign = (b_cn2[None] - 2 * (vecs @ b_cents.T)).argmin(-1)
-            sub = vecs.reshape(len(vids), PQ_M, PQ_DSUB)
-            dots = np.einsum("bmd,mkd->bmk", sub, b_cb)
-            codes = (cb_norm[None] - 2 * dots).argmin(-1)
+            vids, vecs = _batch_vectors(pdf)
+            assign = _coarse_assign(vecs, b_cents, b_cn2)
+            codes = _pq_encode(vecs, b_cb)
             yield pd.DataFrame(
                 {
                     "vec_id": vids,
@@ -1693,47 +1512,6 @@ def _ivfpq_encode_fn(spark, cb, cents, cn2):
             )
 
     return _encode
-
-
-def _ivfpq_adc_fn(bc):
-    """mapInPandas closure factory: per-partition ADC scan over stored
-    (vec_id, cent_id, codes) lists under the broadcast (query ids, LUT,
-    probe mask) -- the scan of ``_ivf_probe``."""
-    import numpy as np
-    import pandas as pd
-
-    def _adc(batches):
-        b_qids, b_lut, b_mask = bc.value
-        nq = len(b_qids)
-        s_idx = np.arange(PQ_M)[None, :]
-        acc_n = [np.empty(0, np.int64) for _ in range(nq)]
-        acc_d = [np.empty(0, np.int64) for _ in range(nq)]
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            vids = pdf["vec_id"].to_numpy(np.int64)
-            cent = pdf["cent_id"].to_numpy(np.int64)
-            codes = np.array(pdf["codes"].tolist(), dtype=np.int64)
-            adc = b_lut[:, s_idx, codes].sum(-1)
-            for qi in range(nq):
-                keep = (vids != b_qids[qi]) & b_mask[qi][cent]
-                nn = np.concatenate([acc_n[qi], vids[keep]])
-                dd = np.concatenate([acc_d[qi], adc[qi][keep]])
-                if len(nn) > PQ_CANDIDATES:
-                    order = np.lexsort((nn, dd))[:PQ_CANDIDATES]
-                    nn, dd = nn[order], dd[order]
-                acc_n[qi], acc_d[qi] = nn, dd
-        out = pd.DataFrame(
-            {
-                "query_id": np.repeat(b_qids, [len(a) for a in acc_n]),
-                "neighbor_id": np.concatenate(acc_n),
-                "adc_dist": np.concatenate(acc_d),
-            }
-        )
-        if len(out):
-            yield out
-
-    return _adc
 
 
 # --- IVF list stores -----------------------------------------------------------
@@ -1801,10 +1579,23 @@ def _ivf_probe(
     )
     lists = read_partitions(spark, sf_dir, idx_path, "cent_id", on_disk)
     bc = spark.sparkContext.broadcast((qids, lut, probe_mask))
-    adc = lists.mapInPandas(
-        _ivfpq_adc_fn(bc), "query_id long, neighbor_id long, adc_dist long"
-    )
-    return _ivfpq_rerank(emb, adc), stats
+
+    def _scan(batches):
+        b_qids, b_lut, b_mask = bc.value
+
+        def score(pdf):
+            codes = np.array(pdf["codes"].tolist(), dtype=np.int64)
+            cent = pdf["cent_id"].to_numpy(np.int64)
+            return (
+                pdf["vec_id"].to_numpy(np.int64),
+                _adc(b_lut, codes),
+                b_mask[:, cent],
+            )
+
+        return _adc_scan(batches, b_qids, score)
+
+    adc = lists.mapInPandas(_scan, _ADC_SCHEMA)
+    return _prerank_rerank(emb, adc, "adc_dist", PQ_CANDIDATES), stats
 
 
 def ivfpq_pruned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1825,7 +1616,7 @@ def ivfpq_pruned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
        full corpus and discards non-probed rows in the executor.
        The per-query mask still applies inside the survivors.
     3. ADC + exact re-rank: identical to ``ivfpq_topk`` (shared
-       ``_ivfpq_rerank``), so both variants -- and the relational
+       ``_prerank_rerank``), so both variants -- and the relational
        DuckDB oracle -- must agree bit-exactly.
 
     Scale shape: probe IO is files(probed lists), not files(corpus) --
@@ -1887,7 +1678,6 @@ def ivfpq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``ivfpq_pruned_topk`` partition layout unchanged (codes differ,
     physics doesn't)."""
     import numpy as np
-    import pandas as pd
 
     emb = _quantized(spark, sf_dir)
     qids, qvecs, _, cb, cents, cn2, probe_mask = _ivfpq_model(emb)
@@ -1903,51 +1693,22 @@ def ivfpq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def _probe(batches):
         b_qids, b_lut, b_cb, b_cents, b_cn2, b_mask = bc.value
-        nq = len(b_qids)
-        s_idx = np.arange(PQ_M)[None, :]
-        cb_norm = (b_cb * b_cb).sum(-1)
-        acc_n = [np.empty(0, np.int64) for _ in range(nq)]
-        acc_d = [np.empty(0, np.int64) for _ in range(nq)]
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            vids = pdf["vec_id"].to_numpy(np.int64)
-            vecs = np.array(pdf["q"].tolist(), dtype=np.int64)
-            assign = (b_cn2[None] - 2 * (vecs @ b_cents.T)).argmin(-1)
-            res = vecs - b_cents[assign]  # the residual, exact ints
-            rsub = res.reshape(len(vids), PQ_M, PQ_DSUB)
-            dots = np.einsum("bmd,mkd->bmk", rsub, b_cb)
-            codes = (cb_norm[None] - 2 * dots).argmin(-1)
-            for qi in range(nq):
-                keep = (vids != b_qids[qi]) & b_mask[qi][assign]
-                adc = b_lut[qi, assign[:, None], s_idx, codes].sum(-1)
-                nn = np.concatenate([acc_n[qi], vids[keep]])
-                dd = np.concatenate([acc_d[qi], adc[keep]])
-                if len(nn) > PQ_CANDIDATES:
-                    order = np.lexsort((nn, dd))[:PQ_CANDIDATES]
-                    nn, dd = nn[order], dd[order]
-                acc_n[qi], acc_d[qi] = nn, dd
-        out = pd.DataFrame(
-            {
-                "query_id": np.repeat(b_qids, [len(a) for a in acc_n]),
-                "neighbor_id": np.concatenate(acc_n),
-                "adc_dist": np.concatenate(acc_d),
-            }
-        )
-        if len(out):
-            yield out
 
-    adc = emb.select("vec_id", "q").mapInPandas(
-        _probe, "query_id long, neighbor_id long, adc_dist long"
-    )
-    return _ivfpq_rerank(emb, adc)
+        def score(pdf):
+            vids, vecs = _batch_vectors(pdf)
+            assign = _coarse_assign(vecs, b_cents, b_cn2)
+            codes = _pq_encode(vecs - b_cents[assign], b_cb)
+            # each row looks up the LUT of its own list
+            adc = b_lut[:, assign[:, None], np.arange(PQ_M), codes].sum(-1)
+            return vids, adc, b_mask[:, assign]
+
+        return _adc_scan(batches, b_qids, score)
+
+    adc = emb.select("vec_id", "q").mapInPandas(_probe, _ADC_SCHEMA)
+    return _prerank_rerank(emb, adc, "adc_dist", PQ_CANDIDATES)
 
 
 def ivfpq_residual_topk_oracle() -> str:
-    l2 = (
-        "list_sum([(a.q[i] - c.q[i]) * (a.q[i] - c.q[i])"
-        " for i in generate_series(1, len(a.q))])"
-    )
     subdist = (
         "list_sum([(r.rsub[i] - cb.csub[i]) * (r.rsub[i] - cb.csub[i])"
         f" for i in generate_series(1, {PQ_DSUB})])"
@@ -1962,24 +1723,8 @@ def ivfpq_residual_topk_oracle() -> str:
             SELECT vec_id AS cent_id, q FROM qn
             WHERE vec_id < {IVF_N_CENTROIDS}
         ),
-        cdist AS (
-            SELECT a.vec_id, c.cent_id,
-                   ROW_NUMBER() OVER (PARTITION BY a.vec_id
-                                      ORDER BY {l2}, c.cent_id) AS crank
-            FROM qn a JOIN cents c ON true
-        ),
-        assign AS (SELECT vec_id, cent_id FROM cdist WHERE crank = 1),
-        probes AS (
-            SELECT vec_id AS query_id, cent_id FROM cdist
-            WHERE vec_id < {ANN_N_QUERIES} AND crank <= {IVF_NPROBE}
-        ),
-        subs AS (SELECT unnest(range({PQ_M})) AS s),
-        codebook AS (
-            SELECT subs.s, c.vec_id AS code_id,
-                   list_slice(c.q, subs.s * {PQ_DSUB} + 1,
-                              subs.s * {PQ_DSUB} + {PQ_DSUB}) AS csub
-            FROM qn c, subs WHERE c.vec_id < {PQ_K}
-        ),
+        {_SQL_IVF_PROBES},
+        {_SQL_PQ_CODEBOOK},
         res AS (
             SELECT v.vec_id,
                    [v.q[i] - c.q[i]
@@ -2034,35 +1779,7 @@ def ivfpq_residual_topk_oracle() -> str:
             WHERE e.vec_id <> l.query_id
             GROUP BY l.query_id, e.vec_id
         ),
-        cand AS (
-            SELECT query_id, neighbor_id, adc_dist FROM (
-                SELECT query_id, neighbor_id, adc_dist,
-                       ROW_NUMBER() OVER (PARTITION BY query_id
-                                          ORDER BY adc_dist, neighbor_id)
-                           AS arank
-                FROM adc
-            ) WHERE arank <= {PQ_CANDIDATES}
-        ),
-        scored AS (
-            SELECT c.query_id, c.neighbor_id, c.adc_dist,
-                   round(list_sum([qa.q[i] * qb.q[i]
-                                   for i in generate_series(1, len(qa.q))])
-                         / (sqrt(qa.n2::DOUBLE) * sqrt(qb.n2::DOUBLE)), 6)
-                       AS cosine
-            FROM cand c
-            JOIN qn qa ON qa.vec_id = c.query_id
-            JOIN qn qb ON qb.vec_id = c.neighbor_id
-        )
-        SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank,
-               adc_dist, cosine
-        FROM (
-            SELECT query_id, neighbor_id, adc_dist, cosine,
-                   ROW_NUMBER() OVER (PARTITION BY query_id
-                                      ORDER BY cosine DESC, neighbor_id)
-                       AS rank
-            FROM scored
-        ) WHERE rank <= {ANN_TOP_K}
-    """
+        {_SQL_ADC_RERANK}"""
 
 
 # --- PQ codebook TRAINING (per-subspace k-means) --------------------------------
@@ -2315,20 +2032,15 @@ def range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identical across engines.
     """
     emb = _quantized(spark, sf_dir)
-    queries = emb.filter(F.col("vec_id") < ANN_N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("q").alias("qq"),
-        F.col("n2").alias("qn2"),
-    )
     dot = DOT_SPARK.format(a="qq", b="q")
     scored = (
-        emb.join(F.broadcast(queries), F.col("vec_id") != F.col("query_id"))
+        emb.join(
+            F.broadcast(_query_set(emb)), F.col("vec_id") != F.col("query_id")
+        )
         .select(
             "query_id",
             F.col("vec_id").alias("neighbor_id"),
-            F.expr(
-                f"round({dot} / (sqrt(cast(qn2 as double)) * sqrt(cast(n2 as double))), 6)"
-            ).alias("cosine"),
+            F.expr(_COS.format(dot=dot, n2a="qn2", n2b="n2")).alias("cosine"),
         )
         .filter(F.col("cosine") >= RANGE_TAU)
     )
@@ -2338,9 +2050,9 @@ def range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_in_range", F.count("*").over(w).cast("int")
         )
         .select("query_id", "neighbor_id", "cosine", "n_in_range")
-        # count()-elimination guard (r14 sweep): windows never change
-        # cardinality, so a bare count() would drop the per-query
-        # count; every surviving row's partition contains itself
+        # count()-elimination guard: windows never change cardinality,
+        # so a bare count() would drop the per-query count; every
+        # surviving row's partition contains itself
         .filter(F.col("n_in_range") >= 1)
     )
 
@@ -2986,38 +2698,16 @@ def matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     bytes) -- this op is the acceptance gate that says which d is safe.
     """
     emb = _quantized(spark, sf_dir)
-    queries = emb.filter(F.col("vec_id") < ANN_N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("q").alias("qq"),
-        F.col("n2").alias("qn2"),
-    )
-    dot_full = DOT_SPARK.format(a="qq", b="q")
-    scored_full = (
-        emb.join(F.broadcast(queries), F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.expr(
-                f"round({dot_full} / (sqrt(cast(qn2 as double))"
-                " * sqrt(cast(n2 as double))), 6)"
-            ).alias("cosine"),
-        )
-    )
-    w_full = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    truth = (
-        scored_full.withColumn("r", F.row_number().over(w_full))
-        .filter(F.col("r") <= ANN_TOP_K)
-        .select("query_id", "neighbor_id")
-    )
+    truth = brute_force_topk(spark, sf_dir).select("query_id", "neighbor_id")
 
     dims = ", ".join(str(d) for d in MRL_PREFIX_DIMS)
     dot_pre = DOT_SPARK.format(a="slice(qq, 1, d)", b="slice(q, 1, d)")
     n2_pre_q = DOT_SPARK.format(a="slice(qq, 1, d)", b="slice(qq, 1, d)")
     n2_pre_v = DOT_SPARK.format(a="slice(q, 1, d)", b="slice(q, 1, d)")
     scored_pre = (
-        emb.join(F.broadcast(queries), F.col("vec_id") != F.col("query_id"))
+        emb.join(
+            F.broadcast(_query_set(emb)), F.col("vec_id") != F.col("query_id")
+        )
         .select(
             "query_id",
             F.col("vec_id").alias("neighbor_id"),
@@ -3030,8 +2720,7 @@ def matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             "neighbor_id",
             "d",
             F.expr(
-                f"round({dot_pre} / (sqrt(cast({n2_pre_q} as double))"
-                f" * sqrt(cast({n2_pre_v} as double))), 6)"
+                _COS.format(dot=dot_pre, n2a=n2_pre_q, n2b=n2_pre_v)
             ).alias("cosine"),
         )
     )
@@ -3052,9 +2741,9 @@ def matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("query_id", F.col("d").cast("int").alias("prefix_dim"))
         .agg(F.sum(F.coalesce("hit", F.lit(0))).cast("int").alias("n_hits"))
         .withColumn("recall", F.round(F.col("n_hits") / ANN_TOP_K, 6))
-        # count()-elimination guard (r14 sweep): truth is unique on the
-        # join key, so a bare count() would drop the full-dim truth leg
-        # (its window included) and time only the prefix scan
+        # count()-elimination guard: truth is unique on the join key,
+        # so a bare count() would drop the full-dim truth leg (its
+        # window included) and time only the prefix scan
         .filter((F.col("n_hits") >= 0) & (F.col("n_hits") <= ANN_TOP_K))
     )
 

@@ -447,19 +447,6 @@ def sketch_oracle(sf_dir: str) -> SketchOracle:
     return SketchOracle(sf_dir)
 
 
-def _first_leaf_join(node):
-    """The first join a left-deep pipeline executes: the deepest
-    leaf-leaf join, preferring the left spine."""
-    from .joingraph import Join, Leaf
-
-    if isinstance(node, Leaf):
-        raise ValueError("plan has no join")
-    if isinstance(node.left, Leaf) and isinstance(node.right, Leaf):
-        return node
-    child = node.left if isinstance(node.left, Join) else node.right
-    return _first_leaf_join(child)
-
-
 def _scan_observations(graph, df, block_factors: int) -> dict[int, float]:
     """Harvest post-filter LEAF cardinalities from the executed plan's
     operator metrics after an action ran on ``df`` -- the feedback LEO
@@ -631,7 +618,9 @@ def run_fixture_adaptive(
         seeded = OverlayOracle(est, seed)
         res = PLANNERS["dp_ccp"](graph, seeded, get_cost_model(cost_model))
     t1 = _time.monotonic()
-    first = _first_leaf_join(res.tree)
+    first = _next_unit_join(res.tree, {})
+    if first is None:
+        raise ValueError("plan has no join")
     pre = Renderer(spark, sf_dir, graph, est)
     block = pre.render(first).persist()
     scope(spark, sf_dir)["persisted_blocks"] = [block]
@@ -665,30 +654,18 @@ def run_fixture_adaptive(
 
 def _next_unit_join(node, mat: dict):
     """The first join a pipeline would execute next: the deepest
-    (left-spine-preferred) join whose BOTH children are units -- a leaf
-    or an already-materialized block."""
-    from .joingraph import Join, Leaf
-
-    def is_unit(n) -> bool:
-        return isinstance(n, Leaf) or n.factors in mat
-
-    if is_unit(node):
-        return None
-    assert isinstance(node, Join)
-    if is_unit(node.left) and is_unit(node.right):
-        return node
-    for child in (node.left, node.right):
-        found = _next_unit_join(child, mat)
-        if found is not None:
-            return found
-    return None
+    (left-spine-preferred) unit join, or None when the tree is itself a
+    unit.  With no block materialized it is the plan's first leaf-leaf
+    join."""
+    units = _all_unit_joins(node, mat)
+    return units[0] if units else None
 
 
 def _all_unit_joins(node, mat: dict) -> list:
     """EVERY join in the tree whose both children are units (leaf or
-    materialized block), left-spine first -- element 0 is exactly
-    ``_next_unit_join``.  In a bushy plan these subtrees are pairwise
-    disjoint, so their materializations are independent Spark jobs."""
+    materialized block), left-spine first.  In a bushy plan these
+    subtrees are pairwise disjoint, so their materializations are
+    independent Spark jobs."""
     from .joingraph import Leaf
 
     def is_unit(n) -> bool:

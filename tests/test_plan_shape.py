@@ -51,7 +51,11 @@ def test_ivfpq_is_one_arrow_pass(spark):
 
     import re
 
-    for op in (similarity.ivfpq_topk, similarity.ivfpq_residual_topk):
+    for op in (
+        similarity.pq_adc_topk,
+        similarity.ivfpq_topk,
+        similarity.ivfpq_residual_topk,
+    ):
         plan = physical_plan(op(spark, SF_DIR))
         # the formatted plan names each node twice (tree + detail);
         # count the numbered detail entries

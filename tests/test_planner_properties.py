@@ -367,14 +367,14 @@ def test_adaptive_replan_pins_materialized_block(graph_oracle, obs_seed):
     only help)."""
     from query_optimizer_spark.oracle import OverlayOracle
     from query_optimizer_spark.planners import plan_with_materialized
-    from query_optimizer_spark.workload import _first_leaf_join
+    from query_optimizer_spark.workload import _next_unit_join
 
     graph, oracle = graph_oracle
     cm = get_cost_model("cm1")
     base = PLANNERS["dp_ccp"](graph, oracle, cm)
     if len(graph.aliases) < 3:
         return  # nothing left to re-plan after the first join
-    first = _first_leaf_join(base.tree)
+    first = _next_unit_join(base.tree, {})
 
     # adversarial feedback: anywhere from 1 row to a 10^4x blowup
     rng = random.Random(obs_seed)
@@ -448,7 +448,7 @@ def test_adaptive_replan_outer_graph(graph_oracle, seed):
 
     from query_optimizer_spark.joingraph import iter_joins
     from query_optimizer_spark.planners import plan_with_materialized
-    from query_optimizer_spark.workload import _first_leaf_join
+    from query_optimizer_spark.workload import _next_unit_join
 
     graph, _ = graph_oracle
     n = len(graph.aliases)
@@ -487,7 +487,7 @@ def test_adaptive_replan_outer_graph(graph_oracle, seed):
 
     # (a) inner pinned block: the deepest leaf-leaf join of the base
     # plan lies in the inner core whenever the core has >= 2 factors
-    first = _first_leaf_join(base.tree)
+    first = _next_unit_join(base.tree, {})
     if not (first.factors & ng):
         res = plan_with_materialized(og, oracle, cm, first)
         validate_tree(og, res.tree)

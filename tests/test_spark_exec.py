@@ -182,13 +182,13 @@ def test_scan_observations_harvest(spark, oracle):
     must be excluded because the two scans cannot be attributed."""
     from query_optimizer_spark.joingraph import bits
     from query_optimizer_spark.workload import (
-        _first_leaf_join,
+        _next_unit_join,
         _scan_observations,
         plan_fixture,
     )
 
     graph, est, res = plan_fixture(SF_DIR, "join_events_8")
-    first = _first_leaf_join(res.tree)
+    first = _next_unit_join(res.tree, {})
     block = Renderer(spark, SF_DIR, graph, est).render(first).persist()
     try:
         block.count()
