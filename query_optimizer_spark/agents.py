@@ -20,7 +20,6 @@ import math
 import random
 
 from .env import JoinOrderEnv
-from .joingraph import make_join
 
 
 class RandomAgent:
@@ -33,39 +32,27 @@ class RandomAgent:
 
 class GreedyRewardAgent:
     """Chooses the action whose immediate join cost is lowest (peeking
-    through the env's own cost model -- the in-process analog of an agent
-    that queries getJoinsCost per action)."""
+    through the env's own join pricing -- the in-process analog of an
+    agent that queries getJoinsCost per action); ties go to the lowest
+    action."""
 
     def act(self, env: JoinOrderEnv) -> int:
-        best_a, best_cost = None, None
-        for a in env.actions():
-            if env.live_edges:
-                va, vb = env.live_edges[a]
-            else:
-                live = env.live_ids()
-                va, vb = live[0], live[a + 1]
-            join = make_join(
-                env.graph, env.vertices[va].node, env.vertices[vb].node
-            )
-            cost = env.cm.node_cost(env.graph, join, env.oracle)
-            if best_cost is None or cost < best_cost:
-                best_a, best_cost = a, cost
-        return best_a
+        return min(env.actions(), key=env.action_cost)
 
 
 def run_episode(env: JoinOrderEnv, agent) -> dict:
     """Play one episode to completion; returns the episode record."""
-    env.reset()
+    env.restart()
     rewards = []
     while not env.done:
-        _, reward, _, info = env.step(agent.act(env))
-        rewards.append(reward)
+        rewards.append(env.advance(agent.act(env)))
+    plan = env.final_plan()
     return {
         "total_reward": sum(rewards),
         "cost": env.cost_so_far,
         "n_steps": len(rewards),
-        "plan": env.final_plan(),
-        "order": env.final_plan().order_str(),
+        "plan": plan,
+        "order": plan.order_str(),
     }
 
 
@@ -162,20 +149,6 @@ def action_features(state: dict, n_actions: int) -> list[list[float]]:
     return feats
 
 
-def _state_key(state: dict) -> tuple:
-    """What ``action_features`` reads of a state, named by factor sets:
-    the live vertices' sets in id order and each live edge's two sets in
-    action order.  A vertex's cardinality and an edge's join attributes
-    are functions of its sets for as long as the env's oracle answers
-    the same (env.py), so equal keys of one env give equal features."""
-    sets = {v["id"]: tuple(v["factors"]) for v in state["vertices"]}
-    edges = [e["factors"] for e in state["edges"]]
-    return (
-        tuple([sets[v] for v in sorted(sets)]),
-        tuple([(sets[a], sets[b]) for a, b in edges]),
-    )
-
-
 class ReinforceAgent:
     """Linear softmax policy + episodic REINFORCE with a per-fixture
     running baseline (costs span orders of magnitude across queries, so
@@ -185,8 +158,12 @@ class ReinforceAgent:
 
     ``theta`` is fixed within a batch, so sampling scores each state of
     an env once per batch: ``act_sample`` keeps (features, probabilities,
-    their mean feature vector) per (env, ``_state_key``) until ``update``
-    changes ``theta``.  Assign ``theta`` only between batches."""
+    their mean feature vector) per (env, ``env.state_key()``) until
+    ``update`` changes ``theta``, and builds the state only to score it.
+    Equal keys of one env give equal features: ``action_features`` reads
+    vertex cardinalities and edge join attributes, functions of the
+    factor masks the key names (env.py).  Assign ``theta`` only between
+    batches."""
 
     def __init__(self, lr: float = 0.2, seed: int = 0, temp: float = 1.0):
         self.theta = [0.0] * N_FEATS
@@ -225,13 +202,13 @@ class ReinforceAgent:
         z = sum(exps)
         return feats, [e / z for e in exps]
 
-    def act_sample(self, env, state):
-        """(action, scored): a sampled action and the state's
+    def act_sample(self, env: JoinOrderEnv):
+        """(action, scored): a sampled action and the current state's
         (features, probabilities, mean feature vector)."""
-        key = (env, _state_key(state))
+        key = (env, env.state_key())
         scored = self._scored.get(key)
         if scored is None:
-            feats, probs = self._scores(env, state)
+            feats, probs = self._scores(env, env.state())
             # sum_b pi(b) f(b), the baseline term of update's gradient
             mean_f = [
                 sum(p * fv[i] for p, fv in zip(probs, feats))
@@ -253,12 +230,12 @@ class ReinforceAgent:
         return max(range(len(probs)), key=lambda a: probs[a])
 
     def play_episode(self, env: JoinOrderEnv):
-        state = env.reset()
+        env.restart()
         steps = []  # (scored, action)
         rewards = []
         while not env.done:
-            a, scored = self.act_sample(env, state)
-            state, reward, _, _ = env.step(a)
+            a, scored = self.act_sample(env)
+            reward = env.advance(a)
             steps.append((scored, a))
             # log-compress the step cost: returns add like log-costs
             rewards.append(-math.log10(1.0 - reward))  # reward = -cost

@@ -1368,22 +1368,28 @@ def pq_adc_topk_oracle() -> str:
         {_SQL_ADC_RERANK}"""
 
 
-def _ivfpq_model(emb: DataFrame, cent_lo: int = 0):
+def _ivfpq_model(emb: DataFrame):
     """The IVF-PQ model state: ``_pq_model``'s query set, LUT and
-    codebook, plus IVF_N_CENTROIDS centroids (cents, |c|^2) and each
-    query's probe mask: its IVF_NPROBE nearest centroids by exact
-    integer |q-c|^2 (the |q|^2 constant drops for ranking), ties to the
-    smallest cent_id -- a stable sort, like the oracle's row_number over
-    (d2, cent_id).
+    codebook, plus ``_coarse_model``'s centroids and probe masks."""
+    qids, qvecs, lut, cb = _pq_model(emb)
+    return (qids, qvecs, lut, cb, *_coarse_model(emb, qvecs))
+
+
+def _coarse_model(emb: DataFrame, qvecs, cent_lo: int = 0):
+    """The coarse quantizer: IVF_N_CENTROIDS centroids (cents, |c|^2)
+    and each query's probe mask: its IVF_NPROBE nearest centroids by
+    exact integer |q-c|^2 (the |q|^2 constant drops for ranking), ties
+    to the smallest cent_id -- a stable sort, like the oracle's
+    row_number over (d2, cent_id).
 
     ``cent_lo`` picks the centroid id range [cent_lo, cent_lo +
     IVF_N_CENTROIDS) -- the data-defined analog of RETRAINING the
     coarse quantizer (sim_ivf_recluster uses a disjoint range so the
     reclustered index is provably a different model, not a rewrite of
-    the old assignment)."""
+    the old assignment).  One collect: the PQ half does not depend on
+    ``cent_lo``, so a caller needing two ranges collects it once."""
     import numpy as np
 
-    qids, qvecs, lut, cb = _pq_model(emb)
     cent_rows = sorted(
         emb.filter(
             (F.col("vec_id") >= cent_lo)
@@ -1397,9 +1403,9 @@ def _ivfpq_model(emb: DataFrame, cent_lo: int = 0):
     nearest = np.argsort(
         cn2[None, :] - 2 * (qvecs @ cents.T), axis=1, kind="stable"
     )[:, :IVF_NPROBE]
-    probe_mask = np.zeros((len(qids), IVF_N_CENTROIDS), dtype=bool)
+    probe_mask = np.zeros((len(qvecs), IVF_N_CENTROIDS), dtype=bool)
     np.put_along_axis(probe_mask, nearest, True, axis=1)
-    return qids, qvecs, lut, cb, cents, cn2, probe_mask
+    return cents, cn2, probe_mask
 
 
 def ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2589,10 +2595,12 @@ def ivf_recluster_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..executor import physical_plan
 
     emb = _quantized(spark, sf_dir)
-    # OLD model for the aged store; NEW model for the recluster + probe
-    _, _, _, cb_old, cents_old, cn2_old, _ = _ivfpq_model(emb)
-    qids, _, lut, cb_new, cents_new, cn2_new, probe_mask = _ivfpq_model(
-        emb, cent_lo=IVF_RECLUSTER_CENT_LO
+    # one PQ codebook; the OLD coarse model for the aged store, the NEW
+    # one for the recluster + probe
+    qids, qvecs, lut, cb = _pq_model(emb)
+    cents_old, cn2_old, _ = _coarse_model(emb, qvecs)
+    cents_new, cn2_new, probe_mask = _coarse_model(
+        emb, qvecs, cent_lo=IVF_RECLUSTER_CENT_LO
     )
     del_cond = (F.col("vec_id") >= IVF_APPEND_LO) & (
         F.col("vec_id") < IVF_APPEND_LO + IVF_APPEND_N
@@ -2606,7 +2614,7 @@ def ivf_recluster_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not cached:
         build_sec, _ = _ivf_build(
             emb.filter(~del_cond),
-            _ivfpq_encode_fn(spark, cb_old, cents_old, cn2_old),
+            _ivfpq_encode_fn(spark, cb, cents_old, cn2_old),
             old_path,
         )
         t1 = time.monotonic()
@@ -2624,7 +2632,7 @@ def ivf_recluster_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         # broadcast hint: the equi-join is planned by size)
         _ivf_build(
             emb.join(members, "vec_id"),
-            _ivfpq_encode_fn(spark, cb_new, cents_new, cn2_new),
+            _ivfpq_encode_fn(spark, cb, cents_new, cn2_new),
             new_path,
         )
 

@@ -137,7 +137,7 @@ class ParkSession:
                 seed=self.seed,
             )
         else:
-            env.reset()
+            env.restart()
         self._cur_name, self._cur_sql, self._cur_graph = name, sql, env.graph
         self._env = env
         self._records.setdefault(name, QueryRecord(name=name, sql=sql))

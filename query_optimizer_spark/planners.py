@@ -743,9 +743,9 @@ def plan_reinforce(
             return _leaf(graph, members[0])
         env = JoinOrderEnv(graph, oracle, cm, seed=seed, factors=comp)
         policy = agent or train_reinforce(env, episodes=episodes, seed=seed)
-        env.reset()
+        env.restart()
         while not env.done:
-            env.step(policy.act(env))
+            env.advance(policy.act(env))
         return env.final_plan()
 
     tree, cost = _plan_components(graph, oracle, cm, component)

@@ -150,9 +150,9 @@ def synthetic_generalization(
                 rnd_costs = []
                 r = random.Random(f"rnd-{kind}-{n}-{seed}")
                 for _ in range(n_random):
-                    env.reset()
+                    env.restart()
                     while not env.done:
-                        env.step(r.choice(env.actions()))
+                        env.advance(r.choice(env.actions()))
                     rnd_costs.append(
                         cm.cumulative(env.graph, env.final_plan(), oracle)
                     )
@@ -181,7 +181,7 @@ def card_order_cost(graph, oracle, cm, ascending: bool) -> float:
     estimated cardinality -- the card-only heuristics that bound what
     ANY policy over the protocol observables can express per-step."""
     env = JoinOrderEnv(graph, oracle, cm, seed=7)
-    env.reset()
+    env.restart()
     while not env.done:
         st = env.state()
         verts = {v["id"]: v for v in st["vertices"]}
@@ -196,7 +196,7 @@ def card_order_cost(graph, oracle, cm, ascending: bool) -> float:
             )
             return c if ascending else -c
 
-        env.step(min(env.actions(), key=key))
+        env.advance(min(env.actions(), key=key))
     return cm.cumulative(env.graph, env.final_plan(), oracle)
 
 
@@ -207,9 +207,9 @@ def greedy_cost(agent: ReinforceAgent, env: JoinOrderEnv, cm, oracle) -> float:
     plan-invariant leaf-scan terms, so every number in the artifact is
     computed with ``cm.cumulative`` over the finished tree to be
     directly comparable with dp_ccp's optimum."""
-    env.reset()
+    env.restart()
     while not env.done:
-        env.step(agent.act(env))
+        env.advance(agent.act(env))
     return cm.cumulative(env.graph, env.final_plan(), oracle)
 
 
@@ -356,9 +356,9 @@ def main() -> None:
         rnd_costs = []
         r = random.Random(3)
         for _ in range(20):
-            env.reset()
+            env.restart()
             while not env.done:
-                env.step(r.choice(env.actions()))
+                env.advance(r.choice(env.actions()))
             rnd_costs.append(cm.cumulative(env.graph, env.final_plan(), oracle))
         rnd = sum(rnd_costs) / len(rnd_costs)
         run_episode(env, GreedyRewardAgent())

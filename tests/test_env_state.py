@@ -1,6 +1,7 @@
-"""``JoinOrderEnv.state`` builds each vertex and edge record once, and the
-park session keeps one env per query SQL.  Every state must still be the
-one a from-scratch build gives.  Spark-free."""
+"""``JoinOrderEnv.state`` builds each vertex and edge record once, a state
+only when read, and each join's price once per env; the park session
+keeps one env per query SQL.  Every state, key, reward and plan must
+still be the one a from-scratch build gives.  Spark-free."""
 
 import json
 import os
@@ -10,11 +11,11 @@ import duckdb
 import pytest
 
 from query_optimizer_spark import TABLES, park_api, workload
-from query_optimizer_spark.agents import load_policy
+from query_optimizer_spark.agents import action_features, load_policy
 from query_optimizer_spark.catalog import Catalog
 from query_optimizer_spark.costmodels import get_cost_model
 from query_optimizer_spark.env import JoinOrderEnv
-from query_optimizer_spark.joingraph import JoinGraph, bits
+from query_optimizer_spark.joingraph import JoinGraph, bits, make_join
 from query_optimizer_spark.oracle import CardinalityOracle
 from query_optimizer_spark.park_api import ParkSession
 from query_optimizer_spark.sqlparse import parse
@@ -150,6 +151,137 @@ def test_states_match_from_scratch_build():
     }
     assert covered == inner | shapes
     assert n_steps > 1000
+
+
+# --- state keys and the join memo -------------------------------------------
+
+
+def _state_key(state: dict) -> tuple:
+    """The REINFORCE memo key as it was derived from a state dict: the
+    live vertices' factor sets in id order and each live edge's two sets
+    in action order."""
+    sets = {v["id"]: tuple(v["factors"]) for v in state["vertices"]}
+    edges = [e["factors"] for e in state["edges"]]
+    return (
+        tuple([sets[v] for v in sorted(sets)]),
+        tuple([(sets[a], sets[b]) for a, b in edges]),
+    )
+
+
+def _as_sets(key: tuple) -> tuple:
+    """``env.state_key()`` with each factor mask as its sorted factor ids."""
+    verts, edges = key
+    return (
+        tuple([tuple(bits(m)) for m in verts]),
+        tuple([(tuple(bits(a)), tuple(bits(b))) for a, b in edges]),
+    )
+
+
+class _MemoFreeEnv(JoinOrderEnv):
+    """Every join priced afresh with ``make_join`` and ``node_cost``."""
+
+    def _price(self, left, right):
+        join = make_join(self.graph, left, right)
+        return join.preds, join.how, self.cm.node_cost(self.graph, join, self.oracle)
+
+
+def _property_cases():
+    """(name, graph, oracle, factor mask) for every fixture's inner core
+    and every synthetic chain/star/cycle/clique shape."""
+    stats = workload.stats_oracle(SF_DIR)
+    for name, sql in workload.FIXTURES.items():
+        graph = JoinGraph.from_query(parse(sql))
+        core = graph.all_factors & ~graph.null_generating
+        if core & (core - 1):  # two or more factors
+            yield name, graph, stats, core
+    ta = _train_agent()
+    rng = random.Random(17)
+    for kind, sizes in ta.SYNTH_TOPOLOGIES.items():
+        for n in sizes:
+            graph, oracle = ta.synth_graph(kind, n, rng)
+            yield f"synth_{kind}_{n}", graph, oracle, None
+
+
+@pytest.mark.parametrize("cm_name", ["cm1", "mm"])
+def test_keys_and_join_memo_match_references(cm_name):
+    """Over seeded random episodes of one reused env per case:
+    ``state_key()`` names the state the old dict-derived key named, and
+    equal keys give equal features; rewards, ``cost_so_far``, ``info``
+    and ``final_plan()`` equal those of an env that prices every join
+    afresh, whether played by ``step`` or ``advance``; and the state
+    after a mid-episode ``reset`` is a fresh env's first state."""
+    cm = get_cost_model(cm_name)
+    cases, n_steps = 0, 0
+    for name, graph, oracle, mask in _property_cases():
+        env = JoinOrderEnv(graph, oracle, cm, seed=5, factors=mask)
+        ref = _MemoFreeEnv(graph, oracle, cm, seed=5, factors=mask)
+        first = JoinOrderEnv(graph, oracle, cm, seed=5, factors=mask)
+        first_key, first_state = first.state_key(), json.dumps(first.state())
+        feats_of: dict[tuple, list] = {}
+        rng = random.Random(f"{name}/{cm_name}")
+        for ep in range(8):
+            assert json.dumps(env.reset()) == json.dumps(ref.reset()) == first_state
+            assert env.state_key() == first_key, name
+            stop = rng.randrange(1, graph.n) if ep % 4 == 3 else None
+            k = 0
+            while not env.done and k != stop:
+                state = env.state()
+                key = env.state_key()
+                assert _as_sets(key) == _state_key(state), (name, k)
+                feats = action_features(state, len(env.actions()))
+                assert feats_of.setdefault(key, feats) == feats, (name, k)
+                action = rng.randrange(len(env.actions()))
+                if ep % 2:
+                    got = env.advance(action), env.cost_so_far, env.done
+                    want = ref.step(action)[1], ref.cost_so_far, ref.done
+                else:
+                    got = env.step(action)[1:] + (env.cost_so_far,)
+                    want = ref.step(action)[1:] + (ref.cost_so_far,)
+                assert got == want, (name, ep, k)
+                k += 1
+            n_steps += k
+            if stop is None:
+                assert env.final_plan() == ref.final_plan(), name
+                assert env.final_plan().order_str() == ref.final_plan().order_str()
+            else:  # abandoned mid-episode
+                assert json.dumps(env.reset()) == first_state, name
+                assert env.state_key() == first_key, name
+        cases += 1
+    assert cases == 14 + 28 and n_steps > 1500
+
+
+@pytest.mark.parametrize("fixture", ["join_outer_3", "join_outer_mixed_5"])
+def test_invalid_outer_placement_raises_on_every_repeat(fixture):
+    """An action that would put a null-generating factor on a join's LHS
+    or mix it into an inner RHS raises each time it is played or priced,
+    and leaves the env as it was: the join memo stores nothing for it."""
+    graph = JoinGraph.from_query(parse(workload.FIXTURES[fixture]))
+    env = JoinOrderEnv(graph, workload.stats_oracle(SF_DIR), CM)
+    rng = random.Random(fixture)
+    raised = 0
+    for _ in range(8):
+        env.restart()
+        while not env.done:
+            valid = []
+            for a in env.actions():
+                va, vb = env.live_edges[a]
+                try:
+                    make_join(graph, env.vertices[va].node, env.vertices[vb].node)
+                except AssertionError:
+                    before = (env.state_key(), json.dumps(env.state()), env.cost_so_far)
+                    for play in (env.action_cost, env.advance, env.step) * 2:
+                        with pytest.raises(AssertionError, match="null-generating"):
+                            play(a)
+                        assert (
+                            env.state_key(), json.dumps(env.state()), env.cost_so_far
+                        ) == before
+                    raised += 1
+                else:
+                    valid.append(a)
+            if not valid:
+                break
+            env.advance(rng.choice(valid))
+    assert raised > 0
 
 
 CHAIN_4 = (
