@@ -32,13 +32,11 @@ from query_optimizer_spark.session import configure_runtime
 
 # Declared first, so the correctness gate, which records the first 50
 # declared queries, covers them: the queries whose runners reach code the
-# latest change edited (the join-order env and its agents, and the IVF-PQ
-# model collect in similarity.py).
+# latest change edited (the LEO decision chain and its three runners, and
+# the REINFORCE row now planned through plan_reinforce).
 GATE_FIRST: tuple[str, ...] = (
-    "join_env_agent", "join_env_learned", "join_env_wire", "join_park_cards",
-    "sim_ivf_recluster", "sim_ivfpq_topk", "sim_ivfpq_pruned",
-    "sim_ivfpq_residual", "sim_ivf_append", "sim_ivf_multibatch",
-    "sim_ivf_delete", "sim_ivf_compact",
+    "join_adaptive_reopt", "join_adaptive_full", "join_adaptive_outer",
+    "join_feedback_warm", "join_feedback_persist", "join_env_learned",
 )
 
 _GATED_FILE = re.compile(r"CORRECTNESS_r(\d+)\.json")

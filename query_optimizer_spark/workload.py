@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import time
 from collections.abc import Callable
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 from functools import lru_cache, partial
 
 from .costmodels import get_cost_model
@@ -29,16 +29,17 @@ from .sqlparse import parse
 from .state import scope
 
 # Session state (``state.scope``) this module writes per sf_dir:
-# "adaptive_split" is the phase split of the most recent adaptive run
-# (plan / observe / replan seconds), replaced per call; bench.py copies
-# it into the side artifact so a total-time spike on join_adaptive_* is
-# decomposable.  "persisted_blocks" lists the DataFrames the most recent
-# adaptive run persist()ed, replaced per call.  A caller that wants a
-# genuinely-cold follow-up run (e.g. join_feedback_warm's fresh
-# re-execution claim) drops EXACTLY these via drop_persisted_blocks() --
-# a session-wide catalog.clearCache() would also evict every other
-# query's cached relations and perturb their timings inside the same
-# bench rep.
+# "adaptive_split" is the record of the most recent LEO run (re-opt,
+# full or warm: phase seconds, rounds, discarded speculative blocks,
+# failed harvests, store-seeded observations), replaced per call;
+# bench.py copies it into the side artifact so a total-time spike on
+# join_adaptive_* is decomposable.  "persisted_blocks" lists the blocks
+# the most recent observing run persist()ed, replaced per call.  A
+# caller that wants a genuinely-cold follow-up run (e.g.
+# join_feedback_warm's fresh re-execution claim) drops EXACTLY these via
+# drop_persisted_blocks() -- a session-wide catalog.clearCache() would
+# also evict every other query's cached relations and perturb their
+# timings inside the same bench rep.
 
 FIXTURES: dict[str, str] = {
     # chain: l-o-c (build plan step 1; entry() flagship at sf0.001)
@@ -236,7 +237,7 @@ def _base_rows(sf_dir: str) -> dict[str, int]:
             out[t] = con.execute(
                 f"SELECT count(*) FROM read_parquet('{sf_dir}/{t}.parquet')"
             ).fetchone()[0]
-        except Exception:
+        except duckdb.IOException:  # table file absent at this scale
             pass
     con.close()
     return out
@@ -320,28 +321,6 @@ def run_fixture_via_env_agent(spark, sf_dir: str, name: str = "join_cycle_7"):
     oracle = stats_oracle(sf_dir)
     env = JoinOrderEnv(graph, oracle, get_cost_model("cm1"))
     episode = run_episode(env, GreedyRewardAgent())
-    renderer = Renderer(spark, sf_dir, graph, oracle)
-    return renderer.run(episode["plan"])
-
-
-def run_fixture_via_learned_agent(
-    spark, sf_dir: str, name: str = "join_cycle_7", episodes: int = 192
-):
-    """Plan a fixture with a REINFORCE policy TRAINED IN-PROCESS
-    (deterministic seed, pure planning -- milliseconds), then execute
-    the learned plan.  Closes the loop the reference's research harness
-    exists for: learn a join order, run it, prove the result matches
-    every other planner's (the correctness gate does the comparison).
-    Training artifact with curves/baselines: AGENT_TRAINING.md."""
-    from .agents import run_episode, train_reinforce
-    from .env import JoinOrderEnv
-
-    sql = FIXTURES[name]
-    graph = JoinGraph.from_query(parse(sql))
-    oracle = stats_oracle(sf_dir)
-    env = JoinOrderEnv(graph, oracle, get_cost_model("cm1"))
-    agent = train_reinforce(env, episodes=episodes)
-    episode = run_episode(env, agent)
     renderer = Renderer(spark, sf_dir, graph, oracle)
     return renderer.run(episode["plan"])
 
@@ -447,209 +426,130 @@ def sketch_oracle(sf_dir: str) -> SketchOracle:
     return SketchOracle(sf_dir)
 
 
+def _attributable_leaves(graph, block_factors: int) -> dict[int, str]:
+    """{single-factor mask: base table} for every leaf of the block whose
+    base TABLE appears exactly once among the block's leaves -- the only
+    leaves a scan count can be attributed to (two scans of one parquet
+    file under two aliases cannot be told apart from operator metrics,
+    so self-join aliases stay unobserved)."""
+    by_table: dict[str, list[int]] = {}
+    for i in bits(block_factors):
+        by_table.setdefault(graph.tables[graph.aliases[i]], []).append(i)
+    return {1 << idxs[0]: t for t, idxs in by_table.items() if len(idxs) == 1}
+
+
 def _scan_observations(graph, df, block_factors: int) -> dict[int, float]:
     """Harvest post-filter LEAF cardinalities from the executed plan's
     operator metrics after an action ran on ``df`` -- the feedback LEO
     reads from completed scans for FREE (no extra jobs; DB2's LEO and
     Spark's AQE both source runtime statistics this way).  Returns
-    {single-factor mask: observed rows} for every leaf of the block
-    whose base TABLE appears exactly once among the block's leaves
-    (self-join aliases are skipped: two scans of one parquet file
-    cannot be attributed to an alias from the metrics alone).
+    {single-factor mask: observed rows} for every
+    :func:`_attributable_leaves` leaf of the block.
 
-    Touches Spark's internal executedPlan via py4j; any failure
-    degrades to {} -- feedback is an optimization, never a correctness
-    dependency."""
+    Touches Spark's internal executedPlan via py4j and raises whatever
+    that walk raises; the LEO observe counts such a failure in its
+    record's ``harvest_failed`` and carries on without leaf feedback."""
     import re
 
-    try:
-        per_table: dict[str, float] = {}
+    per_table: dict[str, float] = {}
 
-        def walk(node, pending_filter_rows, cache_ok=True):
-            cname = node.getClass().getSimpleName()
-            mets = node.metrics()
-            it = mets.iterator()
-            rows = None
-            while it.hasNext():
-                kv = it.next()
-                if kv._1() == "numOutputRows":
-                    rows = float(kv._2().value())
-            if cname == "FileSourceScanExec":
-                m = re.search(r"(\w+)\.parquet", node.toString())
-                if m:
-                    got = (
-                        pending_filter_rows
-                        if pending_filter_rows is not None
-                        else rows
-                    )
-                    if got is not None:
-                        # duplicate table -> poison the entry
-                        t = m.group(1)
-                        per_table[t] = (
-                            -1.0 if t in per_table else got
-                        )
-                return
-            if cname == "FilterExec":
-                # stacked filters (e.g. a split non-deterministic
-                # predicate): walking top-down, the OUTERMOST filter's
-                # output is the post-ALL-filters count -- keep it
-                if pending_filter_rows is None:
-                    pending_filter_rows = rows
-            elif not (
-                cname in (
-                    # WHITELIST of row-count-preserving pass-throughs,
-                    # matched by EXACT class name: a Filter's count may
-                    # only be attributed to a scan reached through
-                    # these.  Anything else (joins, aggregates,
-                    # generates, limits, unions, cartesian products, a
-                    # second Filter...) resets the carry -- a blacklist
-                    # here would silently record a WRONG count as
-                    # ground truth the first time an unlisted
-                    # cardinality-changing operator appeared.  Exact
-                    # names, not substrings: SortMergeJoinExec and
-                    # SortAggregateExec contain "Sort" but CHANGE row
-                    # counts -- a substring match would carry a filter
-                    # count across a join/aggregate and poison the
-                    # FeedbackStore (r7 ADVICE).
-                    "ProjectExec",
-                    "InputAdapter",
-                    "ColumnarToRowExec",
-                    "RowToColumnarExec",
-                    "SortExec",
-                    # shuffles/broadcasts move rows, never drop them
-                    "ShuffleExchangeExec",
-                    "BroadcastExchangeExec",
-                    "ReusedExchangeExec",
-                    "CoalesceExec",
+    def walk(node, pending_filter_rows, cache_ok=True):
+        cname = node.getClass().getSimpleName()
+        mets = node.metrics()
+        it = mets.iterator()
+        rows = None
+        while it.hasNext():
+            kv = it.next()
+            if kv._1() == "numOutputRows":
+                rows = float(kv._2().value())
+        if cname == "FileSourceScanExec":
+            m = re.search(r"(\w+)\.parquet", node.toString())
+            if m:
+                got = (
+                    pending_filter_rows
+                    if pending_filter_rows is not None
+                    else rows
                 )
-                or cname.startswith("WholeStageCodegen")
-            ):
-                pending_filter_rows = None
-            if cname == "AdaptiveSparkPlanExec":
-                walk(node.executedPlan(), pending_filter_rows, cache_ok)
-                return
-            if "InMemoryTableScan" in cname:
-                # the block's OWN cache (root) holds its real executed
-                # plan with populated metrics -- descend once.  NESTED
-                # caches are previously materialized child blocks whose
-                # scans were harvested in the round that built them;
-                # re-walking their lineage every round would cost
-                # O(rounds^2) py4j traffic across the loop (measured:
-                # join_adaptive_full observe 1.4 s -> 5.6 s at sf0.1)
-                # and could double-attribute a table the live plan
-                # scans again.
-                if cache_ok:
-                    walk(node.relation().cachedPlan(), None, False)
-                return
-            if "QueryStage" in cname:
-                walk(node.plan(), pending_filter_rows, cache_ok)
-                return
-            for i in range(node.children().length()):
-                walk(node.children().apply(i), pending_filter_rows, cache_ok)
+                if got is not None:
+                    # duplicate table -> poison the entry
+                    t = m.group(1)
+                    per_table[t] = -1.0 if t in per_table else got
+            return
+        if cname == "FilterExec":
+            # stacked filters (e.g. a split non-deterministic
+            # predicate): walking top-down, the OUTERMOST filter's
+            # output is the post-ALL-filters count -- keep it
+            if pending_filter_rows is None:
+                pending_filter_rows = rows
+        elif not (
+            cname in (
+                # WHITELIST of row-count-preserving pass-throughs,
+                # matched by EXACT class name: a Filter's count may
+                # only be attributed to a scan reached through these.
+                # Anything else (joins, aggregates, generates, limits,
+                # unions, cartesian products, a second Filter...)
+                # resets the carry -- a blacklist here would silently
+                # record a WRONG count as ground truth the first time
+                # an unlisted cardinality-changing operator appeared.
+                # Exact names, not substrings: SortMergeJoinExec and
+                # SortAggregateExec contain "Sort" but CHANGE row
+                # counts -- a substring match would carry a filter
+                # count across a join/aggregate and poison the
+                # FeedbackStore.
+                "ProjectExec",
+                "InputAdapter",
+                "ColumnarToRowExec",
+                "RowToColumnarExec",
+                "SortExec",
+                # shuffles/broadcasts move rows, never drop them
+                "ShuffleExchangeExec",
+                "BroadcastExchangeExec",
+                "ReusedExchangeExec",
+                "CoalesceExec",
+            )
+            or cname.startswith("WholeStageCodegen")
+        ):
+            pending_filter_rows = None
+        if cname == "AdaptiveSparkPlanExec":
+            walk(node.executedPlan(), pending_filter_rows, cache_ok)
+            return
+        if "InMemoryTableScan" in cname:
+            # the block's OWN cache (root) holds its real executed plan
+            # with populated metrics -- descend once.  NESTED caches are
+            # previously materialized child blocks whose scans were
+            # harvested in the round that built them; re-walking their
+            # lineage every round would cost O(rounds^2) py4j traffic
+            # across the loop (measured: join_adaptive_full observe
+            # 1.4 s -> 5.6 s at sf0.1) and could double-attribute a
+            # table the live plan scans again.
+            if cache_ok:
+                walk(node.relation().cachedPlan(), None, False)
+            return
+        if "QueryStage" in cname:
+            walk(node.plan(), pending_filter_rows, cache_ok)
+            return
+        for i in range(node.children().length()):
+            walk(node.children().apply(i), pending_filter_rows, cache_ok)
 
-        walk(df._jdf.queryExecution().executedPlan(), None)
-        # attribute: table -> alias, only when unique among block leaves
-        obs: dict[int, float] = {}
-        block_aliases = [
-            (i, graph.aliases[i]) for i in bits(block_factors)
-        ]
-        by_table: dict[str, list[int]] = {}
-        for i, a in block_aliases:
-            by_table.setdefault(graph.tables[a], []).append(i)
-        for t, idxs in by_table.items():
-            rows = per_table.get(t)
-            if rows is not None and rows >= 0 and len(idxs) == 1:
-                obs[1 << idxs[0]] = rows
-        return obs
-    except Exception:
-        return {}
+    walk(df._jdf.queryExecution().executedPlan(), None)
+    return {
+        m: per_table[t]
+        for m, t in _attributable_leaves(graph, block_factors).items()
+        if per_table.get(t, -1.0) >= 0
+    }
 
 
+@dataclass
 class _MaterializedRenderer(Renderer):
     """Renderer that substitutes the already-computed DataFrame for the
     pinned subtree -- physical reuse of the materialized intermediate
     (the plan kept it atomic, so the factor-mask lookup is exact)."""
 
+    materialized: dict = field(default_factory=dict)
+
     def render(self, node):
-        mat = getattr(self, "materialized", None)
-        if mat:
-            cached = mat.get(getattr(node, "factors", None))
-            if cached is not None:
-                return cached
-        return super().render(node)
-
-
-def run_fixture_adaptive(
-    spark,
-    sf_dir: str,
-    name: str = "join_events_8",
-    cost_model: str = "cm1",
-    store=None,
-):
-    """Mid-query re-optimization (Kabra & DeWitt, SIGMOD'98; LEO,
-    VLDB'01) -- the planner-level analog of Spark AQE, on our own cost
-    models: plan the fixture with the ESTIMATING oracle, execute and
-    persist only the first join, observe its true cardinality, overlay
-    that observation on the estimator, re-plan the remainder with the
-    materialized block pinned atomic (sunk cost 0), and finish the
-    query reusing the persisted block.
-
-    The result must hash-match every static planner (driver gate +
-    cross-planner property) -- feedback may change the ORDER, never the
-    answer.  Scale shape: the feedback observation is one ``count()``
-    on an intermediate the query was going to compute anyway; at 100 TB
-    the persist tier is the executor block store (MEMORY_AND_DISK), the
-    same place AQE's shuffle-stage statistics live.
-    """
-    import time as _time
-
-    from .oracle import OverlayOracle
-    from .planners import plan_with_materialized
-
-    t0 = _time.monotonic()
-    graph, est, res = plan_fixture(
-        sf_dir, name, planner="dp_ccp", cost_model=cost_model
-    )
-    seed = store.seed(graph) if store is not None else {}
-    if seed:
-        # cross-query warm start: previously observed cardinalities
-        # (FeedbackStore) correct even the FIRST join choice, which
-        # within-query feedback alone can never reach
-        seeded = OverlayOracle(est, seed)
-        res = PLANNERS["dp_ccp"](graph, seeded, get_cost_model(cost_model))
-    t1 = _time.monotonic()
-    first = _next_unit_join(res.tree, {})
-    if first is None:
-        raise ValueError("plan has no join")
-    pre = Renderer(spark, sf_dir, graph, est)
-    block = pre.render(first).persist()
-    scope(spark, sf_dir)["persisted_blocks"] = [block]
-    observed = block.count()  # runtime feedback; also warms the cache
-    overlay = OverlayOracle(est, seed)
-    overlay.observed[first.factors] = float(observed)
-    # free leaf feedback: post-filter scan counts from the block's
-    # executed-plan metrics (LEO reads completed operators, not just
-    # the top of the block)
-    fresh = _scan_observations(graph, block, first.factors)
-    overlay.observed.update(fresh)
-    t2 = _time.monotonic()  # harvest is part of observation, not replan
-    if store is not None:
-        store.record(graph, first.factors, float(observed))
-        for m, rows in fresh.items():
-            store.record(graph, m, rows)
-    res2 = plan_with_materialized(
-        graph, overlay, get_cost_model(cost_model), first
-    )
-    t3 = _time.monotonic()
-    scope(spark, sf_dir)["adaptive_split"] = dict(
-        plan_sec=round(t1 - t0, 4),
-        observe_sec=round(t2 - t1, 4),
-        replan_sec=round(t3 - t2, 4),
-        rounds=1,
-    )
-    renderer = _MaterializedRenderer(spark, sf_dir, graph, overlay)
-    renderer.materialized = {first.factors: block}
-    return renderer.run(res2.tree)
+        cached = self.materialized.get(node.factors)
+        return cached if cached is not None else super().render(node)
 
 
 def _next_unit_join(node, mat: dict):
@@ -701,232 +601,6 @@ def _spec_key(join) -> tuple:
     )
 
 
-def run_fixture_adaptive_full(
-    spark,
-    sf_dir: str,
-    name: str = "join_events_8",
-    cost_model: str = "cm1",
-    store=None,
-):
-    """FULL progressive re-optimization (the complete LEO loop, vs
-    run_fixture_adaptive's single observation): start from the
-    estimate-based plan, then repeat -- materialize the next join of
-    two units, observe its TRUE cardinality, overlay it on the
-    estimator, re-plan everything not yet materialized with every
-    observed block pinned atomic -- until one block covers the query.
-    Every join after the first is therefore placed using exact
-    cardinalities for all materialized inputs; estimation error can
-    only ever misplace the single next join, never compound.
-
-    n-1 observation rounds for n relations; each is one count() on an
-    intermediate the query needed anyway (persisted, so the final
-    assembly reuses every block).  Results must hash-match the static
-    planners -- the gate enforces it.
-
-    Scheduling (r16, guide §2.6 "overlap independent jobs"): a bushy
-    plan exposes SEVERAL independent unit joins at once (disjoint
-    subtrees of the same planned tree).  All of the current tree's
-    unit joins are materialized CONCURRENTLY from a small thread pool;
-    the decision chain then consumes them strictly sequentially --
-    same ``_next_unit_join`` choice, observation, store record and
-    re-plan as before, so every recorded statistic, every round and
-    the final plan are bit-identical to the sequential loop.  A
-    speculative block is consumable only when the re-planned tree
-    still builds that exact (factors, children) subtree; one that is
-    never consumed is unpersisted and its observations are DISCARDED
-    (the sequential loop never computed them -- duplicated speculative
-    work is the same trade Spark's own speculative execution makes,
-    never a semantics change).  On a left-deep plan the batch size is
-    1 and the loop degenerates to the sequential original."""
-    import threading
-    import time as _time
-    from concurrent.futures import ThreadPoolExecutor, wait
-
-    from .oracle import OverlayOracle
-    from .planners import plan_with_materialized
-
-    t0 = _time.monotonic()
-    graph, est, res = plan_fixture(
-        sf_dir, name, planner="dp_ccp", cost_model=cost_model
-    )
-    cm = get_cost_model(cost_model)
-    overlay = OverlayOracle(
-        est, store.seed(graph) if store is not None else {}
-    )
-    if overlay.observed:
-        # cross-query warm start (FeedbackStore): the initial plan --
-        # including the otherwise-blind first join -- already uses every
-        # cardinality any earlier execution observed
-        res = PLANNERS["dp_ccp"](graph, overlay, cm)
-    plan_sec = _time.monotonic() - t0
-    mat: dict[int, object] = {}  # factor mask -> persisted DataFrame
-    persisted = scope(spark, sf_dir)["persisted_blocks"] = []
-    tree = res.tree
-    full = (1 << len(graph.aliases)) - 1
-    renderer = _MaterializedRenderer(spark, sf_dir, graph, overlay)
-    renderer.materialized = mat
-    observe_sec = replan_sec = harvest_sec = 0.0
-    rounds = 0
-    harvest_lock = threading.Lock()
-
-    # job group/description/pool are JVM-thread-local; pool threads
-    # start bare, so the caller's labels and any cancellable job group
-    # (harness timeouts) are copied into each observe task explicitly
-    sc = spark.sparkContext
-    parent_props = {
-        k: sc.getLocalProperty(k)
-        for k in (
-            "spark.jobGroup.id",
-            "spark.job.description",
-            "spark.job.interruptOnCancel",
-            "spark.scheduler.pool",
-        )
-    }
-
-    def _observe(unit):
-        """Materialize one unit join and harvest its observations --
-        one independent Spark job (persist+count), run from the pool."""
-        for k, v in parent_props.items():
-            if v is not None:
-                sc.setLocalProperty(k, v)
-        block = renderer.render(unit).persist()
-        n = float(block.count())
-        th0 = _time.monotonic()
-        obs = _scan_observations(graph, block, unit.factors)
-        dt = _time.monotonic() - th0
-        nonlocal harvest_sec
-        with harvest_lock:
-            harvest_sec += dt
-        return block, n, obs
-
-    # speculative materializations: (factors, {child masks}) ->
-    # (block, count, leaf observations); consumed by the decision chain
-    spec: dict[tuple, tuple] = {}
-    pool = ThreadPoolExecutor(max_workers=4)
-    try:
-        while True:
-            nxt = _next_unit_join(tree, mat)
-            if nxt is None:  # tree root is itself a materialized block
-                break
-            t0 = _time.monotonic()
-            key = _spec_key(nxt)
-            if key not in spec:
-                units = [
-                    u for u in _all_unit_joins(tree, mat)
-                    if _spec_key(u) not in spec
-                ]
-                futs = {
-                    _spec_key(u): pool.submit(_observe, u) for u in units
-                }
-                wait(list(futs.values()))
-                # record every SUCCEEDED materialization before raising
-                # any failure: a sibling's persisted block must land in
-                # spec so the finally-block can unpersist it
-                first_exc = None
-                for k, f in futs.items():
-                    exc = f.exception()
-                    if exc is not None:
-                        first_exc = first_exc or exc
-                    else:
-                        spec[k] = f.result()
-                if first_exc is not None:
-                    raise first_exc
-            block, n, obs = spec.pop(key)
-            persisted.append(block)
-            fresh = {nxt.factors: n}
-            # free leaf feedback from the freshly-executed scans (cached
-            # child blocks re-read from memory and surface no scan here)
-            fresh.update(obs)
-            overlay.observed.update(fresh)
-            if store is not None:
-                for m, rows in fresh.items():
-                    store.record(graph, m, rows)
-            observe_sec += _time.monotonic() - t0
-            rounds += 1
-            mat[nxt.factors] = block
-            if nxt.factors == full:
-                break
-            # live blocks: materialized sets not subsumed by a larger one
-            live_masks = [
-                f for f in mat
-                if not any(o != f and (f & o) == f for o in mat)
-            ]
-            live = [_subtree_of(tree, f) for f in live_masks]
-            t0 = _time.monotonic()
-            tree = plan_with_materialized(graph, overlay, cm, live).tree
-            replan_sec += _time.monotonic() - t0
-    finally:
-        pool.shutdown(wait=True)
-        # speculation misses: blocks the decision chain never consumed.
-        # Their observations were never applied or recorded; drop the
-        # persisted data too.
-        for block, _, _ in spec.values():
-            try:
-                block.unpersist(blocking=False)
-            except Exception:
-                pass
-    scope(spark, sf_dir)["adaptive_split"] = dict(
-        plan_sec=round(plan_sec, 4),
-        observe_sec=round(observe_sec, 4),
-        # summed per-thread metrics-walk time (overlapped wall-clock):
-        # proves the count() barriers, not the py4j harvest, carry the
-        # observation cost
-        harvest_sec=round(harvest_sec, 4),
-        replan_sec=round(replan_sec, 4),
-        rounds=rounds,
-    )
-    return renderer.finish(mat[full])
-
-
-def run_fixture_warm(
-    spark,
-    sf_dir: str,
-    name: str = "join_cycle_7",
-    cost_model: str = "cm1",
-    store=None,
-):
-    """Cross-query LEO (Stillger et al., VLDB'01 -- the paper's main
-    loop, vs the within-query variants above): plan the fixture with a
-    FeedbackStore's previously observed cardinalities overlaid on the
-    estimator, then execute STATICALLY -- no materialization barriers,
-    no in-flight re-planning.  After one adaptive (recording) pass over
-    the same fixture the store holds the true cardinality of every
-    intermediate that pass computed, so the warm plan's join order --
-    including the first join, which no within-query scheme can ever
-    correct -- is chosen under exact statistics, at zero runtime
-    overhead.  This is the shape the repeated-fixture experiment
-    harness wants at 100 TB: observation costs are paid once by the
-    first execution (whose count() barriers were work the query needed
-    anyway), every later execution plans warm and runs as one job.
-
-    The result must hash-match the static planners regardless of the
-    store's contents -- feedback may change the ORDER, never the
-    answer (driver gate: join_feedback_warm)."""
-    import time as _time
-
-    from .oracle import OverlayOracle
-
-    t0 = _time.monotonic()
-    graph, est, res = plan_fixture(
-        sf_dir, name, planner="dp_ccp", cost_model=cost_model
-    )
-    overlay = OverlayOracle(
-        est, store.seed(graph) if store is not None else {}
-    )
-    if overlay.observed:
-        res = PLANNERS["dp_ccp"](graph, overlay, get_cost_model(cost_model))
-    # warm pass has NO observation barriers and no re-planning -- the
-    # split records that contrast against the adaptive rows
-    scope(spark, sf_dir)["adaptive_split"] = dict(
-        plan_sec=round(_time.monotonic() - t0, 4),
-        observe_sec=0.0,
-        replan_sec=0.0,
-        rounds=0,
-        warm_seeded=len(overlay.observed),
-    )
-    return Renderer(spark, sf_dir, graph, overlay).run(res.tree)
-
-
 def _subtree_of(node, factors: int):
     """The subtree of ``node`` whose factor set is exactly ``factors``."""
     if node.factors == factors:
@@ -938,6 +612,254 @@ def _subtree_of(node, factors: int):
             if (child.factors & factors) == factors:
                 return _subtree_of(child, factors)
     raise KeyError(factors)
+
+
+@dataclass(frozen=True)
+class LeoRun:
+    """Outcome of :func:`leo_chain`: the plan to finish with, the
+    observed blocks it pins (factor mask -> block, in consumption
+    order), the rounds run, the speculative blocks never consumed, and
+    the chain's observe / re-plan seconds."""
+
+    tree: object
+    blocks: dict
+    rounds: int
+    discarded: list
+    observe_sec: float
+    replan_sec: float
+
+
+def leo_chain(graph, overlay, cm, tree, observe, store=None, rounds=None):
+    """The LEO decision chain (Kabra & DeWitt, SIGMOD'98; Stillger et
+    al., VLDB'01), pure Python: take the plan's next unit join
+    (:func:`_next_unit_join`), observe its true cardinality, overlay
+    the observation on ``overlay`` (and record it in ``store``), then
+    re-plan everything not yet materialized with the live blocks pinned
+    atomic (``plan_with_materialized``; sunk cost 0).  Runs ``rounds``
+    rounds; ``None`` runs until one block covers the query (n-1 rounds
+    for n relations, each a join the query needed anyway) and 0 returns
+    ``tree`` unobserved.  Every join after the first is then placed on
+    exact cardinalities for all its materialized inputs: estimation
+    error can misplace only the next join, never compound.
+
+    ``observe(units, blocks)`` materializes unit joins whose children
+    are leaves or entries of ``blocks`` (factor mask -> block) and
+    returns one ``(block, rows, {leaf mask: rows})`` per unit.  A bushy
+    plan exposes several disjoint unit joins at once, so each batch
+    asks for every one not yet observed -- capped at the rounds that
+    remain -- and ``observe`` may run them concurrently.  The chain
+    consumes the batch strictly in sequential order, keyed by
+    :func:`_spec_key`: every observation, store record, round and the
+    final tree equal the one-join-at-a-time loop's.  A block the
+    re-planned tree never builds is returned in ``discarded`` and its
+    observations are never applied (the sequential loop never computed
+    them) -- the duplicated-work trade Spark's own speculative execution
+    makes, never a semantics change."""
+    from .planners import plan_with_materialized
+
+    budget = len(graph.aliases) - 1 if rounds is None else rounds
+    blocks: dict[int, object] = {}
+    spec: dict[tuple, tuple] = {}
+    done = 0
+    observe_sec = replan_sec = 0.0
+    while done < budget:
+        nxt = _next_unit_join(tree, blocks)
+        if nxt is None:  # the tree is a single unit
+            break
+        t0 = time.monotonic()
+        key = _spec_key(nxt)
+        if key not in spec:
+            batch = [
+                u for u in _all_unit_joins(tree, blocks)
+                if _spec_key(u) not in spec
+            ][: budget - done]
+            spec.update(zip(map(_spec_key, batch), observe(batch, blocks)))
+        block, rows, leaves = spec.pop(key)
+        fresh = {nxt.factors: rows, **leaves}
+        overlay.observed.update(fresh)
+        if store is not None:
+            for m, r in fresh.items():
+                store.record(graph, m, r)
+        observe_sec += time.monotonic() - t0
+        done += 1
+        blocks[nxt.factors] = block
+        if nxt.factors == graph.all_factors:
+            break
+        # live blocks: materialized sets not subsumed by a larger one
+        live = [
+            _subtree_of(tree, f) for f in blocks
+            if not any(o != f and (f & o) == f for o in blocks)
+        ]
+        t0 = time.monotonic()
+        tree = plan_with_materialized(graph, overlay, cm, live).tree
+        replan_sec += time.monotonic() - t0
+    return LeoRun(
+        tree, blocks, done, [b for b, _, _ in spec.values()],
+        observe_sec, replan_sec,
+    )
+
+
+# the JVM-thread-local properties an observe task copies from its caller
+_JOB_PROPS = (
+    "spark.jobGroup.id",
+    "spark.job.description",
+    "spark.job.interruptOnCancel",
+    "spark.scheduler.pool",
+)
+
+
+def _unpersist(blocks) -> int:
+    """Unpersist each block without waiting; returns how many raised."""
+    failed = 0
+    for block in blocks:
+        try:
+            block.unpersist(blocking=False)
+        except Exception:  # counted into the record's harvest_failed
+            failed += 1
+    return failed
+
+
+def _run_leo(spark, sf_dir: str, name: str, cost_model: str, store, rounds):
+    """Plan ``name`` on the estimator overlaid with ``store``'s earlier
+    observations, run :func:`leo_chain` for ``rounds`` with Spark
+    observations, and render the final plan reusing every observed
+    block.  Writes the ``"adaptive_split"`` record (plan / observe /
+    harvest / re-plan seconds, rounds, ``n_discarded`` speculative
+    blocks, ``harvest_failed`` leaf harvests or unpersists that raised,
+    ``warm_seeded`` store observations) and ``"persisted_blocks"``."""
+    from concurrent.futures import ThreadPoolExecutor, wait
+
+    from .oracle import OverlayOracle
+
+    t0 = time.monotonic()
+    graph, est, res = plan_fixture(sf_dir, name, cost_model=cost_model)
+    cm = get_cost_model(cost_model)
+    seed = store.seed(graph) if store is not None else {}
+    overlay = OverlayOracle(est, seed)
+    if seed:
+        # cross-query warm start (FeedbackStore): the initial plan --
+        # including the first join, which within-query feedback can
+        # never reach -- already uses every earlier observation
+        res = PLANNERS["dp_ccp"](graph, overlay, cm)
+    plan_sec = time.monotonic() - t0
+    renderer = _MaterializedRenderer(spark, sf_dir, graph, overlay)
+    made: list = []  # every block an observe persisted
+    harvest_sec, harvest_failed = 0.0, 0
+    # job group/description/pool are JVM-thread-local; pool threads
+    # start bare, so the caller's labels and any cancellable job group
+    # (harness timeouts) are copied into each observe task explicitly
+    sc = spark.sparkContext
+    props = {k: sc.getLocalProperty(k) for k in _JOB_PROPS}
+
+    def observe_one(unit):
+        """One independent Spark job: persist + count the unit join,
+        then harvest its leaf observations from the executed scans
+        (cached child blocks re-read from memory and surface no scan)."""
+        for k, v in props.items():
+            if v is not None:
+                sc.setLocalProperty(k, v)
+        block = renderer.render(unit).persist()
+        rows = float(block.count())
+        th = time.monotonic()
+        try:
+            leaves, failed = _scan_observations(graph, block, unit.factors), 0
+        except Exception:  # leaf feedback is optional; counted
+            leaves, failed = {}, 1
+        return block, rows, leaves, time.monotonic() - th, failed
+
+    def observe(units, blocks):
+        nonlocal harvest_sec, harvest_failed
+        renderer.materialized = blocks
+        futs = [pool.submit(observe_one, u) for u in units]
+        wait(futs)
+        # every succeeded sibling lands in ``made`` before a failure is
+        # raised, so the failure path below unpersists it too
+        made.extend(f.result()[0] for f in futs if f.exception() is None)
+        out = [f.result() for f in futs]
+        harvest_sec += sum(o[3] for o in out)
+        harvest_failed += sum(o[4] for o in out)
+        return [o[:3] for o in out]
+
+    pool = ThreadPoolExecutor(max_workers=4)
+    try:
+        run = leo_chain(graph, overlay, cm, res.tree, observe, store, rounds)
+    except BaseException:
+        _unpersist(made)
+        raise
+    finally:
+        pool.shutdown(wait=True)
+    harvest_failed += _unpersist(run.discarded)
+    if run.rounds:
+        scope(spark, sf_dir)["persisted_blocks"] = list(run.blocks.values())
+    scope(spark, sf_dir)["adaptive_split"] = dict(
+        plan_sec=round(plan_sec, 4),
+        observe_sec=round(run.observe_sec, 4),
+        # summed per-thread metrics-walk time (overlapped wall-clock):
+        # shows whether the count() barriers or the py4j harvest carry
+        # the observation cost
+        harvest_sec=round(harvest_sec, 4),
+        replan_sec=round(run.replan_sec, 4),
+        rounds=run.rounds,
+        n_discarded=len(run.discarded),
+        harvest_failed=harvest_failed,
+        warm_seeded=len(seed),
+    )
+    renderer.materialized = run.blocks
+    return renderer.run(run.tree)
+
+
+def run_fixture_adaptive(
+    spark,
+    sf_dir: str,
+    name: str = "join_events_8",
+    cost_model: str = "cm1",
+    store=None,
+):
+    """Mid-query re-optimization (Kabra & DeWitt, SIGMOD'98; LEO,
+    VLDB'01) -- the planner-level analog of Spark AQE, on our own cost
+    models: :func:`leo_chain` with ONE round.  Plan with the estimating
+    oracle, persist and count only the first join, overlay its true
+    cardinality, re-plan the remainder with that block pinned, and
+    finish reusing it.  Feedback may change the ORDER, never the
+    answer.  The observation is one ``count()`` on an intermediate the
+    query computes anyway; at 100 TB the persist tier is the executor
+    block store (MEMORY_AND_DISK), where AQE's stage statistics live."""
+    return _run_leo(spark, sf_dir, name, cost_model, store, rounds=1)
+
+
+def run_fixture_adaptive_full(
+    spark,
+    sf_dir: str,
+    name: str = "join_events_8",
+    cost_model: str = "cm1",
+    store=None,
+):
+    """FULL progressive re-optimization: :func:`leo_chain` until one
+    block covers the query -- every join is observed, so every join
+    after the first is placed on exact input cardinalities.  The unit
+    joins of a bushy plan are materialized concurrently from a small
+    thread pool (Spark overlaps the independent jobs) and consumed in
+    sequential order; on a left-deep plan each batch is one join."""
+    return _run_leo(spark, sf_dir, name, cost_model, store, rounds=None)
+
+
+def run_fixture_warm(
+    spark,
+    sf_dir: str,
+    name: str = "join_cycle_7",
+    cost_model: str = "cm1",
+    store=None,
+):
+    """Cross-query LEO (Stillger et al., VLDB'01 -- the paper's main
+    loop): plan with a FeedbackStore's earlier observations overlaid on
+    the estimator, then execute STATICALLY -- :func:`leo_chain` with
+    zero rounds, so no materialization barriers and no re-planning.
+    After one recording pass over the same fixture the store holds the
+    true cardinality of every intermediate that pass computed, so the
+    warm join order -- first join included, which no within-query
+    scheme can correct -- is chosen on exact statistics at no runtime
+    overhead: the observation cost is paid once, by the first run."""
+    return _run_leo(spark, sf_dir, name, cost_model, store, rounds=0)
 
 
 def drop_persisted_blocks(spark, sf_dir: str) -> None:
@@ -1052,10 +974,11 @@ JOIN_QUERIES: dict[str, tuple[str, Callable]] = {
     "join_sampled_card": (
         "join_cycle_7", Planned("dp_ccp", partial(sampled_oracle, p=0.2))
     ),
-    # RL-env (J7): greedy-by-reward agent; REINFORCE trained in-process;
-    # the park wire protocol (§2.8); the park cardinality command surface
+    # RL-env (J7): greedy-by-reward agent; REINFORCE trained in-process
+    # on the same env (plan_reinforce); the park wire protocol (§2.8);
+    # the park cardinality command surface
     "join_env_agent": ("join_cycle_7", lambda *a: run_fixture_via_env_agent(*a)),
-    "join_env_learned": ("join_cycle_7", lambda *a: run_fixture_via_learned_agent(*a)),
+    "join_env_learned": ("join_cycle_7", Planned("reinforce")),
     "join_env_wire": ("join_cycle_7", lambda *a: run_fixture_via_wire(*a)),
     "join_park_cards": ("join_star_4", lambda *a: run_fixture_via_park_cards(*a)),
     # J10: left-semi prefiltering of large leaves

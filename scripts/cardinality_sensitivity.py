@@ -34,12 +34,14 @@ import argparse
 import json
 import os
 import sys
+from functools import partial
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from query_optimizer_spark.costmodels import get_cost_model
-from query_optimizer_spark.joingraph import JoinGraph
+from query_optimizer_spark.joingraph import Join, JoinGraph
 from query_optimizer_spark.oracle import (
+    OverlayOracle,
     SampledCountOracle,
     SketchOracle,
     SparkStatsOracle,
@@ -47,7 +49,12 @@ from query_optimizer_spark.oracle import (
 )
 from query_optimizer_spark.planners import PLANNERS, PlanResult
 from query_optimizer_spark.sqlparse import parse
-from query_optimizer_spark.workload import FIXTURES, _base_rows
+from query_optimizer_spark.workload import (
+    FIXTURES,
+    _attributable_leaves,
+    _base_rows,
+    leo_chain,
+)
 
 # every deterministic search strategy (random excluded: its plan depends
 # on the seed, not the estimates, so est-vs-true is meaningless there)
@@ -117,73 +124,48 @@ def _plan(planner: str, graph, oracle, cm):
 def _plan_adaptive_oracle(graph, est, cm):
     """Headroom bound: the est-based plan commits its first join blind
     (no feedback exists before anything has executed), then an oracle
-    hands the re-planner TRUE cardinalities for everything.  No
-    within-query feedback scheme can beat this completion, so
-    static_ratio - this_ratio is the total recoverable estimation-error
-    cost and this_ratio - 1.0 is the sunk cost of the blind first
-    join."""
-    from query_optimizer_spark.planners import plan_with_materialized
-    from query_optimizer_spark.workload import _next_unit_join
-
+    hands the re-planner TRUE cardinalities for everything -- one
+    ``leo_chain`` round over the true oracle.  No within-query feedback
+    scheme can beat this completion, so static_ratio - this_ratio is
+    the total recoverable estimation-error cost and this_ratio - 1.0 is
+    the sunk cost of the blind first join."""
     tree = PLANNERS["dp_ccp"](graph, est, cm).tree
-    first = _next_unit_join(tree, {})
-    if first is None or first.factors == graph.all_factors:
-        return PLANNERS["dp_ccp"](graph, est, cm)
-    res = plan_with_materialized(graph, _TRUE_ORACLE, cm, first)
+    truth = OverlayOracle(_TRUE_ORACLE, {})
+    tree = leo_chain(graph, truth, cm, tree, _true_observe(graph), rounds=1).tree
     return PlanResult(
-        res.tree,
-        cm.cumulative(graph, res.tree, _TRUE_ORACLE),
+        tree,
+        cm.cumulative(graph, tree, _TRUE_ORACLE),
         "adaptive_oracle",
     )
 
 
+def _true_observe(graph):
+    """``leo_chain`` observe answered by the true oracle instead of a
+    Spark count() -- exactly what the count() returns: each unit join's
+    TRUE cardinality plus the post-filter count of every leaf the
+    executor's scan harvest could attribute (``_attributable_leaves``)."""
+
+    def observe(units, _blocks):
+        card = partial(_TRUE_ORACLE.card, graph)
+        leaves = partial(_attributable_leaves, graph)
+        return [
+            (u, card(u.factors), {m: card(m) for m in leaves(u.factors)})
+            for u in units
+        ]
+
+    return observe
+
+
 def _plan_adaptive(graph, est, cm, propagate: bool | None = None, out_observed=None):
     """Planning-level simulation of the FULL progressive re-optimization
-    loop (run_fixture_adaptive_full): plan on the estimating oracle,
-    then repeatedly 'observe' the next materialized join's TRUE
-    cardinality (here answered by the true oracle instead of a Spark
-    count(), which is exactly what the count() returns) and re-plan the
-    remainder with the observed blocks pinned.  The returned plan is
-    the one the adaptive executor would finish with -- its true-cost
-    ratio measures how much of the estimation-error cost the feedback
-    loop claws back, the reference's motivating LEO number."""
-    from query_optimizer_spark.oracle import OverlayOracle
-    from query_optimizer_spark.planners import plan_with_materialized
-    from query_optimizer_spark.workload import _next_unit_join, _subtree_of
-
-    from query_optimizer_spark.joingraph import bits
-
-    def leaf_observations(block_factors):
-        """Mirror of workload._scan_observations: the executor harvests
-        post-filter leaf counts from the block's executed-scan metrics,
-        attributable only when the base table appears once among the
-        block's leaves (self-join aliases skipped)."""
-        by_table = {}
-        for i in bits(block_factors):
-            by_table.setdefault(graph.tables[graph.aliases[i]], []).append(i)
-        return {
-            1 << idxs[0]: _TRUE_ORACLE.card(graph, 1 << idxs[0])
-            for idxs in by_table.values()
-            if len(idxs) == 1
-        }
-
+    loop (run_fixture_adaptive_full): the same ``leo_chain``, with the
+    true oracle as its observe.  The returned plan is the one the
+    adaptive executor would finish with -- its true-cost ratio measures
+    how much of the estimation-error cost the feedback loop claws back,
+    the reference's motivating LEO number."""
     overlay = OverlayOracle(est, {}, propagate=propagate)
     tree = PLANNERS["dp_ccp"](graph, overlay, cm).tree
-    mat: dict[int, object] = {}
-    while True:
-        nxt = _next_unit_join(tree, mat)
-        if nxt is None:
-            break
-        overlay.observed[nxt.factors] = _TRUE_ORACLE.card(graph, nxt.factors)
-        overlay.observed.update(leaf_observations(nxt.factors))
-        mat[nxt.factors] = nxt
-        if nxt.factors == graph.all_factors:
-            break
-        live_masks = [
-            f for f in mat if not any(o != f and (f & o) == f for o in mat)
-        ]
-        live = [_subtree_of(tree, f) for f in live_masks]
-        tree = plan_with_materialized(graph, overlay, cm, live).tree
+    tree = leo_chain(graph, overlay, cm, tree, _true_observe(graph)).tree
     if out_observed is not None:
         out_observed.update(overlay.observed)
     return PlanResult(
@@ -196,30 +178,19 @@ def _plan_adaptive(graph, est, cm, propagate: bool | None = None, out_observed=N
 def _tree_observations(graph, tree):
     """Everything a STATIC execution of ``tree`` observes for free from
     operator metrics: every join node's output count plus every
-    uniquely-attributable leaf's post-filter scan count (the same
-    harvest _scan_observations does on the real executed plan)."""
-    from query_optimizer_spark.joingraph import Join, bits
-
+    attributable leaf's post-filter scan count (the same harvest
+    _scan_observations does on the real executed plan)."""
     obs = {}
 
     def walk(node):
         if isinstance(node, Join):
-            # JOIN outputs are always observable (operator metrics);
-            # LEAF scans only when uniquely attributable -- the
-            # unique-table loop below decides, exactly like the real
-            # harvest (self-join aliases stay unobserved)
             obs[node.factors] = _TRUE_ORACLE.card(graph, node.factors)
             walk(node.left)
             walk(node.right)
 
     walk(tree)
-    by_table = {}
-    for i in bits(graph.all_factors):
-        by_table.setdefault(graph.tables[graph.aliases[i]], []).append(i)
-    for idxs in by_table.values():
-        if len(idxs) == 1:
-            m = 1 << idxs[0]
-            obs[m] = _TRUE_ORACLE.card(graph, m)
+    for m in _attributable_leaves(graph, graph.all_factors):
+        obs[m] = _TRUE_ORACLE.card(graph, m)
     return obs
 
 
@@ -233,17 +204,12 @@ def _plan_warm(graph, est, cm, fixpoint: bool):
     stops changing (<= 10 runs; convergence is typically 1-2 because
     each new plan can only disagree where it is cheaper under
     now-exact statistics)."""
-    from query_optimizer_spark.oracle import OverlayOracle
-
     recorded: dict[int, float] = {}
     first = _plan_adaptive(graph, est, cm, propagate=None, out_observed=recorded)
     tree = first.tree
-    runs = 10 if fixpoint else 1
-    for _ in range(runs):
-        overlay = OverlayOracle(est, recorded)
-        new_tree = PLANNERS["dp_ccp"](graph, overlay, cm).tree
+    for _ in range(10 if fixpoint else 1):
+        new_tree = PLANNERS["dp_ccp"](graph, OverlayOracle(est, recorded), cm).tree
         if repr(new_tree) == repr(tree):
-            tree = new_tree
             break
         tree = new_tree
         recorded.update(_tree_observations(graph, tree))

@@ -353,3 +353,59 @@ def test_adaptive_concurrent_observe_matches_sequential(spark):
         assert rows_conc == rows_seq, name
         assert s_conc.rows == s_seq.rows, name
         assert evidence(spark, SF_DIR, "adaptive_split")["rounds"] == rounds_seq, name
+
+
+def test_leo_observe_job_counts(spark):
+    """Spark jobs each LEO runner starts before its action, with the
+    tables already resolved.  The re-opt runner observes exactly one
+    block (one persist + count(); its adaptive stages are 4 jobs) and no
+    speculative sibling; the full loop starts the 28 jobs its concurrent
+    observe has always started on join_events_8; the warm runner,
+    planning from a recorded store, starts none."""
+    from query_optimizer_spark.oracle import FeedbackStore
+    from query_optimizer_spark.state import evidence
+    from query_optimizer_spark.workload import (
+        drop_persisted_blocks,
+        run_fixture_adaptive,
+        run_fixture_adaptive_full,
+        run_fixture_warm,
+    )
+
+    sc = spark.sparkContext
+
+    def jobs_before_action(run, tag):
+        run().count()  # resolve every table first
+        drop_persisted_blocks(spark, SF_DIR)
+        group = f"leo-observe-{tag}"
+        sc.setJobGroup(group, "LEO observe jobs")
+        try:
+            df = run()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        n = len(sc.statusTracker().getJobIdsForGroup(group))
+        split = evidence(spark, SF_DIR, "adaptive_split")
+        df.count()
+        drop_persisted_blocks(spark, SF_DIR)
+        return n, split
+
+    n, split = jobs_before_action(
+        lambda: run_fixture_adaptive(spark, SF_DIR, "join_events_8"), "reopt"
+    )
+    assert (split["rounds"], split["n_discarded"]) == (1, 0)
+    assert n == 4
+    n, split = jobs_before_action(
+        lambda: run_fixture_adaptive_full(spark, SF_DIR, "join_events_8"),
+        "full",
+    )
+    assert split["rounds"] == 7 and split["harvest_failed"] == 0
+    assert n == 28
+    store = FeedbackStore()
+    run_fixture_adaptive_full(spark, SF_DIR, "join_cycle_7", store=store).count()
+    drop_persisted_blocks(spark, SF_DIR)
+    n, split = jobs_before_action(
+        lambda: run_fixture_warm(spark, SF_DIR, "join_cycle_7", store=store),
+        "warm",
+    )
+    assert split["rounds"] == 0 and split["warm_seeded"] > 0
+    assert n == 0
